@@ -560,35 +560,40 @@ def run_sf1_scaling_probe(sf1: dict) -> dict | None:
     if not names:
         return None
     probe = Path(__file__).resolve().parent / "tools" / "sf1_scaling_probe.py"
+    # the probe stops starting entries past its budget, so a leg runs at
+    # most about one budget plus its last entry and the JVM start
+    budget_s = float(os.environ.get("SPARK_GRAFT_SF1_SCALING_BUDGET_S", "240"))
+    # session.get_spark prefers SPARK_MASTER over local[SPARK_GRAFT_CPUS]:
+    # inherited, it would run both legs at the same parallelism
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_MASTER"}
     legs: dict[int, dict] = {}
     for cpus in (cpus_hi, cpus_lo):
-        env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
         try:
             res = subprocess.run(
                 [sys.executable, str(probe), SF1_DIR, *names],
-                env=env,
+                env=dict(env, SPARK_GRAFT_CPUS=str(cpus)),
                 capture_output=True,
                 text=True,
-                timeout=600,
+                timeout=2 * budget_s + 120,
             )
             line = next(
                 ln for ln in res.stdout.splitlines() if ln.startswith("SCALING_JSON:")
             )
             legs[cpus] = json.loads(line[len("SCALING_JSON:"):])["queries"]
         except Exception as e:  # noqa: BLE001 — the probe is additive, never sinks the bench
+            # keep the other leg's timings: partial evidence beats none
             print(f"sf1 scaling probe (c{cpus}) failed: {e}", file=sys.stderr)
-            return None
-    ratios = {
-        n: round(legs[cpus_lo][n] / legs[cpus_hi][n], 2)
-        for n in names
-        if legs[cpus_hi].get(n) and legs[cpus_lo].get(n)
-    }
+    if not legs:
+        return None
+    hi, lo = legs.get(cpus_hi, {}), legs.get(cpus_lo, {})
     return {
         "cpus_hi": cpus_hi,
         "cpus_lo": cpus_lo,
-        "hi_s": {n: legs[cpus_hi][n] for n in ratios},
-        "lo_s": {n: legs[cpus_lo][n] for n in ratios},
-        "lo_over_hi_ratio": ratios,
+        "hi_s": hi,
+        "lo_s": lo,
+        "lo_over_hi_ratio": {
+            n: round(lo[n] / hi[n], 2) for n in names if hi.get(n) and lo.get(n)
+        },
         "protocol": "two cold-JVM subprocess legs, same entries/order, min-of-2 count() reps",
     }
 

@@ -14,8 +14,8 @@ library:
 - ``functions``   — scalar/aggregate helper expressions
 - ``plans``       — plan inspection, column-usage profiling, optimizer
                     strategy generation (file sizing, clustering-key scoring)
-- ``streaming``   — structured-streaming helpers (apply_changes CDC, merge
-                    templates, monitoring)
+- ``streaming``   — structured-streaming helpers (apply_changes CDC, the
+                    idempotent MV runner, monitoring)
 - ``validation``  — hash-diff data validator, count reconciliation
 - ``queries``     — the registered query battery (correctness + bench corpus)
 

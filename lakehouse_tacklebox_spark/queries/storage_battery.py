@@ -4,7 +4,7 @@ epoch-replay MV maintenance, driver-checked against DuckDB oracles.
 Both capabilities were pytest-only infrastructure through round 6
 (tests/test_bucketed_join.py, tests/test_tablestore.py); these entries
 put them behind the correctness gate. Reference bar: the Delta
-`txn`/`foreachBatch` exactly-once discussion in the reference's Step 5
+`txn` micro-batch exactly-once discussion in the reference's Step 5
 migration guide and its bucketed-layout performance notes
 (30-performance) — semantics re-expressed Spark-first, no code shared.
 """
@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import functions as F
@@ -113,14 +112,15 @@ def join_bucketed_colocated(spark, sf_dir):
 def stream_idempotent_mv_replay(spark, sf_dir):
     """Exactly-once incremental MV under DELIBERATE epoch replay: the
     fact streams in micro-batches into a merge-maintained aggregate view
-    stamped with Delta-style ``txn`` versions — then the LAST epoch is
-    replayed twice more (the foreachBatch failover model: the merge
-    committed but the checkpoint didn't advance, so a restarted writer
-    re-runs the epoch). The stamp travels in the same commit as the
-    data, so both replays must no-op and the final view must equal
-    DuckDB's one-shot batch aggregate — any double-apply fails the
-    hash compare, making writer idempotence a driver-checked claim
-    rather than a pytest-only one.
+    stamped with Delta-style ``txn`` versions, and every epoch is
+    applied a second time inside its own micro-batch (the failover
+    model: the merge committed but the checkpoint didn't advance, so a
+    restarted writer re-runs the epoch). The stamp travels in the same
+    commit as the data, so each replay must leave the view's version
+    unchanged (the entry raises otherwise) and the final view must equal
+    DuckDB's one-shot batch aggregate — any double-apply fails the hash
+    compare, making writer idempotence an oracle-checked claim rather
+    than a pytest-only one.
 
     Scale: per-batch cost is a |batch| partial aggregate plus a
     |groups|-row merge; the replay guard is one log-tail read
@@ -128,18 +128,11 @@ def stream_idempotent_mv_replay(spark, sf_dir):
     a zombie writer racing the retry cannot double-apply
     (tablestore/table.py _commit).
     """
+    from lakehouse_tacklebox_spark.streaming.mv import fold_sums, run_mv
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
-    tmp = tempfile.mkdtemp(prefix="idem_mv_")
-    src_dir = os.path.join(tmp, "src")
-    tbl_dir = os.path.join(tmp, "tbl")
-    ckpt = os.path.join(tmp, "ckpt")
-
-    t = load_tables(spark, sf_dir, ["lineitem"])
-    t["lineitem"].select("l_returnflag", "l_extendedprice", "l_discount").repartition(
-        4
-    ).write.parquet(src_dir)
-
+    tbl_dir = os.path.join(tempfile.mkdtemp(prefix="idem_mv_"), "tbl")
+    li = load_tables(spark, sf_dir, ["lineitem"])["lineitem"]
     rev_cents = F.round(
         dmoney("l_extendedprice") * drate(F.lit(1) - F.col("l_discount")) * 100
     ).cast("bigint")
@@ -148,66 +141,18 @@ def stream_idempotent_mv_replay(spark, sf_dir):
         spark, tbl_dir, schema="returnflag string, n_rows bigint, rev_cents bigint"
     )
 
-    last = {"epoch": None, "batch": None}
-
     def _upsert(batch_df, epoch):
-        s = batch_df.sparkSession
-        table = TackleTable(s, tbl_dir)
-        if table.txn_version("idem_mv") >= epoch:
-            return  # retried epoch already committed
-        parts = (
-            batch_df.groupBy(F.col("l_returnflag").alias("returnflag"))
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                F.sum(rev_cents).cast("bigint").alias("rev_cents"),
-            )
+        parts = batch_df.groupBy(F.col("l_returnflag").alias("returnflag")).agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            F.sum(rev_cents).cast("bigint").alias("rev_cents"),
         )
-        combined = (
-            table.read()
-            .unionByName(parts)
-            .groupBy("returnflag")
-            .agg(
-                F.sum("n_rows").cast("bigint").alias("n_rows"),
-                F.sum("rev_cents").cast("bigint").alias("rev_cents"),
-            )
-        )
-        (
-            table.merge(combined, on=["returnflag"])
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .withTransaction("idem_mv", epoch)
-            .execute()
+        fold_sums(
+            TackleTable(batch_df.sparkSession, tbl_dir), parts, ["returnflag"], ("idem_mv", epoch)
         )
 
-    def _upsert_tracking(batch_df, epoch):
-        # keep a handle to the newest batch only; the source files stay on
-        # disk until after the replay below, so no persist is needed
-        last["epoch"], last["batch"] = epoch, batch_df
-        _upsert(batch_df, epoch)
-
-    raw_schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_upsert_tracking)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()  # never leave a zombie stream running past the deadline
-        raise TimeoutError("availableNow stream exceeded the 300s deadline")
-
-    # failover replay: the last epoch runs twice more — both must no-op
-    if last["epoch"] is not None:
-        _upsert(last["batch"], last["epoch"])
-        _upsert(last["batch"], last["epoch"])
-
-    shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    chunks = li.select("l_returnflag", "l_extendedprice", "l_discount").repartition(4)
+    if not run_mv(spark, chunks, _upsert, [tbl_dir]):
+        raise RuntimeError("stream_idempotent_mv_replay: a replayed epoch moved the view")
 
     return (
         TackleTable(spark, tbl_dir)

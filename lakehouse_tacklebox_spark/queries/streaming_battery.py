@@ -1,13 +1,19 @@
 """Streaming battery entries: real Structured Streaming jobs whose final
-result is oracle-comparable against the batch equivalent.
+result is oracle-comparable against the batch equivalent (the unified-
+batch-and-streaming claim, Step 5 of the reference's EDW series, as a
+verifiable statement). Entries take one of two paths:
 
-Each query starts a stream over the (read-only) testdata parquet via
-``readStream`` + ``pathGlobFilter``, runs it to completion with
-``trigger(availableNow=True)`` into a memory sink, and returns the sink
-table — so the driver's correctness gate checks that the streaming
-rollup equals DuckDB's batch answer exactly (the unified-batch-and-
-streaming claim, Step 5 of the reference's EDW series, as a verifiable
-statement).
+- Stateful operators (windows, stream-stream joins, dedup, funnels)
+  read the testdata parquet via ``readStream``, run to completion with
+  ``trigger(availableNow=True)`` into a memory sink
+  (``_run_memory_sink``), and return the sink table.
+- Materialized views (the ``*_mv`` entries) chunk their source and
+  hand it to ``streaming.mv.run_mv``, which applies each micro-batch to
+  TackleTables under ``txn`` stamps and replays it once in-batch to
+  prove the apply idempotent; the entry returns the read-back tables.
+
+Either way the correctness gate checks the streamed result against
+DuckDB's batch answer exactly.
 """
 
 from __future__ import annotations
@@ -416,7 +422,9 @@ def stream_incremental_mv(spark, sf_dir):
     semantics — the stamp commits atomically WITH the rewritten files),
     so a micro-batch retried after its merge committed but before the
     stream checkpoint advanced is detected by txn_version() and
-    no-opped; running sums can never be double-applied.
+    no-opped; running sums can never be double-applied. ``run_mv``
+    replays every epoch in-batch and the entry raises if a replay moved
+    the view.
     """
     import os
     import tempfile
@@ -424,17 +432,11 @@ def stream_incremental_mv(spark, sf_dir):
     from pyspark.sql import functions as SF
 
     from lakehouse_tacklebox_spark.functions import dmoney, drate
+    from lakehouse_tacklebox_spark.streaming.mv import fold_sums, run_mv
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
-    tmp = tempfile.mkdtemp(prefix="inc_mv_")
-    src_dir = os.path.join(tmp, "src")
-    tbl_dir = os.path.join(tmp, "tbl")
-    ckpt = os.path.join(tmp, "ckpt")
-
+    tbl_dir = os.path.join(tempfile.mkdtemp(prefix="inc_mv_"), "tbl")
     li = load_tables(spark, sf_dir, ["lineitem"])["lineitem"]
-    li.select(
-        "l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice", "l_discount"
-    ).repartition(4).write.parquet(src_dir)
 
     keys = ["l_returnflag", "l_linestatus"]
     base_cents = SF.round(dmoney("l_extendedprice") * 100).cast("bigint")
@@ -442,39 +444,14 @@ def stream_incremental_mv(spark, sf_dir):
         dmoney("l_extendedprice") * drate(SF.lit(1) - SF.col("l_discount")) * 100
     ).cast("bigint")
 
-    def _partials(df):
-        return df.groupBy(*keys).agg(
+    def _upsert(batch_df, epoch):
+        parts = batch_df.groupBy(*keys).agg(
             SF.count(SF.lit(1)).cast("bigint").alias("n_rows"),
             SF.sum(SF.col("l_quantity").cast("bigint")).cast("bigint").alias("sum_qty"),
             SF.sum(base_cents).cast("bigint").alias("base_cents"),
             SF.sum(disc_cents).cast("bigint").alias("disc_cents"),
         )
-
-    def _upsert(batch_df, epoch):
-        s = batch_df.sparkSession
-        table = TackleTable(s, tbl_dir)
-        if table.txn_version("inc_mv") >= epoch:
-            return  # retried epoch whose merge already committed
-        parts = _partials(batch_df)
-        # running sums = current |groups|-row state ⊎ this batch's partials
-        combined = (
-            table.read()
-            .unionByName(parts)
-            .groupBy(*keys)
-            .agg(
-                SF.sum("n_rows").cast("bigint").alias("n_rows"),
-                SF.sum("sum_qty").cast("bigint").alias("sum_qty"),
-                SF.sum("base_cents").cast("bigint").alias("base_cents"),
-                SF.sum("disc_cents").cast("bigint").alias("disc_cents"),
-            )
-        )
-        (
-            table.merge(combined, on=keys)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .withTransaction("inc_mv", epoch)
-            .execute()
-        )
+        fold_sums(TackleTable(batch_df.sparkSession, tbl_dir), parts, keys, ("inc_mv", epoch))
 
     # create the (empty) view table BEFORE the stream starts: every batch
     # then takes the same idempotent merge path — no create/merge split
@@ -487,29 +464,11 @@ def stream_incremental_mv(spark, sf_dir):
             "sum_qty bigint, base_cents bigint, disc_cents bigint"
         ),
     )
-
-    raw_schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()  # never leave a zombie stream running past the deadline
-        raise TimeoutError("availableNow stream exceeded the 300s deadline")
-
-    # the returned DataFrame reads only the table's files — the chunked
-    # source and the stream checkpoint are dead weight once the run ends
-    import shutil
-
-    shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    chunks = li.select(
+        "l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice", "l_discount"
+    ).repartition(4)
+    if not run_mv(spark, chunks, _upsert, [tbl_dir]):
+        raise RuntimeError("stream_incremental_mv: a replayed epoch moved the view")
 
     return (
         TackleTable(spark, tbl_dir)
@@ -643,29 +602,21 @@ def stream_incremental_join_mv(spark, sf_dir):
     Delta-txn contract as stream_incremental_mv).
     """
     import os
-    import shutil
     import tempfile
 
     from pyspark.sql import functions as SF
 
     from lakehouse_tacklebox_spark.functions import dmoney, drate
+    from lakehouse_tacklebox_spark.streaming.mv import fold_sums, run_mv
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
-    tmp = tempfile.mkdtemp(prefix="inc_jmv_")
-    src_dir = os.path.join(tmp, "src")
-    tbl_dir = os.path.join(tmp, "tbl")
-    ckpt = os.path.join(tmp, "ckpt")
-
+    tbl_dir = os.path.join(tempfile.mkdtemp(prefix="inc_jmv_"), "tbl")
     t = load_tables(spark, sf_dir, ["lineitem", "orders"])
-    t["lineitem"].select(
-        "l_orderkey", "l_returnflag", "l_extendedprice", "l_discount"
-    ).repartition(4).write.parquet(src_dir)
     orders = t["orders"].select("o_orderkey", "o_orderpriority")
 
     rev_cents = SF.round(
         dmoney("l_extendedprice") * drate(SF.lit(1) - SF.col("l_discount")) * 100
     ).cast("bigint")
-    keys = ["priority", "returnflag"]
 
     TackleTable.create(
         spark,
@@ -674,10 +625,6 @@ def stream_incremental_join_mv(spark, sf_dir):
     )
 
     def _upsert(batch_df, epoch):
-        s = batch_df.sparkSession
-        table = TackleTable(s, tbl_dir)
-        if table.txn_version("inc_jmv") >= epoch:
-            return  # retried epoch whose merge already committed
         parts = (
             batch_df.join(
                 maybe_broadcast(orders, "orders"), SF.col("l_orderkey") == SF.col("o_orderkey")
@@ -691,41 +638,18 @@ def stream_incremental_join_mv(spark, sf_dir):
                 SF.sum(rev_cents).cast("bigint").alias("rev_cents"),
             )
         )
-        combined = (
-            table.read()
-            .unionByName(parts)
-            .groupBy(*keys)
-            .agg(
-                SF.sum("n_rows").cast("bigint").alias("n_rows"),
-                SF.sum("rev_cents").cast("bigint").alias("rev_cents"),
-            )
-        )
-        (
-            table.merge(combined, on=keys)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .withTransaction("inc_jmv", epoch)
-            .execute()
+        fold_sums(
+            TackleTable(batch_df.sparkSession, tbl_dir),
+            parts,
+            ["priority", "returnflag"],
+            ("inc_jmv", epoch),
         )
 
-    raw_schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()  # never leave a zombie stream running past the deadline
-        raise TimeoutError("availableNow stream exceeded the 300s deadline")
-
-    shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    chunks = t["lineitem"].select(
+        "l_orderkey", "l_returnflag", "l_extendedprice", "l_discount"
+    ).repartition(4)
+    if not run_mv(spark, chunks, _upsert, [tbl_dir]):
+        raise RuntimeError("stream_incremental_join_mv: a replayed epoch moved the view")
 
     return (
         TackleTable(spark, tbl_dir)
@@ -1129,24 +1053,18 @@ def stream_heavy_hitters_mv(spark, sf_dir):
     commit atomically.
     """
     import os
-    import shutil
     import tempfile
 
     from lakehouse_tacklebox_spark.operators.sketch import (
         _mg_partition_summary,
         mg_merge,
     )
+    from lakehouse_tacklebox_spark.streaming.mv import run_mv
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
     capacity = 30
-    tmp = tempfile.mkdtemp(prefix="mg_mv_")
-    src_dir = os.path.join(tmp, "src")
-    state_dir = os.path.join(tmp, "state")
-    ckpt = os.path.join(tmp, "ckpt")
-
+    state_dir = os.path.join(tempfile.mkdtemp(prefix="mg_mv_"), "state")
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    docs.select("doc_id", "text").repartition(4).write.parquet(src_dir)
-
     TackleTable.create(
         spark, state_dir, schema="w string, mg_count bigint, is_total int"
     )
@@ -1182,29 +1100,15 @@ def stream_heavy_hitters_mv(spark, sf_dir):
         )
         table.overwrite(new_state, txn=("mg_mv", epoch))
 
-    raw_schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("availableNow stream exceeded the 300s deadline")
+    chunks = docs.select("doc_id", "text").repartition(4)
+    if not run_mv(spark, chunks, _fold, [state_dir]):
+        raise RuntimeError("stream_heavy_hitters_mv: a replayed epoch moved the sketch")
 
     state = TackleTable(spark, state_dir).read()
     n_total = state.filter(F.col("is_total") == 1).agg(
         F.sum("mg_count").alias("n")
     ).collect()[0]["n"]
     candidates = state.filter(F.col("is_total") == 0).select("w").distinct()
-    shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
     toks = docs.select(
         F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("w")
     )
@@ -1242,7 +1146,7 @@ def stream_mv_retraction(spark, sf_dir):
     MERGE deletes every row of the affected customers from the fact
     table WITH change-data-feed on, and the MV consumes the CDF delete
     rows as NEGATIVE deltas (classic IVM delta algebra: insert ⊕,
-    delete ⊖ — Delta's CDF + foreachBatch recipe, reference Step 5
+    delete ⊖ — Delta's CDF + micro-batch sink recipe, reference Step 5
     CDC discussion). The retraction merge is applied TWICE with the
     same txn stamp to prove a replayed epoch cannot double-subtract.
 
@@ -1253,22 +1157,18 @@ def stream_mv_retraction(spark, sf_dir):
     are txn-stamped, so the pipeline is replay-safe end to end.
     """
     import os
-    import shutil
     import tempfile
 
     from lakehouse_tacklebox_spark.functions import dmoney
+    from lakehouse_tacklebox_spark.streaming.mv import fold_sums, run_mv
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
     tmp = tempfile.mkdtemp(prefix="mv_retract_")
-    src_dir = os.path.join(tmp, "src")
     fact_dir = os.path.join(tmp, "fact")
     mv_dir = os.path.join(tmp, "mv")
-    ckpt = os.path.join(tmp, "ckpt")
 
     orders = load_tables(spark, sf_dir, ["orders"])["orders"]
     cols = ["o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice"]
-    orders.select(*cols).repartition(4).write.parquet(src_dir)
-
     cents = F.round(dmoney("o_totalprice") * 100).cast("bigint")
 
     def _partials(df, sign=1):
@@ -1282,46 +1182,14 @@ def stream_mv_retraction(spark, sf_dir):
 
     def _fold(batch_df, epoch):
         s = batch_df.sparkSession
-        fact = TackleTable(s, fact_dir)
-        mv = TackleTable(s, mv_dir)
         # two tables, one epoch: each step carries its own txn stamp, so
         # a crash between them replays as (append no-op, merge applies)
-        if fact.txn_version("ingest") < epoch:
-            fact.append(batch_df, txn=("ingest", epoch))
-        if mv.txn_version("mv") >= epoch:
-            return
-        combined = (
-            mv.read()
-            .unionByName(_partials(batch_df))
-            .groupBy("o_orderpriority")
-            .agg(
-                F.sum("n_orders").cast("bigint").alias("n_orders"),
-                F.sum("revenue_cents").cast("bigint").alias("revenue_cents"),
-            )
-        )
-        (
-            mv.merge(combined, on=["o_orderpriority"])
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .withTransaction("mv", epoch)
-            .execute()
-        )
+        TackleTable(s, fact_dir).append(batch_df, txn=("ingest", epoch))
+        fold_sums(TackleTable(s, mv_dir), _partials(batch_df), ["o_orderpriority"], ("mv", epoch))
 
-    raw_schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("availableNow stream exceeded the 300s deadline")
+    chunks = orders.select(*cols).repartition(4)
+    if not run_mv(spark, chunks, _fold, [fact_dir, mv_dir]):
+        raise RuntimeError("stream_mv_retraction: a replayed epoch moved the fact or the view")
 
     fact = TackleTable(spark, fact_dir)
     # the merge source is the DISTINCT forget-list (broadcast-sized at
@@ -1364,8 +1232,6 @@ def stream_mv_retraction(spark, sf_dir):
 
     _retract()
     _retract()  # replayed retraction epoch: txn stamp no-ops it — no double-subtract
-    shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
     return mv.read().select("o_orderpriority", "n_orders", "revenue_cents").orderBy(
         "o_orderpriority"
     )
@@ -1518,8 +1384,8 @@ def stream_stream_anti_join(spark, sf_dir):
     # count, codes_match_batch certifies the streamed MV is
     # byte-identical to a one-shot batch encode of the full corpus under
     # the same frozen codebooks (train-offline/encode-online, the
-    # production ANN-index pattern), and replay_noop certifies the
-    # deliberate double-replay of the final epoch changed nothing
+    # production ANN-index pattern), and replay_noop certifies that
+    # the deliberate in-batch replay of every epoch changed nothing
     # (Delta-txn idempotent appends). A drifting encoder, a lost batch,
     # or a double-applied epoch flips a flag or moves the count.
     oracle="""
@@ -1535,9 +1401,9 @@ def stream_pq_index_mv(spark, sf_dir):
     offline-train/online-encode split every deployed ANN index uses),
     then embeddings stream in micro-batches and each batch is PQ-encoded
     against the frozen codebooks and appended to a TackleTable codes MV
-    under Delta-style txn idempotence; the last epoch is replayed twice
-    (foreachBatch failover model) and must no-op. The final MV must
-    equal a one-shot batch encode exactly. Scale: per-batch cost is
+    under Delta-style txn idempotence; every epoch is replayed once
+    more inside its batch (the failover model) and must no-op. The
+    final MV must equal a one-shot batch encode exactly. Scale: per-batch cost is
     |batch| × m broadcast-joined code assignments — no shuffle of the
     corpus, no retraining; the 100 TB shape is identical with the codes
     column 32× smaller than the vectors it indexes."""
@@ -1545,21 +1411,14 @@ def stream_pq_index_mv(spark, sf_dir):
     import tempfile
 
     from lakehouse_tacklebox_spark.operators import similarity as S
+    from lakehouse_tacklebox_spark.streaming.mv import run_mv
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
-    tmp = tempfile.mkdtemp(prefix="pq_mv_")
-    src_dir = os.path.join(tmp, "src")
-    tbl_dir = os.path.join(tmp, "tbl")
-    ckpt = os.path.join(tmp, "ckpt")
-
+    tbl_dir = os.path.join(tempfile.mkdtemp(prefix="pq_mv_"), "tbl")
     e = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
     books = FX.frozen_pq_codebooks(spark, sf_dir, m=8, ksub=16, iters=2)
     book_rows = [(r["sub_idx"], r["code"], list(r["sub_vec"])) for r in books.collect()]
-
-    e.select("vec_id", "embedding").repartition(4).write.parquet(src_dir)
     TackleTable.create(spark, tbl_dir, schema="vec_id bigint, codes array<int>")
-
-    last = {"epoch": None, "rows": None}
 
     def _encode_append(batch_df, epoch):
         s = batch_df.sparkSession
@@ -1578,40 +1437,11 @@ def stream_pq_index_mv(spark, sf_dir):
             txn=("pq_mv", epoch),
         )
 
-    def _tracking(batch_df, epoch):
-        # Materialize the batch's ROWS, not the DataFrame handle: a
-        # micro-batch DataFrame is undefined outside its batch, and the
-        # replay below runs after the query terminates — if the final
-        # epoch had genuinely failed to commit, _encode_append would
-        # evaluate it for real, so it must be rebuilt from captured rows.
-        last["epoch"], last["rows"] = epoch, batch_df.collect()
-        _encode_append(batch_df, epoch)
-
-    raw_schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+    replay_noop = run_mv(
+        spark, e.select("vec_id", "embedding").repartition(4), _encode_append, [tbl_dir]
     )
-    q = (
-        stream.writeStream.foreachBatch(_tracking)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("availableNow stream exceeded the 300s deadline")
 
-    t = TackleTable(spark, tbl_dir)
-    v_before_replay = t.version()
-    if last["epoch"] is not None:
-        replay_df = spark.createDataFrame(last["rows"], raw_schema)
-        _encode_append(replay_df, last["epoch"])
-        _encode_append(replay_df, last["epoch"])
-    replay_noop = t.version() == v_before_replay
-
-    mv = t.read()
+    mv = TackleTable(spark, tbl_dir).read()
     batch_codes = S.pq_encode(e, books, id_col="vec_id", vec_col="embedding")
     n_vectors = e.count()
     n_mv = mv.count()
@@ -2030,7 +1860,7 @@ def cdc_ann_index_upserts(spark, sf_dir):
     # doclens append (each doc streams once, so batches are disjoint);
     # the df table is a vocab-sized read-merge-overwrite (disjoint doc
     # sets => per-term df counts ADD, the span-census-merge argument).
-    # The last epoch is replayed twice and must no-op on ALL THREE
+    # Every epoch is replayed in-batch and must no-op on ALL THREE
     # tables. Certification is CONTENT-level: the emitted rows are the
     # integer-BM25 top-10 per query computed FROM THE MV TABLES ALONE
     # (read back), and the oracle recomputes the same ranking from the
@@ -2093,21 +1923,20 @@ def stream_bm25_index_mv(spark, sf_dir):
     the corpus is never rescanned; at 100 TB the df frame is the only
     non-append state and it grows with the VOCABULARY, not the corpus.
     Three-table epochs are individually idempotent (each table checks
-    its own txn stamp), the crash-retry contract foreachBatch needs."""
+    its own txn stamp), the crash-retry contract a micro-batch sink
+    needs."""
     import os
     import tempfile
 
+    from lakehouse_tacklebox_spark.streaming.mv import run_mv
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
     tmp = tempfile.mkdtemp(prefix="bm25_mv_")
-    src_dir = os.path.join(tmp, "src")
     post_dir = os.path.join(tmp, "postings")
     dlen_dir = os.path.join(tmp, "doclen")
     df_dir = os.path.join(tmp, "df")
-    ckpt = os.path.join(tmp, "ckpt")
 
     d = load_tables(spark, sf_dir, ["documents"])["documents"]
-    d.select("doc_id", "text").repartition(4).write.parquet(src_dir)
     TackleTable.create(spark, post_dir, schema="doc_id bigint, w string, tf bigint")
     TackleTable.create(spark, dlen_dir, schema="doc_id bigint, len bigint")
     TackleTable.create(spark, df_dir, schema="w string, df bigint")
@@ -2121,8 +1950,12 @@ def stream_bm25_index_mv(spark, sf_dir):
             .filter(F.col("w").rlike("^[a-z]+$") & (F.length("w") >= 2))
         )
 
+    stamps = ((post_dir, "bm25_post"), (dlen_dir, "bm25_len"), (df_dir, "bm25_df"))
+
     def _apply(batch_df, epoch):
         s = batch_df.sparkSession
+        if all(TackleTable(s, p).txn_version(a) >= epoch for p, a in stamps):
+            return  # replayed epoch: every table already holds it
         tok = _tok(batch_df).localCheckpoint(eager=True)
         post = TackleTable(s, post_dir)
         if post.txn_version("bm25_post") < epoch:
@@ -2159,38 +1992,8 @@ def stream_bm25_index_mv(spark, sf_dir):
             )
             dft.overwrite(merged, txn=("bm25_df", epoch))
 
-    last = {"epoch": None, "rows": None}
-
-    def _tracking(batch_df, epoch):
-        # capture ROWS, not the handle (undefined after the batch ends)
-        last["epoch"], last["rows"] = epoch, batch_df.collect()
-        _apply(batch_df, epoch)
-
-    raw_schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_tracking)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("availableNow stream exceeded the 300s deadline")
-
-    versions = tuple(
-        TackleTable(spark, p).version() for p in (post_dir, dlen_dir, df_dir)
-    )
-    if last["epoch"] is not None:
-        replay_df = spark.createDataFrame(last["rows"], raw_schema)
-        _apply(replay_df, last["epoch"])
-        _apply(replay_df, last["epoch"])
-    replay_noop = versions == tuple(
-        TackleTable(spark, p).version() for p in (post_dir, dlen_dir, df_dir)
+    replay_noop = run_mv(
+        spark, d.select("doc_id", "text").repartition(4), _apply, [p for p, _ in stamps]
     )
 
     # df MV == from-scratch census over everything streamed
@@ -2260,8 +2063,8 @@ def stream_bm25_index_mv(spark, sf_dir):
     # (img_id, phash, band_idx, band_key; appends, images stream once
     # so batches are disjoint) and a band-occupancy census
     # (read-merge-overwrite; disjoint batches => counts add — the skew
-    # readout a deployment watches to decide salting). The last epoch
-    # replays twice and must no-op on BOTH tables. SELF-CERTIFYING
+    # readout a deployment watches to decide salting). Every epoch
+    # replays in-batch and must no-op on BOTH tables. SELF-CERTIFYING
     # oracle (mm_image_phash_neardup precedent): pHashes aren't DuckDB-
     # recomputable, but the planted-duplicate structure is id
     # arithmetic, and serving runs FROM THE READ-BACK MV ALONE — a
@@ -2291,23 +2094,21 @@ def stream_phash_index_mv(spark, sf_dir):
     100 TB of media the index and census are the only state, and
     serving never touches payload bytes. Idempotence: both tables
     check their own txn stamp, so a crash-retried epoch (replayed
-    twice here) is a version-stable no-op."""
+    in-batch here) is a version-stable no-op."""
     import os
     import tempfile
 
     from lakehouse_tacklebox_spark.operators import multimodal as MM
+    from lakehouse_tacklebox_spark.streaming.mv import run_mv
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
     tmp = tempfile.mkdtemp(prefix="phash_mv_")
-    src_dir = os.path.join(tmp, "src")
     band_dir = os.path.join(tmp, "bands")
     occ_dir = os.path.join(tmp, "occ")
-    ckpt = os.path.join(tmp, "ckpt")
 
     d = load_tables(spark, sf_dir, ["documents"])["documents"]
     fixture = MM.as_bmp_images_with_neardups(d)
     imgs = fixture.select("img_id", "payload")
-    imgs.repartition(4).write.parquet(src_dir)
     # Manifest carries the fixture's is_copy/src_id flags so the planted-
     # copy certification below never decodes copy-ness from the id range
     # (the +100000 offset would silently collide with real doc_ids at
@@ -2340,8 +2141,12 @@ def stream_phash_index_mv(spark, sf_dir):
             ).alias("b"),
         ).select("img_id", "phash", "b.band_idx", "b.band_key")
 
+    stamps = ((band_dir, "phash_bands"), (occ_dir, "phash_occ"))
+
     def _apply(batch_df, epoch):
         s = batch_df.sparkSession
+        if all(TackleTable(s, p).txn_version(a) >= epoch for p, a in stamps):
+            return  # replayed epoch: both tables already hold it
         hashed = MM.image_phash(batch_df, keys=["img_id"]).localCheckpoint(eager=True)
         bands = _bands(hashed).localCheckpoint(eager=True)
         bt = TackleTable(s, band_dir)
@@ -2367,42 +2172,11 @@ def stream_phash_index_mv(spark, sf_dir):
             )
             ot.overwrite(merged, txn=("phash_occ", epoch))
 
-    last = {"epoch": None, "rows": None}
-
-    def _tracking(batch_df, epoch):
-        last["epoch"], last["rows"] = epoch, batch_df.collect()
-        _apply(batch_df, epoch)
-
-    raw_schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_tracking)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("availableNow stream exceeded the 300s deadline")
-
-    versions = tuple(TackleTable(spark, p).version() for p in (band_dir, occ_dir))
-    if last["epoch"] is not None:
-        replay_df = spark.createDataFrame(last["rows"], raw_schema)
-        _apply(replay_df, last["epoch"])
-        _apply(replay_df, last["epoch"])
-    replay_noop = versions == tuple(
-        TackleTable(spark, p).version() for p in (band_dir, occ_dir)
-    )
+    replay_noop = run_mv(spark, imgs.repartition(4), _apply, [p for p, _ in stamps])
 
     # index MV == from-scratch banding of everything streamed
     back = TackleTable(spark, band_dir).read().localCheckpoint(eager=True)
-    full = _bands(
-        MM.image_phash(spark.read.parquet(src_dir), keys=["img_id"])
-    ).localCheckpoint(eager=True)
+    full = _bands(MM.image_phash(imgs, keys=["img_id"])).localCheckpoint(eager=True)
     n_full = full.count()
     index_match = (back.count() == n_full) and (
         back.join(full, ["img_id", "phash", "band_idx", "band_key"]).count() == n_full
@@ -2496,8 +2270,8 @@ def stream_phash_index_mv(spark, sf_dir):
     # is what MAKES it incremental: md5(seed:id) reads only its own row,
     # so a micro-batch can key itself with no history read): documents
     # stream in; each epoch appends its keyed rows to the shuffle MV and
-    # merges the per-bucket census under per-table txn idempotence; the
-    # last epoch replays twice and must no-op on both tables. The
+    # merges the per-bucket census under per-table txn idempotence;
+    # every epoch replays in-batch and must no-op on both tables. The
     # emitted per-bucket occupancy is fully DuckDB-derivable (the same
     # md5 arithmetic), and the flags certify the MV row-set equals a
     # from-scratch keying of everything streamed (order-invariant
@@ -2524,8 +2298,8 @@ def stream_epoch_shuffle_mv(spark, sf_dir):
     documents are keyed per micro-batch (seed-keyed md5 — a pure
     per-row function, so batches need no history and the MV is
     append-only) and the per-bucket census is read-merge-overwritten,
-    both under Delta-txn idempotence with the final epoch double-
-    replayed. Per-batch cost ∝ batch size + a bucket-count-sized census
+    both under Delta-txn idempotence with every epoch replayed
+    in-batch. Per-batch cost ∝ batch size + a bucket-count-sized census
     merge; at 100 TB the shuffle order of an ever-growing corpus is
     maintained by appends alone — history is never re-keyed, which is
     the append-invariance corpus_epoch_shuffle certifies."""
@@ -2533,24 +2307,26 @@ def stream_epoch_shuffle_mv(spark, sf_dir):
     import tempfile
 
     from lakehouse_tacklebox_spark.operators.corpus import epoch_shuffle
+    from lakehouse_tacklebox_spark.streaming.mv import run_mv
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
     tmp = tempfile.mkdtemp(prefix="epoch_mv_")
-    src_dir = os.path.join(tmp, "src")
     mv_dir = os.path.join(tmp, "mv")
     occ_dir = os.path.join(tmp, "occ")
-    ckpt = os.path.join(tmp, "ckpt")
     NB = 8
 
     d = load_tables(spark, sf_dir, ["documents"])["documents"].select("doc_id")
-    d.repartition(4).write.parquet(src_dir)
     TackleTable.create(
         spark, mv_dir, schema="doc_id bigint, sort_key bigint, bucket bigint"
     )
     TackleTable.create(spark, occ_dir, schema="bucket bigint, n bigint")
 
+    stamps = ((mv_dir, "epoch_mv"), (occ_dir, "epoch_occ"))
+
     def _apply(batch_df, epoch):
         s = batch_df.sparkSession
+        if all(TackleTable(s, p).txn_version(a) >= epoch for p, a in stamps):
+            return  # replayed epoch: both tables already hold it
         keyed = epoch_shuffle(batch_df, "doc_id", seed=42, n_buckets=NB).select(
             F.col("doc_id").cast("bigint"),
             F.col("sort_key").cast("bigint"),
@@ -2578,39 +2354,10 @@ def stream_epoch_shuffle_mv(spark, sf_dir):
             )
             ot.overwrite(merged, txn=("epoch_occ", epoch))
 
-    last = {"epoch": None, "rows": None}
-
-    def _tracking(batch_df, epoch):
-        last["epoch"], last["rows"] = epoch, batch_df.collect()
-        _apply(batch_df, epoch)
-
-    raw_schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_tracking)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("availableNow stream exceeded the 300s deadline")
-
-    versions = tuple(TackleTable(spark, p).version() for p in (mv_dir, occ_dir))
-    if last["epoch"] is not None:
-        replay_df = spark.createDataFrame(last["rows"], raw_schema)
-        _apply(replay_df, last["epoch"])
-        _apply(replay_df, last["epoch"])
-    replay_noop = versions == tuple(
-        TackleTable(spark, p).version() for p in (mv_dir, occ_dir)
-    )
+    replay_noop = run_mv(spark, d.repartition(4), _apply, [p for p, _ in stamps])
 
     back = TackleTable(spark, mv_dir).read().localCheckpoint(eager=True)
-    full = epoch_shuffle(spark.read.parquet(src_dir), "doc_id", 42, NB).select(
+    full = epoch_shuffle(d, "doc_id", 42, NB).select(
         F.col("doc_id").cast("bigint"),
         F.col("sort_key").cast("bigint"),
         F.col("bucket").cast("bigint"),
@@ -2715,13 +2462,12 @@ def stream_cc_labels_mv(spark, sf_dir):
     from lakehouse_tacklebox_spark.queries import fixtures as FX
     from lakehouse_tacklebox_spark.queries.graph import _CC_ITERS
     from lakehouse_tacklebox_spark.queries.textops import _spread
+    from lakehouse_tacklebox_spark.streaming.mv import run_mv
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
     tmp = tempfile.mkdtemp(prefix="cc_mv_")
-    src_dir = os.path.join(tmp, "src")
     idx_dir = os.path.join(tmp, "idx")
     lab_dir = os.path.join(tmp, "labels")
-    ckpt = os.path.join(tmp, "ckpt")
 
     d = _spread(load_tables(spark, sf_dir, ["documents"])["documents"])
     # per-doc structures are split-invariant, so sign once up front; a
@@ -2732,7 +2478,6 @@ def stream_cc_labels_mv(spark, sf_dir):
         .filter(F.col("sig").getItem(0).isNotNull())
         .localCheckpoint(eager=True)
     )
-    d.select("doc_id").repartition(3).write.parquet(src_dir)
     TackleTable.create(
         spark, idx_dir, schema="doc_id bigint, band int, band_hash bigint"
     )
@@ -2740,6 +2485,10 @@ def stream_cc_labels_mv(spark, sf_dir):
 
     def _apply(batch_df, epoch):
         s = batch_df.sparkSession
+        it = TackleTable(s, idx_dir)
+        lt = TackleTable(s, lab_dir)
+        if lt.txn_version("cc_labels") >= epoch and it.txn_version("cc_idx") >= epoch:
+            return  # replayed epoch: both effects already committed
         ids = batch_df.select("doc_id").distinct().localCheckpoint(eager=True)
         bsigs = sigs.join(ids, "doc_id")
         bbuckets = D.lsh_band_buckets(bsigs, "doc_id", bands=16, rows_per_band=3).select(
@@ -2747,10 +2496,6 @@ def stream_cc_labels_mv(spark, sf_dir):
             F.col("band").cast("int"),
             F.col("band_hash").cast("bigint"),
         ).localCheckpoint(eager=True)
-        it = TackleTable(s, idx_dir)
-        lt = TackleTable(s, lab_dir)
-        if lt.txn_version("cc_labels") >= epoch and it.txn_version("cc_idx") >= epoch:
-            return  # replayed epoch: both effects already committed
         stored = it.read()
         # id_a < id_b (not <=): on a crash-retry where the index append
         # committed but the label merge didn't, `stored` already holds
@@ -2810,35 +2555,8 @@ def stream_cc_labels_mv(spark, sf_dir):
         if it.txn_version("cc_idx") < epoch:
             it.append(bbuckets, txn=("cc_idx", epoch))
 
-    last = {"epoch": None, "rows": None}
-
-    def _tracking(batch_df, epoch):
-        last["epoch"], last["rows"] = epoch, batch_df.collect()
-        _apply(batch_df, epoch)
-
-    raw_schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_tracking)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("availableNow stream exceeded the 300s deadline")
-
-    versions = tuple(TackleTable(spark, p).version() for p in (idx_dir, lab_dir))
-    if last["epoch"] is not None:
-        replay_df = spark.createDataFrame(last["rows"], raw_schema)
-        _apply(replay_df, last["epoch"])
-        _apply(replay_df, last["epoch"])
-    replay_noop = versions == tuple(
-        TackleTable(spark, p).version() for p in (idx_dir, lab_dir)
+    replay_noop = run_mv(
+        spark, d.select("doc_id").repartition(3), _apply, [idx_dir, lab_dir]
     )
 
     back = TackleTable(spark, lab_dir).read().localCheckpoint(eager=True)

@@ -7,7 +7,8 @@ keyed table with
 - ``sequence_by`` ordering (out-of-order events resolve by sequence, not
   arrival),
 - intra-batch dedup (latest change per key within the micro-batch),
-- ``apply_as_delete_when`` tombstones,
+- ``apply_as_delete_when`` tombstones (SCD1 keeps each deleted key's
+  sequence, so an older update arriving in a later batch stays deleted),
 - ``except_columns`` dropped from the target,
 - SCD type 1 (current state) or type 2 (validity-interval history).
 
@@ -23,6 +24,7 @@ never the full table.
 
 from __future__ import annotations
 
+import os
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -34,6 +36,9 @@ from lakehouse_tacklebox_spark.operators.scd import scd2_from_changes
 from lakehouse_tacklebox_spark.tablestore import TackleTable
 
 TOMBSTONE_COL = "__deleted"
+# SCD1 delete sequences, a TackleTable nested in the target directory:
+# target reads and vacuum walk only the target's _log and data/
+TOMBSTONE_DIR = "_tombstones"
 
 
 def apply_changes_batch(
@@ -68,24 +73,46 @@ def _apply_scd1(spark, table_path, changes, keys, sequence_by, delete_when) -> N
     )
     upserts = deduped.filter(~is_delete)
     tombstones = deduped.filter(is_delete)
+    has_tombstones = bool(delete_when) and bool(tombstones.take(1))
+    # a deleted key is forgotten by the target, so its delete sequence is
+    # kept beside it: an upsert not newer than the key's tombstone is a
+    # late event the delete already superseded
+    tomb_path = os.path.join(table_path, TOMBSTONE_DIR)
+    try:
+        tomb_table = TackleTable(spark, tomb_path)
+    except FileNotFoundError:
+        tomb_table = None
+    else:
+        latest = tomb_table.read().groupBy(*keys).agg(F.max(sequence_by).alias("__tomb_seq"))
+        upserts = (
+            upserts.join(latest, keys, "left")
+            .filter(F.col("__tomb_seq").isNull() | (F.col(sequence_by) > F.col("__tomb_seq")))
+            .select(*upserts.columns)
+        )
     try:
         table = TackleTable(spark, table_path)
     except FileNotFoundError:
         TackleTable.create(spark, table_path, upserts)
-        return
-    # sequence guard: an older change never overwrites a newer target row
-    guard = f"s.{sequence_by} >= t.{sequence_by}"
-    (
-        table.merge(upserts, on=keys)
-        .whenMatchedUpdateAll(condition=guard)
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
-    if delete_when and tombstones.take(1):
-        # tombstones merge separately: matched rows drop (sequence-
-        # guarded); tombstones for unknown keys are no-ops by omitting
-        # the insert clause
-        table.merge(tombstones, on=keys).whenMatchedDelete(condition=guard).execute()
+    else:
+        # sequence guard: an older change never overwrites a newer target row
+        guard = f"s.{sequence_by} >= t.{sequence_by}"
+        (
+            table.merge(upserts, on=keys)
+            .whenMatchedUpdateAll(condition=guard)
+            .whenNotMatchedInsertAll()
+            .execute()
+        )
+        if has_tombstones:
+            # tombstones merge separately: matched rows drop (sequence-
+            # guarded); tombstones for unknown keys leave the target as is
+            table.merge(tombstones, on=keys).whenMatchedDelete(condition=guard).execute()
+    if has_tombstones:
+        # append-only: a key's effective tombstone is its latest sequence
+        seqs = tombstones.select(*keys, sequence_by)
+        if tomb_table is None:
+            TackleTable.create(spark, tomb_path, seqs)
+        else:
+            tomb_table.append(seqs)
 
 
 def _apply_scd2(spark, table_path, changes, keys, sequence_by, delete_when) -> None:

@@ -10,6 +10,7 @@ TackleTable via foreachBatch (idempotent per epoch).
 
 from __future__ import annotations
 
+import os
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -17,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from lakehouse_tacklebox_spark.tablestore import TackleTable
+from lakehouse_tacklebox_spark.tablestore.table import _schema_ddl
 
 RESCUE_COL = "_rescued_data"
 
@@ -77,25 +79,25 @@ def stream_to_table(
     trigger: dict[str, Any] | None = None,
     mode: str = "append",
 ) -> StreamingQuery:
-    """writeStream → TackleTable via foreachBatch.
+    """writeStream → TackleTable via foreachBatch, exactly once.
 
-    Exactly-once per micro-batch rests on the checkpoint's epoch
-    tracking; the append commit itself is atomic in the table log.
+    The table is created empty from ``df.schema`` before the stream
+    starts, so every epoch takes the same write path, and each append or
+    overwrite carries the Delta-style stamp ``txn=(<checkpoint>, epoch)``:
+    an epoch re-run after its commit but before the checkpoint advanced
+    finds its stamp in the log and no-ops.
     trigger: {"availableNow": True} (default) | {"processingTime": "3 seconds"} | {"once": True}.
     """
     trigger = trigger or {"availableNow": True}
+    app_id = f"stream_to_table:{os.path.abspath(checkpoint)}"
+    TackleTable.create(df.sparkSession, table_path, schema=_schema_ddl(df), mode="ignore")
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        try:
-            table = TackleTable(spark, table_path)
-        except FileNotFoundError:
-            TackleTable.create(spark, table_path, batch_df)
-            return
+        table = TackleTable(batch_df.sparkSession, table_path)
         if mode == "append":
-            table.append(batch_df)
+            table.append(batch_df, txn=(app_id, epoch_id))
         else:
-            table.overwrite(batch_df)
+            table.overwrite(batch_df, txn=(app_id, epoch_id))
 
     return (
         df.writeStream.foreachBatch(_sink)

@@ -39,6 +39,7 @@ SLOW_TESTS = {
     "test_stateful.py::test_stateful_dedup_with_ttl_runs",
     "test_stateful.py::test_tws_dedup_native_state_ttl_expires",
     "test_streaming.py::test_apply_changes_scd1_delete_and_intrabatch_dedup",
+    "test_streaming.py::test_apply_changes_scd1_late_update_after_delete_stays_deleted",
     "test_streaming.py::test_apply_changes_scd2_late_event_splits_interval",
     "test_table_properties.py::test_random_op_sequences_match_model",
     "test_table_properties.py::test_salted_join_equals_plain_join",

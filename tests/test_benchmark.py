@@ -46,3 +46,31 @@ def test_replay_respects_offsets(spark):
     assert len(rows) == 3
     assert all(r.status == "SUCCESS" for r in rows)
     assert all(r.speedup is not None for r in rows)
+
+
+def test_sf1_scaling_probe_keeps_surviving_leg(monkeypatch):
+    import json
+    import subprocess
+
+    import bench
+
+    calls = []
+
+    def fake_run(cmd, env, timeout, **kw):
+        calls.append((env, timeout))
+        if env["SPARK_GRAFT_CPUS"] == "2":
+            raise subprocess.TimeoutExpired(cmd, timeout)
+        out = "SCALING_JSON:" + json.dumps({"cpus": 8, "queries": {"a": 1.5, "b": 0.5}})
+        return subprocess.CompletedProcess(cmd, 0, stdout=out, stderr="")
+
+    monkeypatch.setattr(subprocess, "run", fake_run)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    monkeypatch.setenv("SPARK_MASTER", "local[8]")
+    monkeypatch.setenv("SPARK_GRAFT_SF1_SCALING_BUDGET_S", "100")
+    got = bench.run_sf1_scaling_probe({"queries": {"a": 9.0, "b": 3.0}})
+
+    assert [e["SPARK_GRAFT_CPUS"] for e, _ in calls] == ["8", "2"]
+    assert all("SPARK_MASTER" not in e for e, _ in calls)
+    assert {t for _, t in calls} == {320.0}
+    assert got["hi_s"] == {"a": 1.5, "b": 0.5} and got["lo_s"] == {}
+    assert got["lo_over_hi_ratio"] == {}

@@ -76,6 +76,30 @@ def test_apply_changes_scd1_delete_and_intrabatch_dedup(spark, tmp_path):
     assert {(r["id"], r["name"]) for r in rows} == {(1, "final")}
 
 
+def test_apply_changes_scd1_late_update_after_delete_stays_deleted(spark, tmp_path):
+    path = str(tmp_path / "t_late")
+    kw = dict(keys=["id"], sequence_by="seq", apply_as_delete_when="op = 'd'")
+    apply_changes_batch(path, _changes(spark, [(1, "a", 1, "u"), (2, "b", 1, "u")]), **kw)
+    apply_changes_batch(path, _changes(spark, [(1, None, 10, "d"), (2, None, 10, "d")]), **kw)
+    # an update older than its key's delete arrives late and stays out;
+    # one newer than the delete brings the key back
+    apply_changes_batch(
+        path, _changes(spark, [(1, "stale", 5, "u"), (2, "back", 11, "u")]), **kw
+    )
+    got = {r["id"]: r["name"] for r in TackleTable(spark, path).read().collect()}
+    assert got == {2: "back"}
+
+
+def test_apply_changes_scd1_first_batch_delete_stays_deleted(spark, tmp_path):
+    path = str(tmp_path / "t_first")
+    kw = dict(keys=["id"], sequence_by="seq", apply_as_delete_when="op = 'd'")
+    # the delete arrives in the batch that creates the target
+    apply_changes_batch(path, _changes(spark, [(1, None, 10, "d"), (2, "b", 1, "u")]), **kw)
+    apply_changes_batch(path, _changes(spark, [(1, "stale", 5, "u")]), **kw)
+    got = {r["id"]: r["name"] for r in TackleTable(spark, path).read().collect()}
+    assert got == {2: "b"}
+
+
 def test_apply_changes_scd2_late_event_splits_interval(spark, tmp_path):
     path = str(tmp_path / "t3")
     b1 = [(1, "v1", 10, "u"), (1, "v3", 30, "u")]
@@ -172,6 +196,28 @@ def test_file_stream_rescue_column(spark, tmp_path):
     rows = {r["id"]: r["_rescued_data"] for r in TackleTable(spark, table).read().collect()}
     assert rows[1] is None
     assert json.loads(rows[2]) == {"extra": "kept"}
+
+
+def test_stream_to_table_replayed_epoch_is_exactly_once(spark, tmp_path):
+    src = tmp_path / "src"
+    src.mkdir()
+    with open(src / "a.json", "w") as f:
+        for i in range(20):
+            f.write(json.dumps({"id": i, "name": f"n{i}"}) + "\n")
+    table, ck = str(tmp_path / "tgt"), str(tmp_path / "ck")
+
+    def run():
+        q = stream_to_table(file_stream(spark, str(src), "id int, name string"), table, ck)
+        q.awaitTermination(60)
+
+    run()
+    assert TackleTable(spark, table).read().count() == 20
+    # the epoch committed to the table but the checkpoint never recorded
+    # it: a restart on the same checkpoint re-runs epoch 0
+    for name in ("0", ".0.crc"):
+        os.remove(os.path.join(ck, "commits", name))
+    run()
+    assert TackleTable(spark, table).read().count() == 20
 
 
 def test_stream_to_table_and_metrics_listener(spark, tmp_path):
