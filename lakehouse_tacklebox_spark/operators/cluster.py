@@ -39,13 +39,21 @@ fixed-iteration label traces (DuckDB-replayable as unrolled CTEs),
 the incremental label-store contraction merge, and large-star/
 small-star two-phase CC — same component-min label semantics, chosen
 when the round count must be part of the replayable contract rather
-than adaptive.
+than adaptive. Those all run through ``graphops.iterate``, the graph
+family's one fixed-point loop and its single checkpoint barrier. This
+operator keeps its own loop because it certifies mid-round: the
+convergence test sits between propagation and the pointer jump, so the
+final round skips the jump, which ``iterate`` (one certificate per
+whole step) cannot express. The certificate itself is shared
+(``graphops.label_sum``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from lakehouse_tacklebox_spark.operators.graphops import label_sum
 
 
 def connected_components(
@@ -83,11 +91,7 @@ def connected_components(
         F.col("u"), F.least(F.col("u"), F.coalesce(F.col("__mv"), F.col("u"))).alias("label")
     ).localCheckpoint(eager=True)
 
-    def _label_sum(frame: DataFrame) -> object:
-        # exact decimal sum — the convergence scalar (monotone decreasing)
-        return frame.agg(F.sum(F.col("label").cast("decimal(38,0)")).alias("s")).collect()[0]["s"]
-
-    prev_sum = _label_sum(labels)
+    prev_sum = label_sum(labels)
     for _ in range(max_iter):
         # min over {own label} ∪ {neighbor labels}
         msgs = (
@@ -104,7 +108,7 @@ def connected_components(
         # shuffles + a scalar agg, no jump join, no checkpoint write.
         # With min-neighbor seeding this IS the only round on quasi-clique
         # near-dup graphs.
-        prop_sum = _label_sum(propagated)
+        prop_sum = label_sum(propagated)
         if prop_sum == prev_sum:
             break
         # pointer jumping: also adopt the label's own label (path halving)
@@ -118,7 +122,7 @@ def connected_components(
                 F.least(F.col("x.label"), F.col("y.label")).alias("label"),
             )
         ).localCheckpoint(eager=True)
-        prev_sum = _label_sum(labels)
+        prev_sum = label_sum(labels)
     return labels.select(F.col("u").alias(id_col), F.col("label").alias("component"))
 
 

@@ -4,13 +4,21 @@ generation (near-dup PAIRS become dup CLUSTERS), and the third member
 of the fixed-iteration graph family (with PageRank and BFS in
 queries/graph.py).
 
+Every loop of the graph family — min-label CC, two-phase CC, k-core
+peeling here, PageRank, personalized PageRank and BFS in
+queries/graph.py — runs through :func:`iterate`, the one fixed-point
+loop. It owns the single lineage barrier (an eager ``localCheckpoint``
+after every step, so k steps build k one-step plans), the optional
+fixed-point certificate with its exact early exit, and the reuse of
+the fixed-point frame for the remaining trace slots.
+
 Spark-first shape: labels start at the node id; each iteration every
 node takes the min of its own label and its neighbors' labels — one
 aggregate-messages shuffle (edges ⋈ labels grouped on dst) per
-iteration, checkpointed so the plan stays k-shallow. Min-label is
-CANONICAL (the fixed point labels every node with its component's
-smallest node id), which is what makes the incremental merge below
-equal a from-scratch recompute once both converge.
+iteration (:func:`min_label_step`). Min-label is CANONICAL (the fixed
+point labels every node with its component's smallest node id), which
+is what makes the incremental merge below equal a from-scratch
+recompute once both converge.
 
 At 100 TB: edges hash-partition on src, labels on node, each iteration
 is one shuffle bounded by |E|, min() combines map-side, and there is
@@ -24,31 +32,68 @@ gate needs a replayable program, and k is certified by a converged
 flag rather than assumed.
 
 Relationship to ``operators/cluster.connected_components``: that is
-the PRODUCTION variant — run-to-convergence with an exact decimal
-label-sum convergence scalar per round (adaptive round count, one
-driver action per round). THIS module is the certified-program family:
-fixed iteration counts that DuckDB can replay as unrolled CTEs
-(cc_label_trace), the incremental label-store merge
-(merge_labels_incremental), and the O(log d) two-phase contraction
-(cc_two_phase_rounds). Same label semantics — both converge to the
+the PRODUCTION variant — run-to-convergence with the same exact
+decimal label-sum certificate (:func:`label_sum`) per round (adaptive
+round count, one driver action per round). THIS module is the
+certified-program family: fixed iteration counts that DuckDB can
+replay as unrolled CTEs (cc_label_trace), the incremental label-store
+merge (merge_labels_incremental), and the O(log d) two-phase
+contraction (cc_two_phase_rounds). Same label semantics — both converge to the
 component-min labelling; dedup_cluster_assign uses the production
 variant, the graph_cc_* entries use these.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def _label_sum(labels: DataFrame):
-    """Exact decimal label-sum — the fixed-point certificate scalar.
+def iterate(
+    init: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    n: int,
+    certify: Callable[[DataFrame], object] | None = None,
+) -> tuple[list[DataFrame], bool]:
+    """The graph family's one fixed-point loop.
+
+    Returns ``(frames, converged)`` with ``len(frames) == n + 1``:
+    ``frames[0]`` is ``init`` (the caller decides whether it is
+    materialized) and ``frames[k]`` is ``step(frames[k - 1])`` cut by
+    an eager ``localCheckpoint`` — the single lineage barrier, so k
+    steps build k one-step plans, never one k-deep plan.
+
+    Blind (``certify=None``): ``step`` runs exactly ``n`` times and
+    ``converged`` is False. Certified: ``certify`` maps a frame to a
+    scalar that is equal on two consecutive frames only at the fixed
+    point (a monotone sum or count, or a row-set signature of a
+    deterministic step). ``init`` and every new frame are certified;
+    once two certificates in a row agree the fixed point is proven,
+    ``converged`` is True, ``step`` is not called again and the
+    remaining slots reuse that frame object.
+    """
+    frames = [init]
+    cert = certify(init) if certify is not None else None
+    converged = False
+    for _ in range(n):
+        if converged:
+            frames.append(frames[-1])
+            continue
+        frames.append(step(frames[-1]).localCheckpoint(eager=True))
+        if certify is not None:
+            prev, cert = cert, certify(frames[-1])
+            converged = cert == prev
+    return frames, converged
+
+
+def label_sum(labels: DataFrame):
+    """Exact decimal label-sum — the min-label fixed-point certificate.
 
     Min-label propagation is monotone: a node's label never increases,
     so the label-sum strictly decreases while ANY label changes and an
-    unchanged sum PROVES the fixed point (no cancellation is possible —
-    the same argument the production operator `operators/cluster.py`
-    has always used for its convergence test). decimal(38,0) keeps the
-    sum exact at any node-id magnitude."""
+    unchanged sum PROVES the fixed point (no cancellation is possible).
+    decimal(38,0) keeps the sum exact at any node-id magnitude."""
     return labels.agg(
         F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
     ).collect()[0]["s"]
@@ -64,34 +109,37 @@ def symmetric_edges(pairs: DataFrame, a_col: str = "id_a", b_col: str = "id_b") 
     ).distinct()
 
 
+def min_label_step(edges: DataFrame, lab: DataFrame) -> DataFrame:
+    """One min-label propagation step over a SYMMETRIC (src, dst) edge
+    frame: every node takes the min of its own label and its neighbors'.
+    The edges⋈labels join carries .hint("merge"): a label table is not
+    broadcastable at scale, and under the gate's concurrent drive
+    several entries' AQE broadcasts together exhaust the vanilla driver
+    heap (the same rationale as the PageRank loop in queries/graph.py)."""
+    msgs = edges.join(
+        lab.withColumnRenamed("node", "src").hint("merge"), "src"
+    ).select(F.col("dst").alias("node"), "label")
+    return (
+        lab.unionByName(msgs)
+        .groupBy("node")
+        .agg(F.min("label").cast("bigint").alias("label"))
+    )
+
+
+def _min_label_loop(edges: DataFrame, n: int, certify=None) -> tuple[list[DataFrame], bool]:
+    nodes = edges.select(F.col("src").alias("node")).distinct()
+    init = nodes.withColumn("label", F.col("node").cast("bigint")).localCheckpoint(eager=True)
+    return iterate(init, lambda lab: min_label_step(edges, lab), n, certify)
+
+
 def cc_label_trace(edges: DataFrame, iters: int) -> list[DataFrame]:
     """Min-label propagation over a SYMMETRIC (src, dst) edge frame.
 
     Returns ``iters + 1`` label frames (node, label): element 0 is the
     identity labelling over the edge frame's node set, element k the
-    labels after k propagation steps. Every frame is eagerly
-    checkpointed — k iterations build k independent one-shuffle plans,
-    never one 2^k-deep plan. Iteration joins carry .hint("merge"): a
-    label table is not broadcastable at scale, and under the gate's
-    concurrent drive several entries' AQE broadcasts together exhaust
-    the vanilla driver heap (same rationale as the PageRank loop,
-    queries/graph.py:126).
+    labels after k blind propagation steps.
     """
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-    lab = nodes.withColumn("label", F.col("node").cast("bigint")).localCheckpoint(eager=True)
-    out = [lab]
-    for _ in range(iters):
-        msgs = edges.join(
-            lab.withColumnRenamed("node", "src").hint("merge"), "src"
-        ).select(F.col("dst").alias("node"), "label")
-        lab = (
-            lab.unionByName(msgs)
-            .groupBy("node")
-            .agg(F.min("label").cast("bigint").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        out.append(lab)
-    return out
+    return _min_label_loop(edges, iters)[0]
 
 
 def cc_min_label_converged(edges: DataFrame, iters: int) -> tuple[DataFrame, bool]:
@@ -111,24 +159,8 @@ def cc_min_label_converged(edges: DataFrame, iters: int) -> tuple[DataFrame, boo
     iterations" flag the CC entries publish (label-sum equality between
     steps k-1 and k ⟺ zero labels changed at step k).
     """
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-    lab = nodes.withColumn("label", F.col("node").cast("bigint")).localCheckpoint(eager=True)
-    prev_sum = _label_sum(lab)
-    for _ in range(iters):
-        msgs = edges.join(
-            lab.withColumnRenamed("node", "src").hint("merge"), "src"
-        ).select(F.col("dst").alias("node"), "label")
-        lab = (
-            lab.unionByName(msgs)
-            .groupBy("node")
-            .agg(F.min("label").cast("bigint").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        s = _label_sum(lab)
-        if s == prev_sum:
-            return lab, True
-        prev_sum = s
-    return lab, False
+    frames, converged = _min_label_loop(edges, iters, label_sum)
+    return frames[-1], converged
 
 
 def cc_min_label(edges: DataFrame, iters: int, require_converged: bool = False) -> DataFrame:
@@ -137,31 +169,22 @@ def cc_min_label(edges: DataFrame, iters: int, require_converged: bool = False) 
     labels, see :func:`cc_min_label_converged`).
 
     A fixed ``iters`` silently returns NON-converged labels when the
-    graph's min-label path lengths exceed it (VERDICT r12 item 6). The
-    battery certifies convergence per entry with an explicit flag; for
-    library callers, ``require_converged=True`` raises ``ValueError``
-    when the fixed point was not certified within ``iters`` steps.
+    graph's min-label path lengths exceed it. The battery certifies
+    convergence per entry with an explicit flag; for library callers,
+    ``require_converged=True`` runs one verification step past
+    ``iters`` and raises ``ValueError`` unless the labels after
+    ``iters`` steps are already the fixed point.
     """
-    lab, converged = cc_min_label_converged(edges, iters)
-    if require_converged and not converged:
-        # labels were still moving at round ``iters``; run ONE extra
-        # verification round (the documented contract): converged
-        # exactly at round ``iters`` is accepted, anything later raises.
-        extra = edges.join(
-            lab.withColumnRenamed("node", "src").hint("merge"), "src"
-        ).select(F.col("dst").alias("node"), "label")
-        nxt = (
-            lab.unionByName(extra)
-            .groupBy("node")
-            .agg(F.min("label").cast("bigint").alias("label"))
+    if not require_converged:
+        return cc_min_label_converged(edges, iters)[0]
+    frames, converged = _min_label_loop(edges, iters + 1, label_sum)
+    if not converged:
+        raise ValueError(
+            f"cc_min_label(iters={iters}) has not converged: "
+            f"labels still changed on round {iters + 1}; "
+            "raise iters or use cc_two_phase_rounds for long paths"
         )
-        if _label_sum(nxt) != _label_sum(lab):
-            raise ValueError(
-                f"cc_min_label(iters={iters}) has not converged: "
-                f"labels still changed on round {iters + 1}; "
-                "raise iters or use cc_two_phase_rounds for long paths"
-            )
-    return lab
+    return frames[iters]
 
 
 def merge_labels_incremental(
@@ -214,6 +237,60 @@ def merge_labels_incremental(
     )
 
 
+def _star_phase(e: DataFrame, large: bool) -> DataFrame:
+    """One large-star (``large``) or small-star phase over a symmetric
+    (src, dst) edge frame; returns the re-symmetrized distinct edges."""
+    # neighborhood min via a src-partitioned WINDOW instead of
+    # groupBy + join-back: the aggregate and the join were keyed
+    # the same way, so one exchange serves both (guide §2.4) —
+    # each phase shuffles the edge frame ONCE, not twice. m is
+    # identical per row (min over Γ(src) ∪ {src}).
+    joined = e.withColumn(
+        "m",
+        F.least(F.min("dst").over(Window.partitionBy("src")), F.col("src")),
+    )
+    if large:
+        pairs = joined.filter(F.col("dst") > F.col("src")).select(
+            F.least("dst", "m").alias("a"), F.greatest("dst", "m").alias("b")
+        )
+    else:
+        # the (src, m) self-attachment is emitted per ROW rather
+        # than per distinct src — the phase-end distinct dedupes
+        # to the identical set, and skipping the per-src dedupe
+        # keeps the phase at one pre-distinct exchange
+        pairs = (
+            joined.filter(F.col("dst") <= F.col("src"))
+            .select(
+                F.least("dst", "m").alias("a"),
+                F.greatest("dst", "m").alias("b"),
+            )
+            .unionByName(
+                joined.select(
+                    F.least("src", "m").alias("a"),
+                    F.greatest("src", "m").alias("b"),
+                )
+            )
+        )
+    # one distinct per phase, not two: the post-symmetrization
+    # distinct subsumes the former pre-symmetrization one (the
+    # deduped union of both orientations is the same set), so
+    # each phase is 3 shuffles (neighborhood-min aggregate,
+    # join, dedupe) instead of 4
+    und = pairs.filter(F.col("a") != F.col("b"))
+    return (
+        und.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        .unionByName(und.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+        .distinct()
+    )
+
+
+def _star_round(e: DataFrame) -> DataFrame:
+    # LAZY cut between the phases: lineage stops at the large-star
+    # frame without a driver-blocking job of its own; the round's
+    # barrier in iterate materializes both phases
+    return _star_phase(_star_phase(e, True).localCheckpoint(eager=False), False)
+
+
 def cc_two_phase_rounds(
     edges: DataFrame, rounds: int, return_converged: bool = False
 ) -> list[DataFrame] | tuple[list[DataFrame], bool]:
@@ -224,97 +301,41 @@ def cc_two_phase_rounds(
 
     One round = large-star (every neighbor larger than u attaches to
     min(Γ(u) ∪ {u})) then small-star (every neighbor ≤ u, and u itself,
-    attaches to the min). Each phase is one groupBy-on-src aggregate
-    (the per-node neighborhood min) + one join back to the edge list +
-    a distinct — two shuffles per phase, edge-list-bounded, no driver
-    state. The edge set CONTRACTS monotonically toward stars whose
-    centers are the component minima, so labels after convergence are
-    identical to min-label's fixed point (both canonical); measured on
-    the sparse part–supplier graph: converged in 3 rounds at sf0.1
-    where 5 min-label hops still carried 14 stale labels.
+    attaches to the min). Each phase is one src-partitioned window
+    (the per-node neighborhood min) + a distinct — edge-list-bounded
+    shuffles, no driver state. The edge set CONTRACTS monotonically
+    toward stars whose centers are the component minima, so labels
+    after convergence are identical to min-label's fixed point (both
+    canonical); measured on the sparse part–supplier graph: converged
+    in 3 rounds at sf0.1 where 5 min-label hops still carried 14 stale
+    labels.
 
     Returns ``rounds`` symmetric (src, dst) edge frames, one per
-    completed round, each eagerly checkpointed. A round is a
-    deterministic function of the previous round's edge set, so once
-    two consecutive rounds produce the SAME set every later round
-    repeats it: each round's frame is fingerprinted with the shared
-    4-fold row-set signature (operators/signature.py — the repo's
-    standing cert primitive) and on a signature match the remaining
-    rounds reuse the fixed-point frame instead of recomputing it
-    (~8 shuffles per skipped round). With ``return_converged=True``
-    returns ``(frames, converged)`` where ``converged`` is the
-    signature verdict on the last two frames — equal sets always
-    produce equal signatures, and unequal signatures PROVE unequal
-    sets, so the flag is exact up to the documented ~2^-64 collision
-    floor (exact-equality pin at sf0.001: tests/test_graph_cc.py).
+    completed round (:func:`iterate` minus its input slot). A round is
+    a deterministic function of the previous round's edge set, so once
+    two consecutive frames are the SAME set every later round repeats
+    it: the input and each round's frame are fingerprinted with the
+    shared 4-fold row-set signature (operators/signature.py) and on a
+    signature match the remaining rounds reuse the fixed-point frame
+    instead of recomputing it. With ``return_converged=True`` returns
+    ``(frames, converged)`` where ``converged`` is the signature
+    verdict on the last two frames (the input counting as the frame
+    before round 1) — equal sets always produce equal signatures, and
+    unequal signatures PROVE unequal sets, so the flag is exact up to
+    the documented ~2^-64 collision floor (exact-equality pin at
+    sf0.001: tests/test_graph_cc.py).
     """
     from lakehouse_tacklebox_spark.operators.signature import rowset_signature
 
-    e = edges.localCheckpoint(eager=True)
-    out = []
-    prev_sig = None
-    converged = False
-    for _ in range(rounds):
-        if converged:
-            out.append(e)  # fixed point: every later round repeats it
-            continue
-        for phase_large in (True, False):
-            # neighborhood min via a src-partitioned WINDOW instead of
-            # groupBy + join-back: the aggregate and the join were keyed
-            # the same way, so one exchange serves both (guide §2.4) —
-            # each phase shuffles the edge frame ONCE, not twice. m is
-            # identical per row (min over Γ(src) ∪ {src}).
-            joined = e.withColumn(
-                "m",
-                F.least(F.min("dst").over(Window.partitionBy("src")), F.col("src")),
-            )
-            if phase_large:
-                pairs = joined.filter(F.col("dst") > F.col("src")).select(
-                    F.least("dst", "m").alias("a"), F.greatest("dst", "m").alias("b")
-                )
-            else:
-                # the (src, m) self-attachment is emitted per ROW rather
-                # than per distinct src — the phase-end distinct dedupes
-                # to the identical set, and skipping the per-src dedupe
-                # keeps the phase at one pre-distinct exchange
-                pairs = (
-                    joined.filter(F.col("dst") <= F.col("src"))
-                    .select(
-                        F.least("dst", "m").alias("a"),
-                        F.greatest("dst", "m").alias("b"),
-                    )
-                    .unionByName(
-                        joined.select(
-                            F.least("src", "m").alias("a"),
-                            F.greatest("src", "m").alias("b"),
-                        )
-                    )
-                )
-            # one distinct per phase, not two: the post-symmetrization
-            # distinct subsumes the former pre-symmetrization one (the
-            # deduped union of both orientations is the same set), so
-            # each phase is 3 shuffles (neighborhood-min aggregate,
-            # join, dedupe) instead of 4
-            und = pairs.filter(F.col("a") != F.col("b"))
-            e = (
-                und.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-                .unionByName(und.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-                .distinct()
-                # LAZY checkpoint: the round's signature aggregate below
-                # materializes both phases in ONE job (the eager form
-                # spent three driver-blocking jobs per round); lineage
-                # is still cut at each phase, so plans stay rounds-
-                # shallow exactly as before
-                .localCheckpoint(eager=False)
-            )
-        sig = rowset_signature(e, ["src", "dst"])
-        if sig == prev_sig:
-            converged = True
-        prev_sig = sig
-        out.append(e)
+    frames, converged = iterate(
+        edges.localCheckpoint(eager=True),
+        _star_round,
+        rounds,
+        lambda e: rowset_signature(e, ["src", "dst"]),
+    )
     if return_converged:
-        return out, converged
-    return out
+        return frames[1:], converged
+    return frames[1:]
 
 
 def star_labels(edges: DataFrame) -> DataFrame:
@@ -431,44 +452,27 @@ def kcore_peel_trace(edges: DataFrame, k: int, rounds: int) -> list[DataFrame]:
 
     One round = one degree aggregate (groupBy src over the symmetric
     edge frame, map-side combined) + two semi-joins filtering both
-    endpoints — all edge-bounded, no driver state, each round
-    checkpointed so the plan stays rounds-shallow (the cc_label_trace
-    discipline). Peeling cascades (removing a degree-1 node can expose
-    a new sub-k node), so ``rounds`` is a program parameter certified
-    by the caller's trace — converged rounds repeat identical stats,
-    the same no-convergence-claim contract as the CC family.
+    endpoints — all edge-bounded, no driver state. Peeling cascades
+    (removing a degree-1 node can expose a new sub-k node), so
+    ``rounds`` is a program parameter certified by the caller's trace —
+    converged rounds repeat identical stats, the same
+    no-convergence-claim contract as the CC family.
 
     Returns ``rounds + 1`` symmetric (src, dst) edge frames: element 0
     is the input, element r the survivors after r peel rounds. Peeling
     only ever REMOVES edges (each round's set is a subset of the
     previous round's), so an unchanged edge COUNT proves the fixed
-    point exactly — no signature needed — and every later round
-    repeats the same frame; the loop certifies the count per round
-    (one map-side scalar per round, ~8 shuffles saved per skipped
-    round) and reuses the fixed-point frame for the tail.
+    point exactly — no signature needed — and :func:`iterate` reuses
+    the fixed-point frame for the tail.
     """
-    e = edges.localCheckpoint(eager=True)
-    out = [e]
-    prev_n = e.count()
-    fixed = False
-    for _ in range(rounds):
-        if fixed:
-            out.append(e)  # count-certified fixed point: rounds repeat
-            continue
+
+    def peel(e: DataFrame) -> DataFrame:
         keep = (
             e.groupBy("src")
             .agg(F.count(F.lit(1)).alias("d"))
             .filter(F.col("d") >= k)
             .select("src")
         )
-        e = (
-            e.join(keep, "src", "semi")
-            .join(keep.withColumnRenamed("src", "dst"), "dst", "semi")
-            .localCheckpoint(eager=True)
-        )
-        n = e.count()
-        if n == prev_n:
-            fixed = True
-        prev_n = n
-        out.append(e)
-    return out
+        return e.join(keep, "src", "semi").join(keep.withColumnRenamed("src", "dst"), "dst", "semi")
+
+    return iterate(edges.localCheckpoint(eager=True), peel, rounds, lambda e: e.count())[0]

@@ -12,18 +12,58 @@ Pregel/GraphX aggregate-messages step as plain DataFrame ops). At
 100 TB the edges partition on dst across the fleet, contributions
 combine map-side, and k iterations cost k edge-shuffles — the textbook
 distributed PageRank plan, with no driver-side state but the loop
-counter.
+counter. Every loop here runs through ``graphops.iterate`` (one
+checkpoint barrier per step, optional fixed-point certificate), every
+entry builds its graph with :func:`_part_supplier_edges`, and the
+per-iteration trace entries stack their stat rows with :func:`_trace`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from collections import Counter
 
+from pyspark.sql import DataFrame, functions as F
+
+from lakehouse_tacklebox_spark.operators import graphops as G
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables
 
 _PR_ITERS = 5
 _PR_TOPK = 20
+
+
+def _part_supplier_edges(li: DataFrame) -> DataFrame:
+    """Symmetric distinct (src, dst) edges of the part–supplier graph
+    over the given lineitem rows: parts are 2·partkey, suppliers
+    2·suppkey+1 (the oracles' ``e`` CTE)."""
+    pairs = li.select(
+        (2 * F.col("l_partkey")).cast("bigint").alias("id_a"),
+        (2 * F.col("l_suppkey") + 1).cast("bigint").alias("id_b"),
+    ).distinct()
+    return G.symmetric_edges(pairs)
+
+
+def _trace(frames: list[DataFrame], core, key: str, start: int = 0) -> DataFrame:
+    """One stat row per loop frame, ordered by ``key`` (the slot number,
+    counted from ``start``). ``core(frame)`` is a 1-row aggregate; it is
+    computed once per DISTINCT frame object — a certified loop's tail
+    slots share the fixed-point frame — and checkpointed only when its
+    frame repeats, so the repeated slots read the persisted row."""
+    n_slots = Counter(map(id, frames))
+    cores: dict[int, DataFrame] = {}
+    rows = []
+    for i, f in enumerate(frames, start=start):
+        c = cores.get(id(f))
+        if c is None:
+            c = core(f)
+            if n_slots[id(f)] > 1:
+                c = c.localCheckpoint(eager=False)
+            cores[id(f)] = c
+        rows.append(c.select(F.lit(i).cast("bigint").alias(key), *c.columns))
+    out = rows[0]
+    for r in rows[1:]:
+        out = out.unionByName(r)
+    return out.orderBy(key)
 
 
 def _pagerank_oracle(iters: int = _PR_ITERS, topk: int = _PR_TOPK) -> str:
@@ -104,15 +144,7 @@ def graph_pagerank_bipartite(spark, sf_dir):
     PageRank: edges hash-partitioned, map-side combine, k shuffles for
     k iterations, no driver state."""
     li = load_tables(spark, sf_dir, ["lineitem"])["lineitem"]
-    fwd = li.select(
-        (2 * F.col("l_partkey")).cast("bigint").alias("src"),
-        (2 * F.col("l_suppkey") + 1).cast("bigint").alias("dst"),
-    ).distinct()
-    e = (
-        fwd.unionByName(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _part_supplier_edges(li).localCheckpoint(eager=True)
     deg = e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("outdeg")
     )
@@ -126,18 +158,16 @@ def graph_pagerank_bipartite(spark, sf_dir):
         .localCheckpoint(eager=True)
     )
 
-    mass = deg.select("node", F.lit(1000000).cast("bigint").alias("mass"))
-    for _ in range(_PR_ITERS):
+    def power_step(mass):
         # merge-hint the iteration join: a frontier/mass table is not
         # broadcastable at scale, and under the gate's concurrent drive
         # six entries' AQE broadcasts together exhaust driver memory —
-        # sort-merge keeps every iteration executor-side. The former
-        # nodes-frame left join is gone: the graph is SYMMETRIC, so
-        # every node appears as dst of some edge and mass covers every
-        # node each round — inflow already lands on the full node set
-        # (same integers; the oracle's LEFT JOIN never fires its NULL
-        # arm either).
-        mass = (
+        # sort-merge keeps every iteration executor-side. No nodes-frame
+        # left join: the graph is SYMMETRIC, so every node appears as
+        # dst of some edge and mass covers every node each round —
+        # inflow already lands on the full node set (the oracle's LEFT
+        # JOIN never fires its NULL arm either).
+        return (
             e2.join(mass.withColumnRenamed("node", "src").hint("merge"), "src")
             .select("dst", F.expr("mass DIV outdeg").alias("c"))
             .groupBy(F.col("dst").alias("node"))
@@ -146,8 +176,10 @@ def graph_pagerank_bipartite(spark, sf_dir):
                 "node",
                 F.expr("CAST(150000 + (85 * s) DIV 100 AS BIGINT)").alias("mass"),
             )
-            .localCheckpoint(eager=True)
         )
+
+    mass0 = deg.select("node", F.lit(1000000).cast("bigint").alias("mass"))
+    mass = G.iterate(mass0, power_step, _PR_ITERS)[0][-1]
 
     # top-k as a distributed TakeOrdered (never a global-order window —
     # a single-partition rank over every node is the 100 TB smell the
@@ -218,6 +250,22 @@ def _bfs_oracle(hops: int = _BFS_HOPS) -> str:
     return "\n".join(parts)
 
 
+def bfs_hop(e: DataFrame, dist: DataFrame) -> DataFrame:
+    """One BFS hop: ``dist`` (node, dist) united with its one-hop
+    expansion over the (src, dst) edges, min distance per node. The
+    expansion join is merge-hinted: a frontier is not broadcastable at
+    scale (same driver-broadcast-pressure rationale as the PageRank
+    iteration join)."""
+    expanded = e.join(
+        dist.withColumnRenamed("node", "src").hint("merge"), "src"
+    ).select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
+    return (
+        dist.unionByName(expanded)
+        .groupBy("node")
+        .agg(F.min("dist").cast("bigint").alias("dist"))
+    )
+
+
 @register(
     "graph_bfs_distance",
     tags=("graph", "iterative", "join"),
@@ -240,34 +288,15 @@ def graph_bfs_distance(spark, sf_dir):
     the expansion joins partition on src, and k hops cost k shuffles
     bounded by the reached ball, never the whole graph."""
     li = load_tables(spark, sf_dir, ["lineitem"])["lineitem"]
-    fwd = li.select(
-        (2 * F.col("l_partkey")).cast("bigint").alias("src"),
-        (2 * F.col("l_suppkey") + 1).cast("bigint").alias("dst"),
-    ).distinct()
-    e = (
-        fwd.unionByName(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    dist = (
+    e = _part_supplier_edges(li).localCheckpoint(eager=True)
+    dist0 = (
         li.filter(F.col("l_partkey") < 3)
         .select((2 * F.col("l_partkey")).cast("bigint").alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0).cast("bigint"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(_BFS_HOPS):
-        # merge-hint: same driver-broadcast-pressure rationale as the
-        # PageRank iteration joins above
-        expanded = e.join(
-            dist.withColumnRenamed("node", "src").hint("merge"), "src"
-        ).select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-        dist = (
-            dist.unionByName(expanded)
-            .groupBy("node")
-            .agg(F.min("dist").cast("bigint").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
+    dist = G.iterate(dist0, lambda d: bfs_hop(e, d), _BFS_HOPS)[0][-1]
     return (
         dist.groupBy("dist")
         .agg(
@@ -354,20 +383,13 @@ def graph_cc_labels(spark, sf_dir):
     stays k-shallow; the trace rows are six 1-row aggregates. At
     100 TB: k shuffles bounded by |E|, min() combines map-side, no
     driver state."""
-    from lakehouse_tacklebox_spark.operators import graphops as G
-
     li = load_tables(spark, sf_dir, ["lineitem"])["lineitem"]
-    pairs = (
-        li.filter(F.col("l_quantity") <= 2)
-        .select(
-            (2 * F.col("l_partkey")).cast("bigint").alias("id_a"),
-            (2 * F.col("l_suppkey") + 1).cast("bigint").alias("id_b"),
-        )
-        .distinct()
+    trace = G.cc_label_trace(
+        _part_supplier_edges(li.filter(F.col("l_quantity") <= 2)), _CC_TRACE_ITERS
     )
-    trace = G.cc_label_trace(G.symmetric_edges(pairs), _CC_TRACE_ITERS)
-    stats = [
-        lab.agg(
+    return _trace(
+        trace,
+        lambda lab: lab.agg(
             F.countDistinct("label").cast("bigint").alias("n_labels"),
             F.sum(
                 F.when(F.col("node") == F.col("label"), F.lit(1)).otherwise(F.lit(0))
@@ -375,13 +397,9 @@ def graph_cc_labels(spark, sf_dir):
             .cast("bigint")
             .alias("n_roots"),
             F.sum("label").cast("bigint").alias("sum_label"),
-        ).select(F.lit(k).cast("bigint").alias("iter"), "n_labels", "n_roots", "sum_label")
-        for k, lab in enumerate(trace)
-    ]
-    out = stats[0]
-    for s in stats[1:]:
-        out = out.unionByName(s)
-    return out.orderBy("iter")
+        ),
+        "iter",
+    )
 
 
 # Exact 3-gram Jaccard pair list (same CTE as dedup_ngram_jaccard's
@@ -477,8 +495,6 @@ def dedup_cluster_cc(spark, sf_dir):
     tiny relative to the corpus (near-dup pairs only), each CC
     iteration is one shuffle over it, and the census never touches
     document text."""
-    from lakehouse_tacklebox_spark.operators import graphops as G
-
     pairs = _dup_pairs(spark, sf_dir)
     # cc_min_label_converged skips iterations past the certified fixed
     # point (label-sum monotonicity — identical labels to running all 6
@@ -547,7 +563,6 @@ def graph_cc_incremental(spark, sf_dir):
     identically on both engines) and matches_full (incremental census
     == full-recompute census as a row set — the canonical-label
     equality the contraction argument promises)."""
-    from lakehouse_tacklebox_spark.operators import graphops as G
     from lakehouse_tacklebox_spark.operators.concurrency import run_concurrent
     from lakehouse_tacklebox_spark.operators.signature import rowsets_equal
 
@@ -685,67 +700,35 @@ def graph_cc_twophase(spark, sf_dir):
     part–supplier graph as graph_cc_labels, reported as the per-round
     contraction trace (undirected edge count, node count, component
     count) plus a converged flag (edge set stable across the last two
-    rounds). Each phase is two edge-bounded shuffles
-    (operators/graphops.py cc_two_phase_rounds), checkpointed per
-    phase; O(log d) rounds replace min-label's O(d) hops — the variant
+    rounds). Each phase is edge-bounded shuffles only
+    (operators/graphops.py cc_two_phase_rounds), with a lazy cut
+    between the phases and the loop's barrier after each round; O(log d) rounds replace min-label's O(d) hops — the variant
     a web-scale dedup graph actually needs."""
-    from lakehouse_tacklebox_spark.operators import graphops as G
-
     li = load_tables(spark, sf_dir, ["lineitem"])["lineitem"]
-    pairs = (
-        li.filter(F.col("l_quantity") <= 2)
-        .select(
-            (2 * F.col("l_partkey")).cast("bigint").alias("id_a"),
-            (2 * F.col("l_suppkey") + 1).cast("bigint").alias("id_b"),
-        )
-        .distinct()
-    )
     # return_converged: the per-round 4-fold signature that already
     # gates the round-skip doubles as the converged flag (equal sets ⟹
-    # equal signatures; unequal signatures PROVE unequal sets), so the
-    # former two full-frame anti-join counts over the last two rounds
-    # are gone — exact-equality pin at sf0.001 in tests/test_graph_cc.py.
+    # equal signatures; unequal signatures PROVE unequal sets) —
+    # exact-equality pin at sf0.001 in tests/test_graph_cc.py.
     rounds, stable = G.cc_two_phase_rounds(
-        G.symmetric_edges(pairs), _CC2_ROUNDS, return_converged=True
+        _part_supplier_edges(li.filter(F.col("l_quantity") <= 2)),
+        _CC2_ROUNDS,
+        return_converged=True,
     )
-    stats = []
-    # converged-tail rounds reuse the fixed-point frame OBJECT; compute
-    # the 3-aggregate core once per UNIQUE frame (lazy checkpoint — the
-    # final action materializes it once and the repeated rounds read the
-    # persisted 1-row frame) instead of re-aggregating the same edge set
-    # per repeated round.
-    core_by_frame: dict[int, object] = {}
-    for r, e in enumerate(rounds, start=1):
-        core = core_by_frame.get(id(e))
-        if core is None:
-            labels = G.star_labels(e)
-            core = (
-                e.filter(F.col("src") < F.col("dst"))
-                .agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
-                .crossJoin(
-                    e.agg(F.countDistinct("src").cast("bigint").alias("n_nodes"))
+
+    def core(e):
+        return (
+            e.filter(F.col("src") < F.col("dst"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
+            .crossJoin(e.agg(F.countDistinct("src").cast("bigint").alias("n_nodes")))
+            .crossJoin(
+                G.star_labels(e).agg(
+                    F.countDistinct("label").cast("bigint").alias("n_components")
                 )
-                .crossJoin(
-                    labels.agg(
-                        F.countDistinct("label").cast("bigint").alias("n_components")
-                    )
-                )
-                .localCheckpoint(eager=False)
-            )
-            core_by_frame[id(e)] = core
-        stats.append(
-            core.select(
-                F.lit(r).cast("bigint").alias("round"),
-                "n_edges",
-                "n_nodes",
-                "n_components",
             )
         )
-    out = stats[0]
-    for s in stats[1:]:
-        out = out.unionByName(s)
-    return out.withColumn("converged", F.lit(1 if stable else 0).cast("int")).orderBy(
-        "round"
+
+    return _trace(rounds, core, "round", start=1).withColumn(
+        "converged", F.lit(1 if stable else 0).cast("int")
     )
 
 
@@ -817,8 +800,6 @@ def graph_triangle_count(spark, sf_dir):
     li = load_tables(spark, sf_dir, ["lineitem"])["lineitem"].filter(
         F.expr(_TRI_PRED)
     ).select("l_orderkey", "l_partkey")
-    from lakehouse_tacklebox_spark.operators import graphops as G
-
     a = li.alias("a")
     b = li.alias("b")
     e = (
@@ -913,18 +894,8 @@ def graph_ppr_seeded(spark, sf_dir):
     frontier's out-edges plus a full-outer merge with the seed frame;
     absent nodes are absent, not zero-filled, which is what keeps PPR
     query-time-cheap on sparse graphs at scale."""
-    from lakehouse_tacklebox_spark.operators import graphops as G
-
     li = load_tables(spark, sf_dir, ["lineitem"])["lineitem"]
-    fwd = li.select(
-        (2 * F.col("l_partkey")).cast("bigint").alias("src"),
-        (2 * F.col("l_suppkey") + 1).cast("bigint").alias("dst"),
-    ).distinct()
-    e = (
-        fwd.unionByName(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _part_supplier_edges(li).localCheckpoint(eager=True)
     deg = e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("outdeg")
     )
@@ -943,15 +914,15 @@ def graph_ppr_seeded(spark, sf_dir):
         .withColumn("base", F.lit(150000).cast("bigint"))
         .localCheckpoint(eager=True)
     )
-    mass = seeds.select("node", F.lit(1000000).cast("bigint").alias("mass"))
-    for _ in range(_PPR_ITERS):
+
+    def ppr_step(mass):
         inflow = (
             e2.join(mass.withColumnRenamed("node", "src").hint("merge"), "src")
             .select("dst", F.expr("mass DIV outdeg").alias("c"))
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("c").cast("bigint").alias("s"))
         )
-        mass = (
+        return (
             seeds.join(inflow, "node", "full_outer")
             .select(
                 "node",
@@ -963,8 +934,10 @@ def graph_ppr_seeded(spark, sf_dir):
                 .alias("mass"),
             )
             .filter(F.col("mass") > 0)
-            .localCheckpoint(eager=True)
         )
+
+    mass0 = seeds.select("node", F.lit(1000000).cast("bigint").alias("mass"))
+    mass = G.iterate(mass0, ppr_step, _PPR_ITERS)[0][-1]
     top = mass.orderBy(F.col("mass").desc(), "node").limit(_PPR_TOPK).collect()
     return spark.createDataFrame(
         [
@@ -1019,8 +992,6 @@ def corpus_dup_rate_by_source(spark, sf_dir):
     large corpus fraction on rotten ones — AQE picks broadcast vs
     shuffle from the actual size) — the cost is the CC
     (pair-graph-bounded) plus a single pass over documents."""
-    from lakehouse_tacklebox_spark.operators import graphops as G
-
     labels = G.cc_min_label(G.symmetric_edges(_dup_pairs(spark, sf_dir)), _CC_ITERS)
     dups = labels.filter(F.col("node") != F.col("label")).select(
         F.col("node").alias("doc_id"), F.lit(1).alias("is_dup")
@@ -1112,8 +1083,6 @@ def graph_cc_decremental(spark, sf_dir):
     removed doc) are re-solved on their surviving subgraph, all other
     store rows are untouched. Census (canonical label, size, max doc)
     over the repaired store plus converged and matches_full flags."""
-    from lakehouse_tacklebox_spark.operators import graphops as G
-
     from lakehouse_tacklebox_spark.operators.concurrency import run_concurrent
     from lakehouse_tacklebox_spark.operators.signature import rowset_signature
 
@@ -1225,43 +1194,18 @@ def graph_kcore_extract(spark, sf_dir):
     combined degree aggregate + two semi-joins — edge-bounded shuffles,
     checkpointed rounds-shallow, no driver state. The returned rows are
     the peel trace: (round, n_nodes, n_dir_edges, node_checksum)."""
-    from lakehouse_tacklebox_spark.operators import graphops as G
-
     li = load_tables(spark, sf_dir, ["lineitem"])["lineitem"]
-    pairs = (
-        li.filter(F.col("l_quantity") <= 2)
-        .select(
-            (2 * F.col("l_partkey")).cast("bigint").alias("id_a"),
-            (2 * F.col("l_suppkey") + 1).cast("bigint").alias("id_b"),
-        )
-        .distinct()
+    trace = G.kcore_peel_trace(
+        _part_supplier_edges(li.filter(F.col("l_quantity") <= 2)), _KCORE_K, _KCORE_ROUNDS
     )
-    trace = G.kcore_peel_trace(G.symmetric_edges(pairs), _KCORE_K, _KCORE_ROUNDS)
-    # fixed-point tail rounds reuse the same frame object (count-
-    # certified inside kcore_peel_trace); aggregate each UNIQUE frame
-    # once and stamp the round literal per trace slot.
-    core_by_frame: dict[int, object] = {}
-    stats = []
-    for r, e in enumerate(trace):
-        core = core_by_frame.get(id(e))
-        if core is None:
-            core = e.agg(
-                F.count_distinct("src").cast("bigint").alias("n_nodes"),
-                F.count(F.lit(1)).cast("bigint").alias("n_dir_edges"),
-                F.coalesce(F.sum_distinct(F.col("src")), F.lit(0))
-                .cast("bigint")
-                .alias("node_checksum"),
-            ).localCheckpoint(eager=False)
-            core_by_frame[id(e)] = core
-        stats.append(
-            core.select(
-                F.lit(r).cast("bigint").alias("round"),
-                "n_nodes",
-                "n_dir_edges",
-                "node_checksum",
-            )
-        )
-    out = stats[0]
-    for s in stats[1:]:
-        out = out.unionByName(s)
-    return out.orderBy("round")
+    return _trace(
+        trace,
+        lambda e: e.agg(
+            F.count_distinct("src").cast("bigint").alias("n_nodes"),
+            F.count(F.lit(1)).cast("bigint").alias("n_dir_edges"),
+            F.coalesce(F.sum_distinct(F.col("src")), F.lit(0))
+            .cast("bigint")
+            .alias("node_checksum"),
+        ),
+        "round",
+    )

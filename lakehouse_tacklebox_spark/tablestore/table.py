@@ -821,6 +821,16 @@ class MergeBuilder:
         result = tagged.filter(F.col("__action").isin("keep", "update", "insert")).select("__row.*")
 
         new_files, n_rows = _write_files(result, t.path)
+        if n_rows == 0 and not touched:
+            # Nothing matched and nothing was inserted: the table is
+            # unchanged, so drop the empty output instead of committing
+            # a version. A txn stamp still commits on its own (no files
+            # added or removed), so a retried epoch sees it.
+            for d in {os.path.dirname(f) for f in new_files}:
+                shutil.rmtree(os.path.join(t.path, d))
+            new_files = []
+            if self._txn is None:
+                return start_v
         rel_touched = [_entry_path(t.path, p) for p in touched]
         metrics = {
             "numTargetFilesRewritten": len(rel_touched),
@@ -848,7 +858,7 @@ class MergeBuilder:
             if self._txn is not None and t.txn_version(self._txn[0]) >= self._txn[1]:
                 return t.version()
             raise
-        if self._write_cdf:
+        if self._write_cdf and (new_files or rel_touched):
             cdf = tagged.filter(F.col("__action").isin("update", "insert", "delete")).select(
                 "__row.*",
                 F.col("__action")

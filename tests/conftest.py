@@ -7,8 +7,8 @@ SF_DIR_MID = "/root/testdata/sf0.01"
 
 # The slow lane (VERDICT r13 item 1; see pytest.ini): every test that
 # measured >= 8 s in the recorded full-suite run (625 passed, 31m27s,
-# round 14). Marked centrally by node id rather than per-file
-# decorators so the lane is one auditable list. The default run
+# round 14). Marked centrally by `<file>::<test>` key rather than
+# per-file decorators so the lane is one auditable list. The default run
 # (`pytest tests/ -x -q`) excludes these via addopts; the full suite —
 # including every oracle-parity and property pin below — stays
 # runnable with -m "slow or not slow" (documented weekly lane).
@@ -17,7 +17,6 @@ SF_DIR_MID = "/root/testdata/sf0.01"
 # skipped), but we warn so the list tracks reality.
 SLOW_TESTS = {
     "test_fixtures.py::test_frozen_ivfpq_equals_live",
-    "test_graph_cc.py::test_cc_min_label_converged_equals_blind_trace",
     "test_lsh_neardup.py::test_lsh_neardup_precision_and_recall",
     "test_multimodal.py::test_nonaligned_crop_phase_voting",
     "test_oracle_parity.py::test_oracle_parity[cdc_ann_index_deletes]",
@@ -35,7 +34,6 @@ SLOW_TESTS = {
     "test_properties.py::test_incremental_cc_merge_matches_full",
     "test_properties.py::test_temperature_mix_matches_reference",
     "test_properties.py::test_triangle_census_matches_bruteforce",
-    "test_properties.py::test_two_phase_cc_matches_union_find",
     "test_stateful.py::test_stateful_dedup_with_ttl_runs",
     "test_stateful.py::test_tws_dedup_native_state_ttl_expires",
     "test_streaming.py::test_apply_changes_scd1_delete_and_intrabatch_dedup",
@@ -61,9 +59,9 @@ SLOW_TESTS = {
 def pytest_collection_modifyitems(config, items):
     seen = set()
     for item in items:
-        # node ids are tests/<file>::<name>; the list keys on the tail
-        # so a different invocation cwd doesn't unmark anything
-        key = "/".join(item.nodeid.split("/")[1:]) if "/" in item.nodeid else item.nodeid
+        # keyed on file name + test name, so neither the invocation cwd
+        # nor moving a test file into a subdirectory unmarks anything
+        key = f"{item.path.name}::{item.name}"
         if key in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
             seen.add(key)

@@ -273,3 +273,59 @@ def test_twophase_signature_converged_matches_exact_equality(spark):
     rounds6, conv6 = G.cc_two_phase_rounds(edges, 6, return_converged=True)
     assert conv6 is True and len(rounds6) == 6
     assert exact_equal(rounds6[-1], rounds[-1])
+
+
+def _counted(step):
+    calls = []
+
+    def wrapped(df):
+        calls.append(df)
+        return step(df)
+
+    return wrapped, calls
+
+
+def _decrement(df):
+    # x -> max(x - 1, 0): fixed point 0
+    return df.select(F.greatest(F.col("x") - 1, F.lit(0)).cast("bigint").alias("x"))
+
+
+def _x(df):
+    return df.collect()[0]["x"]
+
+
+def _xs(frames):
+    return [_x(f) for f in frames]
+
+
+def test_iterate_blind_runs_every_step(spark):
+    init = spark.createDataFrame([(5,)], "x bigint")
+    step, calls = _counted(lambda df: df.select((F.col("x") + 1).alias("x")))
+    frames, converged = G.iterate(init, step, 3)
+    assert len(calls) == 3 and converged is False
+    assert len(frames) == 4 and frames[0] is init
+    assert _xs(frames) == [5, 6, 7, 8]
+
+
+def test_iterate_certified_stops_at_fixed_point(spark):
+    # 2 -> 1 -> 0 -> 0: the fixed point is proven by step 3 (two equal
+    # certificates in a row); steps 4-6 never run and reuse its frame
+    init = spark.createDataFrame([(2,)], "x bigint")
+    step, calls = _counted(_decrement)
+    frames, converged = G.iterate(init, step, 6, certify=_x)
+    assert converged is True
+    assert len(calls) == 3 and len(frames) == 7
+    assert all(f is frames[3] for f in frames[4:])
+    assert _xs(frames) == [2, 1, 0, 0, 0, 0, 0]
+
+
+def test_iterate_not_converged_while_certificate_moves(spark):
+    init = spark.createDataFrame([(2,)], "x bigint")
+    # the last step (1 -> 0) still moves the certificate: not proven
+    step, calls = _counted(_decrement)
+    frames, converged = G.iterate(init, step, 2, certify=_x)
+    assert converged is False and len(calls) == 2 and _xs(frames) == [2, 1, 0]
+    # an input that is already the fixed point is proven by one step
+    zero = spark.createDataFrame([(0,)], "x bigint")
+    frames, converged = G.iterate(zero, _decrement, 1, certify=_x)
+    assert converged is True and _xs(frames) == [0, 0]

@@ -767,24 +767,19 @@ def test_graph_iteration_joins_are_sort_merge(spark):
     """The PageRank/BFS iteration joins carry merge hints: a frontier
     is not broadcastable at scale, and the concurrent gate drive proved
     simultaneous AQE broadcasts exhaust the vanilla driver heap. Verify
-    one hop's expansion join plans as SortMergeJoin, not broadcast."""
+    that the hop graph_bfs_distance iterates plans its expansion join
+    as SortMergeJoin, not broadcast."""
     from pyspark.sql import functions as F
 
+    from lakehouse_tacklebox_spark.queries.graph import _part_supplier_edges, bfs_hop
     from lakehouse_tacklebox_spark.sources import load_tables
 
     li = load_tables(spark, SF_DIR, ["lineitem"])["lineitem"]
-    fwd = li.select(
-        (2 * F.col("l_partkey")).cast("bigint").alias("src"),
-        (2 * F.col("l_suppkey") + 1).cast("bigint").alias("dst"),
-    ).distinct()
-    e = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    frontier = fwd.select(F.col("src")).distinct().withColumn(
+    e = _part_supplier_edges(li)
+    frontier = e.select(F.col("src").alias("node")).distinct().withColumn(
         "dist", F.lit(0).cast("bigint")
     )
-    hop = e.join(frontier.hint("merge"), "src")
-    plan = _plan(hop)
+    plan = _plan(bfs_hop(e, frontier))
     assert "SortMergeJoin" in plan
     assert "BroadcastHashJoin" not in plan
 
@@ -800,22 +795,25 @@ def test_bpe_bytes_single_corpus_scan_per_branch(spark):
 
 
 def test_cc_iteration_join_is_sort_merge(spark):
-    """cc_label_trace's propagation join carries the merge hint (same
-    driver-broadcast-pressure rationale as the PageRank loop): one
-    iteration's edges-to-labels join must plan as SortMergeJoin."""
+    """The min-label step every CC loop iterates carries the merge hint
+    on its propagation join (same driver-broadcast-pressure rationale as
+    the PageRank loop): its edges-to-labels join must plan as
+    SortMergeJoin."""
     from pyspark.sql import functions as F
 
     from lakehouse_tacklebox_spark.operators import graphops as G
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a bigint, id_b bigint"
+    # a range, not a local list: its size estimate is tiny, so without
+    # the hint the planner WOULD broadcast (a list-backed RDD has no
+    # size estimate and never broadcasts, which would make this vacuous)
+    pairs = spark.range(1, 4).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
     e = G.symmetric_edges(pairs)
     lab = e.select(F.col("src").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
-    hop = e.join(lab.withColumnRenamed("node", "src").hint("merge"), "src")
-    plan = _plan(hop)
+    plan = _plan(G.min_label_step(e, lab))
     assert "SortMergeJoin" in plan
     assert "BroadcastHashJoin" not in plan
 

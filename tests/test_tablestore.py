@@ -245,6 +245,36 @@ def test_txn_idempotent_merge_and_append(spark, users, tmp_path):
     assert t.read().count() == n_before
 
 
+def test_empty_source_merge_commits_nothing(spark, tmp_path):
+    """A MERGE whose source is empty changes nothing: no version, no
+    file. With a txn stamp it commits the stamp alone, so a retried
+    epoch still sees it."""
+    schema = "id bigint, name string, balance double"
+    t = TackleTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame([(1, "alice", 100.0)], schema).coalesce(1),
+    )
+    empty = spark.createDataFrame([], schema)
+    for _ in range(2):
+        v = t.merge(empty, on=["id"]).whenMatchedUpdateAll().whenNotMatchedInsertAll().execute()
+        assert v == 0
+    assert t.version() == 0
+    assert len(t._active_files()[0]) == 1
+    assert len(list((tmp_path / "t" / "data").iterdir())) == 1
+
+    v = t.merge(empty, on=["id"]).whenMatchedUpdateAll().withTransaction("mv", 7).execute()
+    assert v == 1 and t.version() == 1
+    last = t._entries()[-1]
+    assert last.operation == "MERGE" and last.add == [] and last.remove == []
+    assert len(t._active_files()[0]) == 1
+    assert len(list((tmp_path / "t" / "data").iterdir())) == 1
+    assert t.txn_version("mv") == 7
+    # the retried epoch no-ops
+    assert t.merge(empty, on=["id"]).whenMatchedUpdateAll().withTransaction("mv", 7).execute() == 1
+    assert rows(t.read()) == [(1, "alice", 100.0)]
+
+
 def test_txn_recheck_inside_commit_window(spark, users, tmp_path):
     """The idempotence stamp is re-validated INSIDE _commit's attempt
     loop, not only in append()'s pre-check: a zombie writer sharing the
