@@ -37,7 +37,7 @@ def clone(source: TackleTable, dest_path: str, deep: bool = False) -> TackleTabl
     dest_path = os.path.abspath(dest_path)
     if os.path.isdir(os.path.join(dest_path, _LOG_DIR)):
         raise FileExistsError(dest_path)
-    files, schema = source._active_files()
+    snap = source.snapshot()
     os.makedirs(os.path.join(dest_path, _LOG_DIR))
     os.makedirs(os.path.join(dest_path, _DATA_DIR))
 
@@ -45,23 +45,23 @@ def clone(source: TackleTable, dest_path: str, deep: bool = False) -> TackleTabl
         sub = os.path.join(_DATA_DIR, uuid.uuid4().hex)
         os.makedirs(os.path.join(dest_path, sub))
         add = []
-        for f in files:
+        for f in snap.files:
             name = os.path.basename(f)
             shutil.copyfile(os.path.join(source.path, f), os.path.join(dest_path, sub, name))
             add.append(os.path.join(sub, name))
     else:
         # absolute refs into the source root; os.path.join in read()
         # passes absolute paths through untouched
-        add = [os.path.join(source.path, f) for f in files]
+        add = [os.path.join(source.path, f) for f in snap.files]
 
     entry = LogEntry(
         version=0,
         timestamp_ms=int(time.time() * 1000),
         operation="CLONE",
-        operation_parameters={"source": source.path, "deep": deep, "sourceVersion": source.version()},
+        operation_parameters={"source": source.path, "deep": deep, "sourceVersion": snap.version},
         add=add,
         remove=[],
-        schema=schema,
+        schema=snap.schema,
         metrics={"numCopiedFiles": len(add) if deep else 0, "numReferencedFiles": 0 if deep else len(add)},
         file_stats=_collect_stats(dest_path, add),
     )

@@ -26,7 +26,7 @@ import os
 
 from pyspark.sql import DataFrame
 
-from lakehouse_tacklebox_spark.tablestore.table import TackleTable, _write_files
+from lakehouse_tacklebox_spark.tablestore.table import Snapshot, TackleTable, _align_schema, _write_files
 
 OPERATION = "COPY INTO"
 
@@ -44,11 +44,13 @@ def _list(source_dir: str, pattern: str | None) -> list[str]:
 
 
 def loaded_files(table: TackleTable) -> set[str]:
-    out: set[str] = set()
-    for entry in table.history():
-        if entry["operation"] == OPERATION:
-            out.update(entry["operationParameters"].get("sourceFiles", []))
-    return out
+    return _loaded(table.snapshot())
+
+
+def _loaded(snap: Snapshot) -> set[str]:
+    return {
+        f for e in snap.entries if e.operation == OPERATION for f in e.operation_parameters.get("sourceFiles", [])
+    }
 
 
 def copy_into(
@@ -61,11 +63,12 @@ def copy_into(
 ) -> dict:
     """Ingest not-yet-loaded files; returns {"numSourceFiles", "numLoadedFiles",
     "numOutputRows", "version"}. No-op (no new commit) when nothing is new."""
-    all_files = _list(source_dir, pattern)
-    new = [f for f in all_files if f not in loaded_files(table)]
+    snap = table.snapshot()
+    all_files, loaded = _list(source_dir, pattern), _loaded(snap)
+    new = [f for f in all_files if f not in loaded]
     result = {"numSourceFiles": len(all_files), "numLoadedFiles": len(new)}
     if not new:
-        result.update({"numOutputRows": 0, "version": table.version()})
+        result.update({"numOutputRows": 0, "version": snap.version})
         return result
 
     reader = table.spark.read.format(file_format)
@@ -75,11 +78,10 @@ def copy_into(
     if transform is not None:
         df = transform(df)
 
-    from lakehouse_tacklebox_spark.tablestore.table import _align_schema
-
-    df = _align_schema(df, table._active_files()[1], allow_new=False)
+    df = _align_schema(df, snap.schema, allow_new=False)
     files, n = _write_files(df, table.path)
     version = table._commit(
+        snap,
         OPERATION,
         {"sourceFiles": new, "pattern": pattern or "", "format": file_format},
         files,

@@ -10,10 +10,14 @@ change-data-feed. Layout:
     <root>/data/<uuid>/part-*.parquet   immutable data files
     <root>/_changes/v=N/            CDF rows for commits that produce them
 
-Each log entry records added/removed file lists; the active file set at
-version V is the replay of entries 0..V. Data files are immutable —
-every operation commits by swapping file lists, exactly the Delta model,
-so readers are never torn and old versions stay readable until VACUUM.
+Each log entry records added/removed file lists; the table state at
+version V (active files, schema, per-file stats and sketches,
+properties, txn stamps, identity watermarks) is one fold of entries
+0..V into an immutable :class:`Snapshot`. Every operation reads the log
+once, into one snapshot, and takes all of its metadata from it. Data
+files are immutable — every operation commits by swapping file lists,
+exactly the Delta model, so readers are never torn and old versions
+stay readable until VACUUM.
 
 Scale design:
 - Writes go through Spark (distributed); the log touches only file
@@ -21,8 +25,12 @@ Scale design:
 - MERGE/DELETE/UPDATE rewrite only the files that actually contain
   affected rows (found with one pushdown scan over ``input_file_name``),
   the same touched-file pruning Delta's MERGE does.
-- Optimistic concurrency: the atomic-rename commit protocol detects
-  racing writers; appends retry, conflicting rewrites raise.
+- Optimistic concurrency: a write commits at its snapshot's version + 1
+  with a put-if-absent hard link, which is the conflict check. A
+  rewrite (overwrite, DELETE, UPDATE, MERGE, RESTORE, OPTIMIZE) that
+  loses the race raises CommitConflictError, unless the winner carried
+  the rewrite's own txn stamp (then it is a no-op); a blind append
+  re-reads the snapshot and retries.
 
 Reference semantics ported (capability, not code): merge upsert
 (delta_sync.py:54-66), RESTORE rollback (transactions.py:420-449),
@@ -38,7 +46,7 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -113,6 +121,55 @@ class LogEntry:
         )
 
 
+@dataclass(frozen=True)
+class Snapshot:
+    """The table state at one version, folded from the log in one pass.
+
+    Every operation reads one snapshot at its start and takes all of its
+    metadata from it. Never mutated once :meth:`replay` has built it."""
+
+    version: int
+    schema: str
+    files: tuple[str, ...]  # active files, in replay order
+    stats: dict[str, dict]  # per active file: {col: [lo, hi]}
+    sketches: dict[str, dict]  # per active file: {col: sketch}
+    properties: dict[str, str]
+    txns: dict[str, int]  # latest txn stamp per appId
+    identity_watermarks: dict[str, int]
+    entries: tuple[LogEntry, ...]  # entries 0..version
+
+    @staticmethod
+    def replay(entries: Sequence[LogEntry], version: int | None = None) -> "Snapshot":
+        """Fold entries 0..version (all when None) into table state."""
+        kept = tuple(e for e in entries if version is None or e.version <= version)
+        stats: dict[str, dict] = {}
+        sketches: dict[str, dict] = {}
+        schema = ""
+        props: dict[str, str] = {}
+        txns: dict[str, int] = {}
+        watermarks: dict[str, int] = {}
+        for e in kept:
+            for f in e.remove:
+                stats.pop(f, None)
+                sketches.pop(f, None)
+            for f in e.add:
+                stats[f] = e.file_stats.get(f, {})
+                sketches[f] = e.file_sketches.get(f, {})
+            schema = e.schema or schema
+            if e.operation == "SET TBLPROPERTIES":
+                props.update(e.operation_parameters.get("properties", {}))
+            txn = e.operation_parameters.get("txn")
+            if txn:
+                txns[txn["appId"]] = int(txn["version"])
+            watermarks.update(e.identity_watermark)
+        version = kept[-1].version if kept else -1
+        return Snapshot(version, schema, tuple(stats), stats, sketches, props, txns, watermarks, kept)
+
+    def has_txn(self, txn: tuple[str, int] | None) -> bool:
+        """True when ``txn=(app_id, version)`` is already committed."""
+        return txn is not None and self.txns.get(txn[0], -1) >= txn[1]
+
+
 class TackleTable:
     """Handle to a versioned parquet table rooted at ``path``."""
 
@@ -173,24 +230,26 @@ class TackleTable:
         return os.path.join(self.path, _LOG_DIR)
 
     def _entries(self) -> list[LogEntry]:
-        names = sorted(n for n in os.listdir(self._log_path()) if n.endswith(".json"))
-        return [LogEntry.from_json(open(os.path.join(self._log_path(), n)).read()) for n in names]
+        """The only place that lists and parses the log."""
+        out = []
+        for n in sorted(n for n in os.listdir(self._log_path()) if n.endswith(".json")):
+            with open(os.path.join(self._log_path(), n)) as f:
+                out.append(LogEntry.from_json(f.read()))
+        return out
+
+    def snapshot(self, version: int | None = None) -> Snapshot:
+        """The table state at ``version`` (latest when None), from one
+        read of the log."""
+        return Snapshot.replay(self._entries(), version)
 
     def version(self) -> int:
         """Latest committed version."""
-        return self._entries()[-1].version
+        return self.snapshot().version
 
     def _active_files(self, version: int | None = None) -> tuple[list[str], str]:
-        """Replay the log to (active file list, schema DDL) at version."""
-        active: list[str] = []
-        schema = ""
-        for e in self._entries():
-            if version is not None and e.version > version:
-                break
-            removed = set(e.remove)
-            active = [f for f in active if f not in removed] + e.add
-            schema = e.schema or schema
-        return active, schema
+        """(active file list, schema DDL) at version."""
+        snap = self.snapshot(version)
+        return list(snap.files), snap.schema
 
     def set_properties(self, props: dict[str, str]) -> int:
         """ALTER TABLE ... SET TBLPROPERTIES. Properties accumulate across
@@ -198,15 +257,11 @@ class TackleTable:
         comma-separated int/string columns — enables bloom-style
         membership sketches on every subsequently written file."""
         return self._commit(
-            "SET TBLPROPERTIES", {"properties": dict(props)}, [], [], {}
+            self.snapshot(), "SET TBLPROPERTIES", {"properties": dict(props)}, [], [], {}
         )
 
     def properties(self) -> dict[str, str]:
-        out: dict[str, str] = {}
-        for e in self._entries():
-            if e.operation == "SET TBLPROPERTIES":
-                out.update(e.operation_parameters.get("properties", {}))
-        return out
+        return dict(self.snapshot().properties)
 
     def txn_version(self, app_id: str) -> int:
         """Latest transaction version committed under ``app_id``, or -1.
@@ -217,27 +272,7 @@ class TackleTable:
         can detect, after a crash/retry, whether its write already
         committed — the stamp travels IN the data commit, so there is no
         window where data is applied but the marker is not."""
-        for e in reversed(self._entries()):
-            txn = e.operation_parameters.get("txn")
-            if txn and txn.get("appId") == app_id:
-                return int(txn["version"])
-        return -1
-
-    def _sketch_columns(self) -> list[str]:
-        raw = self.properties().get("pointlookup.columns", "")
-        return [c.strip() for c in raw.split(",") if c.strip()]
-
-    def _active_sketches(self, version: int | None = None) -> dict[str, dict]:
-        """Replay the log to {active file: {col: sketch}}."""
-        out: dict[str, dict] = {}
-        for e in self._entries():
-            if version is not None and e.version > version:
-                break
-            for f in e.remove:
-                out.pop(f, None)
-            for f in e.add:
-                out[f] = e.file_sketches.get(f, {})
-        return out
+        return self.snapshot().txns.get(app_id, -1)
 
     def identity_watermark(self, col: str) -> int:
         """Next free id for an identity column — from the persisted
@@ -245,50 +280,39 @@ class TackleTable:
         before watermarking fall back to the footer min/max stats of the
         active files (metadata already in the log); a full column read
         happens only if some active file predates stats collection."""
-        for e in reversed(self._entries()):
-            if col in e.identity_watermark:
-                return e.identity_watermark[col]
-        active, _ = self._active_files()
-        if not active:
-            return 0
-        stats = self._active_stats()
-        his = []
-        for f in active:
-            rng = stats.get(f, {}).get(col)
-            if rng is None:  # legacy file without footer stats
-                m = self.read().agg(F.max(col)).collect()[0][0]
-                return int(m) + 1 if m is not None else 0
-            his.append(rng[1])
-        return int(max(his)) + 1
+        return self._identity_watermark(self.snapshot(), col)
 
-    def _active_stats(self, version: int | None = None) -> dict[str, dict]:
-        """Replay the log to {active file: column stats}."""
-        stats: dict[str, dict] = {}
-        for e in self._entries():
-            if version is not None and e.version > version:
-                break
-            for f in e.remove:
-                stats.pop(f, None)
-            for f in e.add:
-                stats[f] = e.file_stats.get(f, {})
-        return stats
+    def _identity_watermark(self, snap: Snapshot, col: str) -> int:
+        if col in snap.identity_watermarks:
+            return snap.identity_watermarks[col]
+        if not snap.files:
+            return 0
+        ranges = [snap.stats[f].get(col) for f in snap.files]
+        if None in ranges:  # a legacy file without footer stats
+            m = self._read(snap).agg(F.max(col)).collect()[0][0]
+            return int(m) + 1 if m is not None else 0
+        return int(max(hi for _, hi in ranges)) + 1
 
     # ---------- reads ----------
 
+    def _read(self, snap: Snapshot, files: Sequence[str] | None = None) -> DataFrame:
+        """``files`` (default: all active files) read with the snapshot's schema."""
+        files = snap.files if files is None else files
+        if not files:
+            return self.spark.createDataFrame([], snap.schema)
+        return self.spark.read.schema(snap.schema).parquet(*[os.path.join(self.path, f) for f in files])
+
     def read(self, version: int | None = None, timestamp_ms: int | None = None) -> DataFrame:
         """Snapshot read, optionally time-traveled (VERSION/TIMESTAMP AS OF)."""
+        if timestamp_ms is not None and version is not None:
+            raise ValueError("pass version or timestamp_ms, not both")
+        snap = self.snapshot(version)
         if timestamp_ms is not None:
-            if version is not None:
-                raise ValueError("pass version or timestamp_ms, not both")
-            candidates = [e.version for e in self._entries() if e.timestamp_ms <= timestamp_ms]
+            candidates = [e.version for e in snap.entries if e.timestamp_ms <= timestamp_ms]
             if not candidates:
                 raise ValueError(f"no version at or before timestamp {timestamp_ms}")
-            version = max(candidates)
-        files, schema = self._active_files(version)
-        if not files:
-            return self.spark.createDataFrame([], schema)
-        paths = [os.path.join(self.path, f) for f in files]
-        return self.spark.read.schema(schema).parquet(*paths)
+            snap = Snapshot.replay(snap.entries, max(candidates))
+        return self._read(snap)
 
     def scan(self, condition: str | None = None, version: int | None = None) -> DataFrame:
         """Predicate scan with log-stats file skipping (Delta data
@@ -298,22 +322,18 @@ class TackleTable:
         matching keys into. The full condition is still applied as a
         DataFrame filter — pruning is a superset guarantee, correctness
         never depends on stats."""
+        snap = self.snapshot(version)
         if not condition:
-            return self.read(version)
-        kept, _skipped = self.prune_files(condition, version)
-        schema = self._active_files(version)[1]
-        if not kept:
-            return self.spark.createDataFrame([], schema).filter(F.expr(condition))
-        paths = [os.path.join(self.path, f) for f in kept]
-        return self.spark.read.schema(schema).parquet(*paths).filter(F.expr(condition))
+            return self._read(snap)
+        return self._read(snap, self._prune(snap, condition)[0]).filter(F.expr(condition))
 
     def prune_files(self, condition: str, version: int | None = None) -> tuple[list[str], list[str]]:
         """Split active files into (kept, skipped) for a predicate using
         the log's per-file column envelopes."""
-        files, _ = self._active_files(version)
-        stats = self._active_stats(version)
+        return self._prune(self.snapshot(version), condition)
+
+    def _prune(self, snap: Snapshot, condition: str) -> tuple[list[str], list[str]]:
         bounds = _conjunct_bounds(condition)
-        sketches = self._active_sketches(version)
         # Pre-hash each equality literal once (one tiny JVM job per
         # predicate, control-plane): the sketch check needs the same
         # xxhash64-of-string the builder used.
@@ -321,13 +341,13 @@ class TackleTable:
         for col, op, val in bounds:
             if op != "=" or isinstance(val, (float, bool)):
                 continue
-            if any(col in sk for sk in sketches.values()):
+            if any(col in sk for sk in snap.sketches.values()):
                 probes[col] = _probe_hashes(self.spark, val)
         kept, skipped = [], []
-        for f in files:
-            ok = _file_may_match(stats.get(f, {}), bounds)
+        for f in snap.files:
+            ok = _file_may_match(snap.stats[f], bounds)
             if ok and probes:
-                fsk = sketches.get(f, {})
+                fsk = snap.sketches[f]
                 for col, raw in probes.items():
                     sk = fsk.get(col)
                     if sk is not None and not _sketch_may_contain(sk, raw):
@@ -349,19 +369,19 @@ class TackleTable:
                 "operationParameters": e.operation_parameters,
                 "operationMetrics": e.metrics,
             }
-            for e in reversed(self._entries())
+            for e in reversed(self.snapshot().entries)
         ]
 
     def detail(self) -> dict[str, Any]:
         """DESCRIBE DETAIL equivalent."""
-        files, schema = self._active_files()
-        size = sum(os.path.getsize(os.path.join(self.path, f)) for f in files)
+        snap = self.snapshot()
+        size = sum(os.path.getsize(os.path.join(self.path, f)) for f in snap.files)
         return {
             "location": self.path,
-            "numFiles": len(files),
+            "numFiles": len(snap.files),
             "sizeInBytes": size,
-            "schema": schema,
-            "version": self.version(),
+            "schema": snap.schema,
+            "version": snap.version,
         }
 
     def read_changes(self, starting_version: int, ending_version: int | None = None) -> DataFrame:
@@ -371,8 +391,9 @@ class TackleTable:
         update with CDF) produce rows; append commits contribute their
         rows as inserts.
         """
+        snap = self.snapshot()
         frames = []
-        for e in self._entries():
+        for e in snap.entries:
             if e.version < starting_version:
                 continue
             if ending_version is not None and e.version > ending_version:
@@ -388,8 +409,7 @@ class TackleTable:
                     )
                 )
         if not frames:
-            _, schema = self._active_files()
-            return self.spark.createDataFrame([], schema + ", _change_type string, _commit_version long")
+            return self.spark.createDataFrame([], snap.schema + ", _change_type string, _commit_version long")
         out = frames[0]
         for fdf in frames[1:]:
             out = out.unionByName(fdf, allowMissingColumns=True)
@@ -399,40 +419,43 @@ class TackleTable:
 
     def _commit(
         self,
+        snap: Snapshot,
         operation: str,
         params: dict[str, Any],
         add: list[str],
         remove: list[str],
         metrics: dict[str, Any],
         schema: str | None = None,
-        expected_version: int | None = None,
         retries: int = 5,
         identity_reserve: tuple[str, int] | None = None,
         txn: tuple[str, int] | None = None,
+        cdf: DataFrame | None = None,
     ) -> int:
-        sketch_cols = self._sketch_columns() if add else []
-        file_sketches = (
-            _build_sketches(
-                self.spark, self.path, add, schema or self._active_files()[1], sketch_cols
-            )
-            if sketch_cols
-            else {}
-        )
+        """Commit at ``snap.version + 1``, ``snap`` being the snapshot the
+        operation read. Losing the put-if-absent race to another writer
+        raises CommitConflictError, except for a blind APPEND, which
+        re-reads the snapshot and retries. ``cdf`` (change rows without
+        ``_commit_version``) is written once the commit has landed."""
+        sketch_cols = [c.strip() for c in snap.properties.get("pointlookup.columns", "").split(",")]
+        file_sketches = _build_sketches(self.spark, self.path, add, schema or snap.schema, sketch_cols)
+        file_stats = _collect_stats(self.path, add)
+        id_wm: dict[str, int] = {}
+        if identity_reserve is not None:
+            col, expected_wm = identity_reserve
+            his = [int(file_stats[f][col][1]) for f in add if col in file_stats.get(f, {})]
+            id_wm[col] = max(his) + 1 if his else expected_wm
         for attempt in range(retries):
             # Delta SetTransaction conflict rule: re-validate the idempotence
             # stamp on EVERY attempt, not only in the caller's pre-check — a
             # concurrent/zombie writer sharing the app_id (streaming failover)
-            # may have committed this version between the pre-check and the
-            # winning log write, and blind-retrying past its FileExistsError
-            # would double-apply the data. A hit means the work is already
-            # durably committed: succeed as a no-op.
-            if txn is not None and self.txn_version(txn[0]) >= txn[1]:
-                return self.version()
-            current = self.version()
-            if expected_version is not None and current != expected_version:
-                raise CommitConflictError(
-                    f"table at v{current}, transaction started at v{expected_version}"
-                )
+            # may have committed this version after the operation read its
+            # snapshot, and committing past it would double-apply the data.
+            # A hit means the work is already durably committed: succeed as
+            # a no-op.
+            if snap.has_txn(txn):
+                return snap.version
+            if attempt and operation != "APPEND":
+                raise CommitConflictError(f"{operation} lost the race: table moved to v{snap.version}")
             if identity_reserve is not None:
                 # ids in `add` were assigned from the watermark the caller
                 # read; if a concurrent commit moved it, those ids may
@@ -440,29 +463,19 @@ class TackleTable:
                 # concurrent commit that did NOT move the watermark is
                 # still safe to blind-retry past.
                 col, expected_wm = identity_reserve
-                live_wm = self.identity_watermark(col)
+                live_wm = self._identity_watermark(snap, col)
                 if live_wm != expected_wm:
                     raise CommitConflictError(
                         f"identity watermark for {col} moved {expected_wm} -> {live_wm}; reassign ids"
                     )
-            file_stats = _collect_stats(self.path, add)
-            id_wm: dict[str, int] = {}
-            if identity_reserve is not None:
-                col, expected_wm = identity_reserve
-                his = [
-                    int(file_stats[f][col][1])
-                    for f in add
-                    if col in file_stats.get(f, {})
-                ]
-                id_wm[col] = max(his) + 1 if his else expected_wm
             entry = LogEntry(
-                version=current + 1,
+                version=snap.version + 1,
                 timestamp_ms=int(time.time() * 1000),
                 operation=operation,
                 operation_parameters=params,
                 add=add,
                 remove=remove,
-                schema=schema or self._active_files()[1],
+                schema=schema or snap.schema,
                 metrics=metrics,
                 file_stats=file_stats,
                 identity_watermark=id_wm,
@@ -470,13 +483,18 @@ class TackleTable:
             )
             try:
                 _commit_entry(self.path, entry)
-                return entry.version
             except FileExistsError:
-                # another writer won this version; blind appends can
-                # retry safely, rewrites must re-resolve
-                if expected_version is not None or operation != "APPEND":
-                    raise CommitConflictError(f"lost race for v{current + 1}")
-                time.sleep(0.05 * (2**attempt))
+                # another writer won this version: a blind append backs
+                # off and retries on the new state, a rewrite conflicts
+                # (unless the winner carried its own txn stamp)
+                if operation == "APPEND":
+                    time.sleep(0.05 * (2**attempt))
+                snap = self.snapshot()
+                continue
+            if cdf is not None:
+                rows = cdf.withColumn("_commit_version", F.lit(entry.version).cast("long"))
+                rows.write.mode("overwrite").parquet(os.path.join(self.path, _CHANGES_DIR, f"v={entry.version}"))
+            return entry.version
         raise CommitConflictError("retries exhausted")
 
     def append(
@@ -498,18 +516,19 @@ class TackleTable:
         an epoch): if the log already holds this app_id at >= version the
         append is a no-op, and otherwise the stamp is recorded in the
         same commit as the data (see :meth:`txn_version`)."""
-        if txn is not None and self.txn_version(txn[0]) >= txn[1]:
-            return self.version()
-        df = _align_schema(df, self._active_files()[1], allow_new=merge_schema)
+        snap = self.snapshot()
+        if snap.has_txn(txn):
+            return snap.version
+        df = _align_schema(df, snap.schema, allow_new=merge_schema)
         files, n = _write_files(df, self.path)
-        schema = _schema_ddl(df) if merge_schema else None
         return self._commit(
+            snap,
             "APPEND",
-            {"txn": {"appId": txn[0], "version": txn[1]}} if txn else {},
+            _txn_params(txn),
             files,
             [],
             {"numOutputRows": n, "numAddedFiles": len(files)},
-            schema=schema,
+            schema=_schema_ddl(df) if merge_schema else None,
             identity_reserve=identity_reserve,
             txn=txn,
         )
@@ -525,71 +544,59 @@ class TackleTable:
         ``txn=(app_id, version)`` gives the replace the same idempotence
         contract as :meth:`append` (Delta ``txn`` action): a retried
         epoch whose overwrite already committed is detected — both here
-        and inside the ``_commit`` retry loop — and no-opped, so a
-        replayed streaming fold can never re-apply on top of its own
-        output."""
-        if txn is not None and self.txn_version(txn[0]) >= txn[1]:
-            return self.version()
-        old, _ = self._active_files()
+        and when its commit loses the race to the retry that did land —
+        and no-opped, so a replayed streaming fold can never re-apply on
+        top of its own output. Any other commit that lands while the
+        overwrite runs is a conflict."""
+        snap = self.snapshot()
+        if snap.has_txn(txn):
+            return snap.version
         files, n = _write_files(df, self.path)
-        try:
-            return self._commit(
-                "OVERWRITE",
-                {"txn": {"appId": txn[0], "version": txn[1]}} if txn else {},
-                files,
-                old,
-                {"numOutputRows": n, "numAddedFiles": len(files), "numRemovedFiles": len(old)},
-                schema=_schema_ddl(df),
-                expected_version=self.version(),
-                identity_reserve=identity_reserve,
-                txn=txn,
-            )
-        except CommitConflictError:
-            # Same zombie-retry rule as MergeBuilder.execute: overwrite sets
-            # expected_version, so a same-app_id writer landing this epoch
-            # between the per-attempt txn check and the log write surfaces as
-            # a version conflict — but the work is already durably committed,
-            # so resolve to the idempotent no-op instead of raising. Any
-            # other winner is a genuine conflict the caller re-runs.
-            if txn is not None and self.txn_version(txn[0]) >= txn[1]:
-                return self.version()
-            raise
+        return self._commit(
+            snap,
+            "OVERWRITE",
+            _txn_params(txn),
+            files,
+            list(snap.files),
+            {"numOutputRows": n, "numAddedFiles": len(files), "numRemovedFiles": len(snap.files)},
+            schema=_schema_ddl(df),
+            identity_reserve=identity_reserve,
+            txn=txn,
+        )
+
+    def _touched(self, snap: Snapshot, condition: str) -> list[str]:
+        """Local paths of the active files holding a row that matches."""
+        tagged = self._read(snap).withColumn("__file", F.input_file_name())
+        return [
+            _local_path(r["__file"])
+            for r in tagged.filter(F.expr(condition)).select("__file").distinct().collect()
+        ]
 
     def delete(self, condition: str) -> int:
         """DELETE WHERE condition — rewrites only files containing matches."""
-        start_v = self.version()
-        snap = self.read().withColumn("__file", F.input_file_name())
-        touched = [
-            _local_path(r["__file"])
-            for r in snap.filter(F.expr(condition)).select("__file").distinct().collect()
-        ]
+        snap = self.snapshot()
+        touched = self._touched(snap, condition)
         if not touched:
-            return self._commit("DELETE", {"predicate": condition}, [], [], {"numRemovedRows": 0})
-        kept = self.spark.read.schema(self._active_files()[1]).parquet(*touched).filter(
-            ~F.coalesce(F.expr(condition), F.lit(False))
-        )
+            return self._commit(snap, "DELETE", {"predicate": condition}, [], [], {"numRemovedRows": 0})
+        kept = self._read(snap, touched).filter(~F.coalesce(F.expr(condition), F.lit(False)))
         files, n_kept = _write_files(kept, self.path)
         rel_touched = [_entry_path(self.path, p) for p in touched]
         return self._commit(
+            snap,
             "DELETE",
             {"predicate": condition},
             files,
             rel_touched,
             {"numRewrittenFiles": len(rel_touched), "numOutputRows": n_kept},
-            expected_version=start_v,
         )
 
     def update(self, condition: str, assignments: dict[str, str]) -> int:
         """UPDATE SET col=expr WHERE condition — touched-file rewrite."""
-        start_v = self.version()
-        snap = self.read().withColumn("__file", F.input_file_name())
-        touched = [
-            _local_path(r["__file"])
-            for r in snap.filter(F.expr(condition)).select("__file").distinct().collect()
-        ]
+        snap = self.snapshot()
+        touched = self._touched(snap, condition)
         if not touched:
-            return self._commit("UPDATE", {"predicate": condition}, [], [], {"numUpdatedRows": 0})
-        df = self.spark.read.schema(self._active_files()[1]).parquet(*touched)
+            return self._commit(snap, "UPDATE", {"predicate": condition}, [], [], {"numUpdatedRows": 0})
+        df = self._read(snap, touched)
         cond = F.coalesce(F.expr(condition), F.lit(False))
         updated = df.select(
             *[
@@ -602,12 +609,12 @@ class TackleTable:
         files, n = _write_files(updated, self.path)
         rel_touched = [_entry_path(self.path, p) for p in touched]
         return self._commit(
+            snap,
             "UPDATE",
             {"predicate": condition},
             files,
             rel_touched,
             {"numRewrittenFiles": len(rel_touched), "numOutputRows": n},
-            expected_version=start_v,
         )
 
     def merge(self, source: DataFrame, on: list[str]) -> "MergeBuilder":
@@ -619,18 +626,19 @@ class TackleTable:
     def restore(self, version: int) -> int:
         """RESTORE TABLE TO VERSION AS OF — new commit, old data files
         (still on disk until VACUUM) become active again."""
-        target_files, target_schema = self._active_files(version)
-        current_files, _ = self._active_files()
-        add = [f for f in target_files if f not in set(current_files)]
-        remove = [f for f in current_files if f not in set(target_files)]
+        snap = self.snapshot()
+        target = Snapshot.replay(snap.entries, version)
+        current, wanted = set(snap.files), set(target.files)
+        add = [f for f in target.files if f not in current]
+        remove = [f for f in snap.files if f not in wanted]
         return self._commit(
+            snap,
             "RESTORE",
             {"version": version},
             add,
             remove,
             {"numRestoredFiles": len(add), "numRemovedFiles": len(remove)},
-            schema=target_schema,
-            expected_version=self.version(),
+            schema=target.schema,
         )
 
     def optimize(
@@ -657,14 +665,11 @@ class TackleTable:
         target derived from the reference's size ladder
         (deltaoptimizer.py:1295-1313) via ``plans.optimizer``.
         """
-        if where:
-            files, _skipped = self.prune_files(where)
-            schema = self._active_files()[1]
-        else:
-            files, schema = self._active_files()
+        snap = self.snapshot()
+        files = self._prune(snap, where)[0] if where else list(snap.files)
         if not files or (len(files) <= 1 and not zorder_by):
-            return self.version()
-        df = self.spark.read.schema(schema).parquet(*[os.path.join(self.path, f) for f in files])
+            return snap.version
+        df = self._read(snap, files)
         n = df.count()
         parts = max(1, (n + target_file_rows - 1) // target_file_rows)
         if zorder_by:
@@ -674,12 +679,12 @@ class TackleTable:
             compacted = df.repartition(parts)
         new_files, _ = _write_files(compacted, self.path)
         return self._commit(
+            snap,
             "OPTIMIZE",
             {"targetFileRows": target_file_rows, "zorderBy": zorder_by or [], "where": where or ""},
             new_files,
             files,
             {"numFilesBefore": len(files), "numFilesAfter": len(new_files)},
-            expected_version=self.version(),
         )
 
     def vacuum(self, keep_versions: int = 1) -> int:
@@ -688,11 +693,14 @@ class TackleTable:
         Versions older than (latest - keep_versions) stop being
         time-travelable, like Delta VACUUM with a retention window.
         """
-        latest = self.version()
-        horizon = max(0, latest - keep_versions + 1)
-        keep: set[str] = set()
-        for v in range(horizon, latest + 1):
-            keep.update(self._active_files(v)[0])
+        snap = self.snapshot()
+        horizon = max(0, snap.version - keep_versions + 1)
+        # a file active at some retained version is active at the
+        # horizon or added after it
+        keep = set(Snapshot.replay(snap.entries, horizon).files)
+        for e in snap.entries:
+            if e.version > horizon:
+                keep.update(e.add)
         removed = 0
         data_root = os.path.join(self.path, _DATA_DIR)
         for dirpath, _dirs, files in os.walk(data_root):
@@ -752,50 +760,39 @@ class MergeBuilder:
 
     def execute(self) -> int:
         t = self.table
-        spark = t.spark
-        if self._txn is not None and t.txn_version(self._txn[0]) >= self._txn[1]:
-            return t.version()
-        start_v = t.version()
-        files, schema = t._active_files()
-        cols = [n for n, _ in _schema_fields(schema)]
+        snap = t.snapshot()
+        if snap.has_txn(self._txn):
+            return snap.version
+        cols = [n for n, _ in _schema_fields(snap.schema)]
         src = self.source.select(*cols)
 
         # Phase 1 (find touched files): one pushdown scan, broadcast
         # semi-join against the distinct source keys — only these files
         # can contain matched rows, everything else is untouched.
+        # Null-safe key match in both phases: a null-key target row must
+        # be discovered in phase 1 too, or whether it gets updated would
+        # depend on which file it shares with other matched keys.
+        null_safe = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in self.on]
         touched: list[str] = []
-        if files:
-            snap = t.read().withColumn("__file", F.input_file_name())
+        if snap.files:
+            by_file = t._read(snap).withColumn("__file", F.input_file_name())
             keys = src.select(*self.on).distinct()
-            # Null-safe key match, same as the phase-2 merge join: a
-            # null-key target row must be discovered here too, or whether
-            # it gets updated would depend on which file it shares with
-            # other matched keys.
-            null_safe = [
-                F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in self.on
-            ]
             touched = [
                 _local_path(r["__file"])
-                for r in snap.alias("t")
+                for r in by_file.alias("t")
                 .join(F.broadcast(keys.alias("s")), null_safe, "left_semi")
                 .select("__file")
                 .distinct()
                 .collect()
             ]
 
-        tgt = (
-            spark.read.schema(schema).parquet(*touched)
-            if touched
-            else spark.createDataFrame([], schema)
-        )
+        tgt = t._read(snap, touched)
 
         s_struct = F.struct(*[F.col(f"s.{c}").alias(c) for c in cols])
         t_struct = F.struct(*[F.col(f"t.{c}").alias(c) for c in cols])
         # presence markers make match detection correct even for null keys
         joined = tgt.withColumn("__t", F.lit(1)).alias("t").join(
-            src.withColumn("__s", F.lit(1)).alias("s"),
-            [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in self.on],
-            "full_outer",
+            src.withColumn("__s", F.lit(1)).alias("s"), null_safe, "full_outer"
         )
         matched = F.col("t.__t").isNotNull() & F.col("s.__s").isNotNull()
         t_only = F.col("s.__s").isNull() & F.col("t.__t").isNotNull()
@@ -830,47 +827,38 @@ class MergeBuilder:
                 shutil.rmtree(os.path.join(t.path, d))
             new_files = []
             if self._txn is None:
-                return start_v
+                return snap.version
         rel_touched = [_entry_path(t.path, p) for p in touched]
         metrics = {
             "numTargetFilesRewritten": len(rel_touched),
             "numOutputRows": n_rows,
         }
-        merge_params: dict[str, Any] = {"on": self.on}
-        if self._txn is not None:
-            merge_params["txn"] = {"appId": self._txn[0], "version": self._txn[1]}
-        try:
-            version = t._commit(
-                "MERGE",
-                merge_params,
-                new_files,
-                rel_touched,
-                metrics,
-                expected_version=start_v,
-                txn=self._txn,
-            )
-        except CommitConflictError:
-            # Snapshot conflict. If the winning commit carried our own
-            # (app_id, >= version) stamp — a zombie retry of the same
-            # epoch — the merge is already durably applied: idempotent
-            # no-op (the files written above stay orphaned/uncommitted).
-            # Any other winner is a genuine conflict the caller re-runs.
-            if self._txn is not None and t.txn_version(self._txn[0]) >= self._txn[1]:
-                return t.version()
-            raise
+        cdf = None
         if self._write_cdf and (new_files or rel_touched):
             cdf = tagged.filter(F.col("__action").isin("update", "insert", "delete")).select(
-                "__row.*",
-                F.col("__action")
-                .cast("string")
-                .alias("_change_type"),
+                "__row.*", F.col("__action").cast("string").alias("_change_type")
             )
-            cdf = cdf.withColumn("_commit_version", F.lit(version).cast("long"))
-            cdf.write.mode("overwrite").parquet(os.path.join(t.path, _CHANGES_DIR, f"v={version}"))
-        return version
+        # A commit that lands after the snapshot is a conflict, unless it
+        # carried our own (app_id, >= version) stamp — a zombie retry of
+        # the same epoch — which makes this merge an idempotent no-op
+        # (the files written above stay orphaned/uncommitted).
+        return t._commit(
+            snap,
+            "MERGE",
+            {"on": self.on, **_txn_params(self._txn)},
+            new_files,
+            rel_touched,
+            metrics,
+            txn=self._txn,
+            cdf=cdf,
+        )
 
 
 # ---------- helpers ----------
+
+
+def _txn_params(txn: tuple[str, int] | None) -> dict[str, Any]:
+    return {"txn": {"appId": txn[0], "version": txn[1]}} if txn else {}
 
 
 def _schema_ddl(df: DataFrame) -> str:

@@ -43,9 +43,7 @@ SLOW_TESTS = {
     "test_table_properties.py::test_salted_join_equals_plain_join",
     "test_tablestore.py::test_change_data_feed",
     "test_tablestore.py::test_merge_null_key_matches_regardless_of_file_layout",
-    "test_tablestore.py::test_merge_txn_conflict_resolves_to_noop",
     "test_tablestore.py::test_merge_upsert",
-    "test_tablestore.py::test_optimize_compacts_and_preserves",
     "test_tablestore.py::test_txn_idempotent_merge_and_append",
     "test_tablestore_extras.py::test_catalog_listing_with_filters",
     "test_tablestore_extras.py::test_identity_and_generated_columns",

@@ -19,7 +19,7 @@ def clustered_orders(spark, tmp_path):
 
 def test_stats_written_at_commit(clustered_orders):
     t, _ = clustered_orders
-    stats = t._active_stats()
+    stats = t.snapshot().stats
     assert stats and all(s for s in stats.values())
     some = next(iter(stats.values()))
     assert "o_custkey" in some and some["o_custkey"][0] <= some["o_custkey"][1]
@@ -84,7 +84,7 @@ def test_skipping_survives_dml(spark, clustered_orders):
     t.update("o_custkey = 8", {"o_totalprice": "o_totalprice + 1"})
     assert t.scan("o_custkey = 8").count() == n_before
     # rewritten files got fresh stats
-    stats = t._active_stats()
+    stats = t.snapshot().stats
     assert all("o_custkey" in s for s in stats.values())
 
 
@@ -140,7 +140,7 @@ def test_point_lookup_sketch_prunes_where_minmax_cannot(spark, tmp_path):
 
     # envelopes really do span the domain (min/max is useless here)
     kept_minmax = [
-        f for f, s in t._active_stats().items() if s.get("id") and s["id"][0] <= 1234 <= s["id"][1]
+        f for f, s in t.snapshot().stats.items() if s.get("id") and s["id"][0] <= 1234 <= s["id"][1]
     ]
     assert len(kept_minmax) >= 7
 

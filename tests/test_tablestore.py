@@ -175,10 +175,10 @@ def test_concurrent_append_no_lost_updates(spark, users, tmp_path):
 def test_conflicting_rewrite_raises(spark, users, tmp_path):
     t = TackleTable.create(spark, str(tmp_path / "t"), users)
     t2 = TackleTable(spark, t.path)
-    v = t.version()
+    snap = t2.snapshot()
     t.delete("id = 1")  # moves version forward
     with pytest.raises(CommitConflictError):
-        t2._commit("DELETE", {}, [], [], {}, expected_version=v)
+        t2._commit(snap, "DELETE", {}, [], [], {})
 
 
 def test_merge_null_key_matches_regardless_of_file_layout(spark, tmp_path):
@@ -287,8 +287,10 @@ def test_txn_recheck_inside_commit_window(spark, users, tmp_path):
     extra = spark.createDataFrame(
         [(9, "zoe", 900.0)], "id bigint, name string, balance double"
     )
-    # the straggler passed its pre-check (txn_version('mv') == -1), wrote
-    # its files, and is about to commit ...
+    # the straggler read its snapshot, passed its pre-check
+    # (txn_version('mv') == -1), wrote its files, and is about to commit ...
+    snap = t.snapshot()
+    assert not snap.has_txn(("mv", 3))
     files, n = _write_files(extra, t.path)
     # ... when the zombie sharing the app_id commits the same epoch first
     t.append(extra, txn=("mv", 3))
@@ -296,6 +298,7 @@ def test_txn_recheck_inside_commit_window(spark, users, tmp_path):
     n_rows = t.read().count()
     # the straggler's commit attempt must detect the stamp and no-op
     v = t._commit(
+        snap,
         "APPEND",
         {"txn": {"appId": "mv", "version": 3}},
         files,
@@ -319,12 +322,12 @@ def test_merge_txn_conflict_resolves_to_noop(spark, users, tmp_path):
     )
 
     raced = {"done": False}
-    orig_active_files = TackleTable._active_files
+    orig_snapshot = TackleTable.snapshot
 
-    def racing_active_files(self, *args, **kwargs):
-        # fire the zombie's winning commit after the straggler captured
-        # start_v but before its own commit lands
-        out = orig_active_files(self, *args, **kwargs)
+    def racing_snapshot(self, *args, **kwargs):
+        # fire the zombie's winning commit after the straggler read its
+        # snapshot but before its own commit lands
+        out = orig_snapshot(self, *args, **kwargs)
         if not raced["done"]:
             raced["done"] = True
             zombie = TackleTable(spark, t.path)
@@ -339,7 +342,7 @@ def test_merge_txn_conflict_resolves_to_noop(spark, users, tmp_path):
 
     import unittest.mock as mock
 
-    with mock.patch.object(TackleTable, "_active_files", racing_active_files):
+    with mock.patch.object(TackleTable, "snapshot", racing_snapshot):
         v = (
             t.merge(delta, on=["id"])
             .whenMatchedUpdateAll()
@@ -347,6 +350,7 @@ def test_merge_txn_conflict_resolves_to_noop(spark, users, tmp_path):
             .withTransaction("mv", 5)
             .execute()
         )
+    assert raced["done"]
     assert v == t.version()
     got = {r["id"]: r["balance"] for r in t.read().collect()}
     assert got == {1: 50.0, 2: 200.0, 3: 300.0, 4: 400.0}  # applied once
@@ -375,10 +379,10 @@ def test_txn_idempotent_overwrite(spark, users, tmp_path):
 def test_overwrite_txn_conflict_resolves_to_noop(spark, users, tmp_path):
     """An overwrite whose snapshot conflict was caused by a zombie retry
     of the SAME (app_id, version) resolves to idempotent success instead
-    of raising (ADVICE r7): overwrite sets expected_version, so the
-    zombie landing between the per-attempt txn recheck and the log write
-    surfaces as CommitConflictError — the handler must recognise its own
-    stamp and no-op, exactly like MergeBuilder.execute."""
+    of raising (ADVICE r7): the zombie landing after the straggler read
+    its snapshot makes the straggler lose the race for its version — the
+    recheck must recognise its own stamp and no-op, exactly like
+    MergeBuilder.execute."""
     import unittest.mock as mock
 
     import lakehouse_tacklebox_spark.tablestore.table as T
@@ -392,8 +396,8 @@ def test_overwrite_txn_conflict_resolves_to_noop(spark, users, tmp_path):
     orig = T._collect_stats
 
     def racing_collect_stats(path, add):
-        # fire the zombie's winning overwrite after the straggler's
-        # per-attempt txn recheck but before its log write
+        # fire the zombie's winning overwrite after the straggler read
+        # its snapshot but before its log write
         if not raced["done"]:
             raced["done"] = True
             TackleTable(spark, t.path).overwrite(new, txn=("mv", 9))
@@ -401,5 +405,91 @@ def test_overwrite_txn_conflict_resolves_to_noop(spark, users, tmp_path):
 
     with mock.patch.object(T, "_collect_stats", racing_collect_stats):
         v = t.overwrite(new, txn=("mv", 9))
+    assert raced["done"]
     assert v == t.version()
     assert t.read().count() == 1  # epoch applied exactly once
+
+
+@pytest.mark.parametrize("op", ["optimize", "overwrite"])
+def test_rewrite_conflicts_with_delete_during_its_write(spark, tmp_path, op):
+    """A rewrite commits on the version it read: a DELETE that lands
+    while OPTIMIZE or OVERWRITE writes its files makes the rewrite raise
+    CommitConflictError, and the table stays as the DELETE left it (a
+    rewrite committing over it would bring the deleted row back, or keep
+    the DELETE's rewritten file next to the new contents)."""
+    import unittest.mock as mock
+
+    import lakehouse_tacklebox_spark.tablestore.table as T
+
+    schema = "id bigint, tag string"
+    t = TackleTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame([(1, "a"), (2, "b")], schema).coalesce(1),
+    )
+    t.append(spark.createDataFrame([(3, "c")], schema))
+
+    raced = {"done": False}
+    orig = T._write_files
+
+    def racing_write_files(df, root):
+        if not raced["done"]:
+            raced["done"] = True
+            TackleTable(spark, t.path).delete("id = 1")
+        return orig(df, root)
+
+    with mock.patch.object(T, "_write_files", racing_write_files):
+        with pytest.raises(CommitConflictError):
+            if op == "optimize":
+                t.optimize()
+            else:
+                t.overwrite(spark.createDataFrame([(9, "z")], schema))
+    assert raced["done"]
+    assert t.version() == 2
+    assert rows(t.read()) == [(2, "b"), (3, "c")]
+
+
+def test_each_operation_reads_the_log_once(spark, users, tmp_path):
+    """An uncontended operation lists and parses the log exactly once:
+    all of its metadata comes from one snapshot."""
+    import unittest.mock as mock
+
+    from lakehouse_tacklebox_spark.tablestore.clone import clone
+
+    schema = "id bigint, name string, balance double"
+    t = TackleTable.create(spark, str(tmp_path / "t"), users)
+    more = spark.createDataFrame([(4, "dave", 400.0)], schema)
+    delta = spark.createDataFrame([(1, "alice", 50.0), (5, "eve", 500.0)], schema)
+    ops = {
+        "append(txn=)": lambda: t.append(more, txn=("a", 0)),
+        "merge(txn=)": lambda: t.merge(delta, on=["id"])
+        .whenMatchedUpdateAll()
+        .whenNotMatchedInsertAll()
+        .withTransaction("m", 0)
+        .execute(),
+        "delete": lambda: t.delete("id = 2"),
+        "update": lambda: t.update("id = 3", {"balance": "balance + 1"}),
+        "optimize": lambda: t.optimize(),
+        "restore": lambda: t.restore(1),
+        "set_properties": lambda: t.set_properties({"k": "v"}),
+        "overwrite": lambda: t.overwrite(users),
+        "vacuum": lambda: t.vacuum(keep_versions=2),
+        "clone": lambda: clone(t, str(tmp_path / "c")),
+    }
+    calls = []
+    orig = TackleTable._entries
+
+    def counting_entries(self):
+        calls.append(self.path)
+        return orig(self)
+
+    got = {}
+    with mock.patch.object(TackleTable, "_entries", counting_entries):
+        for name, op in ops.items():
+            calls.clear()
+            op()
+            got[name] = len(calls)
+    assert got == {name: 1 for name in ops}
+    assert t.version() == 8  # every write above committed
+    assert [h["operation"] for h in t.history()][:2] == ["OVERWRITE", "SET TBLPROPERTIES"]
+    assert TackleTable(spark, str(tmp_path / "c")).history()[0]["operationParameters"]["sourceVersion"] == 8
