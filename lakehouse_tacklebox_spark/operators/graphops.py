@@ -10,7 +10,10 @@ queries/graph.py — runs through :func:`iterate`, the one fixed-point
 loop. It owns the single lineage barrier (an eager ``localCheckpoint``
 after every step, so k steps build k one-step plans), the optional
 fixed-point certificate with its exact early exit, and the reuse of
-the fixed-point frame for the remaining trace slots.
+the fixed-point frame for the remaining trace slots. The min-label
+loops hoist their loop-invariant edge frame out of the loop: it is
+checkpointed once before the first step and freed after the last, so
+a step reads the materialized edges, never their source.
 
 Spark-first shape: labels start at the node id; each iteration every
 node takes the min of its own label and its neighbors' labels — one
@@ -127,9 +130,18 @@ def min_label_step(edges: DataFrame, lab: DataFrame) -> DataFrame:
 
 
 def _min_label_loop(edges: DataFrame, n: int, certify=None) -> tuple[list[DataFrame], bool]:
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-    init = nodes.withColumn("label", F.col("node").cast("bigint")).localCheckpoint(eager=True)
-    return iterate(init, lambda lab: min_label_step(edges, lab), n, certify)
+    # the edges are loop-invariant: materialize them once so no step
+    # re-derives them from their source. Every returned frame is an
+    # eager checkpoint, so nothing reads the edges after the loop.
+    edges = edges.localCheckpoint(eager=True)
+    try:
+        nodes = edges.select(F.col("src").alias("node")).distinct()
+        init = nodes.withColumn("label", F.col("node").cast("bigint")).localCheckpoint(eager=True)
+        return iterate(init, lambda lab: min_label_step(edges, lab), n, certify)
+    finally:
+        # DataFrame.unpersist would not free them: a local checkpoint's
+        # blocks belong to the RDD under its LogicalRDD
+        edges._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def cc_label_trace(edges: DataFrame, iters: int) -> list[DataFrame]:

@@ -111,10 +111,10 @@ def join_bucketed_colocated(spark, sf_dir):
 )
 def stream_idempotent_mv_replay(spark, sf_dir):
     """Exactly-once incremental MV under DELIBERATE epoch replay: the
-    fact streams in micro-batches into a merge-maintained aggregate view
+    fact streams in micro-batches into a fold-maintained aggregate view
     stamped with Delta-style ``txn`` versions, and every epoch is
     applied a second time inside its own micro-batch (the failover
-    model: the merge committed but the checkpoint didn't advance, so a
+    model: the fold committed but the checkpoint didn't advance, so a
     restarted writer re-runs the epoch). The stamp travels in the same
     commit as the data, so each replay must leave the view's version
     unchanged (the entry raises otherwise) and the final view must equal
@@ -123,8 +123,9 @@ def stream_idempotent_mv_replay(spark, sf_dir):
     than a pytest-only one.
 
     Scale: per-batch cost is a |batch| partial aggregate plus a
-    |groups|-row merge; the replay guard is one log-tail read
-    (txn_version) re-validated inside the commit's retry loop, so even
+    |groups|-row rewrite (``fold_sums``); the replay guard is the txn
+    stamp of the fold's one snapshot, re-validated inside the commit's
+    retry loop, so even
     a zombie writer racing the retry cannot double-apply
     (tablestore/table.py _commit).
     """

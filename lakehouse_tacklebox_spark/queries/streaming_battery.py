@@ -403,30 +403,33 @@ def stream_incremental_mv(spark, sf_dir):
     """Incremental materialized-view maintenance — the DLT/'live table'
     core loop (reference: the EDW series' continuously-maintained gold
     aggregates) as a verifiable statement: a TPC-H-q1-shaped pricing
-    summary is maintained by MERGE as lineitem arrives in micro-batches,
-    and the FINAL TABLE STATE must equal DuckDB's one-shot batch answer.
+    summary is maintained by a per-batch fold as lineitem arrives in
+    micro-batches, and the FINAL TABLE STATE must equal DuckDB's
+    one-shot batch answer.
 
     Mechanics: the fact is chunked into 4 files; a file stream with
     maxFilesPerTrigger=1 forces ≥4 micro-batches; each batch computes
     map-side partial aggregates (count + exact integer cent sums — all
     associative, so the result is invariant to how the source was split
-    into batches), combines them with the table's current group rows,
-    and MERGEs (matched → updated running sums, new group → insert).
+    into batches), combines them with the table's current group rows
+    and replaces the table with the combined running sums
+    (``fold_sums``: rows and commit from one snapshot).
 
     Scale: this is the 100 TB ingest shape for keeping a gold aggregate
     fresh — per-batch work is proportional to the BATCH (partial aggs +
-    a touched-file MERGE on ~6 group keys), never a recompute of the
-    full history; the batch-combine reads the |groups|-row table, not
-    the fact. Exactly-once: each batch MERGE is stamped with the epoch
-    id via MergeBuilder.withTransaction (Delta-protocol ``txn``
-    semantics — the stamp commits atomically WITH the rewritten files),
-    so a micro-batch retried after its merge committed but before the
-    stream checkpoint advanced is detected by txn_version() and
+    a rewrite of ~6 group rows), never a recompute of the full history;
+    the batch-combine reads the |groups|-row table, not the fact.
+    Exactly-once: each fold commit is stamped with the epoch id
+    (Delta-protocol ``txn`` semantics — the stamp commits atomically
+    WITH the rewritten files), so a micro-batch retried after its fold
+    committed but before the stream checkpoint advanced is detected and
     no-opped; running sums can never be double-applied. ``run_mv``
     replays every epoch in-batch and the entry raises if a replay moved
-    the view.
+    the view. The view's few rows are returned collected, so its
+    scratch table is removed before the entry returns.
     """
     import os
+    import shutil
     import tempfile
 
     from pyspark.sql import functions as SF
@@ -435,7 +438,8 @@ def stream_incremental_mv(spark, sf_dir):
     from lakehouse_tacklebox_spark.streaming.mv import fold_sums, run_mv
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
-    tbl_dir = os.path.join(tempfile.mkdtemp(prefix="inc_mv_"), "tbl")
+    tmp = tempfile.mkdtemp(prefix="inc_mv_")
+    tbl_dir = os.path.join(tmp, "tbl")
     li = load_tables(spark, sf_dir, ["lineitem"])["lineitem"]
 
     keys = ["l_returnflag", "l_linestatus"]
@@ -453,29 +457,32 @@ def stream_incremental_mv(spark, sf_dir):
         )
         fold_sums(TackleTable(batch_df.sparkSession, tbl_dir), parts, keys, ("inc_mv", epoch))
 
-    # create the (empty) view table BEFORE the stream starts: every batch
-    # then takes the same idempotent merge path — no create/merge split
-    # for a batch-0 retry to fall through
-    TackleTable.create(
-        spark,
-        tbl_dir,
-        schema=(
-            "l_returnflag string, l_linestatus string, n_rows bigint, "
-            "sum_qty bigint, base_cents bigint, disc_cents bigint"
-        ),
-    )
-    chunks = li.select(
-        "l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice", "l_discount"
-    ).repartition(4)
-    if not run_mv(spark, chunks, _upsert, [tbl_dir]):
-        raise RuntimeError("stream_incremental_mv: a replayed epoch moved the view")
-
-    return (
-        TackleTable(spark, tbl_dir)
-        .read()
-        .select("l_returnflag", "l_linestatus", "n_rows", "sum_qty", "base_cents", "disc_cents")
-        .orderBy("l_returnflag", "l_linestatus")
-    )
+    try:
+        # create the (empty) view table BEFORE the stream starts: every
+        # batch then takes the same idempotent fold path — no create/fold
+        # split for a batch-0 retry to fall through
+        TackleTable.create(
+            spark,
+            tbl_dir,
+            schema=(
+                "l_returnflag string, l_linestatus string, n_rows bigint, "
+                "sum_qty bigint, base_cents bigint, disc_cents bigint"
+            ),
+        )
+        chunks = li.select(
+            "l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice", "l_discount"
+        ).repartition(4)
+        if not run_mv(spark, chunks, _upsert, [tbl_dir]):
+            raise RuntimeError("stream_incremental_mv: a replayed epoch moved the view")
+        # the view has at most one row per (returnflag, linestatus): hand
+        # back its rows, not a frame over the files removed below
+        view = TackleTable(spark, tbl_dir).read().select(
+            "l_returnflag", "l_linestatus", "n_rows", "sum_qty", "base_cents", "disc_cents"
+        )
+        rows = view.collect()
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return spark.createDataFrame(rows, view.schema).orderBy("l_returnflag", "l_linestatus")
 
 
 @register(
@@ -587,8 +594,8 @@ def stream_incremental_join_mv(spark, sf_dir):
     fact-dim join' loop: revenue per (order priority, return flag) where
     the FACT (lineitem) arrives as a micro-batched stream and orders is
     the static enrichment side. Each batch joins ONLY its new rows to
-    orders, partial-aggregates, and MERGEs the delta into the view; the
-    final table state must equal DuckDB's one-shot batch join+agg.
+    orders, partial-aggregates, and folds the delta into the view
+    (``fold_sums``); the final table state must equal DuckDB's one-shot batch join+agg.
 
     This is the shape `stream_incremental_mv` (agg-only) doesn't cover:
     the view's grain comes from a JOIN, so incremental maintenance rests
@@ -597,9 +604,9 @@ def stream_incremental_join_mv(spark, sf_dir):
 
     Scale: per-batch cost is the BATCH joined to the dim (stream-static
     join; a real deployment broadcasts or co-partitions orders) plus a
-    |groups|-row merge — never a recompute of history. Exactly-once via
-    the epoch-stamped MERGE (MergeBuilder.withTransaction, the same
-    Delta-txn contract as stream_incremental_mv).
+    |groups|-row rewrite — never a recompute of history. Exactly-once via
+    the epoch-stamped fold commit (the same Delta-txn contract as
+    stream_incremental_mv).
     """
     import os
     import tempfile
@@ -1142,7 +1149,8 @@ def stream_heavy_hitters_mv(spark, sf_dir):
 def stream_mv_retraction(spark, sf_dir):
     """Incremental-view maintenance with RETRACTIONS — the GDPR/right-to-
     be-forgotten shape: a gold aggregate (orders by priority) is
-    maintained incrementally as orders stream in; then a forget-list
+    maintained incrementally as orders stream in (one txn-stamped
+    ``fold_sums`` per epoch); then a forget-list
     MERGE deletes every row of the affected customers from the fact
     table WITH change-data-feed on, and the MV consumes the CDF delete
     rows as NEGATIVE deltas (classic IVM delta algebra: insert ⊕,
@@ -1183,7 +1191,7 @@ def stream_mv_retraction(spark, sf_dir):
     def _fold(batch_df, epoch):
         s = batch_df.sparkSession
         # two tables, one epoch: each step carries its own txn stamp, so
-        # a crash between them replays as (append no-op, merge applies)
+        # a crash between them replays as (append no-op, fold applies)
         TackleTable(s, fact_dir).append(batch_df, txn=("ingest", epoch))
         fold_sums(TackleTable(s, mv_dir), _partials(batch_df), ["o_orderpriority"], ("mv", epoch))
 

@@ -2289,6 +2289,7 @@ def dedup_incremental_lsh(spark, sf_dir):
     re-signed. The store append is certified by read-back against a
     from-scratch banding of the union (index_merge_match)."""
     import os
+    import shutil
     import tempfile
 
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
@@ -2359,7 +2360,13 @@ def dedup_incremental_lsh(spark, sf_dir):
         cols = ["doc_id", "band", "band_hash"]
         return rowset_signature(back, cols) == rowset_signature(full, cols)
 
-    verified, merge_ok = run_concurrent(spark, verify_leg, maintenance_leg)
+    try:
+        verified, merge_ok = run_concurrent(spark, verify_leg, maintenance_leg)
+    finally:
+        # verified is an eager checkpoint: nothing reads the shingles or
+        # the store after the legs return
+        sh.unpersist()
+        shutil.rmtree(tmp, ignore_errors=True)
 
     return (
         verified

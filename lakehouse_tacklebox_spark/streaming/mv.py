@@ -9,7 +9,8 @@ that no table version moved. That is the Delta ``txn`` contract: an
 epoch retried after its commit but before the stream checkpoint
 advanced must no-op.
 
-``fold_sums`` is the additive-aggregate apply most of those views share.
+``fold_sums`` is the additive-aggregate apply most of those views share:
+one snapshot read, one data write, one commit per epoch.
 """
 
 from __future__ import annotations
@@ -99,26 +100,31 @@ def fold_sums(
     table: TackleTable, partials: DataFrame, keys: Sequence[str], txn: tuple[str, int]
 ) -> int:
     """Fold per-key partial sums into ``table``: its rows ⊎ ``partials``,
-    grouped by ``keys``, every other table column summed and cast back
-    to its table type, then MERGEd under the ``txn=(app_id, epoch)``
+    grouped by ``keys``, every other table column summed, every column
+    cast back to its table type and kept in table order, then committed
+    as a replace of the table's files under the ``txn=(app_id, epoch)``
     stamp. An epoch the log already holds returns before any work.
+
+    The rows and the commit come from one snapshot: the replace lands at
+    that snapshot's version + 1, so a commit that landed after the rows
+    were read raises CommitConflictError (or no-ops the fold when it
+    carried this fold's own stamp) instead of being overwritten. The
+    folded rows hold every key of the table, so a replace writes what a
+    MERGE would, without its touched-file scan and join.
 
     Running sums stay exact because the fold is associative: the result
     does not depend on how the source was split into batches. Per-batch
-    cost is the batch's partials plus a |groups|-row merge."""
-    if table.txn_version(txn[0]) >= txn[1]:
-        return table.version()
-    current = table.read()
-    sums = [
-        F.sum(f.name).cast(f.dataType).alias(f.name)
-        for f in current.schema.fields
-        if f.name not in keys
-    ]
-    combined = current.unionByName(partials).groupBy(*keys).agg(*sums)
-    return (
-        table.merge(combined, on=list(keys))
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .withTransaction(*txn)
-        .execute()
+    cost is the batch's partials plus a |groups|-row rewrite."""
+    snap = table.snapshot()
+    if snap.has_txn(txn):
+        return snap.version
+    current = table._read(snap)
+    fields = current.schema.fields
+    sums = [F.sum(f.name).alias(f.name) for f in fields if f.name not in keys]
+    combined = (
+        current.unionByName(partials)
+        .groupBy(*keys)
+        .agg(*sums)
+        .select(*[F.col(f.name).cast(f.dataType).alias(f.name) for f in fields])
     )
+    return table._replace(snap, combined, txn=txn)

@@ -551,6 +551,20 @@ class TackleTable:
         snap = self.snapshot()
         if snap.has_txn(txn):
             return snap.version
+        return self._replace(snap, df, _schema_ddl(df), identity_reserve, txn)
+
+    def _replace(
+        self,
+        snap: Snapshot,
+        df: DataFrame,
+        schema: str | None = None,
+        identity_reserve: tuple[str, int] | None = None,
+        txn: tuple[str, int] | None = None,
+    ) -> int:
+        """Write ``df`` and commit it as an OVERWRITE of ``snap``'s files
+        at ``snap.version + 1`` — the one replace path. ``schema`` is the
+        DDL to commit (``snap.schema`` when None); the caller has already
+        checked ``snap.has_txn(txn)``."""
         files, n = _write_files(df, self.path)
         return self._commit(
             snap,
@@ -559,7 +573,7 @@ class TackleTable:
             files,
             list(snap.files),
             {"numOutputRows": n, "numAddedFiles": len(files), "numRemovedFiles": len(snap.files)},
-            schema=_schema_ddl(df),
+            schema=schema,
             identity_reserve=identity_reserve,
             txn=txn,
         )

@@ -31,7 +31,6 @@ SLOW_TESTS = {
     "test_plan_shapes.py::test_no_bench_query_degrades_to_cartesian",
     "test_properties.py::test_connected_components_matches_union_find",
     "test_properties.py::test_containment_pairs_matches_bruteforce",
-    "test_properties.py::test_incremental_cc_merge_matches_full",
     "test_properties.py::test_temperature_mix_matches_reference",
     "test_properties.py::test_triangle_census_matches_bruteforce",
     "test_stateful.py::test_stateful_dedup_with_ttl_runs",
@@ -44,7 +43,6 @@ SLOW_TESTS = {
     "test_tablestore.py::test_change_data_feed",
     "test_tablestore.py::test_merge_null_key_matches_regardless_of_file_layout",
     "test_tablestore.py::test_merge_upsert",
-    "test_tablestore.py::test_txn_idempotent_merge_and_append",
     "test_tablestore_extras.py::test_catalog_listing_with_filters",
     "test_tablestore_extras.py::test_identity_and_generated_columns",
     "test_tablestore_extras.py::test_identity_legacy_table_bootstraps_from_footer_stats",

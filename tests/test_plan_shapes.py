@@ -818,6 +818,33 @@ def test_cc_iteration_join_is_sort_merge(spark):
     assert "BroadcastHashJoin" not in plan
 
 
+def test_min_label_step_reads_materialized_edges(spark):
+    """The min-label loops hoist their loop-invariant edge frame: it is
+    checkpointed once before the loop, so the executed plan of a step
+    over the part-supplier graph reads the materialized edges and never
+    scans the lineitem source they are derived from."""
+    import unittest.mock as mock
+
+    from lakehouse_tacklebox_spark.operators import graphops as G
+    from lakehouse_tacklebox_spark.queries.graph import _part_supplier_edges
+    from lakehouse_tacklebox_spark.sources import load_tables
+
+    li = load_tables(spark, SF_DIR, ["lineitem"])["lineitem"]
+    plans = []
+    orig = G.iterate
+
+    def planning_iterate(init, step, n, certify=None):
+        one = step(init)
+        one.collect()
+        plans.append(str(one._jdf.queryExecution().executedPlan()))
+        return orig(init, step, n, certify)
+
+    with mock.patch.object(G, "iterate", planning_iterate):
+        G.cc_label_trace(_part_supplier_edges(li), 1)
+    assert len(plans) == 1
+    assert "FileScan" not in plans[0], plans[0]
+
+
 def test_triangle_wedge_join_no_cartesian(spark):
     """graph_triangle_count: no CartesianProduct anywhere (the only
     nested-loop joins are the 1-row stat-frame crossJoins at the very

@@ -1,17 +1,20 @@
 """The idempotent streaming-MV runner (streaming/mv.py): the in-batch
-replay proof, failure cleanup, and the additive fold."""
+replay proof, failure cleanup, and the additive fold with its
+one-snapshot commit."""
 
 from __future__ import annotations
 
 import glob
 import os
 import tempfile
+import unittest.mock as mock
 
 import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_tacklebox_spark.streaming.mv import fold_sums, run_mv
 from lakehouse_tacklebox_spark.tablestore import TackleTable
+from lakehouse_tacklebox_spark.tablestore import table as tt
 
 SUMS_SCHEMA = "k bigint, n bigint, total bigint"
 
@@ -43,6 +46,80 @@ def test_fold_sums_two_epochs_equal_oneshot_sum(spark, tmp_path):
     v1 = fold_sums(table, _partials(second), ["k"], ("t", 1))
     # a replayed epoch the log already holds is a no-op
     assert fold_sums(table, _partials(second), ["k"], ("t", 1)) == v1 == table.version()
+    assert _table_rows(spark, path) == _oneshot(rows)
+
+
+@pytest.mark.parametrize("winner_stamp", [("u", 0), ("t", 1)], ids=["other_writer", "own_stamp"])
+def test_fold_sums_commit_after_its_read_is_never_overwritten(spark, tmp_path, winner_stamp):
+    """Another fold commits after this fold has read the rows it folds.
+    Under another writer's stamp this fold must raise, leaving the
+    winner's increments in place; under this fold's own stamp (a zombie
+    retry of the same epoch that won) it must no-op. Never a silent
+    overwrite of the winner's rows."""
+    path = str(tmp_path / "mv")
+    table = TackleTable.create(spark, path, schema=SUMS_SCHEMA)
+    rows = _rows(spark)
+    base, mine, theirs = rows.filter("v < 10"), rows.filter("v >= 10 AND v < 25"), rows.filter("v >= 25")
+    fold_sums(table, _partials(base), ["k"], ("t", 0))
+    own = winner_stamp == ("t", 1)
+    winner_rows = mine if own else theirs
+    orig_read = TackleTable._read
+    raced = []
+
+    def read_then_race(self, *args, **kwargs):
+        df = orig_read(self, *args, **kwargs)
+        if not raced:
+            raced.append(True)
+            fold_sums(TackleTable(spark, path), _partials(winner_rows), ["k"], winner_stamp)
+        return df
+
+    with mock.patch.object(TackleTable, "_read", read_then_race):
+        if own:
+            assert fold_sums(table, _partials(mine), ["k"], ("t", 1)) == table.version()
+        else:
+            with pytest.raises(tt.CommitConflictError):
+                fold_sums(table, _partials(mine), ["k"], ("t", 1))
+    assert raced
+    assert _table_rows(spark, path) == _oneshot(base.unionByName(winner_rows))
+
+
+def test_fold_sums_is_one_log_read_one_write_no_merge(spark, tmp_path):
+    """A fold reads the log once and writes its rows once, never through
+    MERGE; a replayed epoch writes no data file; the table's schema DDL
+    and column order survive a fold whose key is not the leading column."""
+    schema = "n bigint, total bigint, k bigint"
+    path = str(tmp_path / "mv")
+    table = TackleTable.create(spark, path, schema=schema)
+    rows = _rows(spark)
+    calls = {"entries": 0, "writes": 0}
+    orig_entries, orig_write = TackleTable._entries, tt._write_files
+
+    def counting_entries(self):
+        calls["entries"] += 1
+        return orig_entries(self)
+
+    def counting_write(df, root):
+        calls["writes"] += 1
+        return orig_write(df, root)
+
+    def no_merge(self):
+        raise AssertionError("fold_sums ran a MERGE")
+
+    data = tmp_path / "mv" / "data"
+    with mock.patch.object(TackleTable, "_entries", counting_entries), mock.patch.object(
+        tt, "_write_files", counting_write
+    ), mock.patch.object(tt.MergeBuilder, "execute", no_merge):
+        for epoch, part in enumerate((rows.filter("v < 25"), rows.filter("v >= 25"))):
+            calls.update(entries=0, writes=0)
+            fold_sums(table, _partials(part), ["k"], ("t", epoch))
+            assert calls == {"entries": 1, "writes": 1}, epoch
+        written = sorted(data.iterdir())
+        calls.update(entries=0, writes=0)
+        fold_sums(table, _partials(part), ["k"], ("t", 1))  # replayed epoch
+        assert calls == {"entries": 1, "writes": 0}
+    assert sorted(data.iterdir()) == written
+    assert table.snapshot().schema == schema
+    assert table.read().columns == ["n", "total", "k"]
     assert _table_rows(spark, path) == _oneshot(rows)
 
 
