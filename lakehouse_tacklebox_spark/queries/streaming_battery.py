@@ -1046,11 +1046,13 @@ def stream_heavy_hitters_mv(spark, sf_dir):
     documents arrive in ≥4 micro-batches; each epoch folds the batch's
     per-partition Misra-Gries summaries into a ≤(capacity+1)-row state
     table (`mg_merge` — MG summaries are mergeable with the N/(m+1)
-    bound preserved across ARBITRARY merge trees, PODS'12), committed
-    with the Delta-style ``txn`` epoch stamp so a replayed epoch
-    no-ops instead of double-counting. After the drain, the state's
-    candidate set is re-counted exactly against the full corpus — the
-    final answer must EQUAL the one-shot batch HAVING answer.
+    bound preserved across ARBITRARY merge trees, PODS'12), one
+    ``TackleTable.rewrite`` per epoch under the Delta-style ``txn``
+    epoch stamp, so a replayed epoch no-ops instead of double-counting
+    and a commit landing after the state was read is never overwritten.
+    After the drain, the state's candidate set is re-counted exactly
+    against the full corpus — the final answer must EQUAL the one-shot
+    batch HAVING answer.
 
     The 100 TB shape: per-epoch state is O(capacity) rows regardless of
     stream length or key cardinality (the fold is control-plane: ≤
@@ -1078,34 +1080,36 @@ def stream_heavy_hitters_mv(spark, sf_dir):
 
     def _fold(batch_df, epoch):
         s = batch_df.sparkSession
-        table = TackleTable(s, state_dir)
-        if table.txn_version("mg_mv") >= epoch:
-            return  # replayed epoch: sketch state already includes this batch
-        toks = batch_df.select(
-            F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("w")
-        )
-        summ = toks.mapInPandas(
-            _mg_partition_summary("w", capacity),
-            schema="w string, mg_count long, is_total int",
-        ).collect()
-        prev = table.read().collect()
-        n_total = sum(
-            r["mg_count"] for r in prev + summ if r["is_total"] == 1
-        )
-        counters = mg_merge(
-            [
-                {r["w"]: r["mg_count"]}
-                for r in prev + summ
-                if r["is_total"] == 0
-            ],
-            capacity,
-        )
-        new_state = s.createDataFrame(
-            [(k, int(c), 0) for k, c in sorted(counters.items())]
-            + [("", int(n_total), 1)],
-            "w string, mg_count bigint, is_total int",
-        )
-        table.overwrite(new_state, txn=("mg_mv", epoch))
+
+        def merge_batch(state):
+            # runs only when the log lacks this epoch: a replayed epoch
+            # never re-summarizes its batch
+            toks = batch_df.select(
+                F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("w")
+            )
+            summ = toks.mapInPandas(
+                _mg_partition_summary("w", capacity),
+                schema="w string, mg_count long, is_total int",
+            ).collect()
+            prev = state.collect()
+            n_total = sum(
+                r["mg_count"] for r in prev + summ if r["is_total"] == 1
+            )
+            counters = mg_merge(
+                [
+                    {r["w"]: r["mg_count"]}
+                    for r in prev + summ
+                    if r["is_total"] == 0
+                ],
+                capacity,
+            )
+            return s.createDataFrame(
+                [(k, int(c), 0) for k, c in sorted(counters.items())]
+                + [("", int(n_total), 1)],
+                "w string, mg_count bigint, is_total int",
+            )
+
+        TackleTable(s, state_dir).rewrite(merge_batch, txn=("mg_mv", epoch))
 
     chunks = docs.select("doc_id", "text").repartition(4)
     if not run_mv(spark, chunks, _fold, [state_dir]):
@@ -1155,8 +1159,10 @@ def stream_mv_retraction(spark, sf_dir):
     table WITH change-data-feed on, and the MV consumes the CDF delete
     rows as NEGATIVE deltas (classic IVM delta algebra: insert ⊕,
     delete ⊖ — Delta's CDF + micro-batch sink recipe, reference Step 5
-    CDC discussion). The retraction merge is applied TWICE with the
-    same txn stamp to prove a replayed epoch cannot double-subtract.
+    CDC discussion). The retraction is one ``TackleTable.rewrite`` of
+    the view (sum with the negative partials, drop groups left with no
+    orders), applied TWICE with the same txn stamp to prove a replayed
+    epoch cannot double-subtract.
 
     The 100 TB shape: the forget pass rewrites only files holding
     forgotten customers (touched-file MERGE), the MV correction reads
@@ -1220,22 +1226,15 @@ def stream_mv_retraction(spark, sf_dir):
     mv = TackleTable(spark, mv_dir)
 
     def _retract():
-        combined = (
-            mv.read()
-            .unionByName(_partials(deltas, sign=-1))
+        mv.rewrite(
+            lambda rows: rows.unionByName(_partials(deltas, sign=-1))
             .groupBy("o_orderpriority")
             .agg(
                 F.sum("n_orders").cast("bigint").alias("n_orders"),
                 F.sum("revenue_cents").cast("bigint").alias("revenue_cents"),
             )
-        )
-        (
-            mv.merge(combined, on=["o_orderpriority"])
-            .whenMatchedDelete(condition="s.n_orders = 0")  # a fully-forgotten group leaves the MV
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .withTransaction("mv_retract", 1)
-            .execute()
+            .filter(F.col("n_orders") != 0),  # a fully-forgotten group leaves the MV
+            txn=("mv_retract", 1),
         )
 
     _retract()
@@ -1416,52 +1415,57 @@ def stream_pq_index_mv(spark, sf_dir):
     corpus, no retraining; the 100 TB shape is identical with the codes
     column 32× smaller than the vectors it indexes."""
     import os
+    import shutil
     import tempfile
 
     from lakehouse_tacklebox_spark.operators import similarity as S
     from lakehouse_tacklebox_spark.streaming.mv import run_mv
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
-    tbl_dir = os.path.join(tempfile.mkdtemp(prefix="pq_mv_"), "tbl")
-    e = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
-    books = FX.frozen_pq_codebooks(spark, sf_dir, m=8, ksub=16, iters=2)
-    book_rows = [(r["sub_idx"], r["code"], list(r["sub_vec"])) for r in books.collect()]
-    TackleTable.create(spark, tbl_dir, schema="vec_id bigint, codes array<int>")
+    tmp = tempfile.mkdtemp(prefix="pq_mv_")
+    tbl_dir = os.path.join(tmp, "tbl")
+    try:
+        e = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
+        books = FX.frozen_pq_codebooks(spark, sf_dir, m=8, ksub=16, iters=2)
+        book_rows = [(r["sub_idx"], r["code"], list(r["sub_vec"])) for r in books.collect()]
+        TackleTable.create(spark, tbl_dir, schema="vec_id bigint, codes array<int>")
 
-    def _encode_append(batch_df, epoch):
-        s = batch_df.sparkSession
-        table = TackleTable(s, tbl_dir)
-        if table.txn_version("pq_mv") >= epoch:
-            return  # retried epoch already committed
-        bdf = s.createDataFrame(
-            book_rows, schema="sub_idx INT, code INT, sub_vec ARRAY<DOUBLE>"
+        def _encode_append(batch_df, epoch):
+            s = batch_df.sparkSession
+            table = TackleTable(s, tbl_dir)
+            if table.txn_version("pq_mv") >= epoch:
+                return  # retried epoch already committed
+            bdf = s.createDataFrame(
+                book_rows, schema="sub_idx INT, code INT, sub_vec ARRAY<DOUBLE>"
+            )
+            codes = S.pq_encode(batch_df, bdf, id_col="vec_id", vec_col="embedding")
+            table.append(
+                codes.select(
+                    F.col("vec_id").cast("bigint"),
+                    F.col("codes").cast("array<int>"),
+                ),
+                txn=("pq_mv", epoch),
+            )
+
+        replay_noop = run_mv(
+            spark, e.select("vec_id", "embedding").repartition(4), _encode_append, [tbl_dir]
         )
-        codes = S.pq_encode(batch_df, bdf, id_col="vec_id", vec_col="embedding")
-        table.append(
-            codes.select(
-                F.col("vec_id").cast("bigint"),
-                F.col("codes").cast("array<int>"),
-            ),
-            txn=("pq_mv", epoch),
+
+        mv = TackleTable(spark, tbl_dir).read()
+        batch_codes = S.pq_encode(e, books, id_col="vec_id", vec_col="embedding")
+        n_vectors = e.count()
+        n_mv = mv.count()
+        n_match = mv.join(
+            batch_codes.select("vec_id", F.col("codes").alias("codes_b")), "vec_id"
+        ).filter(F.col("codes") == F.col("codes_b")).count()
+        codes_match = (n_mv == n_vectors) and (n_match == n_vectors)
+
+        return spark.createDataFrame(
+            [(n_vectors, 1 if codes_match else 0, 1 if replay_noop else 0)],
+            "n_vectors bigint, codes_match_batch int, replay_noop int",
         )
-
-    replay_noop = run_mv(
-        spark, e.select("vec_id", "embedding").repartition(4), _encode_append, [tbl_dir]
-    )
-
-    mv = TackleTable(spark, tbl_dir).read()
-    batch_codes = S.pq_encode(e, books, id_col="vec_id", vec_col="embedding")
-    n_vectors = e.count()
-    n_mv = mv.count()
-    n_match = mv.join(
-        batch_codes.select("vec_id", F.col("codes").alias("codes_b")), "vec_id"
-    ).filter(F.col("codes") == F.col("codes_b")).count()
-    codes_match = (n_mv == n_vectors) and (n_match == n_vectors)
-
-    return spark.createDataFrame(
-        [(n_vectors, 1 if codes_match else 0, 1 if replay_noop else 0)],
-        "n_vectors bigint, codes_match_batch int, replay_noop int",
-    )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # cdc_ann_index_deletes dials (shared with the margin test): the coarse
@@ -1866,7 +1870,7 @@ def cdc_ann_index_upserts(spark, sf_dir):
     # in micro-batches and three MV tables absorb each epoch under
     # per-table Delta-txn idempotence — postings (doc, term, tf) and
     # doclens append (each doc streams once, so batches are disjoint);
-    # the df table is a vocab-sized read-merge-overwrite (disjoint doc
+    # the df table is a vocab-sized ``fold_sums`` (disjoint doc
     # sets => per-term df counts ADD, the span-census-merge argument).
     # Every epoch is replayed in-batch and must no-op on ALL THREE
     # tables. Certification is CONTENT-level: the emitted rows are the
@@ -1927,16 +1931,17 @@ def stream_bm25_index_mv(spark, sf_dir):
     tables only, using rag_hybrid_retrieval's exact integer-rational
     BM25, so the oracle's from-the-raw-corpus recompute hash-checks the
     maintained index's actual serving output. Per-batch cost: one
-    batch-local token census (appends) plus a vocab-sized df merge —
+    batch-local token census (appends) plus a vocab-sized df fold —
     the corpus is never rescanned; at 100 TB the df frame is the only
     non-append state and it grows with the VOCABULARY, not the corpus.
-    Three-table epochs are individually idempotent (each table checks
-    its own txn stamp), the crash-retry contract a micro-batch sink
-    needs."""
+    Three-table epochs are individually idempotent (each append and the
+    ``fold_sums`` of the df table check their own txn stamp on the
+    snapshot they commit on), the crash-retry contract a micro-batch
+    sink needs."""
     import os
     import tempfile
 
-    from lakehouse_tacklebox_spark.streaming.mv import run_mv
+    from lakehouse_tacklebox_spark.streaming.mv import fold_sums, run_mv
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
     tmp = tempfile.mkdtemp(prefix="bm25_mv_")
@@ -1965,40 +1970,22 @@ def stream_bm25_index_mv(spark, sf_dir):
         if all(TackleTable(s, p).txn_version(a) >= epoch for p, a in stamps):
             return  # replayed epoch: every table already holds it
         tok = _tok(batch_df).localCheckpoint(eager=True)
-        post = TackleTable(s, post_dir)
-        if post.txn_version("bm25_post") < epoch:
-            post.append(
-                tok.groupBy("doc_id", "w").agg(
-                    F.count(F.lit(1)).cast("bigint").alias("tf")
-                ).select(F.col("doc_id").cast("bigint"), "w", "tf"),
-                txn=("bm25_post", epoch),
-            )
-        dlen = TackleTable(s, dlen_dir)
-        if dlen.txn_version("bm25_len") < epoch:
-            dlen.append(
-                tok.groupBy("doc_id").agg(
-                    F.count(F.lit(1)).cast("bigint").alias("len")
-                ).select(F.col("doc_id").cast("bigint"), "len"),
-                txn=("bm25_len", epoch),
-            )
-        dft = TackleTable(s, df_dir)
-        if dft.txn_version("bm25_df") < epoch:
-            batch_df_counts = tok.select("doc_id", "w").distinct().groupBy("w").agg(
-                F.count(F.lit(1)).cast("bigint").alias("df_b")
-            )
-            merged = (
-                dft.read()
-                .join(batch_df_counts, "w", "full_outer")
-                .select(
-                    "w",
-                    (
-                        F.coalesce(F.col("df"), F.lit(0))
-                        + F.coalesce(F.col("df_b"), F.lit(0))
-                    ).cast("bigint").alias("df"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            dft.overwrite(merged, txn=("bm25_df", epoch))
+        TackleTable(s, post_dir).append(
+            tok.groupBy("doc_id", "w").agg(
+                F.count(F.lit(1)).cast("bigint").alias("tf")
+            ).select(F.col("doc_id").cast("bigint"), "w", "tf"),
+            txn=("bm25_post", epoch),
+        )
+        TackleTable(s, dlen_dir).append(
+            tok.groupBy("doc_id").agg(
+                F.count(F.lit(1)).cast("bigint").alias("len")
+            ).select(F.col("doc_id").cast("bigint"), "len"),
+            txn=("bm25_len", epoch),
+        )
+        batch_df_counts = tok.select("doc_id", "w").distinct().groupBy("w").agg(
+            F.count(F.lit(1)).cast("bigint").alias("df")
+        )
+        fold_sums(TackleTable(s, df_dir), batch_df_counts, ["w"], ("bm25_df", epoch))
 
     replay_noop = run_mv(
         spark, d.select("doc_id", "text").repartition(4), _apply, [p for p, _ in stamps]
@@ -2070,7 +2057,7 @@ def stream_bm25_index_mv(spark, sf_dir):
     # per-table Delta-txn idempotence — the banded inverted index
     # (img_id, phash, band_idx, band_key; appends, images stream once
     # so batches are disjoint) and a band-occupancy census
-    # (read-merge-overwrite; disjoint batches => counts add — the skew
+    # (``fold_sums``; disjoint batches => counts add — the skew
     # readout a deployment watches to decide salting). Every epoch
     # replays in-batch and must no-op on BOTH tables. SELF-CERTIFYING
     # oracle (mm_image_phash_neardup precedent): pHashes aren't DuckDB-
@@ -2104,171 +2091,157 @@ def stream_phash_index_mv(spark, sf_dir):
     check their own txn stamp, so a crash-retried epoch (replayed
     in-batch here) is a version-stable no-op."""
     import os
+    import shutil
     import tempfile
 
     from lakehouse_tacklebox_spark.operators import multimodal as MM
-    from lakehouse_tacklebox_spark.streaming.mv import run_mv
+    from lakehouse_tacklebox_spark.streaming.mv import fold_sums, run_mv
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
     tmp = tempfile.mkdtemp(prefix="phash_mv_")
     band_dir = os.path.join(tmp, "bands")
     occ_dir = os.path.join(tmp, "occ")
+    try:
+        d = load_tables(spark, sf_dir, ["documents"])["documents"]
+        fixture = MM.as_bmp_images_with_neardups(d)
+        imgs = fixture.select("img_id", "payload")
+        # Manifest carries the fixture's is_copy/src_id flags so the planted-
+        # copy certification below never decodes copy-ness from the id range
+        # (the +100000 offset would silently collide with real doc_ids at
+        # larger scales — ADVICE r10).
+        manifest_dir = os.path.join(tmp, "manifest")
+        fixture.select("img_id", "src_id", "is_copy").write.parquet(manifest_dir)
+        TackleTable.create(
+            spark, band_dir,
+            schema="img_id bigint, phash bigint, band_idx int, band_key bigint",
+        )
+        TackleTable.create(spark, occ_dir, schema="band_idx int, band_key bigint, n bigint")
 
-    d = load_tables(spark, sf_dir, ["documents"])["documents"]
-    fixture = MM.as_bmp_images_with_neardups(d)
-    imgs = fixture.select("img_id", "payload")
-    # Manifest carries the fixture's is_copy/src_id flags so the planted-
-    # copy certification below never decodes copy-ness from the id range
-    # (the +100000 offset would silently collide with real doc_ids at
-    # larger scales — ADVICE r10).
-    manifest_dir = os.path.join(tmp, "manifest")
-    fixture.select("img_id", "src_id", "is_copy").write.parquet(manifest_dir)
-    TackleTable.create(
-        spark, band_dir,
-        schema="img_id bigint, phash bigint, band_idx int, band_key bigint",
-    )
-    TackleTable.create(spark, occ_dir, schema="band_idx int, band_key bigint, n bigint")
+        def _bands(hashed):
+            return hashed.select(
+                "img_id",
+                "phash",
+                F.explode(
+                    F.array(
+                        *[
+                            F.struct(
+                                F.lit(i).cast("int").alias("band_idx"),
+                                F.shiftrightunsigned(F.col("phash"), 16 * i)
+                                .bitwiseAND(F.lit(0xFFFF))
+                                .cast("bigint")
+                                .alias("band_key"),
+                            )
+                            for i in range(4)
+                        ]
+                    )
+                ).alias("b"),
+            ).select("img_id", "phash", "b.band_idx", "b.band_key")
 
-    def _bands(hashed):
-        return hashed.select(
-            "img_id",
-            "phash",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).cast("int").alias("band_idx"),
-                            F.shiftrightunsigned(F.col("phash"), 16 * i)
-                            .bitwiseAND(F.lit(0xFFFF))
-                            .cast("bigint")
-                            .alias("band_key"),
-                        )
-                        for i in range(4)
-                    ]
-                )
-            ).alias("b"),
-        ).select("img_id", "phash", "b.band_idx", "b.band_key")
+        stamps = ((band_dir, "phash_bands"), (occ_dir, "phash_occ"))
 
-    stamps = ((band_dir, "phash_bands"), (occ_dir, "phash_occ"))
-
-    def _apply(batch_df, epoch):
-        s = batch_df.sparkSession
-        if all(TackleTable(s, p).txn_version(a) >= epoch for p, a in stamps):
-            return  # replayed epoch: both tables already hold it
-        hashed = MM.image_phash(batch_df, keys=["img_id"]).localCheckpoint(eager=True)
-        bands = _bands(hashed).localCheckpoint(eager=True)
-        bt = TackleTable(s, band_dir)
-        if bt.txn_version("phash_bands") < epoch:
-            bt.append(bands, txn=("phash_bands", epoch))
-        ot = TackleTable(s, occ_dir)
-        if ot.txn_version("phash_occ") < epoch:
+        def _apply(batch_df, epoch):
+            s = batch_df.sparkSession
+            if all(TackleTable(s, p).txn_version(a) >= epoch for p, a in stamps):
+                return  # replayed epoch: both tables already hold it
+            hashed = MM.image_phash(batch_df, keys=["img_id"]).localCheckpoint(eager=True)
+            bands = _bands(hashed).localCheckpoint(eager=True)
+            TackleTable(s, band_dir).append(bands, txn=("phash_bands", epoch))
             census = bands.groupBy("band_idx", "band_key").agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_b")
+                F.count(F.lit(1)).cast("bigint").alias("n")
             )
-            merged = (
-                ot.read()
-                .join(census, ["band_idx", "band_key"], "full_outer")
-                .select(
-                    "band_idx",
-                    "band_key",
-                    (
-                        F.coalesce(F.col("n"), F.lit(0))
-                        + F.coalesce(F.col("n_b"), F.lit(0))
-                    ).cast("bigint").alias("n"),
+            fold_sums(TackleTable(s, occ_dir), census, ["band_idx", "band_key"], ("phash_occ", epoch))
+
+        replay_noop = run_mv(spark, imgs.repartition(4), _apply, [p for p, _ in stamps])
+
+        # index MV == from-scratch banding of everything streamed
+        back = TackleTable(spark, band_dir).read().localCheckpoint(eager=True)
+        full = _bands(MM.image_phash(imgs, keys=["img_id"])).localCheckpoint(eager=True)
+        n_full = full.count()
+        index_match = (back.count() == n_full) and (
+            back.join(full, ["img_id", "phash", "band_idx", "band_key"]).count() == n_full
+        )
+        occ_back = TackleTable(spark, occ_dir).read()
+        occ_full = full.groupBy("band_idx", "band_key").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n")
+        )
+        n_occ = occ_full.count()
+        occ_match = (occ_back.count() == n_occ) and (
+            occ_back.join(occ_full, ["band_idx", "band_key", "n"]).count() == n_occ
+        )
+
+        # serve the near-dup query FROM THE MV alone
+        a = back.alias("a")
+        b = back.alias("b")
+        pairs = (
+            a.join(
+                b,
+                (F.col("a.band_idx") == F.col("b.band_idx"))
+                & (F.col("a.band_key") == F.col("b.band_key"))
+                & (F.col("a.img_id") < F.col("b.img_id")),
+            )
+            .select(
+                F.col("a.img_id").alias("id_a"),
+                F.col("b.img_id").alias("id_b"),
+                F.col("a.phash").alias("ph_a"),
+                F.col("b.phash").alias("ph_b"),
+            )
+            .distinct()
+            .withColumn("hamming", F.bit_count(F.expr("ph_a ^ ph_b")))
+            .filter(F.col("hamming") <= 6)
+            .select("id_a", "id_b")
+        )
+        man = F.broadcast(spark.read.parquet(manifest_dir)).localCheckpoint(eager=True)
+        ided = back.select("img_id").distinct().join(man, "img_id")
+        n_images = ided.filter(F.col("is_copy") == 0).count()
+        n_copies = ided.filter(F.col("is_copy") == 1).count()
+        # A pair certifies as copy↔source iff one side is flagged is_copy
+        # and its manifest src_id equals the other side — direction-agnostic,
+        # no id arithmetic.
+        ma = man.select(
+            F.col("img_id").alias("id_a"),
+            F.col("src_id").alias("src_a"),
+            F.col("is_copy").alias("copy_a"),
+        )
+        mb = man.select(
+            F.col("img_id").alias("id_b"),
+            F.col("src_id").alias("src_b"),
+            F.col("is_copy").alias("copy_b"),
+        )
+        stats = (
+            pairs.join(ma, "id_a")
+            .join(mb, "id_b")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
+                F.sum(
+                    F.when(
+                        ((F.col("copy_b") == 1) & (F.col("src_b") == F.col("id_a")))
+                        | ((F.col("copy_a") == 1) & (F.col("src_a") == F.col("id_b"))),
+                        1,
+                    ).otherwise(0)
+                ).alias("n_copy_source_pairs"),
+            )
+            .collect()[0]
+        )
+        n_pairs = int(stats["n_pairs"] or 0)
+        n_cs = int(stats["n_copy_source_pairs"] or 0)
+        return spark.createDataFrame(
+            [
+                (
+                    n_images,
+                    n_copies,
+                    n_pairs,
+                    1 if n_cs == n_copies else 0,
+                    1 if n_pairs == n_copies else 0,
+                    1 if index_match else 0,
+                    1 if occ_match else 0,
+                    1 if replay_noop else 0,
                 )
-                .localCheckpoint(eager=True)
-            )
-            ot.overwrite(merged, txn=("phash_occ", epoch))
-
-    replay_noop = run_mv(spark, imgs.repartition(4), _apply, [p for p, _ in stamps])
-
-    # index MV == from-scratch banding of everything streamed
-    back = TackleTable(spark, band_dir).read().localCheckpoint(eager=True)
-    full = _bands(MM.image_phash(imgs, keys=["img_id"])).localCheckpoint(eager=True)
-    n_full = full.count()
-    index_match = (back.count() == n_full) and (
-        back.join(full, ["img_id", "phash", "band_idx", "band_key"]).count() == n_full
-    )
-    occ_back = TackleTable(spark, occ_dir).read()
-    occ_full = full.groupBy("band_idx", "band_key").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    )
-    n_occ = occ_full.count()
-    occ_match = (occ_back.count() == n_occ) and (
-        occ_back.join(occ_full, ["band_idx", "band_key", "n"]).count() == n_occ
-    )
-
-    # serve the near-dup query FROM THE MV alone
-    a = back.alias("a")
-    b = back.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.img_id") < F.col("b.img_id")),
+            ],
+            "n_images bigint, n_copies bigint, n_pairs bigint, copies_all_matched int,"
+            " no_false_pairs int, index_merge_match int, occupancy_match int, replay_noop int",
         )
-        .select(
-            F.col("a.img_id").alias("id_a"),
-            F.col("b.img_id").alias("id_b"),
-            F.col("a.phash").alias("ph_a"),
-            F.col("b.phash").alias("ph_b"),
-        )
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.expr("ph_a ^ ph_b")))
-        .filter(F.col("hamming") <= 6)
-        .select("id_a", "id_b")
-    )
-    man = F.broadcast(spark.read.parquet(manifest_dir)).localCheckpoint(eager=True)
-    ided = back.select("img_id").distinct().join(man, "img_id")
-    n_images = ided.filter(F.col("is_copy") == 0).count()
-    n_copies = ided.filter(F.col("is_copy") == 1).count()
-    # A pair certifies as copy↔source iff one side is flagged is_copy
-    # and its manifest src_id equals the other side — direction-agnostic,
-    # no id arithmetic.
-    ma = man.select(
-        F.col("img_id").alias("id_a"),
-        F.col("src_id").alias("src_a"),
-        F.col("is_copy").alias("copy_a"),
-    )
-    mb = man.select(
-        F.col("img_id").alias("id_b"),
-        F.col("src_id").alias("src_b"),
-        F.col("is_copy").alias("copy_b"),
-    )
-    stats = (
-        pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-            F.sum(
-                F.when(
-                    ((F.col("copy_b") == 1) & (F.col("src_b") == F.col("id_a")))
-                    | ((F.col("copy_a") == 1) & (F.col("src_a") == F.col("id_b"))),
-                    1,
-                ).otherwise(0)
-            ).alias("n_copy_source_pairs"),
-        )
-        .collect()[0]
-    )
-    n_pairs = int(stats["n_pairs"] or 0)
-    n_cs = int(stats["n_copy_source_pairs"] or 0)
-    return spark.createDataFrame(
-        [
-            (
-                n_images,
-                n_copies,
-                n_pairs,
-                1 if n_cs == n_copies else 0,
-                1 if n_pairs == n_copies else 0,
-                1 if index_match else 0,
-                1 if occ_match else 0,
-                1 if replay_noop else 0,
-            )
-        ],
-        "n_images bigint, n_copies bigint, n_pairs bigint, copies_all_matched int,"
-        " no_false_pairs int, index_merge_match int, occupancy_match int, replay_noop int",
-    )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
@@ -2305,100 +2278,86 @@ def stream_epoch_shuffle_mv(spark, sf_dir):
     """Streaming maintenance of the training-epoch shuffle: arriving
     documents are keyed per micro-batch (seed-keyed md5 — a pure
     per-row function, so batches need no history and the MV is
-    append-only) and the per-bucket census is read-merge-overwritten,
+    append-only) and the per-bucket census is folded by ``fold_sums``,
     both under Delta-txn idempotence with every epoch replayed
     in-batch. Per-batch cost ∝ batch size + a bucket-count-sized census
     merge; at 100 TB the shuffle order of an ever-growing corpus is
     maintained by appends alone — history is never re-keyed, which is
     the append-invariance corpus_epoch_shuffle certifies."""
     import os
+    import shutil
     import tempfile
 
     from lakehouse_tacklebox_spark.operators.corpus import epoch_shuffle
-    from lakehouse_tacklebox_spark.streaming.mv import run_mv
+    from lakehouse_tacklebox_spark.streaming.mv import fold_sums, run_mv
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
     tmp = tempfile.mkdtemp(prefix="epoch_mv_")
     mv_dir = os.path.join(tmp, "mv")
     occ_dir = os.path.join(tmp, "occ")
-    NB = 8
+    try:
+        NB = 8
 
-    d = load_tables(spark, sf_dir, ["documents"])["documents"].select("doc_id")
-    TackleTable.create(
-        spark, mv_dir, schema="doc_id bigint, sort_key bigint, bucket bigint"
-    )
-    TackleTable.create(spark, occ_dir, schema="bucket bigint, n bigint")
+        d = load_tables(spark, sf_dir, ["documents"])["documents"].select("doc_id")
+        TackleTable.create(
+            spark, mv_dir, schema="doc_id bigint, sort_key bigint, bucket bigint"
+        )
+        TackleTable.create(spark, occ_dir, schema="bucket bigint, n bigint")
 
-    stamps = ((mv_dir, "epoch_mv"), (occ_dir, "epoch_occ"))
+        stamps = ((mv_dir, "epoch_mv"), (occ_dir, "epoch_occ"))
 
-    def _apply(batch_df, epoch):
-        s = batch_df.sparkSession
-        if all(TackleTable(s, p).txn_version(a) >= epoch for p, a in stamps):
-            return  # replayed epoch: both tables already hold it
-        keyed = epoch_shuffle(batch_df, "doc_id", seed=42, n_buckets=NB).select(
+        def _apply(batch_df, epoch):
+            s = batch_df.sparkSession
+            if all(TackleTable(s, p).txn_version(a) >= epoch for p, a in stamps):
+                return  # replayed epoch: both tables already hold it
+            keyed = epoch_shuffle(batch_df, "doc_id", seed=42, n_buckets=NB).select(
+                F.col("doc_id").cast("bigint"),
+                F.col("sort_key").cast("bigint"),
+                F.col("bucket").cast("bigint"),
+            ).localCheckpoint(eager=True)
+            TackleTable(s, mv_dir).append(keyed, txn=("epoch_mv", epoch))
+            batch_occ = keyed.groupBy("bucket").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+            fold_sums(TackleTable(s, occ_dir), batch_occ, ["bucket"], ("epoch_occ", epoch))
+
+        replay_noop = run_mv(spark, d.repartition(4), _apply, [p for p, _ in stamps])
+
+        back = TackleTable(spark, mv_dir).read().localCheckpoint(eager=True)
+        full = epoch_shuffle(d, "doc_id", 42, NB).select(
             F.col("doc_id").cast("bigint"),
             F.col("sort_key").cast("bigint"),
             F.col("bucket").cast("bigint"),
-        ).localCheckpoint(eager=True)
-        mt = TackleTable(s, mv_dir)
-        if mt.txn_version("epoch_mv") < epoch:
-            mt.append(keyed, txn=("epoch_mv", epoch))
-        ot = TackleTable(s, occ_dir)
-        if ot.txn_version("epoch_occ") < epoch:
-            batch_occ = keyed.groupBy("bucket").agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_b")
-            )
-            merged = (
-                ot.read()
-                .join(batch_occ, "bucket", "full_outer")
-                .select(
-                    "bucket",
-                    (
-                        F.coalesce(F.col("n"), F.lit(0))
-                        + F.coalesce(F.col("n_b"), F.lit(0))
-                    ).cast("bigint").alias("n"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            ot.overwrite(merged, txn=("epoch_occ", epoch))
-
-    replay_noop = run_mv(spark, d.repartition(4), _apply, [p for p, _ in stamps])
-
-    back = TackleTable(spark, mv_dir).read().localCheckpoint(eager=True)
-    full = epoch_shuffle(d, "doc_id", 42, NB).select(
-        F.col("doc_id").cast("bigint"),
-        F.col("sort_key").cast("bigint"),
-        F.col("bucket").cast("bigint"),
-    )
-
-    def _sig(fr):
-        # 4-fold signature (operators/signature.py; ADVICE r11)
-        from lakehouse_tacklebox_spark.operators.signature import rowset_signature
-
-        return rowset_signature(fr, ["doc_id", "sort_key", "bucket"])
-
-    index_merge_match = _sig(back) == _sig(full)
-
-    occ_back = {
-        r["bucket"]: r["n"]
-        for r in TackleTable(spark, occ_dir).read().collect()
-    }
-    occ_mv = {
-        r["bucket"]: r["n"]
-        for r in back.groupBy("bucket").agg(F.count(F.lit(1)).cast("bigint").alias("n")).collect()
-    }
-    census_match = occ_back == occ_mv
-
-    return (
-        back.groupBy("bucket")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-        .withColumn(
-            "index_merge_match", F.lit(1 if index_merge_match else 0).cast("int")
         )
-        .withColumn("census_match", F.lit(1 if census_match else 0).cast("int"))
-        .withColumn("replay_noop", F.lit(1 if replay_noop else 0).cast("int"))
-        .orderBy("bucket")
-    )
+
+        def _sig(fr):
+            # 4-fold signature (operators/signature.py; ADVICE r11)
+            from lakehouse_tacklebox_spark.operators.signature import rowset_signature
+
+            return rowset_signature(fr, ["doc_id", "sort_key", "bucket"])
+
+        index_merge_match = _sig(back) == _sig(full)
+
+        occ_back = {
+            r["bucket"]: r["n"]
+            for r in TackleTable(spark, occ_dir).read().collect()
+        }
+        occ_mv = {
+            r["bucket"]: r["n"]
+            for r in back.groupBy("bucket").agg(F.count(F.lit(1)).cast("bigint").alias("n")).collect()
+        }
+        census_match = occ_back == occ_mv
+
+        return (
+            back.groupBy("bucket")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
+            .withColumn(
+                "index_merge_match", F.lit(1 if index_merge_match else 0).cast("int")
+            )
+            .withColumn("census_match", F.lit(1 if census_match else 0).cast("int"))
+            .withColumn("replay_noop", F.lit(1 if replay_noop else 0).cast("int"))
+            .orderBy("bucket")
+        )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _cc_mv_oracle() -> str:
@@ -2462,6 +2421,7 @@ def stream_cc_labels_mv(spark, sf_dir):
     components; history text is re-read only per matched doc; the
     label store is scanned but only changed rows are written."""
     import os
+    import shutil
     import tempfile
 
     from lakehouse_tacklebox_spark.operators import dedup as D
@@ -2473,78 +2433,78 @@ def stream_cc_labels_mv(spark, sf_dir):
     from lakehouse_tacklebox_spark.streaming.mv import run_mv
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
-    tmp = tempfile.mkdtemp(prefix="cc_mv_")
-    idx_dir = os.path.join(tmp, "idx")
-    lab_dir = os.path.join(tmp, "labels")
-
     d = _spread(load_tables(spark, sf_dir, ["documents"])["documents"])
     # per-doc structures are split-invariant, so sign once up front; a
     # batch selects ITS rows by semi-join (cost ∝ batch)
     sh = D.shingle_hashes(d.select("doc_id", "text"), "text", n=3).persist()
-    sigs = (
-        D.minhash_signatures(sh, "doc_id", "shingles", num_hashes=48)
-        .filter(F.col("sig").getItem(0).isNotNull())
-        .localCheckpoint(eager=True)
-    )
-    TackleTable.create(
-        spark, idx_dir, schema="doc_id bigint, band int, band_hash bigint"
-    )
-    TackleTable.create(spark, lab_dir, schema="node bigint, label bigint")
-
-    def _apply(batch_df, epoch):
-        s = batch_df.sparkSession
-        it = TackleTable(s, idx_dir)
-        lt = TackleTable(s, lab_dir)
-        if lt.txn_version("cc_labels") >= epoch and it.txn_version("cc_idx") >= epoch:
-            return  # replayed epoch: both effects already committed
-        ids = batch_df.select("doc_id").distinct().localCheckpoint(eager=True)
-        bsigs = sigs.join(ids, "doc_id")
-        bbuckets = D.lsh_band_buckets(bsigs, "doc_id", bands=16, rows_per_band=3).select(
-            F.col("doc_id").cast("bigint"),
-            F.col("band").cast("int"),
-            F.col("band_hash").cast("bigint"),
-        ).localCheckpoint(eager=True)
-        stored = it.read()
-        # id_a < id_b (not <=): on a crash-retry where the index append
-        # committed but the label merge didn't, `stored` already holds
-        # this batch's buckets, and the probe would otherwise emit
-        # degenerate self-pairs
-        cross = (
-            bbuckets.select(F.col("doc_id").alias("inc_id"), "band", "band_hash")
-            .join(
-                stored.select(F.col("doc_id").alias("ex_id"), "band", "band_hash"),
-                ["band", "band_hash"],
-            )
-            .select(
-                F.least("inc_id", "ex_id").alias("id_a"),
-                F.greatest("inc_id", "ex_id").alias("id_b"),
-            )
-            .filter(F.col("id_a") < F.col("id_b"))
-        )
-        a = bbuckets.select(F.col("doc_id").alias("id_a"), "band", "band_hash")
-        b = bbuckets.select(F.col("doc_id").alias("id_b"), "band", "band_hash")
-        within = (
-            a.join(b, ["band", "band_hash"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-        )
-        cand = cross.unionByName(within).distinct()
-        new_pairs = (
-            D.jaccard_for_pairs(cand, sh, "doc_id", "shingles")
-            .filter(F.col("jaccard") >= 0.2)
-            .select(
-                F.col("id_a").cast("bigint").alias("id_a"),
-                F.col("id_b").cast("bigint").alias("id_b"),
-            )
+    tmp = tempfile.mkdtemp(prefix="cc_mv_")
+    idx_dir = os.path.join(tmp, "idx")
+    lab_dir = os.path.join(tmp, "labels")
+    try:
+        sigs = (
+            D.minhash_signatures(sh, "doc_id", "shingles", num_hashes=48)
+            .filter(F.col("sig").getItem(0).isNotNull())
             .localCheckpoint(eager=True)
         )
-        base = lt.read()
-        merged = G.merge_labels_incremental(base, new_pairs, _CC_ITERS).select(
-            F.col("node").cast("bigint"), F.col("label").cast("bigint")
+        TackleTable.create(
+            spark, idx_dir, schema="doc_id bigint, band int, band_hash bigint"
         )
-        # upsert ONLY drifted/new rows — the store scan is the join below,
-        # but the write is change-sized
-        if lt.txn_version("cc_labels") < epoch:
+        TackleTable.create(spark, lab_dir, schema="node bigint, label bigint")
+
+        def _apply(batch_df, epoch):
+            s = batch_df.sparkSession
+            it = TackleTable(s, idx_dir)
+            lt = TackleTable(s, lab_dir)
+            if lt.txn_version("cc_labels") >= epoch and it.txn_version("cc_idx") >= epoch:
+                return  # replayed epoch: both effects already committed
+            ids = batch_df.select("doc_id").distinct().localCheckpoint(eager=True)
+            bsigs = sigs.join(ids, "doc_id")
+            bbuckets = D.lsh_band_buckets(bsigs, "doc_id", bands=16, rows_per_band=3).select(
+                F.col("doc_id").cast("bigint"),
+                F.col("band").cast("int"),
+                F.col("band_hash").cast("bigint"),
+            ).localCheckpoint(eager=True)
+            stored = it.read()
+            # id_a < id_b (not <=): on a crash-retry where the index append
+            # committed but the label merge didn't, `stored` already holds
+            # this batch's buckets, and the probe would otherwise emit
+            # degenerate self-pairs
+            cross = (
+                bbuckets.select(F.col("doc_id").alias("inc_id"), "band", "band_hash")
+                .join(
+                    stored.select(F.col("doc_id").alias("ex_id"), "band", "band_hash"),
+                    ["band", "band_hash"],
+                )
+                .select(
+                    F.least("inc_id", "ex_id").alias("id_a"),
+                    F.greatest("inc_id", "ex_id").alias("id_b"),
+                )
+                .filter(F.col("id_a") < F.col("id_b"))
+            )
+            a = bbuckets.select(F.col("doc_id").alias("id_a"), "band", "band_hash")
+            b = bbuckets.select(F.col("doc_id").alias("id_b"), "band", "band_hash")
+            within = (
+                a.join(b, ["band", "band_hash"])
+                .filter(F.col("id_a") < F.col("id_b"))
+                .select("id_a", "id_b")
+            )
+            cand = cross.unionByName(within).distinct()
+            new_pairs = (
+                D.jaccard_for_pairs(cand, sh, "doc_id", "shingles")
+                .filter(F.col("jaccard") >= 0.2)
+                .select(
+                    F.col("id_a").cast("bigint").alias("id_a"),
+                    F.col("id_b").cast("bigint").alias("id_b"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            base = lt.read()
+            merged = G.merge_labels_incremental(base, new_pairs, _CC_ITERS).select(
+                F.col("node").cast("bigint"), F.col("label").cast("bigint")
+            )
+            # upsert ONLY drifted/new rows — the store scan is the join below,
+            # but the write is change-sized; the MERGE and the append each
+            # no-op on their own stamp after a crash between them
             changed = (
                 merged.join(base.withColumnRenamed("label", "old_label"), "node", "left")
                 .filter(
@@ -2560,39 +2520,41 @@ def stream_cc_labels_mv(spark, sf_dir):
                 .withTransaction("cc_labels", epoch)
                 .execute()
             )
-        if it.txn_version("cc_idx") < epoch:
             it.append(bbuckets, txn=("cc_idx", epoch))
 
-    replay_noop = run_mv(
-        spark, d.select("doc_id").repartition(3), _apply, [idx_dir, lab_dir]
-    )
-
-    back = TackleTable(spark, lab_dir).read().localCheckpoint(eager=True)
-
-    # from-scratch truth: CC over the full exact pair set. Iterations
-    # past the certified fixed point are skipped (label-sum
-    # monotonicity — identical labels), and the converged bool IS
-    # "labels stable between the last two iterations", replacing the
-    # former full-frame equality join + count with one scalar per step.
-    pairs_full = FX.frozen_dup_pairs(spark, sf_dir)
-    full, cc_converged = G.cc_min_label_converged(
-        G.symmetric_edges(pairs_full), _CC_ITERS
-    )
-
-    def census(labels):
-        return labels.groupBy(F.col("label").alias("cluster_label")).agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.max("node").cast("bigint").alias("max_doc"),
+        replay_noop = run_mv(
+            spark, d.select("doc_id").repartition(3), _apply, [idx_dir, lab_dir]
         )
 
-    cols = ["cluster_label", "n_docs", "max_doc"]
-    mv_census = census(back).localCheckpoint(eager=True)
-    census_match = rowset_signature(mv_census, cols) == rowset_signature(
-        census(full), cols
-    )
-    return (
-        mv_census.withColumn("converged", F.lit(1 if cc_converged else 0).cast("int"))
-        .withColumn("census_match", F.lit(1 if census_match else 0).cast("int"))
-        .withColumn("replay_noop", F.lit(1 if replay_noop else 0).cast("int"))
-        .orderBy(F.col("n_docs").desc(), "cluster_label")
-    )
+        back = TackleTable(spark, lab_dir).read().localCheckpoint(eager=True)
+
+        # from-scratch truth: CC over the full exact pair set. Iterations
+        # past the certified fixed point are skipped (label-sum
+        # monotonicity — identical labels), and the converged bool IS
+        # "labels stable between the last two iterations", replacing the
+        # former full-frame equality join + count with one scalar per step.
+        pairs_full = FX.frozen_dup_pairs(spark, sf_dir)
+        full, cc_converged = G.cc_min_label_converged(
+            G.symmetric_edges(pairs_full), _CC_ITERS
+        )
+
+        def census(labels):
+            return labels.groupBy(F.col("label").alias("cluster_label")).agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+                F.max("node").cast("bigint").alias("max_doc"),
+            )
+
+        cols = ["cluster_label", "n_docs", "max_doc"]
+        mv_census = census(back).localCheckpoint(eager=True)
+        census_match = rowset_signature(mv_census, cols) == rowset_signature(
+            census(full), cols
+        )
+        return (
+            mv_census.withColumn("converged", F.lit(1 if cc_converged else 0).cast("int"))
+            .withColumn("census_match", F.lit(1 if census_match else 0).cast("int"))
+            .withColumn("replay_noop", F.lit(1 if replay_noop else 0).cast("int"))
+            .orderBy(F.col("n_docs").desc(), "cluster_label")
+        )
+    finally:
+        sh.unpersist()
+        shutil.rmtree(tmp, ignore_errors=True)

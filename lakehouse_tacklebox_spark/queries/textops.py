@@ -2108,18 +2108,20 @@ def text_span_excision_incremental(spark, sf_dir):
     the persisted index (a TackleTable keyed on the 60-bit window hash);
     a new batch tokenizes once, flags any window present in the store OR
     duplicated within the batch, excises the interval union, and then
-    MERGES its own census into the store for the next batch. Cost per
+    folds its own census into the store for the next batch. Cost per
     batch: tokenize + window the batch, one equi-join on h against the
     store, one per-doc window pass — the ingested corpus' TEXT is never
     re-read (only its census), which is what makes excision affordable
-    as a standing ingest stage. Incremental == full recompute restricted
-    to batch docs (disjoint doc sets; proven in the register note and
-    pinned against both the batch entry and a pure-Python brute force in
-    tests). census_merge_match certifies the post-merge store, read
-    back, equals a from-scratch union census."""
+    as a standing ingest stage. The census merge is one ``fold_sums``
+    (one snapshot read, one txn-stamped replace). Incremental == full
+    recompute restricted to batch docs (disjoint doc sets; proven in the
+    register note and pinned against both the batch entry and a
+    pure-Python brute force in tests). census_merge_match certifies the
+    post-merge store, read back, equals a from-scratch union census."""
     import os
     import tempfile
 
+    from lakehouse_tacklebox_spark.streaming.mv import fold_sums
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
     d = load_tables(spark, sf_dir, ["documents"])["documents"]
@@ -2178,21 +2180,12 @@ def text_span_excision_incremental(spark, sf_dir):
         .withColumn("prev_rm", F.lag("rm").over(w))
     )
 
-    # maintenance: merge the batch's census into the store (disjoint doc
+    # maintenance: fold the batch's census into the store (disjoint doc
     # sets => counts add), then certify the read-back against a
     # from-scratch census of the union.
-    merged = (
-        stored.select("h", "n_docs")
-        .join(inc_census, "h", "full_outer")
-        .select(
-            "h",
-            (F.coalesce(F.col("n_docs"), F.lit(0)) + F.coalesce(F.col("n_inc"), F.lit(0)))
-            .cast("bigint")
-            .alias("n_docs"),
-        )
-        .localCheckpoint(eager=True)
+    fold_sums(
+        store, inc_census.withColumnRenamed("n_inc", "n_docs"), ["h"], ("span_census_merge", 1)
     )
-    store.overwrite(merged, txn=("span_census_merge", 1))
     back = TackleTable(spark, os.path.join(tmp, "census")).read()
     union_census = wins.groupBy("h").agg(
         F.count_distinct("doc_id").cast("bigint").alias("n_docs")
@@ -2520,14 +2513,15 @@ def cdc_span_census_deletes(spark, sf_dir):
     """GDPR deletes against the persisted ExactSubstr window census: the
     forget-list's window counts are DECREMENTED out of the store (never
     a recompute of the surviving corpus — cost ∝ the forgotten docs),
-    rows hitting zero are dropped, the epoch is Delta-txn stamped and a
-    deliberate double-replay must no-op, and the post-delete store is
-    read BACK and certified equal to a from-scratch census of the
-    survivors. Completes the census index lifecycle: build
+    rows hitting zero are dropped (one ``TackleTable.rewrite``), the
+    epoch is Delta-txn stamped and a deliberate double-replay must
+    no-op, and the post-delete store is read BACK and certified equal
+    to a from-scratch census of the survivors. Completes the census index lifecycle: build
     (text_span_excision), merge-on-ingest (the incremental entry), and
     now forget — the three operations a standing 100 TB dedup index
     actually serves."""
     import os
+    import shutil
     import tempfile
 
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
@@ -2552,63 +2546,62 @@ def cdc_span_census_deletes(spark, sf_dir):
         F.count_distinct("doc_id").cast("bigint").alias("n_docs")
     )
     tmp = tempfile.mkdtemp(prefix="spanforget_")
-    store = TackleTable.create(spark, os.path.join(tmp, "census"), census_all)
-    n_before = store.read().count()
+    try:
+        store = TackleTable.create(spark, os.path.join(tmp, "census"), census_all)
+        n_before = store.read().count()
 
-    # the forget-list's own census (cost ∝ deleted docs, not the corpus)
-    del_census = (
-        wins.filter(F.col("doc_id") % 11 == 5)
-        .groupBy("h")
-        .agg(F.count_distinct("doc_id").cast("bigint").alias("n_del"))
-        .localCheckpoint(eager=True)
-    )
-
-    def _apply_forget(epoch: int) -> None:
-        t = TackleTable(spark, os.path.join(tmp, "census"))
-        if t.txn_version("census_forget") >= epoch:
-            return  # retried epoch already committed
-        merged = (
-            t.read()
-            .join(del_census, "h", "left")
-            .select(
-                "h",
-                (F.col("n_docs") - F.coalesce(F.col("n_del"), F.lit(0)))
-                .cast("bigint")
-                .alias("n_docs"),
-            )
-            .filter(F.col("n_docs") > 0)
+        # the forget-list's own census (cost ∝ deleted docs, not the corpus)
+        del_census = (
+            wins.filter(F.col("doc_id") % 11 == 5)
+            .groupBy("h")
+            .agg(F.count_distinct("doc_id").cast("bigint").alias("n_del"))
             .localCheckpoint(eager=True)
         )
-        t.overwrite(merged, txn=("census_forget", epoch))
 
-    _apply_forget(1)
-    v_after = TackleTable(spark, os.path.join(tmp, "census")).version()
-    _apply_forget(1)
-    _apply_forget(1)
-    replay_noop = TackleTable(spark, os.path.join(tmp, "census")).version() == v_after
+        def _apply_forget(epoch: int) -> None:
+            # a retried epoch the log already holds no-ops inside rewrite
+            TackleTable(spark, os.path.join(tmp, "census")).rewrite(
+                lambda rows: rows.join(del_census, "h", "left")
+                .select(
+                    "h",
+                    (F.col("n_docs") - F.coalesce(F.col("n_del"), F.lit(0)))
+                    .cast("bigint")
+                    .alias("n_docs"),
+                )
+                .filter(F.col("n_docs") > 0),
+                txn=("census_forget", epoch),
+            )
 
-    back = TackleTable(spark, os.path.join(tmp, "census")).read()
-    surv = (
-        wins.filter(F.col("doc_id") % 11 != 5)
-        .groupBy("h")
-        .agg(F.count_distinct("doc_id").cast("bigint").alias("n_docs"))
-    )
-    n_surv = surv.count()
-    n_match = back.join(surv, ["h", "n_docs"]).count()
-    n_after = back.count()
-    decrement_match = (n_after == n_surv) and (n_match == n_surv)
+        _apply_forget(1)
+        v_after = TackleTable(spark, os.path.join(tmp, "census")).version()
+        _apply_forget(1)
+        _apply_forget(1)
+        replay_noop = TackleTable(spark, os.path.join(tmp, "census")).version() == v_after
 
-    return spark.createDataFrame(
-        [(
-            n_before,
-            n_after,
-            n_before - n_after,
-            1 if decrement_match else 0,
-            1 if replay_noop else 0,
-        )],
-        "n_hashes_before bigint, n_hashes_after bigint, n_hashes_removed bigint,"
-        " decrement_match int, replay_noop int",
-    )
+        back = TackleTable(spark, os.path.join(tmp, "census")).read()
+        surv = (
+            wins.filter(F.col("doc_id") % 11 != 5)
+            .groupBy("h")
+            .agg(F.count_distinct("doc_id").cast("bigint").alias("n_docs"))
+        )
+        n_surv = surv.count()
+        n_match = back.join(surv, ["h", "n_docs"]).count()
+        n_after = back.count()
+        decrement_match = (n_after == n_surv) and (n_match == n_surv)
+
+        return spark.createDataFrame(
+            [(
+                n_before,
+                n_after,
+                n_before - n_after,
+                1 if decrement_match else 0,
+                1 if replay_noop else 0,
+            )],
+            "n_hashes_before bigint, n_hashes_after bigint, n_hashes_removed bigint,"
+            " decrement_match int, replay_noop int",
+        )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(

@@ -101,30 +101,27 @@ def fold_sums(
 ) -> int:
     """Fold per-key partial sums into ``table``: its rows ⊎ ``partials``,
     grouped by ``keys``, every other table column summed, every column
-    cast back to its table type and kept in table order, then committed
-    as a replace of the table's files under the ``txn=(app_id, epoch)``
-    stamp. An epoch the log already holds returns before any work.
-
-    The rows and the commit come from one snapshot: the replace lands at
-    that snapshot's version + 1, so a commit that landed after the rows
-    were read raises CommitConflictError (or no-ops the fold when it
-    carried this fold's own stamp) instead of being overwritten. The
-    folded rows hold every key of the table, so a replace writes what a
-    MERGE would, without its touched-file scan and join.
+    cast back to its table type and kept in table order, committed by
+    :meth:`TackleTable.rewrite` under the ``txn=(app_id, epoch)`` stamp.
+    An epoch the log already holds returns before any work; a commit
+    that lands after the rows were read raises CommitConflictError (or
+    no-ops the fold when it carried this fold's own stamp) instead of
+    being overwritten. The folded rows hold every key of the table, so
+    the replace writes what a MERGE would, without its touched-file scan
+    and join.
 
     Running sums stay exact because the fold is associative: the result
     does not depend on how the source was split into batches. Per-batch
     cost is the batch's partials plus a |groups|-row rewrite."""
-    snap = table.snapshot()
-    if snap.has_txn(txn):
-        return snap.version
-    current = table._read(snap)
-    fields = current.schema.fields
-    sums = [F.sum(f.name).alias(f.name) for f in fields if f.name not in keys]
-    combined = (
-        current.unionByName(partials)
-        .groupBy(*keys)
-        .agg(*sums)
-        .select(*[F.col(f.name).cast(f.dataType).alias(f.name) for f in fields])
-    )
-    return table._replace(snap, combined, txn=txn)
+
+    def fold(current: DataFrame) -> DataFrame:
+        fields = current.schema.fields
+        sums = [F.sum(f.name).alias(f.name) for f in fields if f.name not in keys]
+        return (
+            current.unionByName(partials)
+            .groupBy(*keys)
+            .agg(*sums)
+            .select(*[F.col(f.name).cast(f.dataType).alias(f.name) for f in fields])
+        )
+
+    return table.rewrite(fold, txn)

@@ -27,6 +27,8 @@ time, which is exactly where Delta applies them:
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -44,10 +46,8 @@ class ColumnManagedTable:
         self.identity_col = identity_col
         self.generated = generated or {}
 
-    def _apply(self, df: DataFrame, watermark: int | None = None) -> DataFrame:
+    def _apply(self, df: DataFrame, watermark: int = 0) -> DataFrame:
         if self.identity_col:
-            if watermark is None:
-                watermark = self.table.identity_watermark(self.identity_col)
             df = df.withColumn(
                 self.identity_col,
                 (F.lit(watermark) + F.monotonically_increasing_id()).cast("bigint"),
@@ -56,38 +56,31 @@ class ColumnManagedTable:
             df = df.withColumn(col, F.expr(expr))
         return df
 
-    def append(self, df: DataFrame) -> int:
+    def _write(self, write: Callable[..., int], df: DataFrame) -> int:
+        """``write`` (the table's append or overwrite) of ``df`` with its
+        columns applied. Identity ids are assigned from the persisted
+        watermark and reserved in the commit; a commit that finds the
+        watermark moved raises CommitConflictError, and the ids are
+        reassigned from the fresh watermark, up to five times."""
         if not self.identity_col:
-            return self.table.append(self._apply(df))
+            return write(self._apply(df))
         last_err: Exception | None = None
         for _ in range(5):
             wm = self.table.identity_watermark(self.identity_col)
             try:
-                return self.table.append(
-                    self._apply(df, watermark=wm),
-                    identity_reserve=(self.identity_col, wm),
-                )
+                return write(self._apply(df, wm), identity_reserve=(self.identity_col, wm))
             except CommitConflictError as e:  # watermark moved: reassign
                 last_err = e
         raise last_err  # type: ignore[misc]
 
+    def append(self, df: DataFrame) -> int:
+        return self._write(self.table.append, df)
+
     def overwrite(self, df: DataFrame) -> int:
-        if not self.identity_col:
-            return self.table.overwrite(self._apply(df))
         # Identity survives an overwrite (Delta semantics): ids keep
         # counting up from the persisted watermark, and the commit
         # advances it so later appends never reuse the overwritten range.
-        last_err: Exception | None = None
-        for _ in range(5):
-            wm = self.table.identity_watermark(self.identity_col)
-            try:
-                return self.table.overwrite(
-                    self._apply(df, watermark=wm),
-                    identity_reserve=(self.identity_col, wm),
-                )
-            except CommitConflictError as e:
-                last_err = e
-        raise last_err  # type: ignore[misc]
+        return self._write(self.table.overwrite, df)
 
     def read(self, **kwargs) -> DataFrame:
         return self.table.read(**kwargs)

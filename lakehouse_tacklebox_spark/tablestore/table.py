@@ -27,10 +27,10 @@ Scale design:
   the same touched-file pruning Delta's MERGE does.
 - Optimistic concurrency: a write commits at its snapshot's version + 1
   with a put-if-absent hard link, which is the conflict check. A
-  rewrite (overwrite, DELETE, UPDATE, MERGE, RESTORE, OPTIMIZE) that
-  loses the race raises CommitConflictError, unless the winner carried
-  the rewrite's own txn stamp (then it is a no-op); a blind append
-  re-reads the snapshot and retries.
+  rewrite (``rewrite``, overwrite, DELETE, UPDATE, MERGE, RESTORE,
+  OPTIMIZE) that loses the race raises CommitConflictError, unless the
+  winner carried the rewrite's own txn stamp (then it is a no-op); a
+  blind append re-reads the snapshot and retries.
 
 Reference semantics ported (capability, not code): merge upsert
 (delta_sync.py:54-66), RESTORE rollback (transactions.py:420-449),
@@ -46,7 +46,7 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Any, Sequence
+from typing import Any, Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -577,6 +577,28 @@ class TackleTable:
             identity_reserve=identity_reserve,
             txn=txn,
         )
+
+    def rewrite(
+        self, fn: Callable[[DataFrame], DataFrame], txn: tuple[str, int] | None = None
+    ) -> int:
+        """Read-modify-replace: commit ``fn(rows)`` as the new contents,
+        ``rows`` being the table's rows at one snapshot, and return the
+        committed version.
+
+        The rows and the commit come from that one snapshot: the replace
+        lands at its version + 1, so a commit that lands after the read
+        raises CommitConflictError, or no-ops the rewrite when it carried
+        the rewrite's own ``txn=(app_id, version)`` stamp; it is never
+        overwritten. A snapshot that already holds ``txn`` returns its
+        version without calling ``fn``. ``fn``'s columns are aligned to
+        the table schema as :meth:`append` aligns them: a missing column
+        is null, a column outside the schema raises ValueError before
+        anything is written."""
+        snap = self.snapshot()
+        if snap.has_txn(txn):
+            return snap.version
+        new = _align_schema(fn(self._read(snap)), snap.schema, allow_new=False)
+        return self._replace(snap, new, txn=txn)
 
     def _touched(self, snap: Snapshot, condition: str) -> list[str]:
         """Local paths of the active files holding a row that matches."""

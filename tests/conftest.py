@@ -44,9 +44,7 @@ SLOW_TESTS = {
     "test_tablestore.py::test_merge_null_key_matches_regardless_of_file_layout",
     "test_tablestore.py::test_merge_upsert",
     "test_tablestore_extras.py::test_catalog_listing_with_filters",
-    "test_tablestore_extras.py::test_identity_and_generated_columns",
     "test_tablestore_extras.py::test_identity_legacy_table_bootstraps_from_footer_stats",
-    "test_tablestore_extras.py::test_identity_survives_overwrite",
     "test_transactions.py::test_transaction_commit_chain",
     "test_wordpiece.py::test_wordpiece_spark_equals_reference_on_random_corpora",
 }

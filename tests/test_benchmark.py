@@ -74,3 +74,27 @@ def test_sf1_scaling_probe_keeps_surviving_leg(monkeypatch):
     assert {t for _, t in calls} == {320.0}
     assert got["hi_s"] == {"a": 1.5, "b": 0.5} and got["lo_s"] == {}
     assert got["lo_over_hi_ratio"] == {}
+
+
+def test_olap_mix_entries_are_pinned(monkeypatch):
+    """perfbench's olap_mix takes every OLAP_STRIDE-th analytical entry in
+    registry order, and queries/__init__.py's correctness window reorders
+    the registry: editing the window must not silently swap the queries
+    the benchmark times."""
+    import importlib
+    from pathlib import Path
+
+    monkeypatch.syspath_prepend(str(Path(__file__).resolve().parent.parent / "perfbench"))
+    workloads = importlib.import_module("workloads")
+    assert workloads.olap_names() == [
+        "q1_pricing_summary",
+        "q6_forecast_revenue",
+        "q11_important_part_value",
+        "q17_small_quantity_revenue",
+        "q22_dormant_customer_balance",
+        "ds_cumulative_channel_compare",
+        "ds_above_segment_avg",
+        "ds_quarterly_share_shift",
+        "ds_growth_streaks",
+        "ds_high_return_customers",
+    ]

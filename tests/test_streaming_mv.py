@@ -162,3 +162,23 @@ def test_run_mv_failure_propagates_and_cleans_up(spark, tmp_path, monkeypatch):
         run_mv(spark, _rows(spark, 10).repartition(1), _apply, [path])
     assert glob.glob(os.path.join(str(tmp_path), "mv_*")) == []
     assert spark.streams.active == []
+
+
+@pytest.mark.parametrize(
+    "name, prefix",
+    [
+        ("stream_pq_index_mv", "pq_mv_"),
+        ("stream_epoch_shuffle_mv", "epoch_mv_"),
+        ("cdc_span_census_deletes", "spanforget_"),
+    ],
+)
+def test_entry_leaves_no_scratch_table_behind(spark, tmp_path, monkeypatch, name, prefix):
+    """These entries return rows that no longer read their TackleTable
+    scratch directory, so the directory is gone once the result is
+    collected."""
+    from lakehouse_tacklebox_spark.queries import REGISTRY
+    from tests.conftest import SF_DIR
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert REGISTRY[name].fn(spark, SF_DIR).collect()
+    assert glob.glob(os.path.join(str(tmp_path), prefix + "*")) == []

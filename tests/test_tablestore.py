@@ -473,6 +473,7 @@ def test_each_operation_reads_the_log_once(spark, users, tmp_path):
         "restore": lambda: t.restore(1),
         "set_properties": lambda: t.set_properties({"k": "v"}),
         "overwrite": lambda: t.overwrite(users),
+        "rewrite(txn=)": lambda: t.rewrite(lambda r: r.filter("id > 1"), txn=("r", 0)),
         "vacuum": lambda: t.vacuum(keep_versions=2),
         "clone": lambda: clone(t, str(tmp_path / "c")),
     }
@@ -490,6 +491,62 @@ def test_each_operation_reads_the_log_once(spark, users, tmp_path):
             op()
             got[name] = len(calls)
     assert got == {name: 1 for name in ops}
-    assert t.version() == 8  # every write above committed
-    assert [h["operation"] for h in t.history()][:2] == ["OVERWRITE", "SET TBLPROPERTIES"]
-    assert TackleTable(spark, str(tmp_path / "c")).history()[0]["operationParameters"]["sourceVersion"] == 8
+    assert t.version() == 9  # every write above committed
+    assert [h["operation"] for h in t.history()][:3] == ["OVERWRITE", "OVERWRITE", "SET TBLPROPERTIES"]
+    assert rows(t.read().select("id")) == [(2,), (3,)]
+    assert TackleTable(spark, str(tmp_path / "c")).history()[0]["operationParameters"]["sourceVersion"] == 9
+
+
+@pytest.mark.parametrize("winner_stamp", [("other", 0), ("fold", 1)], ids=["other_stamp", "own_stamp"])
+def test_rewrite_commit_after_its_read_is_never_overwritten(spark, users, tmp_path, winner_stamp):
+    """A commit that lands after rewrite read its rows (here: from inside
+    ``fn``) makes the rewrite raise CommitConflictError under another
+    stamp, or no-op under the rewrite's own stamp (a zombie retry of the
+    same epoch that won); either way the winner's rows stay."""
+    t = TackleTable.create(spark, str(tmp_path / "t"), users)
+    winner = spark.createDataFrame([(9, "zed", 9.0)], "id bigint, name string, balance double")
+    raced = []
+
+    def fn(current):
+        if not raced:
+            raced.append(True)
+            TackleTable(spark, t.path).overwrite(winner, txn=winner_stamp)
+        return current.filter("id > 1")
+
+    if winner_stamp == ("fold", 1):
+        assert t.rewrite(fn, txn=("fold", 1)) == t.version()
+    else:
+        with pytest.raises(CommitConflictError):
+            t.rewrite(fn, txn=("fold", 1))
+    assert raced
+    assert t.version() == 1
+    assert rows(t.read()) == [(9, "zed", 9.0)]
+
+
+def test_rewrite_replayed_stamp_never_calls_fn(spark, users, tmp_path):
+    t = TackleTable.create(spark, str(tmp_path / "t"), users)
+    v = t.rewrite(lambda r: r.filter("id > 1"), txn=("fold", 0))
+
+    def never(current):
+        raise AssertionError("fn ran for a stamp the log already holds")
+
+    assert t.rewrite(never, txn=("fold", 0)) == v == t.version() == 1
+    assert rows(t.read().select("id")) == [(2,), (3,)]
+
+
+def test_rewrite_aligns_to_the_table_schema(spark, users, tmp_path):
+    """``fn``'s rows are aligned as an append's are: a column outside the
+    schema raises ValueError and commits nothing; a missing column is
+    null and the table's column order is kept."""
+    from pyspark.sql import functions as F
+
+    t = TackleTable.create(spark, str(tmp_path / "t"), users)
+    data = tmp_path / "t" / "data"
+    before = sorted(data.iterdir())
+    with pytest.raises(ValueError, match="not in table schema"):
+        t.rewrite(lambda r: r.withColumn("extra", F.lit(1)))
+    assert t.version() == 0
+    assert sorted(data.iterdir()) == before
+    t.rewrite(lambda r: r.select("balance", "id").filter("id = 1"))
+    assert t.read().columns == ["id", "name", "balance"]
+    assert rows(t.read()) == [(1, None, 100.0)]
