@@ -21,6 +21,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from lakehouse_tacklebox_spark.benchmark.measure import release_persisted, time_entry
 from lakehouse_tacklebox_spark.benchmark.runner import BenchmarkRunner
 from lakehouse_tacklebox_spark.queries import REGISTRY
 from lakehouse_tacklebox_spark.session import get_spark
@@ -39,46 +40,31 @@ REPETITIONS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
 # plan-scaling, not JIT. SPARK_GRAFT_SF1=0 disables.
 SF1_ENABLED = os.environ.get("SPARK_GRAFT_SF1", "1") != "0"
 SF1_DIR = os.environ.get("SPARK_GRAFT_SF1_DIR", str(Path(__file__).resolve().parent / ".sf1_testdata"))
-# 660 s: at 46 selected sf1 entries the 480 s wall (which pays min-of-2
-# reps AND sf0.1 baselines for sf1-only entries) left a 12-entry
-# skipped_budget tail two rounds running; the bump is sized so the
-# recorded run covers the full selection on a quiet machine while
-# staying bounded under load. 960 s from round 12: twelve first-
-# measurement entries joined the head of the list and the 780 s run
-# still skipped a 12-entry tail (all with r10/r11-recorded ratios).
-# 1320 s from round 13: the aging policy became EXPLICIT (SF1_RATIOS
-# ledger + stale_ratios readout, VERDICT r12 item 5) and the bootstrap
-# ledger only carries round-12 measurements, so this round's selection
-# tops up with the ~43 headline entries whose newest ratio predates
-# r11 — almost all scan-bound TPC-H/DS shapes at a few seconds each.
-# Steady state re-measures the priority list plus a small aging tail.
+# sized so a quiet machine covers the priority list plus the aging tail
+# (below) at min-of-2 with sf0.1 baselines for sf1-only entries, while
+# a loaded machine stays bounded: entries past it land in skipped_budget
 SF1_BUDGET_S = float(os.environ.get("SPARK_GRAFT_SF1_BUDGET_S", "1320"))
-# sf1 scaling probe (VERDICT r13 item 8, ADDITIVE — the headline timed
-# protocol is untouched): at sf0.1 every 32-vs-8-core ratio was
-# 0.54-1.05 (driver-latency-bound), so parallel-scaling evidence must
-# come from sf1. After the sf1 section, the top-5 heaviest sf1 entries
-# are re-timed by tools/sf1_scaling_probe.py in TWO subprocesses (cold
-# JVM each, identical min-of-2 protocol) at the session core count and
-# at a quarter of it; the lo/hi wall-clock ratios land in the sf1
-# payload. SPARK_GRAFT_SF1_SCALING=0 disables.
+# sf1 scaling probe: at sf0.1 the cost is driver-sequential job latency,
+# so parallel-scaling evidence must come from sf1. After the sf1 section
+# the top-N heaviest sf1 entries are re-timed in two tools/opt_bench.py
+# subprocesses (cold JVM each), at the session core count and at a
+# quarter of it; the lo/hi ratios land in the sf1 payload.
+# SPARK_GRAFT_SF1_SCALING=0 disables.
 SF1_SCALING_ENABLED = os.environ.get("SPARK_GRAFT_SF1_SCALING", "1") != "0"
 SF1_SCALING_TOP_N = int(os.environ.get("SPARK_GRAFT_SF1_SCALING_TOP_N", "5"))
 # drift-priority order: the families the plan audit flags as the ones
 # that COULD go quadratic (pair joins, interval replication, window
 # packs), then scan-bound TPC-H reference points for the linear floor.
 SF1_QUERIES = [
-    # round-12: the round-11 additions VERDICT r11 item 7 lists as
-    # unmeasured at sf1, plus the round-12 CC family — FIRST so the
-    # budget can't starve a first measurement. BFS: k frontier-join
-    # shuffles bounded by the reached ball (ratio guards frontier
-    # growth, not |V|). ANN upserts: CDF feed → re-encode only changed
-    # ids → MERGE (ratio guards that the round-trip stays batch-sized).
-    # Epoch-shuffle MV: per-batch map-side keying + bucket merge (ratio
-    # guards that serving stays census-sized). Vacuum: version prune +
-    # file deletes (ratio guards the ledger walk, not data size). CC
-    # trace/clusters/incremental: k min-label shuffles over sparse edge
-    # frames (ratio guards |E| growth and the contraction staying
-    # component-sized).
+    # BFS: k frontier-join shuffles bounded by the reached ball (ratio
+    # guards frontier growth, not |V|). ANN upserts: CDF feed → re-encode
+    # only changed ids → MERGE (ratio guards that the round-trip stays
+    # batch-sized). Epoch-shuffle MV: per-batch map-side keying + bucket
+    # merge (ratio guards that serving stays census-sized). Vacuum:
+    # version prune + file deletes (ratio guards the ledger walk, not
+    # data size). CC trace/clusters/incremental: k min-label shuffles
+    # over sparse edge frames (ratio guards |E| growth and the
+    # contraction staying component-sized).
     "graph_bfs_distance",
     "cdc_ann_index_upserts",
     "stream_epoch_shuffle_mv",
@@ -93,14 +79,12 @@ SF1_QUERIES = [
     "rag_eval_metrics",
     "graph_cc_decremental",
     "stream_cc_labels_mv",
-    # never measured in a recorded sf1 section (skipped_budget in r10 AND
-    # the r11 builder run) — first so a loaded machine can't starve them
-    # a third time. Unigram DP: everything after the one corpus scan is
-    # distinct-word-inventory-sized, so the ratio tracks the scan; the
-    # DP is per-word constant work. Ordered funnel: per-step
-    # type-filtered scans joined to shrinking per-user frames, all
-    # user_id-keyed with map-side combine — the ratio guards that no
-    # step degenerates to a per-user window or cross join.
+    # Unigram DP: everything after the one corpus scan is distinct-word-
+    # inventory-sized, so the ratio tracks the scan; the DP is per-word
+    # constant work. Ordered funnel: per-step type-filtered scans joined
+    # to shrinking per-user frames, all user_id-keyed with map-side
+    # combine — the ratio guards that no step degenerates to a per-user
+    # window or cross join.
     "text_unigram_segment",
     "events_funnel_ordered",
     "dedup_cluster_assign",
@@ -115,10 +99,10 @@ SF1_QUERIES = [
     "ds_basket_pairs",
     "text_boilerplate_blocks",
     "text_ngram_novelty",
-    # round-11 additions: the byte-fallback tokenizer (same scan-bound
-    # contract as text_wordpiece_segment) and the epoch shuffle (map-side
-    # key + top-k + one bucketed write — the ratio guards that the write
-    # stays the only shuffle)
+    # the byte-fallback tokenizer (same scan-bound contract as
+    # text_wordpiece_segment) and the epoch shuffle (map-side key +
+    # top-k + one bucketed write — the ratio guards that the write stays
+    # the only shuffle)
     "text_bpe_bytes",
     "corpus_epoch_shuffle",
     # iterative pagerank (k edge-shuffles — the ratio guards that the
@@ -142,35 +126,32 @@ SF1_QUERIES = [
     "q6_forecast_revenue",
     "ds_top_parts_per_brand",
     "ds_brand_monthly_deviation",
-    # round-6 additions — the new heavy/shuffle-rich entries
     "emb_neardup_lsh",
     "text_nearest_neighbor",
     "ds_nested_share_of_total",
     "ds_rolling_range_window",
-    # round-7: the stateful-streaming family's first sf1 presence — the
-    # funnel builds its own micro-batched source from the sf dir, so the
-    # decade ratio measures state-operator scaling (state is O(users in
-    # horizon); the payload records the key count next to the ratio)
+    # the funnel builds its own micro-batched source from the sf dir, so
+    # the decade ratio measures state-operator scaling (state is O(users
+    # in horizon); the payload records the key count next to the ratio)
     "stream_funnel_stages",
-    # round-7: the duplicated-span census (8-token window hash census +
-    # join-back) — same explode constant as text_ngram_novelty but with
-    # the census join back onto positions, so its ratio guards the one
-    # hash-shuffle pattern novelty deliberately avoids
+    # the duplicated-span census (8-token window hash census + join-back)
+    # — same explode constant as text_ngram_novelty but with the census
+    # join back onto positions, so its ratio guards the one hash-shuffle
+    # pattern novelty deliberately avoids
     "text_duplicate_spans",
-    # round-7: Misra-Gries heavy hitters (mapInPandas sketch + exact
-    # re-count). The sketch pass is embarrassingly parallel (O(capacity)
-    # state per partition, zero shuffle); the ratio should track the
-    # token-explode scan, so drift here would mean the candidate
-    # re-count shuffle stopped being candidate-bounded
+    # Misra-Gries heavy hitters (mapInPandas sketch + exact re-count).
+    # The sketch pass is embarrassingly parallel (O(capacity) state per
+    # partition, zero shuffle); the ratio should track the token-explode
+    # scan, so drift here would mean the candidate re-count shuffle
+    # stopped being candidate-bounded
     "agg_heavy_hitters_mg",
-    # round-7: bigram LM commonness — a census shuffle whose key space
-    # (distinct bigrams) grows sub-linearly in corpus size plus an
-    # instances-to-census join; the ratio guards that the join stays
-    # census-bounded (AQE flips broadcast→shuffle as the census grows,
-    # which is the designed behavior, not drift)
+    # bigram LM commonness — a census shuffle whose key space (distinct
+    # bigrams) grows sub-linearly in corpus size plus an instances-to-
+    # census join; the ratio guards that the join stays census-bounded
+    # (AQE flips broadcast→shuffle as the census grows, which is the
+    # designed behavior, not drift)
     "text_bigram_commonness",
-    # round-8 (VERDICT r7 item 5): the near-dup modality quad gets its
-    # first sf1 measurement. The banded-LSH contract says candidate
+    # the near-dup modality quad. The banded-LSH contract says candidate
     # pairs stay near-linear in n (band keys are 16-bit, so bucket
     # occupancy — and with it the quadratic-join input — grows ~n/65536
     # per band); _scale_readouts records the actual candidate counts
@@ -180,41 +161,41 @@ SF1_QUERIES = [
     "mm_audio_fingerprint_neardup",
     "mm_video_phash_neardup",
     "dedup_containment",
-    # round-9: the tokenizer TRAINING loop — the Sennrich reduction says
-    # cost is one corpus scan + 20 censuses over the CACHED vocab, so
-    # the decade ratio should track the scan, not the iteration count
-    # (vocab grows sub-linearly in corpus size)
+    # the tokenizer TRAINING loop — the Sennrich reduction says cost is
+    # one corpus scan + 20 censuses over the CACHED vocab, so the decade
+    # ratio should track the scan, not the iteration count (vocab grows
+    # sub-linearly in corpus size)
     "text_bpe_train",
-    # round-9: the scalar-quantized ANN tier — integer-dot codes-only
-    # scan; the ratio guards that the shortlist stays window-bounded
-    # and the re-rank stays shortlist-sized as n grows
+    # the scalar-quantized ANN tier — integer-dot codes-only scan; the
+    # ratio guards that the shortlist stays window-bounded and the
+    # re-rank stays shortlist-sized as n grows
     "knn_sq_rerank",
-    # round-9: image crop containment — tile-hash census + 2-D offset
-    # voting; same near-linear banded contract as the near-dup quad
+    # image crop containment — tile-hash census + 2-D offset voting;
+    # same near-linear banded contract as the near-dup quad
     "mm_image_crop_match",
-    # round-10: hybrid retrieval — the BM25 leg is a posting-list join
-    # whose cost should track the probed terms' postings (linear in n
-    # for a fixed query set) and the vector leg a fixed-query
-    # broadcast scan; the ratio guards that fusion stays k-bounded
+    # hybrid retrieval — the BM25 leg is a posting-list join whose cost
+    # should track the probed terms' postings (linear in n for a fixed
+    # query set) and the vector leg a fixed-query broadcast scan; the
+    # ratio guards that fusion stays k-bounded
     "rag_hybrid_retrieval",
-    # round-10: the incremental LSH ingest — the store probe is the
-    # same banded equi-join contract as dedup_minhash_lsh (already
-    # above), PLUS a TackleTable write/append; the ratio guards that
-    # the index round-trip stays linear in the batch
+    # the incremental LSH ingest — the store probe is the same banded
+    # equi-join contract as dedup_minhash_lsh (already above), PLUS a
+    # TackleTable write/append; the ratio guards that the index
+    # round-trip stays linear in the batch
     "dedup_incremental_lsh",
-    # round-10 post-freeze: late interaction — the coarse stage is a
-    # 64-bucket census join with the 3 query vectors broadcast (cost ∝
-    # corpus bucket rows) and MaxSim touches only the 20-doc shortlist;
-    # the ratio guards that the fine stage stays shortlist-bounded
+    # late interaction — the coarse stage is a 64-bucket census join
+    # with the 3 query vectors broadcast (cost ∝ corpus bucket rows) and
+    # MaxSim touches only the 20-doc shortlist; the ratio guards that
+    # the fine stage stays shortlist-bounded
     "rag_late_interaction",
-    # round-10 post-freeze: WordPiece segmentation — one corpus scan for
-    # the word census, then everything is distinct-word-inventory-sized;
-    # the ratio should track the scan (vocab grows sub-linearly)
+    # WordPiece segmentation — one corpus scan for the word census, then
+    # everything is distinct-word-inventory-sized; the ratio should
+    # track the scan (vocab grows sub-linearly)
     "text_wordpiece_segment",
-    # round-10 post-freeze: incremental containment — dedup_containment's
-    # prefix-filtered candidate contract (already above) plus the
-    # two-table store round-trip; the ratio guards that probe cost stays
-    # ∝ batch prefixes, not corpus²
+    # incremental containment — dedup_containment's prefix-filtered
+    # candidate contract (already above) plus the two-table store
+    # round-trip; the ratio guards that probe cost stays ∝ batch
+    # prefixes, not corpus²
     "dedup_incremental_containment",
 ]
 # documented-quadratic exact baselines — excluded BY DESIGN, not silently:
@@ -222,8 +203,7 @@ SF1_QUERIES = [
 # path), so a 100x decade ratio is its spec, not drift.
 SF1_EXCLUDED_QUADRATIC = ["knn_bruteforce"]
 
-# Fixed drift-tracking subset (VERDICT r7 item 7): the 41 queries common
-# to the r6 and r7 printed payloads, FROZEN — the headline set keeps
+# Fixed drift-tracking subset: 41 headline queries, FROZEN — the headline set keeps
 # widening, so round-over-round comparisons need one pinned scalar
 # (common_subset_total_s) instead of per-round set-intersection
 # arithmetic. Do not edit this list when adding bench entries; it is a
@@ -323,7 +303,7 @@ def _scale_readouts(spark) -> dict:
         out["stream_funnel_state_keys"] = ev.select("user_id").distinct().count()
         out["stream_funnel_events"] = ev.count()
 
-        # near-dup quad candidate counts (VERDICT r7 item 5): the size of
+        # near-dup quad candidate counts: the size of
         # each banded-LSH join's candidate-pair set at sf1 — the quantity
         # the band-width contract promises stays near-linear. One hash
         # pass + one band self-join per modality; the exact-verify stage
@@ -380,13 +360,8 @@ def _scale_readouts(spark) -> dict:
         # containment candidate pairs = the PREFIX-FILTERED probe join's
         # distinct directed pairs — the exact candidate mass the
         # production operator verifies (operators.dedup.containment_
-        # candidates, same fixture as the dedup_containment entry).
-        # History: the round-8 FULL postings join measured 4.74M (sf0.1)
-        # → 54.0M (sf1) candidates, 11.4× per decade, with the
-        # max_doc_freq=500 cap never binding (max gram df 70 at sf1);
-        # prefix filtering (rarest ~10% of each doc's grams probe at
-        # t=0.9) is the round-9 fix — this readout now tracks whether
-        # the filtered mass stays ~linear in docs.
+        # candidates, same fixture as the dedup_containment entry);
+        # it tracks whether the filtered mass stays ~linear in docs.
         from lakehouse_tacklebox_spark.operators.dedup import containment_candidates
 
         toks2 = F.split(F.lower(F.trim("text")), r"\s+")
@@ -411,6 +386,8 @@ def _scale_readouts(spark) -> dict:
 
 
 SF1_LEDGER_PATH = Path(__file__).resolve().parent / "SF1_RATIOS.json"
+# the drift-subset baselines and A/B verdicts, one entry per re-baseline
+DRIFT_HISTORY_PATH = Path(__file__).resolve().parent / "DRIFT_BASELINE_HISTORY.json"
 # every headline entry must have a decade ratio at most this many rounds
 # old; older (or never-measured) entries are force-selected this run and
 # reported in `stale_ratios` if the budget still starves them
@@ -451,10 +428,10 @@ def run_sf1_section(spark, specs, sf01_timings: dict, sf_dir: str) -> dict:
         return ledger.get(name, {}).get("round", -(10**9)) >= fresh_floor
 
     selected = [n for n in SF1_QUERIES if n in specs or n in REGISTRY]
-    # Aging enforcement (VERDICT r12 item 5): the drift-priority list
-    # above is the ORDER, but nothing in it guaranteed coverage — a
-    # headline entry absent from the list (or starved by the budget two
-    # rounds running) silently lost its ratio. Top the selection up with
+    # Aging enforcement: the drift-priority list above is the ORDER, but
+    # it does not guarantee coverage — a headline entry absent from the
+    # list (or starved by the budget two rounds running) would silently
+    # lose its ratio. Top the selection up with
     # every headline entry whose newest ledger ratio predates
     # r-{SF1_MAX_RATIO_AGE_ROUNDS}; freshly-measured entries NOT in the
     # priority list are skipped, which is what sizes the section to the
@@ -469,36 +446,25 @@ def run_sf1_section(spark, specs, sf01_timings: dict, sf_dir: str) -> dict:
     not_selected = sorted(set(specs) - set(selected) - set(SF1_EXCLUDED_QUADRATIC))
     timings: dict[str, float] = {}
     skipped_budget: list[str] = []
-    t_section = time.perf_counter()
+    deadline = time.perf_counter() + SF1_BUDGET_S
     from types import SimpleNamespace
 
     sf01_local: dict[str, float] = {}
     for name in selected:
-        if time.perf_counter() - t_section > SF1_BUDGET_S:
+        if time.perf_counter() > deadline:
             skipped_budget.append(name)
             continue
         spec = specs.get(name) or REGISTRY[name]
         if name in SF1_PARAM_OVERRIDES:
             spec = SimpleNamespace(fn=SF1_PARAM_OVERRIDES[name][0])
         if name not in sf01_timings:
-            # sf1-only entry: time its sf0.1 baseline here (min-of-2) so
-            # the decade ratio still has a denominator
-            b = run_query(spark, spec, sf_dir)
-            spark.catalog.clearCache()
-            b = min(b, run_query(spark, spec, sf_dir))
-            spark.catalog.clearCache()
-            sf01_local[name] = round(b, 3)
-        # min-of-2, same rationale as the serial pass: a single rep is
-        # hostage to JVM codegen-cache eviction — observed 2-4× run-to-
-        # run swings on identical code that flipped the decade-ratio
-        # verdict. The budget check between reps keeps the section
-        # inside SF1_BUDGET_S even when doubled.
-        t1 = run_query(spark, spec, SF1_DIR)
-        spark.catalog.clearCache()
-        if time.perf_counter() - t_section <= SF1_BUDGET_S:
-            t1 = min(t1, run_query(spark, spec, SF1_DIR))
-            spark.catalog.clearCache()
-        timings[name] = round(t1, 3)
+            # sf1-only entry: time its sf0.1 baseline here so the decade
+            # ratio still has a denominator
+            sf01_local[name] = time_entry(spark, name, spec.fn, sf_dir, reps=2)
+        # min-of-2, as in the serial pass: single reps swung 2-4x on
+        # identical code and flipped decade-ratio verdicts. The deadline
+        # keeps the section inside SF1_BUDGET_S even when doubled.
+        timings[name] = time_entry(spark, name, spec.fn, SF1_DIR, reps=2, deadline=deadline)
     baselines = {**sf01_timings, **sf01_local}
     ratios = {
         n: round(t / baselines[n], 2)
@@ -539,19 +505,19 @@ def run_sf1_section(spark, specs, sf01_timings: dict, sf_dir: str) -> dict:
 
 
 def run_sf1_scaling_probe(sf1: dict) -> dict | None:
-    """32-vs-8-core (hi vs hi//4) wall-clock ratios for the heaviest sf1
-    entries — two cold-JVM subprocess legs of tools/sf1_scaling_probe.py
-    with identical protocol, so neither leg inherits this session's JIT
-    or cache state. ratio < 1 means fewer cores is FASTER (driver-
-    latency-bound); ratio ≈ cpus_lo/cpus_hi means near-linear scaling."""
+    """hi-vs-hi//4-core wall-clock ratios for the heaviest sf1 entries:
+    two cold-JVM ``tools/opt_bench.py`` legs with identical protocol, so
+    neither leg inherits this session's JIT or cache state. ratio < 1
+    means fewer cores is FASTER (driver-latency-bound); ratio ≈
+    cpus_lo/cpus_hi means near-linear scaling."""
     import subprocess
 
     cpus_hi = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     cpus_lo = max(2, cpus_hi // 4)
     if cpus_lo >= cpus_hi:
         return None
-    # heaviest first; parameter-override entries are excluded (the probe
-    # subprocess runs registry functions, not the sf1 substitutions)
+    # heaviest first; parameter-override entries are excluded (a leg
+    # runs registry functions, not the sf1 substitutions)
     names = [
         n
         for n in sorted(sf1["queries"], key=sf1["queries"].get, reverse=True)
@@ -559,27 +525,26 @@ def run_sf1_scaling_probe(sf1: dict) -> dict | None:
     ][:SF1_SCALING_TOP_N]
     if not names:
         return None
-    probe = Path(__file__).resolve().parent / "tools" / "sf1_scaling_probe.py"
-    # the probe stops starting entries past its budget, so a leg runs at
-    # most about one budget plus its last entry and the JVM start
+    timer = Path(__file__).resolve().parent / "tools" / "opt_bench.py"
+    # a leg starts no entry past its budget, so it runs at most about one
+    # budget plus its last entry and the JVM start
     budget_s = float(os.environ.get("SPARK_GRAFT_SF1_SCALING_BUDGET_S", "240"))
     # session.get_spark prefers SPARK_MASTER over local[SPARK_GRAFT_CPUS]:
     # inherited, it would run both legs at the same parallelism
     env = {k: v for k, v in os.environ.items() if k != "SPARK_MASTER"}
+    env["SPARK_GRAFT_SF_DIR"] = SF1_DIR
     legs: dict[int, dict] = {}
     for cpus in (cpus_hi, cpus_lo):
         try:
             res = subprocess.run(
-                [sys.executable, str(probe), SF1_DIR, *names],
+                [sys.executable, str(timer), "--time-only", "--reps", "1",
+                 "--budget-s", str(budget_s), f"sf1_c{cpus}", *names],
                 env=dict(env, SPARK_GRAFT_CPUS=str(cpus)),
                 capture_output=True,
                 text=True,
                 timeout=2 * budget_s + 120,
             )
-            line = next(
-                ln for ln in res.stdout.splitlines() if ln.startswith("SCALING_JSON:")
-            )
-            legs[cpus] = json.loads(line[len("SCALING_JSON:"):])["queries"]
+            legs[cpus] = opt_bench_queries(res.stdout)
         except Exception as e:  # noqa: BLE001 — the probe is additive, never sinks the bench
             # keep the other leg's timings: partial evidence beats none
             print(f"sf1 scaling probe (c{cpus}) failed: {e}", file=sys.stderr)
@@ -594,8 +559,14 @@ def run_sf1_scaling_probe(sf1: dict) -> dict | None:
         "lo_over_hi_ratio": {
             n: round(lo[n] / hi[n], 2) for n in names if hi.get(n) and lo.get(n)
         },
-        "protocol": "two cold-JVM subprocess legs, same entries/order, min-of-2 count() reps",
+        "protocol": "two cold-JVM tools/opt_bench.py legs, same entries/order, warm-up then one timed count() rep",
     }
+
+
+def opt_bench_queries(stdout: str) -> dict[str, float]:
+    """The per-entry seconds of a ``tools/opt_bench.py`` run's stdout."""
+    line = next(ln for ln in stdout.splitlines() if ln.startswith("OPT_BENCH_JSON:"))
+    return json.loads(line[len("OPT_BENCH_JSON:"):])["queries"]
 
 
 def headline_specs() -> dict:
@@ -606,14 +577,6 @@ def headline_specs() -> dict:
         for name, spec in REGISTRY.items()
         if "tpch" in spec.fn.__module__ or spec.bench
     }
-
-
-def run_query(spark, spec, sf_dir: str) -> float:
-    t0 = time.perf_counter()
-    df = spec.fn(spark, sf_dir)
-    # count() forces full execution without driver-side row materialization
-    df.count()
-    return time.perf_counter() - t0
 
 
 def main() -> None:
@@ -630,42 +593,22 @@ def main() -> None:
     for spec in specs.values():
         spec.fn(spark, sf_dir).count()
 
-    # serial timed pass: clean per-query wall-clock, min of 2 reps. One
-    # rep is hostage to JVM codegen-cache eviction — with 60 queries the
-    # single warm-up pass no longer keeps every query's generated code
-    # compiled (the cache holds 100 classes), so a lone timed rep can
-    # read 2-3× the plan's true cost depending on eviction order. The
-    # min of two back-to-back reps times the executed plan, not JIT
-    # luck. Drop persisted intermediates between queries so one query's
-    # cache (the dedup pipelines persist their shingle/posting frames)
-    # doesn't squeeze executor memory under a later query's timing.
-    # Sub-second entries get a THIRD rep: the r5→r6 payload showed
-    # 1.3-1.5× run-to-run swings concentrated on <1 s queries (codegen-
-    # cache eviction order across a 200+-entry registry), and at that
-    # cost an extra rep is cheaper than a false drift verdict. Heavier
-    # queries are cache-stable at min-of-2.
+    # serial timed pass: min of 2 reps, a third for sub-second entries,
+    # whose run-to-run swings from codegen-cache eviction order are the
+    # widest; time_entry releases each entry's persisted RDDs after its
+    # last rep, so no entry is timed on an earlier one's debris
     timings: dict[str, float] = {}
     for name, spec in sorted(specs.items()):
-        reps = []
-        for _ in range(2):
-            reps.append(run_query(spark, spec, sf_dir))
-            spark.catalog.clearCache()
-        if min(reps) < 1.0:
-            reps.append(run_query(spark, spec, sf_dir))
-            spark.catalog.clearCache()
-        timings[name] = round(min(reps), 3)
+        t = time_entry(spark, name, spec.fn, sf_dir, reps=2)
+        if t < 1.0:
+            t = min(t, time_entry(spark, name, spec.fn, sf_dir, reps=1))
+        timings[name] = t
     total = round(sum(timings.values()), 3)
 
-    # Phase boundary hygiene: the serial phase just executed each entry
-    # 2-3x, and the checkpoint-heavy entries (the dedup/ANN/retrieval
-    # pipelines) each leave eager localCheckpoint RDDs persisted at
-    # MEMORY_AND_DISK. Left to the async ContextCleaner, ~200 runs of
-    # debris drains during the concurrent phase and the makespan measures
-    # GC/eviction, not queries (observed: 41 s clean vs 75-210 s dirty).
-    # Unpersist everything explicitly so QPM starts from a quiet heap.
-    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-        rdd.unpersist(False)
-    spark.catalog.clearCache()
+    # the concurrent phase starts from a quiet heap: checkpoint debris
+    # drained by the async ContextCleaner during it measures GC and
+    # eviction, not queries (observed: 41 s clean vs 75-210 s dirty)
+    release_persisted(spark)
 
     # concurrent phase: N threads, `REPETITIONS` timed runs per query, no
     # result reuse (each run rebuilds and re-executes the DataFrame) —
@@ -685,6 +628,7 @@ def main() -> None:
         if SF1_SCALING_ENABLED:
             sf1["scaling_probe"] = run_sf1_scaling_probe(sf1)
 
+    drift = json.loads(DRIFT_HISTORY_PATH.read_text())
     payload = {
         "metric": "headline_query_wall_clock",
         "value": total,
@@ -698,57 +642,9 @@ def main() -> None:
             sum(timings[n] for n in DRIFT_SUBSET if n in timings), 3
         ),
         "common_subset_n": sum(1 for n in DRIFT_SUBSET if n in timings),
-        # Round-11 re-baseline (VERDICT r10 item 2): the judge's own A/B
-        # — the 41-query subset re-timed on one quiet session importing
-        # r10 HEAD vs a worktree of r9 HEAD — proved the r9→r10 1.47×
-        # subset move was MACHINE drift, not code (r9's code was no
-        # faster; both sides reproduced BENCH_r10's numbers, not
-        # BENCH_r09's). The pre-r11 scalars (r9 = 32.6 s, r10 = 48.0 s
-        # as-recorded / 35.3 s re-run clean) are therefore
-        # cross-machine-era and NOT comparable; the baseline for
-        # round-over-round comparison restarts at THIS round's
-        # common_subset_total_s. Standing protocol replacing the retired
-        # DRIFT_EXPERIMENT one-off: any future >1.25× subset move is
-        # adjudicated by `python tools/drift_ab.py <prior-round-HEAD>`
-        # (same-session A/B against the prior round's git tree, min-of-3
-        # per query) BEFORE any code chase; only a prior-HEAD side that
-        # is genuinely faster indicts the code.
         "drift_rebaselined": True,
-        # Round-12 re-baseline (VERDICT r11 item 2): the r11 judge's own
-        # drift_ab run adjudicated the apparent r10→r11 subset move as
-        # machine load — on one quiet session, r11 HEAD timed 31.6 s vs
-        # r10 HEAD 34.8 s on the identical protocol (ratio 0.909; r11
-        # code is ~9% FASTER). The 54.2 s in BENCH_r11 was taken under
-        # drive/bench machine load and is not a code figure. Baseline
-        # for round-over-round comparison: the clean r11 A/B figure.
-        "drift_baseline_history": {
-            "r9": 32.6,
-            "r10_as_recorded": 48.0,
-            "r10_clean_rerun": 35.3,
-            "r11_as_recorded": 54.2,
-            "r11_judge_ab_clean": 31.6,
-            # Round-12 quiet-machine bench measured the subset at 46.4 s
-            # (1.31x the r10 clean figure), so the standing protocol ran:
-            # tools/drift_ab.py 3dfe94c (r11 HEAD) with the new A/B/A
-            # side-order correction — current 23.2 s vs prior 23.7 s,
-            # ratio 0.979: ENVIRONMENTAL (machine era), r12 code is not
-            # slower. Full JSON: DRIFT_AB_r12.json. Note the drift_ab
-            # scalar (min-of-3, isolated process, 16 queries) and the
-            # bench scalar (min-of-2, 90+-query session) are different
-            # instruments; compare like with like.
-            "r12_clean_run": 46.4,
-            "r12_ab_vs_r11_head_ratio": 0.979,
-            # VERDICT r12 item 3 closure: dedup_incremental_lsh's 7.90 s
-            # r12 reading (1.66x vs r11's 4.75 s) re-timed in isolation
-            # on a quiet round-13 session at min-of-3 = 4.31 s — back at
-            # the r11 level, so the recorded figure was session load,
-            # not the signature-refactor hot path (which did land).
-            # Same re-run: dedup_minhash_lsh 2.73 s, corpus_pipeline
-            # 1.72 s — every r12-flagged individual regression is
-            # environmental.
-            "r13_lsh_isolated_rerun_s": 4.31,
-        },
-        "drift_ab_artifact": "DRIFT_AB_r12.json",
+        "drift_baseline_history": drift["history"],
+        "drift_ab_artifact": drift["ab_artifact"],
         "drift_protocol": "on >1.25x subset move: tools/drift_ab.py same-session A/B vs prior-round HEAD; re-baseline if prior code is not faster",
         "concurrent_makespan_s": round(runner.makespan_s, 3),
         "failures": failures,

@@ -40,9 +40,7 @@ SLOW_TESTS = {
     "test_streaming.py::test_apply_changes_scd2_late_event_splits_interval",
     "test_table_properties.py::test_random_op_sequences_match_model",
     "test_table_properties.py::test_salted_join_equals_plain_join",
-    "test_tablestore.py::test_change_data_feed",
     "test_tablestore.py::test_merge_null_key_matches_regardless_of_file_layout",
-    "test_tablestore.py::test_merge_upsert",
     "test_tablestore_extras.py::test_catalog_listing_with_filters",
     "test_tablestore_extras.py::test_identity_legacy_table_bootstraps_from_footer_stats",
     "test_transactions.py::test_transaction_commit_chain",

@@ -60,7 +60,7 @@ def test_sf1_scaling_probe_keeps_surviving_leg(monkeypatch):
         calls.append((env, timeout))
         if env["SPARK_GRAFT_CPUS"] == "2":
             raise subprocess.TimeoutExpired(cmd, timeout)
-        out = "SCALING_JSON:" + json.dumps({"cpus": 8, "queries": {"a": 1.5, "b": 0.5}})
+        out = "OPT_BENCH_JSON:" + json.dumps({"cpus": 8, "queries": {"a": 1.5, "b": 0.5}})
         return subprocess.CompletedProcess(cmd, 0, stdout=out, stderr="")
 
     monkeypatch.setattr(subprocess, "run", fake_run)
@@ -74,6 +74,68 @@ def test_sf1_scaling_probe_keeps_surviving_leg(monkeypatch):
     assert {t for _, t in calls} == {320.0}
     assert got["hi_s"] == {"a": 1.5, "b": 0.5} and got["lo_s"] == {}
     assert got["lo_over_hi_ratio"] == {}
+
+
+def test_time_entry_reps_deadline_job_group_and_release(spark):
+    import time
+
+    from lakehouse_tacklebox_spark.benchmark.measure import time_entry
+
+    calls = []
+
+    def fn(s, sf_dir):
+        calls.append(sf_dir)
+        return load_tables(s, sf_dir, ["nation"])["nation"].localCheckpoint(eager=True)
+
+    sc = spark.sparkContext
+    t = time_entry(spark, "timed_nation", fn, SF_DIR, reps=3)
+    assert calls == [SF_DIR] * 3
+    assert 0 < t == round(t, 3)
+    assert sc.statusTracker().getJobIdsForGroup("timed_nation")
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+    # DataFrame.unpersist would leave the checkpoint's blocks behind
+    assert dict(sc._jsc.getPersistentRDDs()) == {}
+
+    calls.clear()
+    time_entry(spark, "timed_nation", fn, SF_DIR, reps=3, deadline=time.perf_counter() - 1)
+    assert len(calls) == 1
+    assert dict(sc._jsc.getPersistentRDDs()) == {}
+
+
+def test_drift_ab_times_both_sides_with_opt_bench(monkeypatch, capsys):
+    import importlib
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    tools = Path(__file__).resolve().parent.parent / "tools"
+    monkeypatch.syspath_prepend(str(tools))
+    drift_ab = importlib.import_module("drift_ab")
+    legs = []
+
+    def fake_run(cmd, **kw):
+        if cmd[0] in ("git", "tar"):
+            return subprocess.CompletedProcess(cmd, 0, stdout=b"", stderr=b"")
+        legs.append((cmd, kw["env"]))
+        names = cmd[cmd.index("--tree") + 3:]
+        out = "OPT_BENCH_JSON:" + json.dumps({"queries": {n: 1.0 for n in names}})
+        return subprocess.CompletedProcess(cmd, 0, stdout=out, stderr="")
+
+    monkeypatch.setattr(subprocess, "run", fake_run)
+    monkeypatch.setattr(sys, "argv", ["drift_ab.py", "HEAD~1", SF_DIR, "2"])
+    drift_ab.main()
+
+    cmds = [c for c, _ in legs]
+    assert [c[1] for c in cmds] == [str(tools / "opt_bench.py")] * 4
+    assert all("--time-only" in c for c in cmds)
+    sides = [c[c.index("--tree") + 1: c.index("--tree") + 3] for c in cmds]
+    assert [tag for _, tag in sides] == ["current", "prior", "prior", "current"]
+    assert sides[0][0] == sides[3][0] == drift_ab.REPO != sides[1][0] == sides[2][0]
+    assert all(env["SPARK_GRAFT_SF_DIR"] == SF_DIR for _, env in legs)
+    rec = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rec["queries"] == drift_ab.bench.DRIFT_SUBSET[:2]
+    assert rec["current_over_prior"] == 1.0
 
 
 def test_olap_mix_entries_are_pinned(monkeypatch):

@@ -25,7 +25,7 @@ def _write(path, rows):
 def _run_to_memory(df, mode):
     name = f"sink_{uuid.uuid4().hex[:8]}"
     q = df.writeStream.format("memory").queryName(name).outputMode(mode).trigger(availableNow=True).start()
-    q.awaitTermination(120)
+    _await_then_stop(q)
     return name
 
 
@@ -40,8 +40,16 @@ def _run_checkpointed(df, mode, ckpt, outdir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_then_stop(q)
     return outdir
+
+
+def _await_then_stop(q):
+    # a query with registered state timeouts keeps scheduling timer-check
+    # batches under availableNow, so it can outlive the wait; stopped, it
+    # cannot run on into later tests
+    q.awaitTermination(120)
+    q.stop()
 
 
 def test_stateful_dedup_within_batch_picks_min_order(spark, tmp_path):

@@ -1,14 +1,15 @@
-"""Standing A/B drift adjudication (VERDICT r10 item 2).
+"""Standing A/B drift adjudication.
 
 When a round's frozen-subset scalar (`common_subset_total_s` in
-BENCH_r{N}) moves more than 1.25x against the recorded baseline, do NOT
-chase code: run THIS tool in the same machine session. It times a slice
-of the frozen DRIFT_SUBSET twice — once importing the working tree,
-once importing a `git worktree` of the prior round's HEAD — with the
-identical protocol (fresh process per side, same SparkSession confs,
-min-of-3 per query). If the two sides agree (ratio ~1.0), the move is
+BENCH_FULL.json) moves more than 1.25x against the recorded baseline, do
+NOT chase code: run THIS tool in the same machine session. It times a
+slice of the frozen DRIFT_SUBSET on the working tree and on a `git
+archive` of the prior ref, each pass a fresh `tools/opt_bench.py
+--time-only --tree <side>` process, so each side runs under its own
+tree's `session.get_spark` confs with the same timer (warm-up, then
+min-of-3). If the two sides agree (ratio ~1.0), the move is
 machine/environment drift and the ledger gets re-baselined; only a
-prior-HEAD side that is genuinely faster indicts the code.
+prior-ref side that is genuinely faster indicts the code.
 
 Usage:
     python tools/drift_ab.py <prior-git-ref> [sf_dir] [n_queries]
@@ -26,52 +27,27 @@ import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-_TIMER = r"""
-import json, os, sys, time
-sys.path.insert(0, sys.argv[1])
-os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
-from pyspark.sql import SparkSession
+import bench  # noqa: E402
 
-spark = (
-    SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
-from lakehouse_tacklebox_spark.queries import REGISTRY
-
-names = json.loads(sys.argv[2])
-sf_dir = sys.argv[3]
-out = {}
-for n in names:
-    fn = REGISTRY[n].fn
-    fn(spark, sf_dir).count()  # warm-up: plan compile + JIT
-    reps = []
-    for _ in range(3):
-        t0 = time.time()
-        fn(spark, sf_dir).count()
-        reps.append(time.time() - t0)
-        spark.catalog.clearCache()
-    out[n] = round(min(reps), 3)
-print("DRIFT_AB_JSON:" + json.dumps(out))
-"""
+TIMER = os.path.join(REPO, "tools", "opt_bench.py")
 
 
-def _time_side(tree: str, names: list[str], sf_dir: str) -> dict[str, float]:
+def _time_side(tag: str, tree: str, names: list[str], sf_dir: str) -> dict[str, float]:
     proc = subprocess.run(
-        [sys.executable, "-c", _TIMER, tree, json.dumps(names), sf_dir],
+        [sys.executable, TIMER, "--time-only", "--tree", tree, tag, *names],
+        env=dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir),
         capture_output=True,
         text=True,
         timeout=3600,
     )
-    for line in proc.stdout.splitlines():
-        if line.startswith("DRIFT_AB_JSON:"):
-            return json.loads(line[len("DRIFT_AB_JSON:"):])
-    raise RuntimeError(
-        f"timer produced no payload for {tree}:\n{proc.stdout[-2000:]}\n{proc.stderr[-2000:]}"
-    )
+    try:
+        return bench.opt_bench_queries(proc.stdout)
+    except StopIteration:
+        raise RuntimeError(
+            f"timer produced no payload for {tree}:\n{proc.stdout[-2000:]}\n{proc.stderr[-2000:]}"
+        ) from None
 
 
 def main() -> None:
@@ -79,40 +55,22 @@ def main() -> None:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     n_queries = int(sys.argv[3]) if len(sys.argv) > 3 else 10
 
-    sys.path.insert(0, REPO)
-    import bench
-
-    names = [n for n in bench.DRIFT_SUBSET][:n_queries]
+    names = bench.DRIFT_SUBSET[:n_queries]
 
     with tempfile.TemporaryDirectory(prefix="drift_ab_") as tmp:
-        wt = os.path.join(tmp, "prior")
-        subprocess.run(
-            ["git", "worktree", "add", "--detach", wt, prior_ref],
-            cwd=REPO,
-            check=True,
-            capture_output=True,
-        )
-        try:
-            # A/B/B/A sequence (ADVICE r12): both sides get TWO passes and
-            # a per-query min-of-2, sampled symmetrically around the
-            # session midpoint. The earlier A/B/A shape gave the current
-            # side min-of-2 but the prior side a single middle pass, which
-            # systematically favored the current side — the exact bias
-            # this tool exists to adjudicate away. With A/B/B/A each side
-            # has one early and one late pass, so page-cache/JIT/thermal
-            # warm-up benefits cancel.
-            cur_a1 = _time_side(REPO, names, sf_dir)
-            prior_b1 = _time_side(wt, names, sf_dir)
-            prior_b2 = _time_side(wt, names, sf_dir)
-            cur_a2 = _time_side(REPO, names, sf_dir)
-            cur = {n: min(cur_a1[n], cur_a2[n]) for n in cur_a1}
-            prior = {n: min(prior_b1[n], prior_b2[n]) for n in prior_b1}
-        finally:
-            subprocess.run(
-                ["git", "worktree", "remove", "--force", wt],
-                cwd=REPO,
-                capture_output=True,
-            )
+        tar = subprocess.run(
+            ["git", "archive", prior_ref], cwd=REPO, check=True, capture_output=True
+        ).stdout
+        subprocess.run(["tar", "-x", "-C", tmp], input=tar, check=True)
+        # A/B/B/A: each side gets one early and one late pass and a
+        # per-query min-of-2, so page-cache/JIT/thermal warm-up across the
+        # session cancels instead of favouring one side
+        cur_a1 = _time_side("current", REPO, names, sf_dir)
+        prior_b1 = _time_side("prior", tmp, names, sf_dir)
+        prior_b2 = _time_side("prior", tmp, names, sf_dir)
+        cur_a2 = _time_side("current", REPO, names, sf_dir)
+    cur = {n: min(cur_a1[n], cur_a2[n]) for n in cur_a1}
+    prior = {n: min(prior_b1[n], prior_b2[n]) for n in prior_b1}
 
     cur_total = round(sum(cur.values()), 3)
     prior_total = round(sum(prior.values()), 3)
@@ -128,6 +86,7 @@ def main() -> None:
             {
                 "prior_ref": prior_ref,
                 "sf_dir": sf_dir,
+                "timer": "tools/opt_bench.py --time-only --tree <side>: each side's own session.get_spark, warm-up then min-of-3",
                 "queries": names,
                 "current_s": cur,
                 "current_pass_totals_s": [
