@@ -15,14 +15,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from lakehouse_tacklebox_spark.functions import ppm
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables
-
-
-def _ppm(a, b) -> F.Column:
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return F.floor(a.cast("double") * 1000000.0 / b).cast("bigint")
 
 
 _TOKS_SQL = "string_split_regex(lower(trim(text)), '\\s+')"
@@ -75,9 +70,9 @@ def corpus_domain_stats(spark, sf_dir):
         "source",
         "docs",
         "dup_docs",
-        _ppm("dup_docs", "docs").alias("dup_ppm"),
+        ppm("dup_docs", "docs").alias("dup_ppm"),
         "total_tokens",
-        _ppm("total_tokens", F.sum("total_tokens").over(W.partitionBy())).alias(
+        ppm("total_tokens", F.sum("total_tokens").over(W.partitionBy())).alias(
             "token_share_ppm"
         ),
     ).orderBy("source")
@@ -164,7 +159,7 @@ def text_boilerplate_blocks(spark, sf_dir):
             "source",
             "total_blocks",
             "boilerplate_blocks",
-            _ppm("boilerplate_blocks", "total_blocks").alias("boilerplate_ppm"),
+            ppm("boilerplate_blocks", "total_blocks").alias("boilerplate_ppm"),
         )
         .orderBy("source")
     )
@@ -243,7 +238,7 @@ def text_ngram_novelty(spark, sf_dir):
             "doc_id",
             "n_shingles",
             "n_unique",
-            _ppm("n_unique", "n_shingles").alias("novelty_ppm"),
+            ppm("n_unique", "n_shingles").alias("novelty_ppm"),
         )
         .orderBy("doc_id")
     )
@@ -385,11 +380,7 @@ def corpus_weighted_sample(spark, sf_dir):
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum(kept).cast("bigint").alias("n_kept"),
             F.sum("weight_ppm").cast("bigint").alias("expected_ppm_mass"),
-            F.floor(
-                F.sum(kept).cast("double") * 1000000.0 / F.count(F.lit(1))
-            )
-            .cast("bigint")
-            .alias("kept_ppm"),
+            ppm(F.sum(kept), F.count(F.lit(1))).alias("kept_ppm"),
         )
         .orderBy("source")
     )

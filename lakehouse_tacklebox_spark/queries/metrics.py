@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from lakehouse_tacklebox_spark.functions import ppm
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables
 
@@ -560,16 +561,12 @@ def events_funnel_stages(spark, sf_dir):
                 F.struct(
                     F.lit("2_click_after_view").alias("stage"),
                     F.col("n2").cast("bigint").alias("n_users"),
-                    F.floor(F.col("n2").cast("double") * 1000000.0 / F.col("n1"))
-                    .cast("bigint")
-                    .alias("conv_vs_stage1_ppm"),
+                    ppm("n2", "n1").alias("conv_vs_stage1_ppm"),
                 ),
                 F.struct(
                     F.lit("3_purchase_after_click").alias("stage"),
                     F.col("n3").cast("bigint").alias("n_users"),
-                    F.floor(F.col("n3").cast("double") * 1000000.0 / F.col("n1"))
-                    .cast("bigint")
-                    .alias("conv_vs_stage1_ppm"),
+                    ppm("n3", "n1").alias("conv_vs_stage1_ppm"),
                 ),
             )
         ).alias("s")

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from lakehouse_tacklebox_spark.plans import optimizer as OPT
 from lakehouse_tacklebox_spark.plans import profiler as PR
+from lakehouse_tacklebox_spark.functions import cents
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables
 
@@ -382,9 +383,7 @@ def optimizer_strategy_loop(spark, sf_dir):
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            F.sum(
-                F.round(F.col("o_totalprice").cast("decimal(14,2)") * 100)
-            ).cast("bigint").alias("cents"),
+            F.sum(cents("o_totalprice")).cast("bigint").alias("cents"),
         )
         .select(
             "o_orderpriority",

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from lakehouse_tacklebox_spark.functions import dmoney, drate, dsum_dbl
+from lakehouse_tacklebox_spark.functions import disc_price, dmoney, drate, dsum_dbl
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables
 
@@ -158,7 +158,7 @@ def scalar_math(spark, sf_dir):
     return li.filter(F.col("l_orderkey") <= 2000).select(
         "l_orderkey",
         "l_linenumber",
-        F.round(dmoney("l_extendedprice") * drate(F.lit(1) - F.col("l_discount")) * drate(F.lit(1) + F.col("l_tax")), 2).cast("double").alias("charged"),
+        F.round(disc_price() * drate(F.lit(1) + F.col("l_tax")), 2).cast("double").alias("charged"),
         F.round(F.abs(F.col("l_discount") - 0.05), 4).alias("disc_dev"),
         F.round(F.pow(F.col("l_quantity"), 2), 2).alias("qty_sq"),
         F.round(F.sqrt(price), 4).alias("price_sqrt"),

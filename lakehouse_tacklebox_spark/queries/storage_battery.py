@@ -17,7 +17,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from lakehouse_tacklebox_spark.functions import dmoney, drate
+from lakehouse_tacklebox_spark.functions import cents, rev_cents
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables
 
@@ -75,16 +75,13 @@ def join_bucketed_colocated(spark, sf_dir):
 
     li = spark.table(names["li"])
     o = spark.table(names["ord"])
-    rev_cents = F.round(
-        dmoney("l_extendedprice") * drate(F.lit(1) - F.col("l_discount")) * 100
-    ).cast("bigint")
     out = (
         li.hint("merge")
         .join(o, li["l_orderkey"] == o["o_orderkey"])
         .groupBy("o_orderpriority", "l_returnflag")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_lines"),
-            F.sum(rev_cents).cast("bigint").alias("rev_cents"),
+            F.sum(rev_cents()).cast("bigint").alias("rev_cents"),
         )
         .orderBy("o_orderpriority", "l_returnflag")
     )
@@ -134,10 +131,6 @@ def stream_idempotent_mv_replay(spark, sf_dir):
 
     tbl_dir = os.path.join(tempfile.mkdtemp(prefix="idem_mv_"), "tbl")
     li = load_tables(spark, sf_dir, ["lineitem"])["lineitem"]
-    rev_cents = F.round(
-        dmoney("l_extendedprice") * drate(F.lit(1) - F.col("l_discount")) * 100
-    ).cast("bigint")
-
     TackleTable.create(
         spark, tbl_dir, schema="returnflag string, n_rows bigint, rev_cents bigint"
     )
@@ -145,7 +138,7 @@ def stream_idempotent_mv_replay(spark, sf_dir):
     def _upsert(batch_df, epoch):
         parts = batch_df.groupBy(F.col("l_returnflag").alias("returnflag")).agg(
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum(rev_cents).cast("bigint").alias("rev_cents"),
+            F.sum(rev_cents()).cast("bigint").alias("rev_cents"),
         )
         fold_sums(
             TackleTable(batch_df.sparkSession, tbl_dir), parts, ["returnflag"], ("idem_mv", epoch)
@@ -211,9 +204,7 @@ def table_skipping_pointlookup(spark, sf_dir):
         .select(
             "o_orderkey",
             "o_custkey",
-            F.round(F.col("o_totalprice").cast("decimal(14,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+            cents("o_totalprice").alias("cents"),
         )
         .orderBy("o_orderkey")
     )
@@ -263,7 +254,6 @@ def table_version_diff(spark, sf_dir):
     import shutil
     import tempfile
 
-    from lakehouse_tacklebox_spark.functions import dmoney
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
     tmp = tempfile.mkdtemp(prefix="vdiff_")
@@ -276,7 +266,6 @@ def table_version_diff(spark, sf_dir):
         t.update("o_orderkey % 50 = 0", {"price": "price + 1.0"})
         t.delete("o_orderkey % 97 = 0")
 
-        cents = lambda c: F.round(dmoney(c) * 100).cast("bigint")  # noqa: E731
         v0 = t.read(version=0).select(
             "o_orderkey", cents("price").alias("cents_before")
         )
@@ -379,11 +368,7 @@ def table_optimize_compaction(spark, sf_dir):
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            F.sum(
-                F.round(F.col("o_totalprice").cast("decimal(14,2)") * 100).cast(
-                    "bigint"
-                )
-            ).cast("bigint").alias("cents"),
+            F.sum(cents("o_totalprice")).cast("bigint").alias("cents"),
         )
         .withColumn(
             "compacted_fewer_files", F.lit(1 if compacted else 0).cast("int")
@@ -440,21 +425,21 @@ def table_restore_bad_write(spark, sf_dir):
 
     t = TackleTable.create(spark, path, orders.repartition(4))
     v_good = t.version()
-    cents = F.round(F.col("o_totalprice").cast("decimal(14,2)") * 100).cast("bigint")
-    good_sum = t.read().agg(F.sum(cents).cast("bigint").alias("s")).collect()[0]["s"]
+    o_cents = cents("o_totalprice")
+    good_sum = t.read().agg(F.sum(o_cents).cast("bigint").alias("s")).collect()[0]["s"]
 
     # the bad job: every price doubled
     t.overwrite(orders.withColumn("o_totalprice", F.col("o_totalprice") * 2))
     v_bad = t.version()
-    bad_sum = t.read().agg(F.sum(cents).cast("bigint").alias("s")).collect()[0]["s"]
+    bad_sum = t.read().agg(F.sum(o_cents).cast("bigint").alias("s")).collect()[0]["s"]
     corruption = bad_sum != good_sum
 
     t.restore(v_good)
-    restored_sum = t.read().agg(F.sum(cents).cast("bigint").alias("s")).collect()[0]["s"]
+    restored_sum = t.read().agg(F.sum(o_cents).cast("bigint").alias("s")).collect()[0]["s"]
     roundtrip = restored_sum == good_sum
 
     auditable = (
-        t.read(version=v_bad).agg(F.sum(cents).cast("bigint").alias("s")).collect()[0]["s"]
+        t.read(version=v_bad).agg(F.sum(o_cents).cast("bigint").alias("s")).collect()[0]["s"]
         == bad_sum
     )
 
@@ -463,7 +448,7 @@ def table_restore_bad_write(spark, sf_dir):
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            F.sum(cents).cast("bigint").alias("cents"),
+            F.sum(o_cents).cast("bigint").alias("cents"),
         )
         .withColumn("corruption_detected", F.lit(1 if corruption else 0).cast("int"))
         .withColumn("restore_roundtrip", F.lit(1 if roundtrip else 0).cast("int"))

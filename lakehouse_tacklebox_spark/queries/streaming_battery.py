@@ -22,6 +22,7 @@ import uuid
 
 from pyspark.sql import functions as F
 
+from lakehouse_tacklebox_spark.functions import cents, ppm, rev_cents
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables, maybe_broadcast, normalize_event_ts
 from lakehouse_tacklebox_spark.queries import fixtures as FX
@@ -434,7 +435,6 @@ def stream_incremental_mv(spark, sf_dir):
 
     from pyspark.sql import functions as SF
 
-    from lakehouse_tacklebox_spark.functions import dmoney, drate
     from lakehouse_tacklebox_spark.streaming.mv import fold_sums, run_mv
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
@@ -443,10 +443,8 @@ def stream_incremental_mv(spark, sf_dir):
     li = load_tables(spark, sf_dir, ["lineitem"])["lineitem"]
 
     keys = ["l_returnflag", "l_linestatus"]
-    base_cents = SF.round(dmoney("l_extendedprice") * 100).cast("bigint")
-    disc_cents = SF.round(
-        dmoney("l_extendedprice") * drate(SF.lit(1) - SF.col("l_discount")) * 100
-    ).cast("bigint")
+    base_cents = cents("l_extendedprice")
+    disc_cents = rev_cents()
 
     def _upsert(batch_df, epoch):
         parts = batch_df.groupBy(*keys).agg(
@@ -558,16 +556,12 @@ def stream_funnel_stages(spark, sf_dir):
                 F.struct(
                     F.lit("2_click_after_view").alias("stage"),
                     F.col("n2").cast("bigint").alias("n_users"),
-                    F.floor(F.col("n2").cast("double") * 1000000.0 / F.col("n1"))
-                    .cast("bigint")
-                    .alias("conv_vs_stage1_ppm"),
+                    ppm("n2", "n1").alias("conv_vs_stage1_ppm"),
                 ),
                 F.struct(
                     F.lit("3_purchase_after_click").alias("stage"),
                     F.col("n3").cast("bigint").alias("n_users"),
-                    F.floor(F.col("n3").cast("double") * 1000000.0 / F.col("n1"))
-                    .cast("bigint")
-                    .alias("conv_vs_stage1_ppm"),
+                    ppm("n3", "n1").alias("conv_vs_stage1_ppm"),
                 ),
             )
         ).alias("s")
@@ -613,17 +607,12 @@ def stream_incremental_join_mv(spark, sf_dir):
 
     from pyspark.sql import functions as SF
 
-    from lakehouse_tacklebox_spark.functions import dmoney, drate
     from lakehouse_tacklebox_spark.streaming.mv import fold_sums, run_mv
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
     tbl_dir = os.path.join(tempfile.mkdtemp(prefix="inc_jmv_"), "tbl")
     t = load_tables(spark, sf_dir, ["lineitem", "orders"])
     orders = t["orders"].select("o_orderkey", "o_orderpriority")
-
-    rev_cents = SF.round(
-        dmoney("l_extendedprice") * drate(SF.lit(1) - SF.col("l_discount")) * 100
-    ).cast("bigint")
 
     TackleTable.create(
         spark,
@@ -642,7 +631,7 @@ def stream_incremental_join_mv(spark, sf_dir):
             )
             .agg(
                 SF.count(SF.lit(1)).cast("bigint").alias("n_rows"),
-                SF.sum(rev_cents).cast("bigint").alias("rev_cents"),
+                SF.sum(rev_cents()).cast("bigint").alias("rev_cents"),
             )
         )
         fold_sums(
@@ -1062,6 +1051,7 @@ def stream_heavy_hitters_mv(spark, sf_dir):
     commit atomically.
     """
     import os
+    import shutil
     import tempfile
 
     from lakehouse_tacklebox_spark.operators.sketch import (
@@ -1072,64 +1062,69 @@ def stream_heavy_hitters_mv(spark, sf_dir):
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
     capacity = 30
-    state_dir = os.path.join(tempfile.mkdtemp(prefix="mg_mv_"), "state")
-    docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    TackleTable.create(
-        spark, state_dir, schema="w string, mg_count bigint, is_total int"
-    )
+    tmp = tempfile.mkdtemp(prefix="mg_mv_")
+    state_dir = os.path.join(tmp, "state")
+    try:
+        docs = load_tables(spark, sf_dir, ["documents"])["documents"]
+        TackleTable.create(
+            spark, state_dir, schema="w string, mg_count bigint, is_total int"
+        )
 
-    def _fold(batch_df, epoch):
-        s = batch_df.sparkSession
+        def _fold(batch_df, epoch):
+            s = batch_df.sparkSession
 
-        def merge_batch(state):
-            # runs only when the log lacks this epoch: a replayed epoch
-            # never re-summarizes its batch
-            toks = batch_df.select(
-                F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("w")
-            )
-            summ = toks.mapInPandas(
-                _mg_partition_summary("w", capacity),
-                schema="w string, mg_count long, is_total int",
-            ).collect()
-            prev = state.collect()
-            n_total = sum(
-                r["mg_count"] for r in prev + summ if r["is_total"] == 1
-            )
-            counters = mg_merge(
-                [
-                    {r["w"]: r["mg_count"]}
-                    for r in prev + summ
-                    if r["is_total"] == 0
-                ],
-                capacity,
-            )
-            return s.createDataFrame(
-                [(k, int(c), 0) for k, c in sorted(counters.items())]
-                + [("", int(n_total), 1)],
-                "w string, mg_count bigint, is_total int",
-            )
+            def merge_batch(state):
+                # runs only when the log lacks this epoch: a replayed epoch
+                # never re-summarizes its batch
+                toks = batch_df.select(
+                    F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("w")
+                )
+                summ = toks.mapInPandas(
+                    _mg_partition_summary("w", capacity),
+                    schema="w string, mg_count long, is_total int",
+                ).collect()
+                prev = state.collect()
+                n_total = sum(
+                    r["mg_count"] for r in prev + summ if r["is_total"] == 1
+                )
+                counters = mg_merge(
+                    [
+                        {r["w"]: r["mg_count"]}
+                        for r in prev + summ
+                        if r["is_total"] == 0
+                    ],
+                    capacity,
+                )
+                return s.createDataFrame(
+                    [(k, int(c), 0) for k, c in sorted(counters.items())]
+                    + [("", int(n_total), 1)],
+                    "w string, mg_count bigint, is_total int",
+                )
 
-        TackleTable(s, state_dir).rewrite(merge_batch, txn=("mg_mv", epoch))
+            TackleTable(s, state_dir).rewrite(merge_batch, txn=("mg_mv", epoch))
 
-    chunks = docs.select("doc_id", "text").repartition(4)
-    if not run_mv(spark, chunks, _fold, [state_dir]):
-        raise RuntimeError("stream_heavy_hitters_mv: a replayed epoch moved the sketch")
+        chunks = docs.select("doc_id", "text").repartition(4)
+        if not run_mv(spark, chunks, _fold, [state_dir]):
+            raise RuntimeError("stream_heavy_hitters_mv: a replayed epoch moved the sketch")
 
-    state = TackleTable(spark, state_dir).read()
-    n_total = state.filter(F.col("is_total") == 1).agg(
-        F.sum("mg_count").alias("n")
-    ).collect()[0]["n"]
-    candidates = state.filter(F.col("is_total") == 0).select("w").distinct()
-    toks = docs.select(
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("w")
-    )
-    return (
-        toks.join(F.broadcast(candidates), "w")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .filter(F.col("n") * (capacity + 1) > F.lit(n_total))
-        .orderBy(F.desc("n"), "w")
-    )
+        # the state is ≤ capacity candidate words plus the total: read it
+        # into the driver, so the exact re-count needs no scratch table
+        state = TackleTable(spark, state_dir).read().collect()
+        n_total = sum(r["mg_count"] for r in state if r["is_total"] == 1)
+        words = sorted({r["w"] for r in state if r["is_total"] == 0})
+        candidates = spark.createDataFrame([(w,) for w in words], "w string")
+        toks = docs.select(
+            F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("w")
+        )
+        return (
+            toks.join(F.broadcast(candidates), "w")
+            .groupBy("w")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+            .filter(F.col("n") * (capacity + 1) > F.lit(n_total))
+            .orderBy(F.desc("n"), "w")
+        )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
@@ -1171,77 +1166,80 @@ def stream_mv_retraction(spark, sf_dir):
     are txn-stamped, so the pipeline is replay-safe end to end.
     """
     import os
+    import shutil
     import tempfile
 
-    from lakehouse_tacklebox_spark.functions import dmoney
     from lakehouse_tacklebox_spark.streaming.mv import fold_sums, run_mv
     from lakehouse_tacklebox_spark.tablestore.table import TackleTable
 
     tmp = tempfile.mkdtemp(prefix="mv_retract_")
     fact_dir = os.path.join(tmp, "fact")
     mv_dir = os.path.join(tmp, "mv")
+    try:
+        orders = load_tables(spark, sf_dir, ["orders"])["orders"]
+        cols = ["o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice"]
+        o_cents = cents("o_totalprice")
 
-    orders = load_tables(spark, sf_dir, ["orders"])["orders"]
-    cols = ["o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice"]
-    cents = F.round(dmoney("o_totalprice") * 100).cast("bigint")
-
-    def _partials(df, sign=1):
-        return df.groupBy("o_orderpriority").agg(
-            (F.count(F.lit(1)) * sign).cast("bigint").alias("n_orders"),
-            (F.sum(cents) * sign).cast("bigint").alias("revenue_cents"),
-        )
-
-    TackleTable.create(spark, mv_dir, schema="o_orderpriority string, n_orders bigint, revenue_cents bigint")
-    TackleTable.create(spark, fact_dir, orders.select(*cols).limit(0))
-
-    def _fold(batch_df, epoch):
-        s = batch_df.sparkSession
-        # two tables, one epoch: each step carries its own txn stamp, so
-        # a crash between them replays as (append no-op, fold applies)
-        TackleTable(s, fact_dir).append(batch_df, txn=("ingest", epoch))
-        fold_sums(TackleTable(s, mv_dir), _partials(batch_df), ["o_orderpriority"], ("mv", epoch))
-
-    chunks = orders.select(*cols).repartition(4)
-    if not run_mv(spark, chunks, _fold, [fact_dir, mv_dir]):
-        raise RuntimeError("stream_mv_retraction: a replayed epoch moved the fact or the view")
-
-    fact = TackleTable(spark, fact_dir)
-    # the merge source is the DISTINCT forget-list (broadcast-sized at
-    # any fact scale), null-padded to the target schema — a delete
-    # clause never reads source values
-    forget = (
-        fact.read().filter(F.col("o_custkey") % 97 == 0).select("o_custkey").distinct()
-    )
-    for f in fact.read().schema.fields:
-        if f.name != "o_custkey":
-            forget = forget.withColumn(f.name, F.lit(None).cast(f.dataType))
-    v_del = (
-        fact.merge(forget, on=["o_custkey"])
-        .whenMatchedDelete()
-        .withChangeDataFeed()
-        .withTransaction("forget", 1)
-        .execute()
-    )
-    deltas = fact.read_changes(v_del, v_del).filter(F.col("_change_type") == "delete")
-    mv = TackleTable(spark, mv_dir)
-
-    def _retract():
-        mv.rewrite(
-            lambda rows: rows.unionByName(_partials(deltas, sign=-1))
-            .groupBy("o_orderpriority")
-            .agg(
-                F.sum("n_orders").cast("bigint").alias("n_orders"),
-                F.sum("revenue_cents").cast("bigint").alias("revenue_cents"),
+        def _partials(df, sign=1):
+            return df.groupBy("o_orderpriority").agg(
+                (F.count(F.lit(1)) * sign).cast("bigint").alias("n_orders"),
+                (F.sum(o_cents) * sign).cast("bigint").alias("revenue_cents"),
             )
-            .filter(F.col("n_orders") != 0),  # a fully-forgotten group leaves the MV
-            txn=("mv_retract", 1),
-        )
 
-    _retract()
-    _retract()  # replayed retraction epoch: txn stamp no-ops it — no double-subtract
-    return mv.read().select("o_orderpriority", "n_orders", "revenue_cents").orderBy(
-        "o_orderpriority"
-    )
+        TackleTable.create(spark, mv_dir, schema="o_orderpriority string, n_orders bigint, revenue_cents bigint")
+        TackleTable.create(spark, fact_dir, orders.select(*cols).limit(0))
+
+        def _fold(batch_df, epoch):
+            s = batch_df.sparkSession
+            # two tables, one epoch: each step carries its own txn stamp, so
+            # a crash between them replays as (append no-op, fold applies)
+            TackleTable(s, fact_dir).append(batch_df, txn=("ingest", epoch))
+            fold_sums(TackleTable(s, mv_dir), _partials(batch_df), ["o_orderpriority"], ("mv", epoch))
+
+        chunks = orders.select(*cols).repartition(4)
+        if not run_mv(spark, chunks, _fold, [fact_dir, mv_dir]):
+            raise RuntimeError("stream_mv_retraction: a replayed epoch moved the fact or the view")
+
+        fact = TackleTable(spark, fact_dir)
+        # the merge source is the DISTINCT forget-list (broadcast-sized at
+        # any fact scale), null-padded to the target schema — a delete
+        # clause never reads source values
+        forget = (
+            fact.read().filter(F.col("o_custkey") % 97 == 0).select("o_custkey").distinct()
+        )
+        for f in fact.read().schema.fields:
+            if f.name != "o_custkey":
+                forget = forget.withColumn(f.name, F.lit(None).cast(f.dataType))
+        v_del = (
+            fact.merge(forget, on=["o_custkey"])
+            .whenMatchedDelete()
+            .withChangeDataFeed()
+            .withTransaction("forget", 1)
+            .execute()
+        )
+        deltas = fact.read_changes(v_del, v_del).filter(F.col("_change_type") == "delete")
+        mv = TackleTable(spark, mv_dir)
+
+        def _retract():
+            mv.rewrite(
+                lambda rows: rows.unionByName(_partials(deltas, sign=-1))
+                .groupBy("o_orderpriority")
+                .agg(
+                    F.sum("n_orders").cast("bigint").alias("n_orders"),
+                    F.sum("revenue_cents").cast("bigint").alias("revenue_cents"),
+                )
+                .filter(F.col("n_orders") != 0),  # a fully-forgotten group leaves the MV
+                txn=("mv_retract", 1),
+            )
+
+        _retract()
+        _retract()  # replayed retraction epoch: txn stamp no-ops it — no double-subtract
+        # at most 5 priority rows, returned as literal rows so the view's
+        # scratch dir can go
+        view = mv.read().select("o_orderpriority", "n_orders", "revenue_cents")
+        return spark.createDataFrame(view.collect(), view.schema).orderBy("o_orderpriority")
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(

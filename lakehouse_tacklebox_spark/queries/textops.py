@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from lakehouse_tacklebox_spark.operators import dedup as D
 from lakehouse_tacklebox_spark.operators import text as TX
+from lakehouse_tacklebox_spark.functions import ppm
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables
 
@@ -1101,9 +1102,7 @@ def text_duplicate_spans(spark, sf_dir):
             "doc_id",
             "n_windows",
             "dup_windows",
-            F.floor(F.col("dup_windows").cast("double") * 1000000.0 / F.col("n_windows"))
-            .cast("bigint")
-            .alias("dup_ppm"),
+            ppm("dup_windows", "n_windows").alias("dup_ppm"),
         )
         .orderBy("doc_id")
     )

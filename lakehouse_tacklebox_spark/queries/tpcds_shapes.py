@@ -29,23 +29,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from lakehouse_tacklebox_spark.functions import CENTS_SQL, cents, ppm
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables, maybe_broadcast
-
-
-def _cents(col) -> F.Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c.cast("decimal(14,2)") * 100).cast("bigint")
-
-
-_CENTS_SQL = "CAST(round(CAST({c} AS DECIMAL(14,2)) * 100) AS BIGINT)"
-
-
-def _ppm(a, b) -> F.Column:
-    """floor(a * 1e6 / b) — integer parts-per-million, engine-exact."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return F.floor(a.cast("double") * 1000000.0 / b).cast("bigint")
 
 
 _HIGH = "o_orderpriority IN ('1-URGENT', '2-HIGH')"
@@ -57,11 +43,11 @@ _HIGH = "o_orderpriority IN ('1-URGENT', '2-HIGH')"
     bench=True,
     oracle=f"""
     SELECT CAST(date_trunc('week', o_orderdate) AS DATE) AS week,
-           CAST(sum(CASE WHEN {_HIGH} THEN {_CENTS_SQL.format(c='o_totalprice')} ELSE 0 END) AS BIGINT) AS high_cents,
-           CAST(sum(CASE WHEN NOT ({_HIGH}) THEN {_CENTS_SQL.format(c='o_totalprice')} ELSE 0 END) AS BIGINT) AS low_cents,
-           CAST(floor(CAST(sum(CASE WHEN {_HIGH} THEN {_CENTS_SQL.format(c='o_totalprice')} ELSE 0 END) AS DOUBLE)
+           CAST(sum(CASE WHEN {_HIGH} THEN {CENTS_SQL.format(c='o_totalprice')} ELSE 0 END) AS BIGINT) AS high_cents,
+           CAST(sum(CASE WHEN NOT ({_HIGH}) THEN {CENTS_SQL.format(c='o_totalprice')} ELSE 0 END) AS BIGINT) AS low_cents,
+           CAST(floor(CAST(sum(CASE WHEN {_HIGH} THEN {CENTS_SQL.format(c='o_totalprice')} ELSE 0 END) AS DOUBLE)
                       * 1000000.0
-                      / sum({_CENTS_SQL.format(c='o_totalprice')})) AS BIGINT) AS high_share_ppm
+                      / sum({CENTS_SQL.format(c='o_totalprice')})) AS BIGINT) AS high_share_ppm
     FROM orders
     GROUP BY week
     """,
@@ -73,19 +59,19 @@ def ds_week_channel_share(spark, sf_dir):
     share divides two exact cent sums into integer ppm."""
     o = load_tables(spark, sf_dir, ["orders"])["orders"]
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    cents = _cents("o_totalprice")
+    o_cents = cents("o_totalprice")
     agg = (
         o.groupBy(F.date_trunc("week", "o_orderdate").cast("date").alias("week"))
         .agg(
-            F.sum(F.when(high, cents).otherwise(F.lit(0))).alias("high_cents"),
-            F.sum(F.when(~high, cents).otherwise(F.lit(0))).alias("low_cents"),
+            F.sum(F.when(high, o_cents).otherwise(F.lit(0))).alias("high_cents"),
+            F.sum(F.when(~high, o_cents).otherwise(F.lit(0))).alias("low_cents"),
         )
     )
     return agg.select(
         "week",
         "high_cents",
         "low_cents",
-        _ppm("high_cents", F.col("high_cents") + F.col("low_cents")).alias("high_share_ppm"),
+        ppm("high_cents", F.col("high_cents") + F.col("low_cents")).alias("high_share_ppm"),
     )
 
 
@@ -96,8 +82,8 @@ def ds_week_channel_share(spark, sf_dir):
     oracle=f"""
     WITH monthly AS (
         SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
-               sum(CASE WHEN {_HIGH} THEN {_CENTS_SQL.format(c='o_totalprice')} ELSE 0 END) AS hi,
-               sum(CASE WHEN NOT ({_HIGH}) THEN {_CENTS_SQL.format(c='o_totalprice')} ELSE 0 END) AS lo
+               sum(CASE WHEN {_HIGH} THEN {CENTS_SQL.format(c='o_totalprice')} ELSE 0 END) AS hi,
+               sum(CASE WHEN NOT ({_HIGH}) THEN {CENTS_SQL.format(c='o_totalprice')} ELSE 0 END) AS lo
         FROM orders GROUP BY month
     ), cum AS (
         SELECT month,
@@ -117,12 +103,12 @@ def ds_cumulative_channel_compare(spark, sf_dir):
     fact table, so the single-partition sort is a non-issue at any SF."""
     o = load_tables(spark, sf_dir, ["orders"])["orders"]
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    cents = _cents("o_totalprice")
+    o_cents = cents("o_totalprice")
     monthly = (
         o.groupBy(F.date_trunc("month", "o_orderdate").cast("date").alias("month"))
         .agg(
-            F.sum(F.when(high, cents).otherwise(F.lit(0))).alias("hi"),
-            F.sum(F.when(~high, cents).otherwise(F.lit(0))).alias("lo"),
+            F.sum(F.when(high, o_cents).otherwise(F.lit(0))).alias("hi"),
+            F.sum(F.when(~high, o_cents).otherwise(F.lit(0))).alias("lo"),
         )
     )
     w = W.orderBy("month").rowsBetween(W.unboundedPreceding, W.currentRow)
@@ -175,7 +161,7 @@ def ds_customer_year_intersect(spark, sf_dir):
     oracle=f"""
     WITH pr AS (
         SELECT p_brand, l_partkey,
-               CAST(sum({_CENTS_SQL.format(c='l_extendedprice')}) AS BIGINT) AS cents
+               CAST(sum({CENTS_SQL.format(c='l_extendedprice')}) AS BIGINT) AS cents
         FROM lineitem JOIN part ON p_partkey = l_partkey
         GROUP BY p_brand, l_partkey
     ), ranked AS (
@@ -197,7 +183,7 @@ def ds_top_parts_per_brand(spark, sf_dir):
         t["lineitem"]
         .join(maybe_broadcast(t["part"].select("p_partkey", "p_brand"), "part"), F.col("p_partkey") == F.col("l_partkey"))
         .groupBy("p_brand", "l_partkey")
-        .agg(F.sum(_cents("l_extendedprice")).alias("cents"))
+        .agg(F.sum(cents("l_extendedprice")).alias("cents"))
     )
     w = W.partitionBy("p_brand").orderBy(F.col("cents").desc(), "l_partkey")
     return (
@@ -214,7 +200,7 @@ def ds_top_parts_per_brand(spark, sf_dir):
     oracle=f"""
     WITH bm AS (
         SELECT p_brand, CAST(date_trunc('month', l_shipdate) AS DATE) AS month,
-               sum({_CENTS_SQL.format(c='l_extendedprice')}) AS cents
+               sum({CENTS_SQL.format(c='l_extendedprice')}) AS cents
         FROM lineitem JOIN part ON p_partkey = l_partkey
         GROUP BY p_brand, month
     ), stats AS (
@@ -238,7 +224,7 @@ def ds_brand_monthly_deviation(spark, sf_dir):
         t["lineitem"]
         .join(maybe_broadcast(t["part"].select("p_partkey", "p_brand"), "part"), F.col("p_partkey") == F.col("l_partkey"))
         .groupBy("p_brand", F.date_trunc("month", "l_shipdate").cast("date").alias("month"))
-        .agg(F.sum(_cents("l_extendedprice")).alias("cents"))
+        .agg(F.sum(cents("l_extendedprice")).alias("cents"))
     )
     wb = W.partitionBy("p_brand")
     stats = bm.withColumn("tot", F.sum("cents").over(wb)).withColumn(
@@ -247,7 +233,7 @@ def ds_brand_monthly_deviation(spark, sf_dir):
     m_n = F.col("cents") * F.col("n_months")
     return (
         stats.filter((m_n * 10 > 13 * F.col("tot")) | (m_n * 10 < 7 * F.col("tot")))
-        .select("p_brand", "month", "cents", _ppm(m_n, F.col("tot")).alias("dev_ppm"))
+        .select("p_brand", "month", "cents", ppm(m_n, F.col("tot")).alias("dev_ppm"))
     )
 
 
@@ -259,9 +245,9 @@ def ds_brand_monthly_deviation(spark, sf_dir):
     WITH per_cust AS (
         SELECT o_custkey,
                sum(CASE WHEN extract(year FROM o_orderdate) = 1995
-                        THEN {_CENTS_SQL.format(c='o_totalprice')} ELSE 0 END) AS y1_cents,
+                        THEN {CENTS_SQL.format(c='o_totalprice')} ELSE 0 END) AS y1_cents,
                sum(CASE WHEN extract(year FROM o_orderdate) = 1996
-                        THEN {_CENTS_SQL.format(c='o_totalprice')} ELSE 0 END) AS y2_cents
+                        THEN {CENTS_SQL.format(c='o_totalprice')} ELSE 0 END) AS y2_cents
         FROM orders GROUP BY o_custkey
     )
     SELECT o_custkey AS custkey, CAST(y1_cents AS BIGINT) AS y1_cents, CAST(y2_cents AS BIGINT) AS y2_cents,
@@ -277,10 +263,10 @@ def ds_yoy_customer_growth(spark, sf_dir):
     cross-multiplication; the reported ratio is integer ppm."""
     o = load_tables(spark, sf_dir, ["orders"])["orders"]
     y = F.year("o_orderdate")
-    cents = _cents("o_totalprice")
+    o_cents = cents("o_totalprice")
     per_cust = o.groupBy("o_custkey").agg(
-        F.sum(F.when(y == 1995, cents).otherwise(F.lit(0))).alias("y1_cents"),
-        F.sum(F.when(y == 1996, cents).otherwise(F.lit(0))).alias("y2_cents"),
+        F.sum(F.when(y == 1995, o_cents).otherwise(F.lit(0))).alias("y1_cents"),
+        F.sum(F.when(y == 1996, o_cents).otherwise(F.lit(0))).alias("y2_cents"),
     )
     return (
         per_cust.filter((F.col("y1_cents") > 0) & (F.col("y2_cents") * 2 > F.col("y1_cents") * 3))
@@ -288,7 +274,7 @@ def ds_yoy_customer_growth(spark, sf_dir):
             F.col("o_custkey").alias("custkey"),
             "y1_cents",
             "y2_cents",
-            _ppm("y2_cents", "y1_cents").alias("growth_ppm"),
+            ppm("y2_cents", "y1_cents").alias("growth_ppm"),
         )
     )
 
@@ -299,7 +285,7 @@ def ds_yoy_customer_growth(spark, sf_dir):
     bench=True,
     oracle=f"""
     WITH per_cust AS (
-        SELECT o_custkey, sum({_CENTS_SQL.format(c='o_totalprice')}) AS cents
+        SELECT o_custkey, sum({CENTS_SQL.format(c='o_totalprice')}) AS cents
         FROM orders GROUP BY o_custkey
     ), seg AS (
         SELECT c_custkey, c_nationkey, c_mktsegment, coalesce(cents, 0) AS cents
@@ -321,7 +307,7 @@ def ds_above_segment_avg(spark, sf_dir):
     Customers with no orders count into their group's average (LEFT
     join + coalesce 0), matching DS semantics."""
     t = load_tables(spark, sf_dir, ["orders", "customer"])
-    per_cust = t["orders"].groupBy("o_custkey").agg(F.sum(_cents("o_totalprice")).alias("cents"))
+    per_cust = t["orders"].groupBy("o_custkey").agg(F.sum(cents("o_totalprice")).alias("cents"))
     seg = (
         t["customer"]
         .select("c_custkey", "c_nationkey", "c_mktsegment")
@@ -374,5 +360,5 @@ def ds_hour_ratio_daily(spark, sf_dir):
         )
     )
     return daily.filter(F.col("pm_ct") > 0).select(
-        "day", "am_ct", "pm_ct", _ppm("am_ct", "pm_ct").alias("ratio_ppm")
+        "day", "am_ct", "pm_ct", ppm("am_ct", "pm_ct").alias("ratio_ppm")
     )

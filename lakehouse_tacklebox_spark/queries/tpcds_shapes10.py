@@ -29,34 +29,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from lakehouse_tacklebox_spark.functions import dmoney, drate
+from lakehouse_tacklebox_spark.functions import CENTS_SQL, REV_CENTS_SQL, cents, ppm, rev_cents
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables, maybe_broadcast
-
-_CENTS_SQL = "CAST(round(CAST({c} AS DECIMAL(14,2)) * 100) AS BIGINT)"
-
-_REV_CENTS_SQL = (
-    "CAST(round(CAST(l.l_extendedprice AS DECIMAL(14,2)) "
-    "* CAST(1 - l.l_discount AS DECIMAL(7,4)) * 100) AS BIGINT)"
-)
-
-
-def _cents(col) -> F.Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c.cast("decimal(14,2)") * 100).cast("bigint")
-
-
-def _rev_cents() -> F.Column:
-    return (
-        F.round(dmoney("l_extendedprice") * drate(F.lit(1) - F.col("l_discount")) * 100)
-        .cast("bigint")
-    )
-
-
-def _ppm(a, b) -> F.Column:
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return F.floor(a.cast("double") * 1000000.0 / b).cast("bigint")
 
 
 @register(
@@ -66,7 +41,7 @@ def _ppm(a, b) -> F.Column:
     WITH weekly AS (
         SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
                CAST(floor((dayofyear(o_orderdate) - 1) / 7) AS BIGINT) AS wk,
-               sum({_CENTS_SQL.format(c='o_totalprice')}) AS cents
+               sum({CENTS_SQL.format(c='o_totalprice')}) AS cents
         FROM orders GROUP BY yr, wk
     )
     SELECT a.yr AS yr, a.wk AS wk,
@@ -92,7 +67,7 @@ def ds_week_yoy_selfjoin(spark, sf_dir):
     weekly = o.groupBy(
         F.year("o_orderdate").cast("bigint").alias("yr"),
         F.floor((F.dayofyear("o_orderdate") - 1) / 7).cast("bigint").alias("wk"),
-    ).agg(F.sum(_cents("o_totalprice")).alias("cents"))
+    ).agg(F.sum(cents("o_totalprice")).alias("cents"))
     a, b = weekly.alias("a"), weekly.alias("b")
     return (
         a.join(
@@ -104,7 +79,7 @@ def ds_week_yoy_selfjoin(spark, sf_dir):
             F.col("a.wk").alias("wk"),
             F.col("a.cents").cast("bigint").alias("cents_cur"),
             F.col("b.cents").cast("bigint").alias("cents_next"),
-            _ppm(F.col("b.cents"), F.col("a.cents")).alias("yoy_ppm"),
+            ppm(F.col("b.cents"), F.col("a.cents")).alias("yoy_ppm"),
         )
         .orderBy("yr", "wk")
     )
@@ -162,7 +137,7 @@ def ds_channel_overlap_census(spark, sf_dir):
                CAST(o.o_orderdate AS DATE) AS day,
                date_diff('day', DATE '1970-01-01', CAST(o.o_orderdate AS DATE))
                    AS day_idx,
-               sum({_CENTS_SQL.format(c='o.o_totalprice')}) AS day_cents
+               sum({CENTS_SQL.format(c='o.o_totalprice')}) AS day_cents
         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         GROUP BY segment, day, day_idx
     )
@@ -197,7 +172,7 @@ def ds_rolling_range_window(spark, sf_dir):
             F.col("c_mktsegment").alias("segment"),
             F.col("o_orderdate").cast("date").alias("day"),
         )
-        .agg(F.sum(_cents("o_totalprice")).alias("day_cents"))
+        .agg(F.sum(cents("o_totalprice")).alias("day_cents"))
         .withColumn("day_idx", F.datediff("day", F.lit("1970-01-01").cast("date")))
     )
     w = (
@@ -222,7 +197,7 @@ def ds_rolling_range_window(spark, sf_dir):
     oracle=f"""
     WITH brand_avg AS (
         SELECT p_brand,
-               sum({_CENTS_SQL.format(c='p_retailprice')}) AS cents,
+               sum({CENTS_SQL.format(c='p_retailprice')}) AS cents,
                count(*) AS n
         FROM part GROUP BY p_brand
     ), globals AS (
@@ -233,7 +208,7 @@ def ds_rolling_range_window(spark, sf_dir):
     )
     SELECT p.p_brand AS brand,
            CAST(count(*) AS BIGINT) AS n_lineitems,
-           CAST(sum({_REV_CENTS_SQL}) AS BIGINT) AS rev_cents
+           CAST(sum({REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')}) AS BIGINT) AS rev_cents
     FROM lineitem l
     JOIN part p ON l.l_partkey = p.p_partkey
     WHERE p.p_brand IN (SELECT p_brand FROM rich)
@@ -254,7 +229,7 @@ def ds_brands_above_avg_semi(spark, sf_dir):
     """
     t = load_tables(spark, sf_dir, ["part", "lineitem"])
     brand_avg = t["part"].groupBy("p_brand").agg(
-        F.sum(_cents("p_retailprice")).alias("cents"),
+        F.sum(cents("p_retailprice")).alias("cents"),
         F.count(F.lit(1)).alias("n"),
     )
     g = brand_avg.agg(
@@ -272,7 +247,7 @@ def ds_brands_above_avg_semi(spark, sf_dir):
         .groupBy(F.col("p_brand").alias("brand"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_lineitems"),
-            F.sum(_rev_cents()).cast("bigint").alias("rev_cents"),
+            F.sum(rev_cents()).cast("bigint").alias("rev_cents"),
         )
         .orderBy("brand")
     )
@@ -287,7 +262,7 @@ def ds_brands_above_avg_semi(spark, sf_dir):
                CAST(year(o_orderdate) AS BIGINT) AS yr,
                date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
                    * 10000000000 + o_orderkey AS okey,
-               {_CENTS_SQL.format(c='o_totalprice')} AS cents
+               {CENTS_SQL.format(c='o_totalprice')} AS cents
         FROM orders
     ), spans AS (
         SELECT o_custkey, yr,
@@ -325,7 +300,7 @@ def ds_first_last_span(spark, sf_dir):
         "o_custkey",
         F.year("o_orderdate").cast("bigint").alias("yr"),
         okey.alias("okey"),
-        _cents("o_totalprice").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     spans = keyed.groupBy("o_custkey", "yr").agg(
         F.min_by("cents", "okey").alias("first_cents"),

@@ -29,15 +29,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from lakehouse_tacklebox_spark.functions import CENTS_SQL, cents, ppm
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables, maybe_broadcast
-
-_CENTS_SQL = "CAST(round(CAST({c} AS DECIMAL(14,2)) * 100) AS BIGINT)"
-
-
-def _cents(col) -> F.Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c.cast("decimal(14,2)") * 100).cast("bigint")
 
 
 @register(
@@ -46,7 +40,7 @@ def _cents(col) -> F.Column:
     oracle=f"""
     WITH spend AS (
         SELECT o_custkey, CAST(year(o_orderdate) AS BIGINT) AS yr,
-               sum({_CENTS_SQL.format(c='o_totalprice')}) AS cents
+               sum({CENTS_SQL.format(c='o_totalprice')}) AS cents
         FROM orders WHERE year(o_orderdate) IN (1996, 1997)
         GROUP BY o_custkey, yr
     ), deciled AS (
@@ -79,7 +73,7 @@ def ds_decile_transition(spark, sf_dir):
         o.withColumn("yr", F.year("o_orderdate").cast("bigint"))
         .filter(F.col("yr").isin(1996, 1997))
         .groupBy("o_custkey", "yr")
-        .agg(F.sum(_cents("o_totalprice")).alias("cents"))
+        .agg(F.sum(cents("o_totalprice")).alias("cents"))
     )
     deciled = spend.select(
         "o_custkey",
@@ -109,7 +103,7 @@ def ds_decile_transition(spark, sf_dir):
     oracle=f"""
     WITH spend AS (
         SELECT c.c_mktsegment AS segment, o.o_custkey,
-               sum({_CENTS_SQL.format(c='o.o_totalprice')}) AS cents
+               sum({CENTS_SQL.format(c='o.o_totalprice')}) AS cents
         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         GROUP BY segment, o.o_custkey
     ), ranked AS (
@@ -149,7 +143,7 @@ def ds_percentile_distribution(spark, sf_dir):
         t["orders"]
         .join(maybe_broadcast(t["customer"], "customer"), F.col("o_custkey") == F.col("c_custkey"))
         .groupBy(F.col("c_mktsegment").alias("segment"), "o_custkey")
-        .agg(F.sum(_cents("o_totalprice")).alias("cents"))
+        .agg(F.sum(cents("o_totalprice")).alias("cents"))
     )
     w = W.partitionBy("segment").orderBy("cents", "o_custkey")
     ranked = spend.select(
@@ -233,12 +227,10 @@ def ds_quantity_discount_corr(spark, sf_dir):
             F.col("l_returnflag").alias("returnflag"),
             F.col("n").cast("bigint").alias("n"),
             F.when(cov >= 0, F.lit(1)).otherwise(F.lit(-1)).cast("bigint").alias("corr_sign"),
-            F.floor(
-                cov.cast("double") * cov.cast("double") * 1000000.0
-                / (varx.cast("double") * vary.cast("double"))
-            )
-            .cast("bigint")
-            .alias("r2_ppm"),
+            ppm(
+                cov.cast("double") * cov.cast("double"),
+                varx.cast("double") * vary.cast("double"),
+            ).alias("r2_ppm"),
         )
         .orderBy("returnflag")
     )
@@ -304,7 +296,7 @@ def ds_calendar_fact_align(spark, sf_dir):
     oracle=f"""
     WITH daily AS (
         SELECT c.c_mktsegment AS segment, CAST(o.o_orderdate AS DATE) AS day,
-               sum({_CENTS_SQL.format(c='o.o_totalprice')}) AS day_cents
+               sum({CENTS_SQL.format(c='o.o_totalprice')}) AS day_cents
         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         WHERE year(o.o_orderdate) = 1996
         GROUP BY segment, day
@@ -347,7 +339,7 @@ def ds_locf_gap_fill(spark, sf_dir):
             F.col("c_mktsegment").alias("segment"),
             F.col("o_orderdate").cast("date").alias("day"),
         )
-        .agg(F.sum(_cents("o_totalprice")).alias("day_cents"))
+        .agg(F.sum(cents("o_totalprice")).alias("day_cents"))
     )
     days = spark.range(1).select(
         F.explode(
@@ -382,7 +374,7 @@ def ds_locf_gap_fill(spark, sf_dir):
         SELECT p.p_brand AS brand,
                CAST(year(l.l_shipdate) AS BIGINT) AS yr,
                CAST(month(l.l_shipdate) AS BIGINT) AS mon,
-               sum({_CENTS_SQL.format(c='l.l_extendedprice')}) AS cents
+               sum({CENTS_SQL.format(c='l.l_extendedprice')}) AS cents
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         WHERE year(l.l_shipdate) = 1996
         GROUP BY brand, yr, mon
@@ -416,7 +408,7 @@ def ds_month_seasonality_index(spark, sf_dir):
             F.year("l_shipdate").cast("bigint").alias("yr"),
             F.month("l_shipdate").cast("bigint").alias("mon"),
         )
-        .agg(F.sum(_cents("l_extendedprice")).alias("cents"))
+        .agg(F.sum(cents("l_extendedprice")).alias("cents"))
     )
     year_total = F.sum("cents").over(W.partitionBy("brand", "yr"))
     return (

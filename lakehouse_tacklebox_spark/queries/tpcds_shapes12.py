@@ -34,15 +34,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from lakehouse_tacklebox_spark.functions import CENTS_SQL, cents, ppm
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables, maybe_broadcast
-
-_CENTS_SQL = "CAST(round(CAST({c} AS DECIMAL(14,2)) * 100) AS BIGINT)"
-
-
-def _cents(col) -> F.Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c.cast("decimal(14,2)") * 100).cast("bigint")
 
 
 @register(
@@ -50,7 +44,7 @@ def _cents(col) -> F.Column:
     tags=("tpcds-shape", "anti-join", "cohort"),
     oracle=f"""
     WITH y96 AS (
-        SELECT o_custkey, sum({_CENTS_SQL.format(c='o_totalprice')}) AS cents
+        SELECT o_custkey, sum({CENTS_SQL.format(c='o_totalprice')}) AS cents
         FROM orders WHERE year(o_orderdate) = 1996 GROUP BY o_custkey
     ), y97 AS (
         SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1997
@@ -83,7 +77,7 @@ def ds_churned_revenue_anti(spark, sf_dir):
     y96 = (
         o.filter(F.year("o_orderdate") == 1996)
         .groupBy("o_custkey")
-        .agg(F.sum(_cents("o_totalprice")).alias("cents"))
+        .agg(F.sum(cents("o_totalprice")).alias("cents"))
     )
     y97 = o.filter(F.year("o_orderdate") == 1997).select("o_custkey").distinct()
     churned = y96.join(y97, "o_custkey", "left_anti")
@@ -106,7 +100,7 @@ def ds_churned_revenue_anti(spark, sf_dir):
     oracle=f"""
     WITH daily AS (
         SELECT c.c_mktsegment AS segment, CAST(o.o_orderdate AS DATE) AS day,
-               sum({_CENTS_SQL.format(c='o.o_totalprice')}) AS day_cents
+               sum({CENTS_SQL.format(c='o.o_totalprice')}) AS day_cents
         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         WHERE year(o.o_orderdate) = 1996
         GROUP BY segment, day
@@ -140,7 +134,7 @@ def ds_centered_moving_window(spark, sf_dir):
             F.col("c_mktsegment").alias("segment"),
             F.col("o_orderdate").cast("date").alias("day"),
         )
-        .agg(F.sum(_cents("o_totalprice")).alias("day_cents"))
+        .agg(F.sum(cents("o_totalprice")).alias("day_cents"))
     )
     w = W.partitionBy("segment").orderBy("day").rowsBetween(-3, 3)
     return (
@@ -162,7 +156,7 @@ def ds_centered_moving_window(spark, sf_dir):
     oracle=f"""
     WITH cell AS (
         SELECT c.c_mktsegment AS segment, p.p_brand AS brand,
-               sum({_CENTS_SQL.format(c='l.l_extendedprice')}) AS cents
+               sum({CENTS_SQL.format(c='l.l_extendedprice')}) AS cents
         FROM lineitem l
         JOIN orders o ON l.l_orderkey = o.o_orderkey
         JOIN customer c ON o.o_custkey = c.c_custkey
@@ -200,7 +194,7 @@ def ds_nested_share_of_total(spark, sf_dir):
         .groupBy(
             F.col("c_mktsegment").alias("segment"), F.col("p_brand").alias("brand")
         )
-        .agg(F.sum(_cents("l_extendedprice")).alias("cents"))
+        .agg(F.sum(cents("l_extendedprice")).alias("cents"))
     )
     seg_w = W.partitionBy("segment")
     all_w = W.partitionBy()
@@ -209,18 +203,8 @@ def ds_nested_share_of_total(spark, sf_dir):
             "segment",
             "brand",
             F.col("cents").cast("bigint").alias("cents"),
-            F.floor(
-                F.col("cents").cast("double") * 1000000.0 / F.sum("cents").over(seg_w)
-            )
-            .cast("bigint")
-            .alias("brand_in_segment_ppm"),
-            F.floor(
-                F.sum("cents").over(seg_w).cast("double")
-                * 1000000.0
-                / F.sum("cents").over(all_w)
-            )
-            .cast("bigint")
-            .alias("segment_of_total_ppm"),
+            ppm("cents", F.sum("cents").over(seg_w)).alias("brand_in_segment_ppm"),
+            ppm(F.sum("cents").over(seg_w), F.sum("cents").over(all_w)).alias("segment_of_total_ppm"),
         )
         .orderBy("segment", "brand")
     )
@@ -288,8 +272,8 @@ def ds_running_distinct_parts(spark, sf_dir):
     WITH m AS (
         SELECT p.p_brand AS brand,
                count(*) AS n,
-               sum({_CENTS_SQL.format(c='l.l_extendedprice')}) AS cents,
-               CAST(median({_CENTS_SQL.format(c='l.l_extendedprice')}) AS DOUBLE)
+               sum({CENTS_SQL.format(c='l.l_extendedprice')}) AS cents,
+               CAST(median({CENTS_SQL.format(c='l.l_extendedprice')}) AS DOUBLE)
                    AS median_cents
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         GROUP BY brand
@@ -325,8 +309,8 @@ def ds_brand_skew_classes(spark, sf_dir):
         .groupBy(F.col("p_brand").alias("brand"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(_cents("l_extendedprice")).alias("cents"),
-            F.percentile(_cents("l_extendedprice"), F.lit(0.5)).alias("median_cents"),
+            F.sum(cents("l_extendedprice")).alias("cents"),
+            F.percentile(cents("l_extendedprice"), F.lit(0.5)).alias("median_cents"),
         )
     )
     mean_gt = F.col("cents").cast("double") * 10 > F.col("median_cents") * F.col("n") * 11

@@ -21,29 +21,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from lakehouse_tacklebox_spark.functions import REV_CENTS_SQL, ppm, rev_cents
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables, maybe_broadcast
-
-_CENTS_SQL = "CAST(round(CAST({c} AS DECIMAL(14,2)) * 100) AS BIGINT)"
-
-_REV_CENTS_SQL = (
-    "CAST(round(CAST(l.l_extendedprice AS DECIMAL(14,2)) "
-    "* CAST(1 - l.l_discount AS DECIMAL(7,4)) * 100) AS BIGINT)"
-)
-
-
-def _cents(col) -> F.Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c.cast("decimal(14,2)") * 100).cast("bigint")
-
-
-def _rev_cents() -> F.Column:
-    from lakehouse_tacklebox_spark.functions import dmoney, drate
-
-    return (
-        F.round(dmoney("l_extendedprice") * drate(F.lit(1) - F.col("l_discount")) * 100)
-        .cast("bigint")
-    )
 
 
 @register(
@@ -51,7 +31,7 @@ def _rev_cents() -> F.Column:
     tags=("tpcds-shape", "topk", "reaggregate"),
     oracle=f"""
     WITH brand_rev AS (
-        SELECT p.p_brand AS brand, sum({_REV_CENTS_SQL}) AS cents,
+        SELECT p.p_brand AS brand, sum({REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')}) AS cents,
                count(*) AS n_lines
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         GROUP BY brand
@@ -88,7 +68,7 @@ def ds_topk_with_others(spark, sf_dir):
         .join(maybe_broadcast(t["part"], "part"), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(F.col("p_brand").alias("brand"))
         .agg(
-            F.sum(_rev_cents()).alias("cents"),
+            F.sum(rev_cents()).alias("cents"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
@@ -179,7 +159,7 @@ def ds_exists_having_combo(spark, sf_dir):
     tags=("tpcds-shape", "window", "stats"),
     oracle=f"""
     WITH brand_rev AS (
-        SELECT p.p_brand AS brand, sum({_REV_CENTS_SQL}) AS cents
+        SELECT p.p_brand AS brand, sum({REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')}) AS cents
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         GROUP BY brand
     ), tot AS (
@@ -211,7 +191,7 @@ def ds_leave_one_out_avg(spark, sf_dir):
         t["lineitem"]
         .join(maybe_broadcast(t["part"], "part"), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(F.col("p_brand").alias("brand"))
-        .agg(F.sum(_rev_cents()).alias("cents"))
+        .agg(F.sum(rev_cents()).alias("cents"))
     )
     tot = brand_rev.agg(F.sum("cents").alias("t"), F.count(F.lit(1)).alias("n"))
     others = F.col("t") - F.col("cents")
@@ -224,11 +204,7 @@ def ds_leave_one_out_avg(spark, sf_dir):
             "brand",
             F.col("cents").cast("bigint").alias("cents"),
             F.when(beats, F.lit(1)).otherwise(F.lit(0)).cast("bigint").alias("beats_peers_by_10pct"),
-            F.floor(
-                F.col("cents").cast("double") * (F.col("n") - 1) * 1000000.0 / others
-            )
-            .cast("bigint")
-            .alias("vs_peer_avg_ppm"),
+            ppm(F.col("cents").cast("double") * (F.col("n") - 1), others).alias("vs_peer_avg_ppm"),
         )
         .orderBy("brand")
     )

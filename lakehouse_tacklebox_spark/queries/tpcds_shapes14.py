@@ -22,15 +22,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from lakehouse_tacklebox_spark.functions import CENTS_SQL, cents
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables, maybe_broadcast
-
-_CENTS_SQL = "CAST(round(CAST({c} AS DECIMAL(14,2)) * 100) AS BIGINT)"
-
-
-def _cents(col) -> F.Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c.cast("decimal(14,2)") * 100).cast("bigint")
 
 
 @register(
@@ -123,7 +117,7 @@ def ds_fallback_key_join(spark, sf_dir):
     WITH monthly AS (
         SELECT p.p_brand AS brand,
                CAST(date_trunc('month', l.l_shipdate) AS DATE) AS month,
-               sum({_CENTS_SQL.format(c='l.l_extendedprice')}) AS cents
+               sum({CENTS_SQL.format(c='l.l_extendedprice')}) AS cents
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         WHERE year(l.l_shipdate) = 1996
         GROUP BY brand, month
@@ -158,7 +152,7 @@ def ds_having_over_window(spark, sf_dir):
             F.col("p_brand").alias("brand"),
             F.date_trunc("month", "l_shipdate").cast("date").alias("month"),
         )
-        .agg(F.sum(_cents("l_extendedprice")).alias("cents"))
+        .agg(F.sum(cents("l_extendedprice")).alias("cents"))
     )
     return (
         monthly.groupBy("brand")

@@ -22,15 +22,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from lakehouse_tacklebox_spark.functions import CENTS_SQL, cents, ppm
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables, maybe_broadcast
-
-_CENTS_SQL = "CAST(round(CAST({c} AS DECIMAL(14,2)) * 100) AS BIGINT)"
-
-
-def _cents(col) -> F.Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c.cast("decimal(14,2)") * 100).cast("bigint")
 
 
 @register(
@@ -41,8 +35,8 @@ def _cents(col) -> F.Column:
         SELECT p.p_brand AS brand,
                count(*) AS n_lines,
                sum(CAST(l.l_quantity AS BIGINT)) AS total_qty,
-               sum({_CENTS_SQL.format(c='l.l_extendedprice')}) AS cents,
-               sum({_CENTS_SQL.format(c='l.l_extendedprice')}
+               sum({CENTS_SQL.format(c='l.l_extendedprice')}) AS cents,
+               sum({CENTS_SQL.format(c='l.l_extendedprice')}
                    * CAST(l.l_quantity AS BIGINT)) AS qty_cents
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         GROUP BY brand
@@ -80,8 +74,8 @@ def ds_weighted_avg_price_mix(spark, sf_dir):
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
             F.sum(qty).alias("total_qty"),
-            F.sum(_cents("l_extendedprice")).alias("cents"),
-            F.sum(_cents("l_extendedprice") * qty).alias("qty_cents"),
+            F.sum(cents("l_extendedprice")).alias("cents"),
+            F.sum(cents("l_extendedprice") * qty).alias("qty_cents"),
         )
     )
     skew = F.col("qty_cents") * F.col("n_lines") > F.col("cents") * F.col("total_qty")
@@ -92,12 +86,10 @@ def ds_weighted_avg_price_mix(spark, sf_dir):
             F.col("total_qty").cast("bigint").alias("total_qty"),
             F.col("cents").cast("bigint").alias("cents"),
             F.when(skew, F.lit(1)).otherwise(F.lit(0)).cast("bigint").alias("volume_skews_expensive"),
-            F.floor(
-                F.col("qty_cents").cast("double") * F.col("n_lines") * 1000000.0
-                / (F.col("cents").cast("double") * F.col("total_qty"))
-            )
-            .cast("bigint")
-            .alias("mix_index_ppm"),
+            ppm(
+                F.col("qty_cents").cast("double") * F.col("n_lines"),
+                F.col("cents").cast("double") * F.col("total_qty"),
+            ).alias("mix_index_ppm"),
         )
         .orderBy("brand")
     )

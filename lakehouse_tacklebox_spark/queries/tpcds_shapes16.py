@@ -31,15 +31,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from lakehouse_tacklebox_spark.functions import CENTS_SQL, cents, ppm
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables, maybe_broadcast
-
-_CENTS_SQL = "CAST(round(CAST({c} AS DECIMAL(14,2)) * 100) AS BIGINT)"
-
-
-def _cents(col) -> F.Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c.cast("decimal(14,2)") * 100).cast("bigint")
 
 
 @register(
@@ -48,8 +42,8 @@ def _cents(col) -> F.Column:
     oracle=f"""
     SELECT CAST(least(floor((l_quantity - 1) / 10), 4) AS BIGINT) AS band,
            CAST(count(*) AS BIGINT) AS n_lines,
-           CAST(sum({_CENTS_SQL.format(c='l_extendedprice')}) AS BIGINT) AS cents,
-           CAST(count(DISTINCT {_CENTS_SQL.format(c='l_extendedprice')}) AS BIGINT)
+           CAST(sum({CENTS_SQL.format(c='l_extendedprice')}) AS BIGINT) AS cents,
+           CAST(count(DISTINCT {CENTS_SQL.format(c='l_extendedprice')}) AS BIGINT)
                AS n_distinct_prices
     FROM lineitem
     GROUP BY band
@@ -73,8 +67,8 @@ def ds_quantity_band_stats(spark, sf_dir):
         li.groupBy(band.alias("band"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_lines"),
-            F.sum(_cents("l_extendedprice")).cast("bigint").alias("cents"),
-            F.countDistinct(_cents("l_extendedprice")).cast("bigint").alias("n_distinct_prices"),
+            F.sum(cents("l_extendedprice")).cast("bigint").alias("cents"),
+            F.countDistinct(cents("l_extendedprice")).cast("bigint").alias("n_distinct_prices"),
         )
         .orderBy("band")
     )
@@ -87,7 +81,7 @@ def ds_quantity_band_stats(spark, sf_dir):
     WITH d AS (
         SELECT l_returnflag,
                CAST(round(CAST(l_discount AS DECIMAL(5,4)) * 10000) AS BIGINT) AS bp,
-               {_CENTS_SQL.format(c='l_extendedprice')} AS cents,
+               {CENTS_SQL.format(c='l_extendedprice')} AS cents,
                count(*) OVER (PARTITION BY l_partkey) AS n_part,
                sum(CAST(round(CAST(l_discount AS DECIMAL(5,4)) * 10000) AS BIGINT))
                    OVER (PARTITION BY l_partkey) AS sum_bp
@@ -120,7 +114,7 @@ def ds_excess_discount_lines(spark, sf_dir):
     d = li.select(
         "l_returnflag",
         bp.alias("bp"),
-        _cents("l_extendedprice").alias("cents"),
+        cents("l_extendedprice").alias("cents"),
         F.count(F.lit(1)).over(w).alias("n_part"),
         F.sum(bp).over(w).alias("sum_bp"),
     )
@@ -142,7 +136,7 @@ def ds_excess_discount_lines(spark, sf_dir):
     SELECT p.p_type,
            CAST(count(DISTINCT p.p_partkey) AS BIGINT) AS n_parts,
            CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS total_qty,
-           CAST(sum({_CENTS_SQL.format(c='l.l_extendedprice')}) AS BIGINT) AS cents
+           CAST(sum({CENTS_SQL.format(c='l.l_extendedprice')}) AS BIGINT) AS cents
     FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
     WHERE p.p_retailprice >= 1200 AND p.p_retailprice < 1500
       AND l.l_shipdate >= TIMESTAMP '1996-01-01'
@@ -177,7 +171,7 @@ def ds_active_priced_parts(spark, sf_dir):
         .agg(
             F.countDistinct("p_partkey").cast("bigint").alias("n_parts"),
             F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("total_qty"),
-            F.sum(_cents("l_extendedprice")).cast("bigint").alias("cents"),
+            F.sum(cents("l_extendedprice")).cast("bigint").alias("cents"),
         )
         .orderBy("p_type")
     )
@@ -190,7 +184,7 @@ def ds_active_priced_parts(spark, sf_dir):
     WITH lines AS (
         SELECT n.n_name AS nation,
                CASE WHEN l.l_returnflag = 'R' THEN 1 ELSE 0 END AS ret,
-               {_CENTS_SQL.format(c='l.l_extendedprice')} AS cents
+               {CENTS_SQL.format(c='l.l_extendedprice')} AS cents
         FROM lineitem l
         JOIN orders o ON l.l_orderkey = o.o_orderkey
         JOIN customer c ON o.o_custkey = c.c_custkey
@@ -223,7 +217,7 @@ def ds_nation_return_refunds(spark, sf_dir):
     ret = F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
     lines = (
         t["lineitem"]
-        .select("l_orderkey", ret.alias("ret"), _cents("l_extendedprice").alias("cents"))
+        .select("l_orderkey", ret.alias("ret"), cents("l_extendedprice").alias("cents"))
         .join(t["orders"].select("o_orderkey", "o_custkey"), F.col("l_orderkey") == F.col("o_orderkey"))
         .join(
             maybe_broadcast(t["customer"].select("c_custkey", "c_nationkey"), "customer"),
@@ -239,9 +233,7 @@ def ds_nation_return_refunds(spark, sf_dir):
             F.sum(F.when(F.col("ret") == 1, F.col("cents")).otherwise(0))
             .cast("bigint")
             .alias("refund_cents"),
-            F.floor(F.sum("ret").cast("double") * 1000000.0 / F.count(F.lit(1)))
-            .cast("bigint")
-            .alias("return_ppm"),
+            ppm(F.sum("ret"), F.count(F.lit(1))).alias("return_ppm"),
         )
         .orderBy("nation")
     )
@@ -288,8 +280,8 @@ def ds_attribute_combo_census(spark, sf_dir):
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_parts"),
             F.countDistinct("p_brand").cast("bigint").alias("n_brands"),
-            F.min(_cents("p_retailprice")).cast("bigint").alias("min_price_cents"),
-            F.max(_cents("p_retailprice")).cast("bigint").alias("max_price_cents"),
+            F.min(cents("p_retailprice")).cast("bigint").alias("min_price_cents"),
+            F.max(cents("p_retailprice")).cast("bigint").alias("max_price_cents"),
         )
         .orderBy("p_type", "size_band")
     )
@@ -332,13 +324,13 @@ def ds_weekday_priority_matrix(spark, sf_dir):
     wd = (
         F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")) % 7
     )
-    cents = _cents("o_totalprice")
+    o_cents = cents("o_totalprice")
     weekend = F.when(wd.isin(2, 3), 1).otherwise(0)
     return (
         o.select(
             "o_orderpriority",
             wd.alias("wd"),
-            cents.alias("cents"),
+            o_cents.alias("cents"),
             weekend.alias("wk"),
         )
         .groupBy("o_orderpriority")
@@ -351,9 +343,7 @@ def ds_weekday_priority_matrix(spark, sf_dir):
             F.sum(F.when(F.col("wd") == 4, F.col("cents")).otherwise(0))
             .cast("bigint")
             .alias("mon_cents"),
-            F.floor(F.sum("wk").cast("double") * 1000000.0 / F.count(F.lit(1)))
-            .cast("bigint")
-            .alias("weekend_ppm"),
+            ppm(F.sum("wk"), F.count(F.lit(1))).alias("weekend_ppm"),
         )
         .orderBy("o_orderpriority")
     )

@@ -26,27 +26,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from lakehouse_tacklebox_spark.functions import REV_CENTS_SQL, ppm, rev_cents
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables, maybe_broadcast
-
-_CENTS_SQL = "CAST(round(CAST({c} AS DECIMAL(14,2)) * 100) AS BIGINT)"
-_REV_CENTS_SQL = (
-    "CAST(round(CAST({p} AS DECIMAL(14,2)) * (1 - CAST({d} AS DECIMAL(5,4))) * 100, 0)"
-    " AS BIGINT)"
-)
-
-
-def _cents(col) -> F.Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c.cast("decimal(14,2)") * 100).cast("bigint")
-
-
-def _rev_cents() -> F.Column:
-    return F.round(
-        F.col("l_extendedprice").cast("decimal(14,2)")
-        * (1 - F.col("l_discount").cast("decimal(5,4)"))
-        * 100
-    ).cast("bigint")
 
 
 @register(
@@ -58,7 +40,7 @@ def _rev_cents() -> F.Column:
                     THEN 'expedited' ELSE 'standard' END AS channel,
                p.p_brand AS brand,
                CAST(year(o.o_orderdate) AS BIGINT) AS yr,
-               sum({_REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')})
+               sum({REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')})
                    AS rev_cents
         FROM lineitem l
         JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -107,7 +89,7 @@ def ds_channel_union_yoy(spark, sf_dir):
             F.col("p_brand").alias("brand"),
             F.year("o_orderdate").cast("bigint").alias("yr"),
         )
-        .agg(F.sum(_rev_cents()).alias("rev_cents"))
+        .agg(F.sum(rev_cents()).alias("rev_cents"))
     )
     w = W.partitionBy("channel", "brand").orderBy("yr")
     lagged = y.withColumn("prev_cents", F.lag("rev_cents").over(w))
@@ -119,9 +101,7 @@ def ds_channel_union_yoy(spark, sf_dir):
             "yr",
             F.col("rev_cents").cast("bigint").alias("rev_cents"),
             F.col("prev_cents").cast("bigint").alias("prev_cents"),
-            F.floor(F.col("rev_cents").cast("double") * 1000000.0 / F.col("prev_cents"))
-            .cast("bigint")
-            .alias("yoy_ppm"),
+            ppm("rev_cents", "prev_cents").alias("yoy_ppm"),
         )
         .orderBy("channel", "brand", "yr")
     )
@@ -135,9 +115,9 @@ def ds_channel_union_yoy(spark, sf_dir):
         SELECT CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
                     THEN 'expedited' ELSE 'standard' END AS channel,
                n.n_name AS nation,
-               {_REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')} AS rev,
+               {REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')} AS rev,
                CASE WHEN l.l_returnflag = 'R'
-                    THEN {_REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')}
+                    THEN {REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')}
                     ELSE 0 END AS ret
         FROM lineitem l
         JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -171,8 +151,8 @@ def ds_profit_rollup_channels(spark, sf_dir):
     channel = F.when(
         F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "expedited"
     ).otherwise("standard")
-    rev = _rev_cents()
-    ret = F.when(F.col("l_returnflag") == "R", _rev_cents()).otherwise(F.lit(0))
+    rev = rev_cents()
+    ret = F.when(F.col("l_returnflag") == "R", rev_cents()).otherwise(F.lit(0))
     base = (
         t["lineitem"]
         .join(t["orders"].select("o_orderkey", "o_orderpriority"),
@@ -243,9 +223,7 @@ def ds_hourly_type_share(spark, sf_dir):
             "hr",
             F.col("n").cast("bigint").alias("n_events"),
             F.col("n_hr").cast("bigint").alias("n_hour_total"),
-            F.floor(F.col("n").cast("double") * 1000000.0 / F.col("n_hr"))
-            .cast("bigint")
-            .alias("share_ppm"),
+            ppm("n", "n_hr").alias("share_ppm"),
         )
         .orderBy("hr", "event_type")
     )
@@ -315,9 +293,9 @@ def ds_bigticket_customer_split(spark, sf_dir):
     WITH base AS (
         SELECT n.n_name AS nation,
                CASE WHEN p.p_type = 'PROMO'
-                    THEN {_REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')}
+                    THEN {REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')}
                     ELSE 0 END AS promo,
-               {_REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')} AS rev
+               {REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')} AS rev
         FROM lineitem l
         JOIN part p ON l.l_partkey = p.p_partkey
         JOIN supplier s ON l.l_suppkey = s.s_suppkey
@@ -344,8 +322,8 @@ def ds_promo_revenue_ratio(spark, sf_dir):
     policy), supplier/nation broadcast; |nations| output rows.
     """
     t = load_tables(spark, sf_dir, ["lineitem", "part", "supplier", "nation"])
-    rev = _rev_cents()
-    promo = F.when(F.col("p_type") == "PROMO", _rev_cents()).otherwise(F.lit(0))
+    rev = rev_cents()
+    promo = F.when(F.col("p_type") == "PROMO", rev_cents()).otherwise(F.lit(0))
     base = (
         t["lineitem"]
         .join(maybe_broadcast(t["part"].select("p_partkey", "p_type"), "part"),
@@ -361,9 +339,7 @@ def ds_promo_revenue_ratio(spark, sf_dir):
         .agg(
             F.sum("promo").cast("bigint").alias("promo_cents"),
             F.sum("rev").cast("bigint").alias("total_cents"),
-            F.floor(F.sum("promo").cast("double") * 1000000.0 / F.sum("rev"))
-            .cast("bigint")
-            .alias("promo_ppm"),
+            ppm(F.sum("promo"), F.sum("rev")).alias("promo_ppm"),
         )
         .orderBy("nation")
     )
@@ -377,7 +353,7 @@ def ds_promo_revenue_ratio(spark, sf_dir):
         SELECT l_orderkey,
                count(DISTINCT l_suppkey) AS n_supp,
                sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS n_ret,
-               sum({_REV_CENTS_SQL.format(p='l_extendedprice', d='l_discount')}) AS rev
+               sum({REV_CENTS_SQL.format(p='l_extendedprice', d='l_discount')}) AS rev
         FROM lineitem
         GROUP BY l_orderkey
     )
@@ -408,7 +384,7 @@ def ds_multi_supplier_return_orders(spark, sf_dir):
         .agg(
             F.countDistinct("l_suppkey").alias("n_supp"),
             F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0)).alias("n_ret"),
-            F.sum(_rev_cents()).alias("rev"),
+            F.sum(rev_cents()).alias("rev"),
         )
         .filter((F.col("n_supp") >= 2) & (F.col("n_ret") >= 1))
     )

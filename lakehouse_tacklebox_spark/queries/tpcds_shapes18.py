@@ -29,27 +29,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from lakehouse_tacklebox_spark.functions import CENTS_SQL, REV_CENTS_SQL, cents, ppm, rev_cents
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables, maybe_broadcast
-
-_CENTS_SQL = "CAST(round(CAST({c} AS DECIMAL(14,2)) * 100) AS BIGINT)"
-_REV_CENTS_SQL = (
-    "CAST(round(CAST({p} AS DECIMAL(14,2)) * (1 - CAST({d} AS DECIMAL(5,4))) * 100, 0)"
-    " AS BIGINT)"
-)
-
-
-def _cents(col) -> F.Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c.cast("decimal(14,2)") * 100).cast("bigint")
-
-
-def _rev_cents() -> F.Column:
-    return F.round(
-        F.col("l_extendedprice").cast("decimal(14,2)")
-        * (1 - F.col("l_discount").cast("decimal(5,4)"))
-        * 100
-    ).cast("bigint")
 
 
 @register(
@@ -91,12 +73,12 @@ def ds_cumulative_priority_crossover(spark, sf_dir):
     """
     o = load_tables(spark, sf_dir, ["orders"])["orders"]
     month_idx = (F.year("o_orderdate") * 12 + F.month("o_orderdate")).cast("bigint")
-    cents = _cents("o_totalprice")
+    o_cents = cents("o_totalprice")
     monthly = o.groupBy(month_idx.alias("month_idx")).agg(
-        F.sum(F.when(F.col("o_orderpriority") == "1-URGENT", cents).otherwise(0)).alias(
+        F.sum(F.when(F.col("o_orderpriority") == "1-URGENT", o_cents).otherwise(0)).alias(
             "urgent_cents"
         ),
-        F.sum(F.when(F.col("o_orderpriority") == "5-LOW", cents).otherwise(0)).alias(
+        F.sum(F.when(F.col("o_orderpriority") == "5-LOW", o_cents).otherwise(0)).alias(
             "low_cents"
         ),
     )
@@ -121,7 +103,7 @@ def ds_cumulative_priority_crossover(spark, sf_dir):
     WITH g AS (
         SELECT n.n_name AS nation, c.c_mktsegment AS segment,
                grouping(n.n_name) * 2 + grouping(c.c_mktsegment) AS gflag,
-               sum({_CENTS_SQL.format(c='o.o_totalprice')}) AS cents
+               sum({CENTS_SQL.format(c='o.o_totalprice')}) AS cents
         FROM orders o
         JOIN customer c ON o.o_custkey = c.c_custkey
         JOIN nation n ON c.c_nationkey = n.n_nationkey
@@ -160,7 +142,7 @@ def ds_rollup_level_share_rank(spark, sf_dir):
         )
         .join(maybe_broadcast(t["nation"], "nation"), F.col("c_nationkey") == F.col("n_nationkey"))
         .select(F.col("n_name").alias("nation"), F.col("c_mktsegment").alias("segment"),
-                _cents("o_totalprice").alias("cents"))
+                cents("o_totalprice").alias("cents"))
         .rollup("nation", "segment")
         .agg(
             F.sum("cents").alias("cents"),
@@ -191,7 +173,7 @@ def ds_rollup_level_share_rank(spark, sf_dir):
         SELECT p.p_brand AS brand,
                CAST(year(l.l_shipdate) * 12 + month(l.l_shipdate) AS BIGINT)
                    AS month_idx,
-               sum({_REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')})
+               sum({REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')})
                    AS cents
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         GROUP BY brand, month_idx
@@ -229,7 +211,7 @@ def ds_brand_month_deviation(spark, sf_dir):
         .join(maybe_broadcast(t["part"].select("p_partkey", "p_brand"), "part"),
               F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(F.col("p_brand").alias("brand"), month_idx.alias("month_idx"))
-        .agg(F.sum(_rev_cents()).alias("cents"))
+        .agg(F.sum(rev_cents()).alias("cents"))
     )
     w = W.partitionBy("brand")
     s = m.select(
@@ -259,7 +241,7 @@ def ds_brand_month_deviation(spark, sf_dir):
     oracle=f"""
     WITH t AS (
         SELECT p.p_type AS ptype, p.p_brand AS brand,
-               sum({_REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')})
+               sum({REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')})
                    AS cents
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         WHERE l.l_shipdate >= TIMESTAMP '1997-01-01'
@@ -295,18 +277,15 @@ def ds_type_share_in_category(spark, sf_dir):
         li.join(maybe_broadcast(t["part"].select("p_partkey", "p_type", "p_brand"), "part"),
                 F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(F.col("p_type").alias("ptype"), F.col("p_brand").alias("brand"))
-        .agg(F.sum(_rev_cents()).alias("cents"))
+        .agg(F.sum(rev_cents()).alias("cents"))
     )
-    share = F.floor(
-        F.col("cents").cast("double") * 1000000.0
-        / F.sum("cents").over(W.partitionBy("ptype"))
-    )
+    share = ppm("cents", F.sum("cents").over(W.partitionBy("ptype")))
     return (
         agg.select(
             "ptype",
             "brand",
             F.col("cents").cast("bigint").alias("cents"),
-            share.cast("bigint").alias("share_ppm"),
+            share.alias("share_ppm"),
         )
         .orderBy("ptype", "brand")
     )

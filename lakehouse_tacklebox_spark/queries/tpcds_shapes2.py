@@ -29,35 +29,12 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from lakehouse_tacklebox_spark.functions import dmoney, drate
+from lakehouse_tacklebox_spark.functions import CENTS_SQL, REV_CENTS_SQL, cents, ppm, rev_cents
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables
 
 
-def _rev_cents(price_col: str = "l_extendedprice", disc_col: str = "l_discount") -> F.Column:
-    """Per-row discounted revenue in exact integer cents: the decimal
-    product is exact, round-to-cents happens per row, the aggregate adds
-    BIGINTs — no float summation order can diverge from the oracle."""
-    return (
-        F.round(dmoney(price_col) * drate(F.lit(1) - F.col(disc_col)) * 100)
-        .cast("bigint")
-    )
-
-
-_REV_CENTS_SQL = (
-    "CAST(round(CAST(l_extendedprice AS DECIMAL(14,2)) "
-    "* CAST(1 - l_discount AS DECIMAL(7,4)) * 100) AS BIGINT)"
-)
-
-_CENTS_SQL = "CAST(round(CAST({c} AS DECIMAL(14,2)) * 100) AS BIGINT)"
-
 _HIGH = "o_orderpriority IN ('1-URGENT', '2-HIGH')"
-
-
-def _ppm(a, b) -> F.Column:
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return F.floor(a.cast("double") * 1000000.0 / b).cast("bigint")
 
 
 @register(
@@ -170,7 +147,7 @@ def ds_frequent_buyer_buckets(spark, sf_dir):
     WITH base AS (
         SELECT n.n_name AS nation,
                EXTRACT(year FROM o.o_orderdate) AS order_year,
-               sum({_CENTS_SQL.format(c='o.o_totalprice')}) AS sales_cents
+               sum({CENTS_SQL.format(c='o.o_totalprice')}) AS sales_cents
         FROM orders o
         JOIN customer c ON o.o_custkey = c.c_custkey
         JOIN nation n ON c.c_nationkey = n.n_nationkey
@@ -205,14 +182,14 @@ def ds_rollup_level_rank(spark, sf_dir):
     by grouping_id, so the rank shuffle moves grouped rows only.
     """
     t = load_tables(spark, sf_dir, ["orders", "customer", "nation"])
-    cents = (
-        F.round(dmoney("o_totalprice") * 100).cast("bigint")
+    o_cents = (
+        cents("o_totalprice")
     )
     base = (
         t["orders"]
         .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select(F.col("n_name").alias("nation"), F.year("o_orderdate").alias("order_year"), cents.alias("cents"))
+        .select(F.col("n_name").alias("nation"), F.year("o_orderdate").alias("order_year"), o_cents.alias("cents"))
         .rollup("nation", "order_year")
         .agg(F.sum("cents").alias("sales_cents"))
     )
@@ -240,12 +217,12 @@ def ds_rollup_level_rank(spark, sf_dir):
     bench=True,
     oracle=f"""
     SELECT n.n_name AS nation,
-           CAST(sum({_REV_CENTS_SQL}) AS BIGINT) AS gross_cents,
-           CAST(sum(CASE WHEN l.l_returnflag = 'R' THEN {_REV_CENTS_SQL} ELSE 0 END) AS BIGINT) AS returned_cents,
-           CAST(sum({_REV_CENTS_SQL})
-                - sum(CASE WHEN l.l_returnflag = 'R' THEN {_REV_CENTS_SQL} ELSE 0 END) AS BIGINT) AS net_cents,
-           CAST(floor(CAST(sum(CASE WHEN l.l_returnflag = 'R' THEN {_REV_CENTS_SQL} ELSE 0 END) AS DOUBLE)
-                      * 1000000.0 / sum({_REV_CENTS_SQL})) AS BIGINT) AS return_ppm
+           CAST(sum({REV_CENTS_SQL.format(p='l_extendedprice', d='l_discount')}) AS BIGINT) AS gross_cents,
+           CAST(sum(CASE WHEN l.l_returnflag = 'R' THEN {REV_CENTS_SQL.format(p='l_extendedprice', d='l_discount')} ELSE 0 END) AS BIGINT) AS returned_cents,
+           CAST(sum({REV_CENTS_SQL.format(p='l_extendedprice', d='l_discount')})
+                - sum(CASE WHEN l.l_returnflag = 'R' THEN {REV_CENTS_SQL.format(p='l_extendedprice', d='l_discount')} ELSE 0 END) AS BIGINT) AS net_cents,
+           CAST(floor(CAST(sum(CASE WHEN l.l_returnflag = 'R' THEN {REV_CENTS_SQL.format(p='l_extendedprice', d='l_discount')} ELSE 0 END) AS DOUBLE)
+                      * 1000000.0 / sum({REV_CENTS_SQL.format(p='l_extendedprice', d='l_discount')})) AS BIGINT) AS return_ppm
     FROM lineitem l
     JOIN supplier s ON l.l_suppkey = s.s_suppkey
     JOIN nation n ON s.s_nationkey = n.n_nationkey
@@ -263,7 +240,7 @@ def ds_returns_net(spark, sf_dir):
     virtually all rows before the shuffle.
     """
     t = load_tables(spark, sf_dir, ["lineitem", "supplier", "nation"])
-    rev = _rev_cents()
+    rev = rev_cents()
     returned = F.when(F.col("l_returnflag") == "R", rev).otherwise(F.lit(0))
     agg = (
         t["lineitem"]
@@ -280,7 +257,7 @@ def ds_returns_net(spark, sf_dir):
         "gross_cents",
         "returned_cents",
         (F.col("gross_cents") - F.col("returned_cents")).alias("net_cents"),
-        _ppm("returned_cents", "gross_cents").alias("return_ppm"),
+        ppm("returned_cents", "gross_cents").alias("return_ppm"),
     ).orderBy("nation")
 
 
@@ -292,7 +269,7 @@ def ds_returns_net(spark, sf_dir):
     WITH q AS (
         SELECT n.n_name AS nation,
                CAST(date_trunc('quarter', o.o_orderdate) AS DATE) AS quarter,
-               sum({_CENTS_SQL.format(c='o.o_totalprice')}) AS cents
+               sum({CENTS_SQL.format(c='o.o_totalprice')}) AS cents
         FROM orders o
         JOIN customer c ON o.o_custkey = c.c_custkey
         JOIN nation n ON c.c_nationkey = n.n_nationkey
@@ -328,12 +305,12 @@ def ds_quarterly_share_shift(spark, sf_dir):
             F.col("n_name").alias("nation"),
             F.date_trunc("quarter", "o_orderdate").cast("date").alias("quarter"),
         )
-        .agg(F.sum(F.round(dmoney("o_totalprice") * 100).cast("bigint")).alias("cents"))
+        .agg(F.sum(cents("o_totalprice")).alias("cents"))
     )
     shares = q.select(
         "nation",
         "quarter",
-        _ppm("cents", F.sum("cents").over(W.partitionBy("quarter"))).alias("share_ppm"),
+        ppm("cents", F.sum("cents").over(W.partitionBy("quarter"))).alias("share_ppm"),
     )
     lagw = W.partitionBy("nation").orderBy("quarter")
     return shares.select(
@@ -410,7 +387,7 @@ def ds_repeat_purchase_gap(spark, sf_dir):
             "n_repeat_customers",
             "total_gap_days",
             "n_gaps",
-            _ppm("total_gap_days", "n_gaps").alias("avg_gap_microdays"),
+            ppm("total_gap_days", "n_gaps").alias("avg_gap_microdays"),
         )
         .orderBy("segment")
     )
@@ -466,7 +443,7 @@ def ds_customer_channel_overlap(spark, sf_dir):
     tags=("tpcds-shape", "window", "ntile"),
     oracle=f"""
     WITH spend AS (
-        SELECT o_custkey, sum({_CENTS_SQL.format(c='o_totalprice')}) AS cents
+        SELECT o_custkey, sum({CENTS_SQL.format(c='o_totalprice')}) AS cents
         FROM orders GROUP BY o_custkey
     ), banded AS (
         SELECT o_custkey, cents,
@@ -495,7 +472,7 @@ def ds_ntile_spend_bands(spark, sf_dir):
     """
     o = load_tables(spark, sf_dir, ["orders"])["orders"]
     spend = o.groupBy("o_custkey").agg(
-        F.sum(F.round(dmoney("o_totalprice") * 100).cast("bigint")).alias("cents")
+        F.sum(cents("o_totalprice")).alias("cents")
     )
     banded = spend.withColumn(
         "band", F.ntile(4).over(W.orderBy(F.desc("cents"), "o_custkey"))

@@ -16,30 +16,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from lakehouse_tacklebox_spark.functions import dmoney, drate
+from lakehouse_tacklebox_spark.functions import CENTS_SQL, REV_CENTS_SQL, cents, ppm, rev_cents
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables, maybe_broadcast
-
-
-def _ppm(a, b) -> F.Column:
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return F.floor(a.cast("double") * 1000000.0 / b).cast("bigint")
-
-
-_CENTS_SQL = "CAST(round(CAST({c} AS DECIMAL(14,2)) * 100) AS BIGINT)"
-
-_REV_CENTS_SQL = (
-    "CAST(round(CAST(l_extendedprice AS DECIMAL(14,2)) "
-    "* CAST(1 - l_discount AS DECIMAL(7,4)) * 100) AS BIGINT)"
-)
-
-
-def _rev_cents() -> F.Column:
-    return (
-        F.round(dmoney("l_extendedprice") * drate(F.lit(1) - F.col("l_discount")) * 100)
-        .cast("bigint")
-    )
 
 
 @register(
@@ -51,7 +30,7 @@ def _rev_cents() -> F.Column:
         SELECT n.n_name AS nation,
                (EXTRACT(year FROM o.o_orderdate) * 12
                 + EXTRACT(month FROM o.o_orderdate)) AS month_idx,
-               sum({_CENTS_SQL.format(c='o.o_totalprice')}) AS cents
+               sum({CENTS_SQL.format(c='o.o_totalprice')}) AS cents
         FROM orders o
         JOIN customer c ON o.o_custkey = c.c_custkey
         JOIN nation n ON c.c_nationkey = n.n_nationkey
@@ -93,7 +72,7 @@ def ds_moving_avg_deviation(spark, sf_dir):
             .cast("bigint")
             .alias("month_idx"),
         )
-        .agg(F.sum(F.round(dmoney("o_totalprice") * 100).cast("bigint")).alias("cents"))
+        .agg(F.sum(cents("o_totalprice")).alias("cents"))
     )
     w = W.partitionBy("nation").orderBy("month_idx").rowsBetween(-1, 1)
     win = monthly.select(
@@ -107,11 +86,7 @@ def ds_moving_avg_deviation(spark, sf_dir):
         "nation",
         "month_idx",
         "cents",
-        F.floor(
-            F.col("cents").cast("double") * F.col("win_n") * 1000000.0 / F.col("win_cents")
-        )
-        .cast("bigint")
-        .alias("vs_moving_avg_ppm"),
+        ppm(F.col("cents").cast("double") * F.col("win_n"), "win_cents").alias("vs_moving_avg_ppm"),
     ).orderBy("nation", "month_idx")
 
 
@@ -176,9 +151,9 @@ def ds_first_purchase_cohort(spark, sf_dir):
     oracle=f"""
     SELECT p_brand,
            CAST(count(*) AS BIGINT) AS n_parts,
-           quantile_cont({_CENTS_SQL.format(c='p_retailprice')}, 0.5) AS median_price_cents,
-           CAST(min({_CENTS_SQL.format(c='p_retailprice')}) AS BIGINT) AS min_cents,
-           CAST(max({_CENTS_SQL.format(c='p_retailprice')}) AS BIGINT) AS max_cents
+           quantile_cont({CENTS_SQL.format(c='p_retailprice')}, 0.5) AS median_price_cents,
+           CAST(min({CENTS_SQL.format(c='p_retailprice')}) AS BIGINT) AS min_cents,
+           CAST(max({CENTS_SQL.format(c='p_retailprice')}) AS BIGINT) AS max_cents
     FROM part
     GROUP BY p_brand
     ORDER BY p_brand
@@ -196,9 +171,9 @@ def ds_median_brand_price(spark, sf_dir):
     instead.
     """
     p = load_tables(spark, sf_dir, ["part"])["part"]
-    cents = F.round(dmoney("p_retailprice") * 100).cast("bigint")
+    p_cents = cents("p_retailprice")
     return (
-        p.select("p_brand", cents.alias("cents"))
+        p.select("p_brand", p_cents.alias("cents"))
         .groupBy("p_brand")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_parts"),
@@ -216,7 +191,7 @@ def ds_median_brand_price(spark, sf_dir):
     bench=True,
     oracle=f"""
     WITH brand_rev AS (
-        SELECT p.p_brand, sum({_REV_CENTS_SQL}) AS cents
+        SELECT p.p_brand, sum({REV_CENTS_SQL.format(p='l_extendedprice', d='l_discount')}) AS cents
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         GROUP BY p.p_brand
     ), ranked AS (
@@ -249,7 +224,7 @@ def ds_pareto_brands(spark, sf_dir):
         t["lineitem"]
         .join(maybe_broadcast(t["part"], "part"), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_brand")
-        .agg(F.sum(_rev_cents()).alias("cents"))
+        .agg(F.sum(rev_cents()).alias("cents"))
     )
     cum_w = W.orderBy(F.desc("cents"), "p_brand").rowsBetween(W.unboundedPreceding, 0)
     ranked = brand_rev.select(
@@ -260,7 +235,7 @@ def ds_pareto_brands(spark, sf_dir):
     )
     return (
         ranked.filter((F.col("cum_cents") - F.col("cents")) * 5 < F.col("total_cents") * 4)
-        .select("p_brand", "cents", _ppm("cum_cents", "total_cents").alias("cum_share_ppm"))
+        .select("p_brand", "cents", ppm("cum_cents", "total_cents").alias("cum_share_ppm"))
         .orderBy(F.desc("cents"), "p_brand")
     )
 
@@ -328,7 +303,7 @@ def ds_reactivated_customers(spark, sf_dir):
     tags=("tpcds-shape", "window", "percentile"),
     oracle=f"""
     WITH spend AS (
-        SELECT o_custkey, sum({_CENTS_SQL.format(c='o_totalprice')}) AS cents
+        SELECT o_custkey, sum({CENTS_SQL.format(c='o_totalprice')}) AS cents
         FROM orders GROUP BY o_custkey
     ), pr AS (
         SELECT o_custkey, CAST(cents AS BIGINT) AS cents,
@@ -352,7 +327,7 @@ def ds_top_percent_customers(spark, sf_dir):
     """
     o = load_tables(spark, sf_dir, ["orders"])["orders"]
     spend = o.groupBy("o_custkey").agg(
-        F.sum(F.round(dmoney("o_totalprice") * 100).cast("bigint")).alias("cents")
+        F.sum(cents("o_totalprice")).alias("cents")
     )
     pr = spend.select(
         "o_custkey",
@@ -375,7 +350,7 @@ def ds_top_percent_customers(spark, sf_dir):
         SELECT n.n_name AS nation,
                (EXTRACT(year FROM o.o_orderdate) * 4
                 + CAST(floor((EXTRACT(month FROM o.o_orderdate) - 1) / 3) AS INT)) AS q_idx,
-               sum({_CENTS_SQL.format(c='o.o_totalprice')}) AS cents
+               sum({CENTS_SQL.format(c='o.o_totalprice')}) AS cents
         FROM orders o
         JOIN customer c ON o.o_custkey = c.c_custkey
         JOIN nation n ON c.c_nationkey = n.n_nationkey
@@ -413,7 +388,7 @@ def ds_growth_streaks(spark, sf_dir):
         .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy(F.col("n_name").alias("nation"), q_idx.alias("q_idx"))
-        .agg(F.sum(F.round(dmoney("o_totalprice") * 100).cast("bigint")).alias("cents"))
+        .agg(F.sum(cents("o_totalprice")).alias("cents"))
     )
     w = W.partitionBy("nation").orderBy("q_idx")
     flagged = q.select(
@@ -443,7 +418,7 @@ def ds_growth_streaks(spark, sf_dir):
     WITH cell AS (
         SELECT c.c_mktsegment AS segment, o.o_orderpriority AS priority,
                count(*) AS n_orders,
-               sum({_CENTS_SQL.format(c='o.o_totalprice')}) AS cents
+               sum({CENTS_SQL.format(c='o.o_totalprice')}) AS cents
         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         GROUP BY segment, priority
     )
@@ -474,7 +449,7 @@ def ds_priority_segment_matrix(spark, sf_dir):
         )
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            F.sum(F.round(dmoney("o_totalprice") * 100).cast("bigint")).alias("cents"),
+            F.sum(cents("o_totalprice")).alias("cents"),
         )
     )
     return cell.select(
@@ -482,7 +457,7 @@ def ds_priority_segment_matrix(spark, sf_dir):
         "priority",
         "n_orders",
         F.col("cents").cast("bigint").alias("cents"),
-        _ppm("cents", F.sum("cents").over(W.partitionBy("segment"))).alias(
+        ppm("cents", F.sum("cents").over(W.partitionBy("segment"))).alias(
             "segment_share_ppm"
         ),
     ).orderBy("segment", "priority")

@@ -26,30 +26,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from lakehouse_tacklebox_spark.functions import dmoney, drate
+from lakehouse_tacklebox_spark.functions import CENTS_SQL, REV_CENTS_SQL, cents, ppm, rev_cents
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables, maybe_broadcast
-
-
-def _ppm(a, b) -> F.Column:
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return F.floor(a.cast("double") * 1000000.0 / b).cast("bigint")
-
-
-_CENTS_SQL = "CAST(round(CAST({c} AS DECIMAL(14,2)) * 100) AS BIGINT)"
-
-_REV_CENTS_SQL = (
-    "CAST(round(CAST(l_extendedprice AS DECIMAL(14,2)) "
-    "* CAST(1 - l_discount AS DECIMAL(7,4)) * 100) AS BIGINT)"
-)
-
-
-def _rev_cents() -> F.Column:
-    return (
-        F.round(dmoney("l_extendedprice") * drate(F.lit(1) - F.col("l_discount")) * 100)
-        .cast("bigint")
-    )
 
 
 @register(
@@ -100,12 +79,10 @@ def ds_quantity_dispersion(spark, sf_dir):
             F.sum(q * q).cast("bigint").alias("sum_qty_sq"),
         )
     )
-    disp = F.floor(
-        F.col("n_lines").cast("double")
-        * F.col("sum_qty_sq").cast("double")
-        * F.lit(1000000.0)
-        / (F.col("sum_qty").cast("double") * F.col("sum_qty").cast("double"))
-    ).cast("bigint")
+    disp = ppm(
+        F.col("n_lines").cast("double") * F.col("sum_qty_sq").cast("double"),
+        F.col("sum_qty").cast("double") * F.col("sum_qty").cast("double"),
+    )
     return per_brand.select(
         "brand", "n_lines", "sum_qty", "sum_qty_sq", disp.alias("dispersion_ppm")
     ).orderBy("brand")
@@ -117,7 +94,7 @@ def ds_quantity_dispersion(spark, sf_dir):
     oracle=f"""
     WITH per_part AS (
         SELECT p.p_brand AS brand, l.l_partkey AS partkey,
-               sum({_REV_CENTS_SQL.replace('l_extendedprice', 'l.l_extendedprice').replace('1 - l_discount', '1 - l.l_discount')}) AS cents
+               sum({REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')}) AS cents
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         GROUP BY brand, partkey
     ), branded AS (
@@ -153,7 +130,7 @@ def ds_low_velocity_parts(spark, sf_dir):
         t["lineitem"]
         .join(maybe_broadcast(t["part"], "part"), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(F.col("p_brand").alias("brand"), F.col("l_partkey").alias("partkey"))
-        .agg(F.sum(_rev_cents()).cast("bigint").alias("cents"))
+        .agg(F.sum(rev_cents()).cast("bigint").alias("cents"))
     )
     wb = W.partitionBy("brand")
     branded = per_part.select(
@@ -171,7 +148,7 @@ def ds_low_velocity_parts(spark, sf_dir):
             "brand",
             "partkey",
             "cents",
-            _ppm("cents", "brand_cents").alias("brand_share_ppm"),
+            ppm("cents", "brand_cents").alias("brand_share_ppm"),
         )
         .orderBy("brand", "partkey")
     )
@@ -185,7 +162,7 @@ def ds_low_velocity_parts(spark, sf_dir):
         SELECT (extract(dow FROM o_orderdate)) AS dow,
                CAST(floor(date_diff('day', DATE '1970-01-01',
                                     CAST(o_orderdate AS DATE)) / 7) AS BIGINT) AS week_idx,
-               sum({_CENTS_SQL.format(c='o_totalprice')}) AS cents
+               sum({CENTS_SQL.format(c='o_totalprice')}) AS cents
         FROM orders
         GROUP BY dow, week_idx
     ), laged AS (
@@ -221,7 +198,7 @@ def ds_weekday_wow_ratio(spark, sf_dir):
         F.floor(F.unix_date(F.col("o_orderdate").cast("date")) / 7)
         .cast("bigint")
         .alias("week_idx"),
-    ).agg(F.sum(F.round(dmoney("o_totalprice") * 100).cast("bigint")).alias("cents"))
+    ).agg(F.sum(cents("o_totalprice")).alias("cents"))
     lw = W.partitionBy("dow").orderBy("week_idx")
     laged = weekly.select(
         "dow",
@@ -236,7 +213,7 @@ def ds_weekday_wow_ratio(spark, sf_dir):
             "week_idx",
             "cents",
             "prev_week_cents",
-            _ppm("cents", "prev_week_cents").alias("wow_ppm"),
+            ppm("cents", "prev_week_cents").alias("wow_ppm"),
         )
         .orderBy("dow", "week_idx")
     )
@@ -253,7 +230,7 @@ def ds_weekday_wow_ratio(spark, sf_dir):
                         ELSE 0 END) AS ret_qty,
                sum(CAST(l.l_quantity AS BIGINT)) AS tot_qty,
                sum(CASE WHEN l.l_returnflag = 'R'
-                        THEN {_REV_CENTS_SQL.replace('l_extendedprice', 'l.l_extendedprice').replace('1 - l_discount', '1 - l.l_discount')}
+                        THEN {REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')}
                         ELSE 0 END) AS ret_cents
         FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
         GROUP BY priority, partkey
@@ -301,13 +278,13 @@ def ds_return_rank_union(spark, sf_dir):
         .agg(
             F.sum(F.when(is_ret, q).otherwise(F.lit(0))).alias("ret_qty"),
             F.sum(q).alias("tot_qty"),
-            F.sum(F.when(is_ret, _rev_cents()).otherwise(F.lit(0)))
+            F.sum(F.when(is_ret, rev_cents()).otherwise(F.lit(0)))
             .cast("bigint")
             .alias("ret_cents"),
         )
         .filter(F.col("ret_qty") > 0)
     )
-    ratio = _ppm("ret_qty", "tot_qty")
+    ratio = ppm("ret_qty", "tot_qty")
     ranked = per_part.select(
         "priority",
         "partkey",
@@ -339,10 +316,10 @@ _PRIORITY_COLS = ["urgent", "high", "medium", "notspec", "low"]
     SELECT (EXTRACT(year FROM o_orderdate) * 12
             + EXTRACT(month FROM o_orderdate)) AS month_idx,
            {', '.join(
-        f"CAST(sum(CASE WHEN o_orderpriority = '{p}' THEN {_CENTS_SQL.format(c='o_totalprice')} ELSE 0 END) AS BIGINT) AS {c}_cents"
+        f"CAST(sum(CASE WHEN o_orderpriority = '{p}' THEN {CENTS_SQL.format(c='o_totalprice')} ELSE 0 END) AS BIGINT) AS {c}_cents"
         for p, c in zip(_PRIORITIES, _PRIORITY_COLS)
     )},
-           CAST(sum({_CENTS_SQL.format(c='o_totalprice')}) AS BIGINT) AS total_cents
+           CAST(sum({CENTS_SQL.format(c='o_totalprice')}) AS BIGINT) AS total_cents
     FROM orders
     GROUP BY month_idx
     ORDER BY month_idx
@@ -361,17 +338,17 @@ def ds_priority_month_matrix(spark, sf_dir):
     rows regardless of fact size.
     """
     o = load_tables(spark, sf_dir, ["orders"])["orders"]
-    cents = F.round(dmoney("o_totalprice") * 100).cast("bigint")
+    o_cents = cents("o_totalprice")
     month_idx = (F.year("o_orderdate") * 12 + F.month("o_orderdate")).cast("bigint")
     pivoted = (
-        o.select(month_idx.alias("month_idx"), F.col("o_orderpriority"), cents.alias("cents"))
+        o.select(month_idx.alias("month_idx"), F.col("o_orderpriority"), o_cents.alias("cents"))
         .groupBy("month_idx")
         .pivot("o_orderpriority", _PRIORITIES)
         .agg(F.sum("cents"))
     )
     totals = (
         o.groupBy(month_idx.alias("month_idx"))
-        .agg(F.sum(cents).cast("bigint").alias("total_cents"))
+        .agg(F.sum(o_cents).cast("bigint").alias("total_cents"))
     )
     return (
         pivoted.join(totals, "month_idx")
@@ -395,7 +372,7 @@ def ds_priority_month_matrix(spark, sf_dir):
         SELECT r.r_name AS region,
                CASE WHEN o.o_orderdate < TIMESTAMP '1998-06-15' THEN 'before'
                     ELSE 'after' END AS side,
-               {_CENTS_SQL.format(c='o.o_totalprice')} AS cents
+               {CENTS_SQL.format(c='o.o_totalprice')} AS cents
         FROM orders o
         JOIN customer c ON o.o_custkey = c.c_custkey
         JOIN nation n ON c.c_nationkey = n.n_nationkey
@@ -434,7 +411,7 @@ def ds_before_after_split(spark, sf_dir):
     """
     t = load_tables(spark, sf_dir, ["orders", "customer", "nation", "region"])
     lo, pivot, hi = "1997-12-17", "1998-06-15", "1998-12-11"
-    cents = F.round(dmoney("o_totalprice") * 100).cast("bigint")
+    o_cents = cents("o_totalprice")
     before = F.col("o_orderdate") < F.lit(pivot).cast("timestamp")
     windowed = (
         t["orders"]
@@ -445,7 +422,7 @@ def ds_before_after_split(spark, sf_dir):
         .join(maybe_broadcast(t["customer"], "customer"), F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
         .join(F.broadcast(t["region"]), F.col("n_regionkey") == F.col("r_regionkey"))
-        .select(F.col("r_name").alias("region"), before.alias("is_before"), cents.alias("cents"))
+        .select(F.col("r_name").alias("region"), before.alias("is_before"), o_cents.alias("cents"))
     )
     split = windowed.groupBy("region").agg(
         F.sum(F.when(F.col("is_before"), 1).otherwise(0)).cast("bigint").alias("n_before"),
@@ -463,7 +440,7 @@ def ds_before_after_split(spark, sf_dir):
         "n_after",
         "before_cents",
         "after_cents",
-        F.when(F.col("before_cents") > 0, _ppm("after_cents", "before_cents"))
+        F.when(F.col("before_cents") > 0, ppm("after_cents", "before_cents"))
         .otherwise(F.lit(None).cast("bigint"))
         .alias("shift_ppm"),
     ).orderBy("region")
@@ -476,7 +453,7 @@ def ds_before_after_split(spark, sf_dir):
     oracle=f"""
     WITH in_window AS (
         SELECT p.p_type AS category, l.l_partkey AS partkey,
-               sum({_REV_CENTS_SQL.replace('l_extendedprice', 'l.l_extendedprice').replace('1 - l_discount', '1 - l.l_discount')}) AS cents
+               sum({REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')}) AS cents
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         WHERE l.l_shipdate >= TIMESTAMP '1997-01-01'
           AND l.l_shipdate < TIMESTAMP '1997-03-02'
@@ -510,9 +487,9 @@ def ds_category_share_window(spark, sf_dir):
         )
         .join(maybe_broadcast(t["part"], "part"), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(F.col("p_type").alias("category"), F.col("l_partkey").alias("partkey"))
-        .agg(F.sum(_rev_cents()).cast("bigint").alias("cents"))
+        .agg(F.sum(rev_cents()).cast("bigint").alias("cents"))
     )
-    share = _ppm(F.col("cents"), F.sum("cents").over(W.partitionBy("category")))
+    share = ppm(F.col("cents"), F.sum("cents").over(W.partitionBy("category")))
     return in_window.select(
         "category", "partkey", "cents", share.alias("category_share_ppm")
     ).orderBy("category", "partkey")
@@ -531,7 +508,7 @@ def ds_category_share_window(spark, sf_dir):
         SELECT o_custkey FROM (
             SELECT o_custkey,
                    row_number() OVER (
-                       ORDER BY sum({_CENTS_SQL.format(c='o_totalprice')}) DESC,
+                       ORDER BY sum({CENTS_SQL.format(c='o_totalprice')}) DESC,
                                 o_custkey) AS rn
             FROM orders GROUP BY o_custkey
         ) WHERE rn <= 100
@@ -539,7 +516,7 @@ def ds_category_share_window(spark, sf_dir):
     SELECT (EXTRACT(year FROM o.o_orderdate) * 12
             + EXTRACT(month FROM o.o_orderdate)) AS month_idx,
            CAST(count(*) AS BIGINT) AS n_lines,
-           CAST(sum({_REV_CENTS_SQL.replace('l_extendedprice', 'l.l_extendedprice').replace('1 - l_discount', '1 - l.l_discount')}) AS BIGINT) AS cents
+           CAST(sum({REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')}) AS BIGINT) AS cents
     FROM lineitem l
     JOIN orders o ON l.l_orderkey = o.o_orderkey
     JOIN frequent_parts fp ON l.l_partkey = fp.l_partkey
@@ -574,7 +551,7 @@ def ds_best_customer_frequent_parts(spark, sf_dir):
     best_customers = (
         t["orders"]
         .groupBy("o_custkey")
-        .agg(F.sum(F.round(dmoney("o_totalprice") * 100).cast("bigint")).alias("cents"))
+        .agg(F.sum(cents("o_totalprice")).alias("cents"))
         .orderBy(F.desc("cents"), "o_custkey")
         .limit(100)
         .select("o_custkey")
@@ -588,7 +565,7 @@ def ds_best_customer_frequent_parts(spark, sf_dir):
         .groupBy(month_idx.alias("month_idx"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_lines"),
-            F.sum(_rev_cents()).cast("bigint").alias("cents"),
+            F.sum(rev_cents()).cast("bigint").alias("cents"),
         )
         .orderBy("month_idx")
     )

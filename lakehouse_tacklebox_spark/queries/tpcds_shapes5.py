@@ -26,28 +26,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from lakehouse_tacklebox_spark.functions import dmoney, drate
+from lakehouse_tacklebox_spark.functions import REV_CENTS_SQL, cents, ppm, rev_cents
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables, maybe_broadcast
-
-
-def _ppm(a, b) -> F.Column:
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return F.floor(a.cast("double") * 1000000.0 / b).cast("bigint")
-
-
-_REV_CENTS_SQL = (
-    "CAST(round(CAST(l.l_extendedprice AS DECIMAL(14,2)) "
-    "* CAST(1 - l.l_discount AS DECIMAL(7,4)) * 100) AS BIGINT)"
-)
-
-
-def _rev_cents() -> F.Column:
-    return (
-        F.round(dmoney("l_extendedprice") * drate(F.lit(1) - F.col("l_discount")) * 100)
-        .cast("bigint")
-    )
 
 
 @register(
@@ -57,7 +38,7 @@ def _rev_cents() -> F.Column:
     oracle=f"""
     WITH ret AS (
         SELECT n.n_name AS nation, o.o_custkey AS custkey,
-               sum({_REV_CENTS_SQL}) AS ret_cents
+               sum({REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')}) AS ret_cents
         FROM lineitem l
         JOIN orders o ON l.l_orderkey = o.o_orderkey
         JOIN customer c ON o.o_custkey = c.c_custkey
@@ -98,7 +79,7 @@ def ds_high_return_customers(spark, sf_dir):
         .join(maybe_broadcast(t["customer"], "customer"), F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy(F.col("n_name").alias("nation"), F.col("o_custkey").alias("custkey"))
-        .agg(F.sum(_rev_cents()).cast("bigint").alias("ret_cents"))
+        .agg(F.sum(rev_cents()).cast("bigint").alias("ret_cents"))
     )
     wn = W.partitionBy("nation")
     nat = ret.select(
@@ -114,13 +95,7 @@ def ds_high_return_customers(spark, sf_dir):
             "nation",
             "custkey",
             "ret_cents",
-            F.floor(
-                F.col("ret_cents").cast("double")
-                * F.col("nat_n")
-                * F.lit(1000000.0)
-                / F.col("nat_cents")
-            )
-            .cast("bigint")
+            ppm(F.col("ret_cents").cast("double") * F.col("nat_n"), "nat_cents")
             .alias("vs_nation_avg_ppm"),
         )
         .orderBy("nation", "custkey")
@@ -163,7 +138,7 @@ def ds_premium_parts(spark, sf_dir):
     pp = p.select(
         F.col("p_type").alias("category"),
         F.col("p_partkey").alias("partkey"),
-        F.round(dmoney("p_retailprice") * 100).cast("bigint").alias("cents"),
+        cents("p_retailprice").alias("cents"),
     )
     wc = W.partitionBy("category")
     w = pp.select(
@@ -179,13 +154,7 @@ def ds_premium_parts(spark, sf_dir):
             "category",
             "partkey",
             "cents",
-            F.floor(
-                F.col("cents").cast("double")
-                * F.col("cat_n")
-                * F.lit(1000000.0)
-                / F.col("cat_cents")
-            )
-            .cast("bigint")
+            ppm(F.col("cents").cast("double") * F.col("cat_n"), "cat_cents")
             .alias("vs_category_avg_ppm"),
         )
         .orderBy("category", "partkey")
@@ -255,12 +224,10 @@ def ds_demand_volatility_pairs(spark, sf_dir):
         )
         .filter(F.col("n") >= 2)
     )
-    disp = F.floor(
-        F.col("n").cast("double")
-        * F.col("sq2").cast("double")
-        * F.lit(1000000.0)
-        / (F.col("sq").cast("double") * F.col("sq").cast("double"))
-    ).cast("bigint")
+    disp = ppm(
+        F.col("n").cast("double") * F.col("sq2").cast("double"),
+        F.col("sq").cast("double") * F.col("sq").cast("double"),
+    )
     d = pm.select("brand", "month_idx", disp.alias("disp_ppm"))
     lw = W.partitionBy("brand").orderBy("month_idx")
     lagd = d.select(
@@ -292,7 +259,7 @@ def ds_demand_volatility_pairs(spark, sf_dir):
                 ELSE 'large' END AS band,
            CAST(count(*) AS BIGINT) AS n_lines,
            CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS total_qty,
-           CAST(sum({_REV_CENTS_SQL}) AS BIGINT) AS cents
+           CAST(sum({REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')}) AS BIGINT) AS cents
     FROM lineitem l
     WHERE (l.l_quantity <= 10 AND l.l_extendedprice BETWEEN 0 AND 20000)
        OR (l.l_quantity BETWEEN 11 AND 25 AND l.l_extendedprice BETWEEN 10000 AND 60000)
@@ -327,7 +294,7 @@ def ds_multiband_or_filter(spark, sf_dir):
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_lines"),
             F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("total_qty"),
-            F.sum(_rev_cents()).cast("bigint").alias("cents"),
+            F.sum(rev_cents()).cast("bigint").alias("cents"),
         )
         .orderBy("band")
     )
@@ -353,7 +320,7 @@ def ds_multiband_or_filter(spark, sf_dir):
            CAST(sum(CASE WHEN date_diff('day', CAST(o.o_orderdate AS DATE),
                                         CAST(l.l_shipdate AS DATE)) > 120
                          THEN 1 ELSE 0 END) AS BIGINT) AS d120_plus,
-           CAST(sum({_REV_CENTS_SQL}) AS BIGINT) AS returned_cents
+           CAST(sum({REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')}) AS BIGINT) AS returned_cents
     FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
     WHERE l.l_returnflag = 'R'
     GROUP BY priority
@@ -390,7 +357,7 @@ def ds_return_latency_buckets(spark, sf_dir):
                 F.sum(F.when(cond, 1).otherwise(0)).cast("bigint").alias(name)
                 for name, cond in buckets
             ],
-            F.sum(_rev_cents()).cast("bigint").alias("returned_cents"),
+            F.sum(rev_cents()).cast("bigint").alias("returned_cents"),
         )
         .orderBy("priority")
     )
@@ -457,7 +424,7 @@ def ds_post_adoption_spend(spark, sf_dir):
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_orders"),
             F.count_distinct("o_custkey").cast("bigint").alias("n_customers"),
-            F.sum(F.round(dmoney("o_totalprice") * 100).cast("bigint"))
+            F.sum(cents("o_totalprice"))
             .cast("bigint")
             .alias("cents"),
         )
@@ -546,7 +513,7 @@ def ds_cross_year_retention(spark, sf_dir):
             (F.coalesce(F.col("next_active"), F.lit(0)) - F.col("retained"))
             .cast("bigint")
             .alias("acquired_next"),
-            _ppm("retained", "n_active").alias("retention_ppm"),
+            ppm("retained", "n_active").alias("retention_ppm"),
         )
         .orderBy("from_year")
     )
@@ -558,7 +525,7 @@ def ds_cross_year_retention(spark, sf_dir):
     oracle=f"""
     WITH pc AS (
         SELECT l.l_partkey AS partkey, o.o_orderpriority AS priority,
-               sum({_REV_CENTS_SQL}) AS cents
+               sum({REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')}) AS cents
         FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
         GROUP BY partkey, priority
     ), spread AS (
@@ -592,7 +559,7 @@ def ds_channel_spread_balance(spark, sf_dir):
         t["lineitem"]
         .join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy(F.col("l_partkey").alias("partkey"), F.col("o_orderpriority").alias("priority"))
-        .agg(F.sum(_rev_cents()).cast("bigint").alias("cents"))
+        .agg(F.sum(rev_cents()).cast("bigint").alias("cents"))
     )
     spread = pc.groupBy("partkey").agg(
         F.count(F.lit(1)).alias("n_channels"),
@@ -608,7 +575,7 @@ def ds_channel_spread_balance(spark, sf_dir):
             "partkey",
             "min_cents",
             "max_cents",
-            _ppm("max_cents", "min_cents").alias("spread_ppm"),
+            ppm("max_cents", "min_cents").alias("spread_ppm"),
         )
         .orderBy("partkey")
     )

@@ -23,22 +23,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from lakehouse_tacklebox_spark.functions import dmoney, drate
+from lakehouse_tacklebox_spark.functions import REV_CENTS_SQL, cents, rev_cents
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables, maybe_broadcast
-
-
-_REV_CENTS_SQL = (
-    "CAST(round(CAST(l.l_extendedprice AS DECIMAL(14,2)) "
-    "* CAST(1 - l.l_discount AS DECIMAL(7,4)) * 100) AS BIGINT)"
-)
-
-
-def _rev_cents() -> F.Column:
-    return (
-        F.round(dmoney("l_extendedprice") * drate(F.lit(1) - F.col("l_discount")) * 100)
-        .cast("bigint")
-    )
 
 
 @register(
@@ -106,7 +93,7 @@ def ds_exists_notexists_orders(spark, sf_dir):
         .groupBy(F.col("o_orderpriority").alias("priority"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            F.sum(F.round(dmoney("o_totalprice") * 100).cast("bigint"))
+            F.sum(cents("o_totalprice"))
             .cast("bigint")
             .alias("cents"),
         )
@@ -154,7 +141,7 @@ def ds_preferred_channel_dist(spark, sf_dir):
     cp = (
         t["orders"]
         .groupBy("o_custkey", F.col("o_orderpriority").alias("pr"))
-        .agg(F.sum(F.round(dmoney("o_totalprice") * 100).cast("bigint")).alias("cents"))
+        .agg(F.sum(cents("o_totalprice")).alias("cents"))
     )
     rn = F.row_number().over(
         W.partitionBy("o_custkey").orderBy(F.desc("cents"), "pr")
@@ -180,8 +167,8 @@ def ds_preferred_channel_dist(spark, sf_dir):
     oracle=f"""
     WITH np AS (
         SELECT l.l_partkey AS partkey,
-               sum(CASE WHEN l.l_returnflag = 'R' THEN -{_REV_CENTS_SQL}
-                        ELSE {_REV_CENTS_SQL} END) AS net_cents
+               sum(CASE WHEN l.l_returnflag = 'R' THEN -{REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')}
+                        ELSE {REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')} END) AS net_cents
         FROM lineitem l GROUP BY partkey
     ), ranked AS (
         SELECT partkey, CAST(net_cents AS BIGINT) AS net_cents,
@@ -211,7 +198,7 @@ def ds_best_worst_parts(spark, sf_dir):
     global top-k) and bounded by |parts|, not facts.
     """
     li = load_tables(spark, sf_dir, ["lineitem"])["lineitem"]
-    signed = F.when(F.col("l_returnflag") == "R", -_rev_cents()).otherwise(_rev_cents())
+    signed = F.when(F.col("l_returnflag") == "R", -rev_cents()).otherwise(rev_cents())
     np_ = li.groupBy(F.col("l_partkey").alias("partkey")).agg(
         F.sum(signed).cast("bigint").alias("net_cents")
     )
@@ -241,8 +228,8 @@ def ds_best_worst_parts(spark, sf_dir):
     oracle=f"""
     WITH cy AS (
         SELECT o.o_custkey AS custkey, EXTRACT(year FROM o.o_orderdate) AS y,
-               sum({_REV_CENTS_SQL}) AS bought_cents,
-               sum(CASE WHEN l.l_returnflag = 'R' THEN {_REV_CENTS_SQL} ELSE 0 END)
+               sum({REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')}) AS bought_cents,
+               sum(CASE WHEN l.l_returnflag = 'R' THEN {REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')} ELSE 0 END)
                    AS ret_cents
         FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
         GROUP BY custkey, y
@@ -277,8 +264,8 @@ def ds_customer_return_ratio(spark, sf_dir):
             F.year("o_orderdate").cast("bigint").alias("year"),
         )
         .agg(
-            F.sum(_rev_cents()).alias("bought_cents"),
-            F.sum(F.when(F.col("l_returnflag") == "R", _rev_cents()).otherwise(0)).alias(
+            F.sum(rev_cents()).alias("bought_cents"),
+            F.sum(F.when(F.col("l_returnflag") == "R", rev_cents()).otherwise(0)).alias(
                 "ret_cents"
             ),
         )

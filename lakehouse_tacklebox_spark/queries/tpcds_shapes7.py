@@ -23,28 +23,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from lakehouse_tacklebox_spark.functions import dmoney, drate
+from lakehouse_tacklebox_spark.functions import REV_CENTS_SQL, cents, ppm, rev_cents
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables, maybe_broadcast
-
-
-def _ppm(a, b) -> F.Column:
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return F.floor(a.cast("double") * 1000000.0 / b).cast("bigint")
-
-
-_REV_CENTS_SQL = (
-    "CAST(round(CAST(l.l_extendedprice AS DECIMAL(14,2)) "
-    "* CAST(1 - l.l_discount AS DECIMAL(7,4)) * 100) AS BIGINT)"
-)
-
-
-def _rev_cents() -> F.Column:
-    return (
-        F.round(dmoney("l_extendedprice") * drate(F.lit(1) - F.col("l_discount")) * 100)
-        .cast("bigint")
-    )
 
 
 @register(
@@ -225,7 +206,7 @@ def ds_cummax_drawdown(spark, sf_dir):
         .join(maybe_broadcast(t["customer"], "customer"), F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy(F.col("n_name").alias("nation"), month_idx.alias("month_idx"))
-        .agg(F.sum(F.round(dmoney("o_totalprice") * 100).cast("bigint")).alias("cents"))
+        .agg(F.sum(cents("o_totalprice")).alias("cents"))
     )
     wp = (
         W.partitionBy("nation")
@@ -248,7 +229,7 @@ def ds_cummax_drawdown(spark, sf_dir):
             "month_idx",
             "cents",
             "prior_peak",
-            _ppm("cents", "prior_peak").alias("vs_peak_ppm"),
+            ppm("cents", "prior_peak").alias("vs_peak_ppm"),
         )
         .orderBy("nation", "month_idx")
     )
@@ -260,7 +241,7 @@ def ds_cummax_drawdown(spark, sf_dir):
     oracle=f"""
     WITH ns AS (
         SELECT s.s_nationkey AS nk, l.l_suppkey AS sk,
-               sum({_REV_CENTS_SQL}) AS cents
+               sum({REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')}) AS cents
         FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
         GROUP BY nk, sk
     ), sh AS (
@@ -295,9 +276,9 @@ def ds_nation_concentration(spark, sf_dir):
         t["lineitem"]
         .join(F.broadcast(t["supplier"]), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy(F.col("s_nationkey").alias("nk"), F.col("l_suppkey").alias("sk"))
-        .agg(F.sum(_rev_cents()).cast("bigint").alias("cents"))
+        .agg(F.sum(rev_cents()).cast("bigint").alias("cents"))
     )
-    share = _ppm(F.col("cents"), F.sum("cents").over(W.partitionBy("nk")))
+    share = ppm(F.col("cents"), F.sum("cents").over(W.partitionBy("nk")))
     sh = ns.select("nk", share.alias("share_ppm"))
     return (
         sh.join(F.broadcast(t["nation"]), F.col("nk") == F.col("n_nationkey"))

@@ -22,22 +22,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from lakehouse_tacklebox_spark.functions import dmoney, drate
+from lakehouse_tacklebox_spark.functions import REV_CENTS_SQL, cents, rev_cents
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables, maybe_broadcast
-
-
-_REV_CENTS_SQL = (
-    "CAST(round(CAST(l.l_extendedprice AS DECIMAL(14,2)) "
-    "* CAST(1 - l.l_discount AS DECIMAL(7,4)) * 100) AS BIGINT)"
-)
-
-
-def _rev_cents() -> F.Column:
-    return (
-        F.round(dmoney("l_extendedprice") * drate(F.lit(1) - F.col("l_discount")) * 100)
-        .cast("bigint")
-    )
 
 
 @register(
@@ -46,7 +33,7 @@ def _rev_cents() -> F.Column:
     oracle=f"""
     WITH sr AS (
         SELECT r.r_name AS region, l.l_suppkey AS suppkey,
-               sum({_REV_CENTS_SQL}) AS cents
+               sum({REV_CENTS_SQL.format(p='l.l_extendedprice', d='l.l_discount')}) AS cents
         FROM lineitem l
         JOIN supplier s ON l.l_suppkey = s.s_suppkey
         JOIN nation n ON s.s_nationkey = n.n_nationkey
@@ -84,7 +71,7 @@ def ds_rank_ties_topk(spark, sf_dir):
         .join(F.broadcast(t["nation"]), F.col("s_nationkey") == F.col("n_nationkey"))
         .join(F.broadcast(t["region"]), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy(F.col("r_name").alias("region"), F.col("l_suppkey").alias("suppkey"))
-        .agg(F.sum(_rev_cents()).cast("bigint").alias("cents"))
+        .agg(F.sum(rev_cents()).cast("bigint").alias("cents"))
     )
     rnk = F.rank().over(W.partitionBy("region").orderBy(F.desc("cents")))
     return (
@@ -124,12 +111,12 @@ def ds_grouping_flag_rollup(spark, sf_dir):
     it (a UNION of three GROUP BYs).
     """
     t = load_tables(spark, sf_dir, ["orders", "customer", "nation"])
-    cents = F.round(dmoney("o_totalprice") * 100).cast("bigint")
+    o_cents = cents("o_totalprice")
     joined = (
         t["orders"]
         .join(maybe_broadcast(t["customer"], "customer"), F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select(F.col("n_name"), F.col("c_mktsegment"), cents.alias("cents"))
+        .select(F.col("n_name"), F.col("c_mktsegment"), o_cents.alias("cents"))
     )
     # grouping() is only resolvable INSIDE the rollup aggregate list
     rolled = joined.rollup("n_name", "c_mktsegment").agg(

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from lakehouse_tacklebox_spark.functions import dmoney
+from lakehouse_tacklebox_spark.functions import cents
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables, maybe_broadcast
 
@@ -50,11 +50,11 @@ def ds_cube_matrix(spark, sf_dir):
     customer broadcasts onto the orders scan.
     """
     t = load_tables(spark, sf_dir, ["orders", "customer"])
-    cents = F.round(dmoney("o_totalprice") * 100).cast("bigint")
+    o_cents = cents("o_totalprice")
     joined = (
         t["orders"]
         .join(maybe_broadcast(t["customer"], "customer"), F.col("o_custkey") == F.col("c_custkey"))
-        .select("c_mktsegment", "o_orderpriority", cents.alias("cents"))
+        .select("c_mktsegment", "o_orderpriority", o_cents.alias("cents"))
     )
     cubed = joined.cube("c_mktsegment", "o_orderpriority").agg(
         (F.grouping("c_mktsegment") * 2 + F.grouping("o_orderpriority"))
@@ -109,19 +109,19 @@ def ds_above_global_avg(spark, sf_dir):
     a constant-folded filter over the scan. Customer dim broadcasts.
     """
     t = load_tables(spark, sf_dir, ["orders", "customer"])
-    cents = F.round(dmoney("o_totalprice") * 100).cast("bigint")
+    o_cents = cents("o_totalprice")
     g = t["orders"].agg(
-        F.sum(cents).alias("t"), F.count(F.lit(1)).alias("n")
+        F.sum(o_cents).alias("t"), F.count(F.lit(1)).alias("n")
     )
     return (
         t["orders"]
         .join(maybe_broadcast(t["customer"], "customer"), F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(g))
-        .filter(cents * F.col("n") * 10 > F.col("t") * 11)
+        .filter(o_cents * F.col("n") * 10 > F.col("t") * 11)
         .groupBy(F.col("c_mktsegment").alias("segment"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            F.sum(cents).cast("bigint").alias("cents"),
+            F.sum(o_cents).cast("bigint").alias("cents"),
         )
         .orderBy("segment")
     )

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from lakehouse_tacklebox_spark.functions import dmoney, drate, dsum_dbl
+from lakehouse_tacklebox_spark.functions import disc_price, dmoney, drate, dsum_dbl
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables, maybe_broadcast
 
@@ -45,15 +45,15 @@ def q1_pricing_summary(spark, sf_dir):
     the filter pushes to the parquet scan.
     """
     li = load_tables(spark, sf_dir, ["lineitem"])["lineitem"]
-    disc_price = dmoney("l_extendedprice") * drate(F.lit(1) - F.col("l_discount"))
+    disc = disc_price()
     return (
         li.filter(F.col("l_shipdate") <= F.lit("2001-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             dsum_dbl(dmoney("l_quantity")).alias("sum_qty"),
             dsum_dbl(dmoney("l_extendedprice")).alias("sum_base_price"),
-            dsum_dbl(disc_price).alias("sum_disc_price"),
-            dsum_dbl(disc_price * drate(F.lit(1) + F.col("l_tax"))).alias("sum_charge"),
+            dsum_dbl(disc).alias("sum_disc_price"),
+            dsum_dbl(disc * drate(F.lit(1) + F.col("l_tax"))).alias("sum_charge"),
             F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
             F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
             F.round(F.avg("l_discount"), 4).alias("avg_disc"),
@@ -100,7 +100,7 @@ def q3_shipping_priority(spark, sf_dir):
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
         .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(dsum_dbl(dmoney("l_extendedprice") * drate(F.lit(1) - F.col("l_discount"))).alias("revenue"))
+        .agg(dsum_dbl(disc_price()).alias("revenue"))
         .select("o_orderkey", "revenue", "o_orderdate", "o_orderpriority")
         .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
         .limit(10)
@@ -152,7 +152,7 @@ def q5_local_supplier_volume(spark, sf_dir):
             (F.col("l_suppkey") == F.col("s_suppkey")) & (F.col("c_nationkey") == F.col("s_nationkey")),
         )
         .groupBy("n_name")
-        .agg(dsum_dbl(dmoney("l_extendedprice") * drate(F.lit(1) - F.col("l_discount"))).alias("revenue"))
+        .agg(dsum_dbl(disc_price()).alias("revenue"))
     )
 
 
@@ -223,7 +223,7 @@ def q10_returned_items(spark, sf_dir):
         .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "n_name", "c_acctbal")
-        .agg(dsum_dbl(dmoney("l_extendedprice") * drate(F.lit(1) - F.col("l_discount"))).alias("revenue"))
+        .agg(dsum_dbl(disc_price()).alias("revenue"))
         .select("c_custkey", "c_name", "revenue", "n_name", "c_acctbal")
         .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
         .limit(20)
@@ -263,7 +263,7 @@ def q_top_supplier(spark, sf_dir):
             & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
         )
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(dsum_dbl(dmoney("l_extendedprice") * drate(F.lit(1) - F.col("l_discount"))).alias("total_revenue"))
+        .agg(dsum_dbl(disc_price()).alias("total_revenue"))
     )
     best = revenue.withColumn("max_rev", F.max("total_revenue").over(W.partitionBy())).filter(
         F.col("total_revenue") == F.col("max_rev")

@@ -11,15 +11,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from lakehouse_tacklebox_spark.functions import dmoney, drate, dsum_dbl
+from lakehouse_tacklebox_spark.functions import DISC_PRICE_SQL, disc_price, dmoney, drate, dsum_dbl
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables, maybe_broadcast
-
-_DISC_PRICE_SQL = "CAST(l_extendedprice AS DECIMAL(14,2)) * CAST(1 - l_discount AS DECIMAL(7,4))"
-
-
-def _disc_price():
-    return dmoney("l_extendedprice") * drate(F.lit(1) - F.col("l_discount"))
 
 
 @register(
@@ -61,7 +55,7 @@ def q6_forecast_revenue(spark, sf_dir):
     oracle=f"""
     SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
            CAST(year(l_shipdate) AS INT) AS l_year,
-           CAST(round(sum({_DISC_PRICE_SQL}), 2) AS DOUBLE) AS revenue
+           CAST(round(sum({DISC_PRICE_SQL.format(p='l_extendedprice', d='l_discount')}), 2) AS DOUBLE) AS revenue
     FROM lineitem
     JOIN supplier ON s_suppkey = l_suppkey
     JOIN orders   ON o_orderkey = l_orderkey
@@ -99,7 +93,7 @@ def q7_volume_shipping(spark, sf_dir):
         .join(F.broadcast(n2), F.col("c_nk") == F.col("c_nationkey"))
         .filter(pair)
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").cast("int").alias("l_year"))
-        .agg(dsum_dbl(_disc_price()).alias("revenue"))
+        .agg(dsum_dbl(disc_price()).alias("revenue"))
         .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
@@ -110,7 +104,7 @@ def q7_volume_shipping(spark, sf_dir):
     oracle=f"""
     WITH vol AS (
         SELECT CAST(year(o_orderdate) AS INT) AS o_year,
-               {_DISC_PRICE_SQL} AS volume,
+               {DISC_PRICE_SQL.format(p='l_extendedprice', d='l_discount')} AS volume,
                n_name AS supp_nation
         FROM lineitem
         JOIN orders   ON o_orderkey = l_orderkey
@@ -138,7 +132,7 @@ def q8_market_share(spark, sf_dir):
         .join(maybe_broadcast(part, "part"), F.col("p_partkey") == F.col("l_partkey"))
         .select(
             F.year("o_orderdate").cast("int").alias("o_year"),
-            _disc_price().alias("volume"),
+            disc_price().alias("volume"),
             F.col("n_name").alias("supp_nation"),
         )
     )
@@ -155,7 +149,7 @@ def q8_market_share(spark, sf_dir):
     tags=("join", "agg"),
     oracle=f"""
     SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year,
-           CAST(round(sum({_DISC_PRICE_SQL}), 2) AS DOUBLE) AS profit
+           CAST(round(sum({DISC_PRICE_SQL.format(p='l_extendedprice', d='l_discount')}), 2) AS DOUBLE) AS profit
     FROM lineitem
     JOIN orders   ON o_orderkey = l_orderkey
     JOIN supplier ON s_suppkey = l_suppkey
@@ -178,7 +172,7 @@ def q9_product_profit(spark, sf_dir):
         .join(F.broadcast(t["supplier"]), F.col("s_suppkey") == F.col("l_suppkey"))
         .join(F.broadcast(t["nation"]), F.col("n_nationkey") == F.col("s_nationkey"))
         .groupBy(F.col("n_name").alias("nation"), F.year("o_orderdate").cast("int").alias("o_year"))
-        .agg(dsum_dbl(_disc_price()).alias("profit"))
+        .agg(dsum_dbl(disc_price()).alias("profit"))
         .orderBy(F.col("nation"), F.col("o_year").desc())
     )
 
@@ -187,8 +181,8 @@ def q9_product_profit(spark, sf_dir):
     "q14_promo_effect",
     tags=("join", "agg", "conditional"),
     oracle=f"""
-    SELECT CAST(round(100.0 * sum(CASE WHEN p_type = 'PROMO' THEN {_DISC_PRICE_SQL} ELSE 0 END)
-                      / nullif(sum({_DISC_PRICE_SQL}), 0), 6) AS DOUBLE) AS promo_revenue_pct
+    SELECT CAST(round(100.0 * sum(CASE WHEN p_type = 'PROMO' THEN {DISC_PRICE_SQL.format(p='l_extendedprice', d='l_discount')} ELSE 0 END)
+                      / nullif(sum({DISC_PRICE_SQL.format(p='l_extendedprice', d='l_discount')}), 0), 6) AS DOUBLE) AS promo_revenue_pct
     FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE l_shipdate >= TIMESTAMP '1996-09-01' AND l_shipdate < TIMESTAMP '1996-10-01'
     """,
@@ -201,10 +195,10 @@ def q14_promo_effect(spark, sf_dir):
         (F.col("l_shipdate") >= F.lit("1996-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-10-01").cast("timestamp"))
     )
-    promo = F.sum(F.when(F.col("p_type") == "PROMO", _disc_price()).otherwise(F.lit(0).cast("decimal(18,6)")))
+    promo = F.sum(F.when(F.col("p_type") == "PROMO", disc_price()).otherwise(F.lit(0).cast("decimal(18,6)")))
     return (
         li.join(maybe_broadcast(t["part"], "part"), F.col("p_partkey") == F.col("l_partkey"))
-        .agg(F.round(F.lit(100.0) * promo / F.nullif(F.sum(_disc_price()), F.lit(0)), 6).cast("double").alias("promo_revenue_pct"))
+        .agg(F.round(F.lit(100.0) * promo / F.nullif(F.sum(disc_price()), F.lit(0)), 6).cast("double").alias("promo_revenue_pct"))
     )
 
 
@@ -255,7 +249,7 @@ def q18_large_volume_customer(spark, sf_dir):
     "q19_discounted_revenue",
     tags=("join", "predicate"),
     oracle=f"""
-    SELECT CAST(round(sum({_DISC_PRICE_SQL}), 2) AS DOUBLE) AS revenue, count(*) AS n_items
+    SELECT CAST(round(sum({DISC_PRICE_SQL.format(p='l_extendedprice', d='l_discount')}), 2) AS DOUBLE) AS revenue, count(*) AS n_items
     FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 11)
        OR (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 20)
@@ -276,5 +270,5 @@ def q19_discounted_revenue(spark, sf_dir):
         t["lineitem"]
         .join(maybe_broadcast(t["part"], "part"), F.col("p_partkey") == F.col("l_partkey"))
         .filter(bands)
-        .agg(dsum_dbl(_disc_price()).alias("revenue"), F.count(F.lit(1)).alias("n_items"))
+        .agg(dsum_dbl(disc_price()).alias("revenue"), F.count(F.lit(1)).alias("n_items"))
     )

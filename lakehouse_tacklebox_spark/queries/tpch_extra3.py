@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from lakehouse_tacklebox_spark.functions import dmoney
+from lakehouse_tacklebox_spark.functions import cents, dmoney
 from lakehouse_tacklebox_spark.queries import register
 from lakehouse_tacklebox_spark.sources import load_tables, maybe_broadcast
 
@@ -281,7 +281,7 @@ def ds_channel_rollup(spark, sf_dir):
     o = t["orders"].select(
         F.lit("orders").alias("channel"),
         F.date_trunc("month", "o_orderdate").cast("date").alias("period"),
-        F.round(F.col("o_totalprice").cast("decimal(14,2)") * 100).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     e = t["events"].filter(F.col("event_type") == "purchase").select(
         F.lit("events").alias("channel"),

@@ -28,12 +28,10 @@ SLOW_TESTS = {
     "test_oracle_parity.py::test_oracle_parity[knn_mmr_rerank]",
     "test_oracle_parity.py::test_oracle_parity[knn_pq_rerank]",
     "test_oracle_parity.py::test_oracle_parity[stream_cc_labels_mv]",
-    "test_plan_shapes.py::test_no_bench_query_degrades_to_cartesian",
     "test_properties.py::test_connected_components_matches_union_find",
     "test_properties.py::test_containment_pairs_matches_bruteforce",
     "test_properties.py::test_temperature_mix_matches_reference",
     "test_properties.py::test_triangle_census_matches_bruteforce",
-    "test_stateful.py::test_stateful_dedup_with_ttl_runs",
     "test_stateful.py::test_tws_dedup_native_state_ttl_expires",
     "test_streaming.py::test_apply_changes_scd1_delete_and_intrabatch_dedup",
     "test_streaming.py::test_apply_changes_scd1_late_update_after_delete_stays_deleted",

@@ -5,6 +5,7 @@ survives through the checkpoint), plus cumulative running aggregates."""
 from __future__ import annotations
 
 import json
+import time
 import uuid
 
 from lakehouse_tacklebox_spark.streaming import (
@@ -45,10 +46,17 @@ def _run_checkpointed(df, mode, ckpt, outdir):
 
 
 def _await_then_stop(q):
-    # a query with registered state timeouts keeps scheduling timer-check
-    # batches under availableNow, so it can outlive the wait; stopped, it
-    # cannot run on into later tests
-    q.awaitTermination(120)
+    # An availableNow query ends by itself once its input is processed,
+    # unless it registered state timeouts: then it runs timer-only
+    # batches for good, and processAllAvailable() never returns for it.
+    # Its answer is in the sink once a batch has read no new input, so
+    # wait for that (or the end, which re-raises a failure), then stop
+    # the query so it cannot run on into later tests.
+    deadline = time.monotonic() + 120
+    while not q.awaitTermination(0.1) and time.monotonic() < deadline:
+        p = q.lastProgress
+        if p and all(src["startOffset"] == src["endOffset"] for src in p["sources"]):
+            break
     q.stop()
 
 

@@ -170,6 +170,8 @@ def test_run_mv_failure_propagates_and_cleans_up(spark, tmp_path, monkeypatch):
         ("stream_pq_index_mv", "pq_mv_"),
         ("stream_epoch_shuffle_mv", "epoch_mv_"),
         ("cdc_span_census_deletes", "spanforget_"),
+        ("stream_mv_retraction", "mv_retract_"),
+        ("stream_heavy_hitters_mv", "mg_mv_"),
     ],
 )
 def test_entry_leaves_no_scratch_table_behind(spark, tmp_path, monkeypatch, name, prefix):
