@@ -1,12 +1,12 @@
-"""Exact money and ratio encoding — the one owner of it.
+"""Exact money and ratio encoding of the query modules.
 
 Double-precision money math is not reproducible across engines: Spark's
 ``round`` rounds the double's shortest decimal representation while other
 engines (DuckDB, Postgres) round the exact binary value, so products of
 2-decimal inputs (price × (1-discount)) diverge at half-cent boundaries.
 
-The contract every query module keeps, on the engine side and the oracle
-side alike:
+The contract every query module keeps for decimal money columns and
+integer ratios, on the engine side and the oracle side alike:
 
 - **Money is integer cents.** An amount is cast to ``DECIMAL(14,2)``
   (:func:`dmoney`), scaled by 100 and rounded half-up to ``BIGINT``
@@ -24,9 +24,13 @@ side alike:
   the floor makes the result an integer.
 
 ``CENTS_SQL``, ``DISC_PRICE_SQL`` and ``REV_CENTS_SQL`` are the DuckDB
-twins that oracle strings format in. They are templates, not helpers: a
-formatted twin must render byte-for-byte the SQL the oracle always held,
-so that the gate compares against an unchanged reference.
+twins of the cents and discounted-price forms that oracle strings format
+in. They are templates, not helpers: a formatted twin must render
+byte-for-byte the SQL the oracle always held, so that the gate compares
+against an unchanged reference. ppm has no twin: oracle strings spell it
+inline as ``CAST(floor(CAST(a AS DOUBLE) * 1000000.0 / b) AS BIGINT)``.
+The events ``value`` column (a double) is outside this contract: its
+cents are ``round(value * 100)`` on both engines.
 
 Cost note: decimal ops are a few× slower than double ops per-row, but
 remain JVM-side / codegen'd; for 100 TB aggregates the scan still
@@ -62,15 +66,16 @@ def cents(c: Column | str) -> Column:
     return F.round(dmoney(c) * 100).cast("bigint")
 
 
-def disc_price(p: str = "l_extendedprice", d: str = "l_discount") -> Column:
-    """Exact discounted price ``p × (1 - d)``. Twin: ``DISC_PRICE_SQL``."""
-    return dmoney(p) * drate(F.lit(1) - F.col(d))
+def disc_price() -> Column:
+    """Exact discounted price ``l_extendedprice × (1 - l_discount)``.
+    Twin: ``DISC_PRICE_SQL``."""
+    return dmoney("l_extendedprice") * drate(F.lit(1) - F.col("l_discount"))
 
 
-def rev_cents(p: str = "l_extendedprice", d: str = "l_discount") -> Column:
+def rev_cents() -> Column:
     """Discounted price rounded to integer cents per row. Twin:
     ``REV_CENTS_SQL``."""
-    return F.round(disc_price(p, d) * 100).cast("bigint")
+    return F.round(disc_price() * 100).cast("bigint")
 
 
 def ppm(a: Column | str, b: Column | str) -> Column:

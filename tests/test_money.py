@@ -37,6 +37,7 @@ REV_CENTS_5_4_SQL = (
     "CAST(round(CAST({p} AS DECIMAL(14,2)) * (1 - CAST({d} AS DECIMAL(5,4))) * 100, 0)"
     " AS BIGINT)"
 )
+# ppm as oracle strings spell it inline: it has no twin template
 PPM_SQL = "CAST(floor(CAST(a AS DOUBLE) * 1000000.0 / b) AS BIGINT)"
 
 

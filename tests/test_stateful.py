@@ -51,11 +51,17 @@ def _await_then_stop(q):
     # batches for good, and processAllAvailable() never returns for it.
     # Its answer is in the sink once a batch has read no new input, so
     # wait for that (or the end, which re-raises a failure), then stop
-    # the query so it cannot run on into later tests.
+    # the query so it cannot run on into later tests. A restart first
+    # re-runs the batch that the last stop cut short, which reads no new
+    # input either, so only a batch after this run's first one counts.
     deadline = time.monotonic() + 120
     while not q.awaitTermination(0.1) and time.monotonic() < deadline:
         p = q.lastProgress
-        if p and all(src["startOffset"] == src["endOffset"] for src in p["sources"]):
+        if (
+            p
+            and p["batchId"] > q.recentProgress[0]["batchId"]
+            and all(src["startOffset"] == src["endOffset"] for src in p["sources"])
+        ):
             break
     q.stop()
 
@@ -126,6 +132,36 @@ def test_stateful_dedup_with_ttl_runs(spark, tmp_path):
     sink = _run_to_memory(out, "append")
     rows = spark.table(sink).collect()
     assert len(rows) == 1 and rows[0]["seq"] == 1
+
+
+def test_restart_replaying_a_timer_batch_still_reads_new_input(spark, tmp_path):
+    # Stopping a query with state timeouts can land inside a timer-only
+    # batch: its offsets are logged, its commit is not, and the restart
+    # re-runs it (no new input) before the batch that reads b2.json.
+    # Dropping the newest commit makes that case certain.
+    src = tmp_path / "src"
+    src.mkdir()
+    ckpt = tmp_path / "ckpt"
+    _write(src / "b1.json", [{"k": "a", "v": 1, "seq": 1}])
+    stream = file_stream(spark, str(src), SCHEMA, fmt="json")
+    out1 = _run_checkpointed(
+        stateful_dedup(stream, ["k"], ["seq"], ttl_minutes=10), "append", str(ckpt), str(tmp_path / "out1")
+    )
+    assert {r["k"] for r in spark.read.parquet(out1).collect()} == {"a"}
+
+    last = max(int(p.name) for p in (ckpt / "commits").glob("[0-9]*"))
+    assert last >= 1, "run 1 must have committed a timer-only batch after the data batch"
+    for log, first in (("offsets", last + 1), ("commits", last)):
+        for p in (ckpt / log).iterdir():
+            if int(p.name.strip(".").split(".")[0]) >= first:
+                p.unlink()
+
+    _write(src / "b2.json", [{"k": "a", "v": 9, "seq": 0}, {"k": "c", "v": 3, "seq": 1}])
+    stream2 = file_stream(spark, str(src), SCHEMA, fmt="json")
+    out2 = _run_checkpointed(
+        stateful_dedup(stream2, ["k"], ["seq"], ttl_minutes=10), "append", str(ckpt), str(tmp_path / "out2")
+    )
+    assert {r["k"] for r in spark.read.parquet(out2).collect()} == {"c"}
 
 
 def test_user_stats_battery_invariant_to_microbatch_count(spark, tmp_path):
